@@ -142,25 +142,31 @@ def _time_once(fn) -> float:
     return time.perf_counter() - t0
 
 
-def write_self_record(out: dict, path: str | None = None) -> str | None:
+SELF_RECORD_DIR = os.path.join(REPO_ROOT, "bench_records")
+
+
+def write_self_record(out: dict, cpus: int, path: str | None = None) -> str | None:
     """Write the FULL per-query record to a file (r15, r14 verdict #2b):
     the driver archives only the last 2000 chars of stdout, so the
     216-entry map never survived its capture and PERF's per_query
     round-over-round table came back empty two rounds running. Called
     after both stdout prints — additions only, nothing in the timed path
-    changes. Default target is ``BENCH_SELF.json`` in the repo root
-    (override with ``$SPARK_GRAFT_BENCH_SELF``); a read-only checkout
-    degrades to the stdout record (returns None)."""
-    self_path = path or os.environ.get(
-        "SPARK_GRAFT_BENCH_SELF", os.path.join(REPO_ROOT, "BENCH_SELF.json")
-    )
+    changes. The record is ``out`` (which carries the calibration floor)
+    plus the ``cpus`` it ran on; the default target is
+    ``bench_records/BENCH_SELF_c{cpus}.json`` (gitignored), so runs at
+    different core counts keep separate records and never dirty the
+    tree. A read-only checkout degrades to the stdout record (returns
+    None)."""
     try:
-        with open(self_path, "w") as fh:
-            json.dump(out, fh)
+        if path is None:
+            os.makedirs(SELF_RECORD_DIR, exist_ok=True)
+            path = os.path.join(SELF_RECORD_DIR, f"BENCH_SELF_c{cpus}.json")
+        with open(path, "w") as fh:
+            json.dump({**out, "cpus": cpus}, fh)
             fh.write("\n")
     except OSError:
         return None
-    return self_path
+    return path
 
 
 def main() -> None:
@@ -214,7 +220,7 @@ def main() -> None:
     # Trailing compact record — the driver's 2000-char tail capture always
     # contains this line whole (the full line above is ~3 KB and truncates).
     print(compact_summary(timings, errors, total, out["sf"], calibration=cal))
-    write_self_record(out)
+    write_self_record(out, spark.sparkContext.defaultParallelism)
 
 
 if __name__ == "__main__":

@@ -114,15 +114,32 @@ def test_bench_failed_query_not_retried_in_pass_two(spark):
 
 def test_write_self_record_roundtrip_and_readonly(tmp_path):
     """r15: the full per-query record lands in a JSON file the driver's
-    2000-char stdout capture can't truncate; an unwritable target
-    degrades silently (the stdout record still stands)."""
+    2000-char stdout capture can't truncate, tagged with the core count
+    it ran on; an unwritable target degrades silently (the stdout record
+    still stands)."""
     import json
 
     from bench import write_self_record
 
     out = {"metric": "headline_queries_wall", "value": 1.23,
-           "queries": {"q": 0.5}, "sf": 0.1}
-    p = write_self_record(out, path=str(tmp_path / "BENCH_SELF.json"))
+           "queries": {"q": 0.5}, "sf": 0.1,
+           "calibration": {"floor_sec": 0.12, "loadavg": [1.0, 1.0, 1.0]}}
+    p = write_self_record(out, 8, path=str(tmp_path / "BENCH_SELF_c8.json"))
     assert p is not None
-    assert json.loads(open(p).read()) == out
-    assert write_self_record(out, path=str(tmp_path / "nodir" / "x.json")) is None
+    record = json.loads(open(p).read())
+    assert record == {**out, "cpus": 8}
+    assert record["calibration"]["floor_sec"] == 0.12
+    assert write_self_record(out, 8, path=str(tmp_path / "nodir" / "x.json")) is None
+
+
+def test_write_self_record_default_target_is_per_core_count(monkeypatch, tmp_path):
+    """Default target: ``BENCH_SELF_c{cpus}.json`` in the gitignored
+    record directory, one file per core count, never the repo root."""
+    import bench
+
+    monkeypatch.setattr(bench, "SELF_RECORD_DIR", str(tmp_path / "records"))
+    p4 = bench.write_self_record({"value": 1.0}, 4)
+    p8 = bench.write_self_record({"value": 2.0}, 8)
+    assert p4 == str(tmp_path / "records" / "BENCH_SELF_c4.json")
+    assert p8 == str(tmp_path / "records" / "BENCH_SELF_c8.json")
+    assert json.loads(open(p4).read()) == {"value": 1.0, "cpus": 4}

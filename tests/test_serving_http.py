@@ -1,7 +1,8 @@
 """Serving-tier tests (S8/S9 routes + F6 auth, reference
 `server.py:407-518`): the stdlib HTTP layer over a real engine export —
 auth matrix (missing / wrong / query-param / header key), JSON envelope
-equality with the artifact rows, raw-CSV byte equality, health routes."""
+equality with the artifact rows, raw-CSV byte equality, health routes,
+and the per-version body cache (reuse, LRU eviction, byte identity)."""
 
 from __future__ import annotations
 
@@ -230,32 +231,171 @@ def test_snapshot_backed_serving_time_travel(spark, tmp_path_factory):
         httpd.shutdown()
 
 
-def test_snapshot_rows_cached_per_version(spark, tmp_path_factory):
-    """Round-6 advice (low): /pets must not re-decode the whole table per
-    request. Decoded rows are cached by RESOLVED version (immutable files
-    make that exact); a new commit is a new version → cache miss → fresh
-    rows, while repeat hits on the same version return the cached list."""
+def test_snapshot_body_cached_per_version(spark, tmp_path_factory):
+    """/pets must not re-decode or re-encode the table per request. The
+    encoded body is cached by RESOLVED version (immutable files make that
+    exact): repeat requests on one version get the cached bytes object, a
+    new commit is a new version → miss → fresh body, and time travel
+    resolves the exact old version."""
     from petfinder_database_distributor_spark.serving.http_server import (
-        load_snapshot_rows,
+        snapshot_body,
     )
     from petfinder_database_distributor_spark.sources.snapshot import (
         snapshot_merge,
         snapshot_write,
     )
 
+    def vs(body: bytes) -> set:
+        return {r["v"] for r in json.loads(body)["pets"]}
+
     table = str(tmp_path_factory.mktemp("servecache") / "table")
     df = spark.createDataFrame([(1, "a")], "k long, v string")
     snapshot_write(spark, table, df)
-    first = load_snapshot_rows(table)
-    assert load_snapshot_rows(table) is first, "same version → cached object"
+    first = snapshot_body(table)
+    assert snapshot_body(table) is first, "same version → cached object"
     snapshot_merge(
         spark, table, spark.createDataFrame([(1, "b")], "k long, v string"),
         key_cols=["k"], order_cols=["v"],
     )
-    fresh = load_snapshot_rows(table)
-    assert fresh is not first and {r["v"] for r in fresh} == {"b"}
+    fresh = snapshot_body(table)
+    assert fresh is not first and vs(fresh) == {"b"}
     # time travel still resolves (and caches) the old version exactly
-    assert {r["v"] for r in load_snapshot_rows(table, version=0)} == {"a"}
+    assert vs(snapshot_body(table, version=0)) == {"a"}
+    assert snapshot_body(table, version=0) is snapshot_body(table, version=0)
+
+
+def test_snapshot_body_cache_evicts_least_recently_used(spark, tmp_path_factory):
+    """More distinct ``?version=`` misses than the cache holds, each
+    followed by a latest-version hit, must not evict the hot latest body:
+    eviction is least-recently-used, not first-in-first-out."""
+    from petfinder_database_distributor_spark.serving.http_server import (
+        _BODY_CACHE_MAX,
+        snapshot_body,
+    )
+    from petfinder_database_distributor_spark.sources.snapshot import (
+        snapshot_append,
+        snapshot_write,
+    )
+
+    table = str(tmp_path_factory.mktemp("servelru") / "table")
+    snapshot_write(spark, table, spark.createDataFrame([(0, "0")], "k long, v string"))
+    for i in range(1, _BODY_CACHE_MAX + 2):
+        snapshot_append(
+            spark, table, spark.createDataFrame([(i, str(i))], "k long, v string")
+        )
+    latest = snapshot_body(table)
+    assert json.loads(latest)["count"] == _BODY_CACHE_MAX + 2
+    for v in range(_BODY_CACHE_MAX + 1):  # every version but the latest
+        assert json.loads(snapshot_body(table, version=v))["count"] == v + 1
+        assert snapshot_body(table) is latest, f"latest evicted after v{v}"
+
+
+def test_snapshot_body_bytes_equal_reference_encoding(spark, tmp_path_factory):
+    """The cached body on the wire is byte-identical to encoding the
+    decoded rows per request, for the latest version, a time-travel
+    version and a version after a merge-on-read delete."""
+    from petfinder_database_distributor_spark.serving.http_server import (
+        load_snapshot_rows,
+    )
+    from petfinder_database_distributor_spark.sources.snapshot import (
+        snapshot_delete,
+        snapshot_merge,
+        snapshot_write,
+    )
+
+    def reference(version: int) -> bytes:
+        rows = load_snapshot_rows(table, version)
+        return json.dumps({"count": len(rows), "pets": rows}).encode()
+
+    table = str(tmp_path_factory.mktemp("servebytes") / "table")
+    snapshot_write(
+        spark, table,
+        spark.createDataFrame(
+            [(1, "a", 1.5), (2, "é ✓", None), (3, 'q"t', -0.0)],
+            "k long, v string, x double",
+        ),
+    )
+    snapshot_merge(
+        spark, table,
+        spark.createDataFrame([(2, "z", 2.0), (4, "d", 4.0)], "k long, v string, x double"),
+        key_cols=["k"], order_cols=["v"],
+    )
+    snapshot_delete(spark, table, spark.createDataFrame([(3,)], "k long"), ["k"])
+    httpd = serve_export(
+        str(tmp_path_factory.mktemp("servebytes_csv")), api_key=KEY,
+        snapshot_dir=table,
+    )
+    try:
+        port = httpd.server_address[1]
+        for route, version in (("/pets", 2), ("/pets?version=0", 0),
+                               ("/pets?version=1", 1), ("/pets?version=2", 2)):
+            code, body, headers = _get(port, route, {"X-API-Key": KEY})
+            assert code == 200 and body == reference(version), route
+            assert headers.get("Content-Type") == "application/json"
+        assert {r["k"] for r in json.loads(reference(2))["pets"]} == {1, 2, 4}
+    finally:
+        httpd.shutdown()
+
+
+def test_reload_serves_new_artifact_bytes(tmp_path):
+    """Artifact bodies are encoded once at load: a changed artifact is not
+    served until ``reload()``, and after it both routes serve the new
+    bytes."""
+    part = tmp_path / "part-00000.csv"
+    part.write_text("name,age\nrex,3\n", encoding="utf-8")
+    httpd = serve_export(str(tmp_path), api_key=KEY)
+    try:
+        port = httpd.server_address[1]
+        part.write_text("name,age\nrex,4\nfido,2\n", encoding="utf-8")
+        assert json.loads(_get(port, "/pets", {"X-API-Key": KEY})[1])["count"] == 1
+        httpd.reload()
+        code, body, _ = _get(port, "/pets", {"X-API-Key": KEY})
+        assert code == 200 and json.loads(body) == {
+            "count": 2,
+            "pets": [{"name": "rex", "age": "4"}, {"name": "fido", "age": "2"}],
+        }
+        code, body, _ = _get(port, "/pets.csv", {"X-API-Key": KEY})
+        assert code == 200 and body == part.read_bytes()
+        assert json.loads(_get(port, "/status")[1])["rows"] == 2
+    finally:
+        httpd.shutdown()
+
+
+def test_status_reports_snapshot_version(spark, tmp_path_factory, server):
+    """A snapshot-backed /status adds the latest version and its
+    manifest's operation and commit time; an artifact-only server keeps
+    the two original keys."""
+    from petfinder_database_distributor_spark.sources.snapshot import (
+        read_manifest,
+        snapshot_merge,
+        snapshot_write,
+    )
+
+    plain, _ = server
+    assert set(json.loads(_get(plain.server_address[1], "/status")[1])) == {
+        "running", "rows"
+    }
+    table = str(tmp_path_factory.mktemp("servestatus") / "table")
+    snapshot_write(spark, table, spark.createDataFrame([(1, "a")], "k long, v string"))
+    httpd = serve_export(
+        str(tmp_path_factory.mktemp("servestatus_csv")), api_key=KEY,
+        snapshot_dir=table,
+    )
+    try:
+        port = httpd.server_address[1]
+        status = json.loads(_get(port, "/status")[1])
+        assert status["version"] == 0 and status["operation"] == "write"
+        assert status["committed_at"] == read_manifest(table, 0)["committed_at"]
+        assert status["running"] is True and status["rows"] == 0
+        snapshot_merge(
+            spark, table, spark.createDataFrame([(2, "b")], "k long, v string"),
+            key_cols=["k"], order_cols=["v"],
+        )
+        status = json.loads(_get(port, "/status")[1])
+        assert (status["version"], status["operation"]) == (1, "merge")
+        assert status["committed_at"] == read_manifest(table, 1)["committed_at"]
+    finally:
+        httpd.shutdown()
 
 
 def test_snapshot_serving_applies_tombstones(spark, tmp_path_factory):

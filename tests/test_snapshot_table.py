@@ -1025,10 +1025,10 @@ def test_bloom_point_lookup_prunes_and_stays_exact(spark, table_dir):
     )
 
     n = 4000
-    df = (
-        spark.range(n)
-        .selectExpr("id * 2654435761 % 1000003 AS k", "id AS payload")
-        .repartition(8)
+    # eight contiguous id slices, one file each, independent of the core
+    # count; each slice's scrambled k range spans the probe key
+    df = spark.range(0, n, 1, 8).selectExpr(
+        "id * 2654435761 % 1000003 AS k", "id AS payload"
     )
     snapshot_write(spark, table_dir, df, bloom_cols=["k"], stats_cols=["k"])
     m = read_manifest(table_dir, 0)
