@@ -11,7 +11,6 @@ from petfinder_database_distributor_spark.functions.scalars import (
     extract_name_from_about,
     failed_field_count,
     normalize_url,
-    null_or_empty,
     parse_boolean,
     search_url,
     timestamp_fmt,
@@ -24,7 +23,6 @@ __all__ = [
     "extract_name_from_about",
     "failed_field_count",
     "normalize_url",
-    "null_or_empty",
     "parse_boolean",
     "search_url",
     "timestamp_fmt",

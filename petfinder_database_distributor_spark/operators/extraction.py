@@ -28,6 +28,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from petfinder_database_distributor_spark.functions.scalars import sql_name
+
 
 def xpath_columns(
     df: DataFrame,
@@ -288,11 +290,14 @@ def regex_field_columns(
     ``regexp_extract`` per column: for flat documents (no nested or
     attributed tags of the same name) this is exactly ``xpath_string``'s
     first-match-or-'' contract (pet_scraper.py:135-161) without the DOM
-    parse. ``fields`` maps alias → tag name."""
-    cols: list[Column] = [F.col(c) for c in keep]
+    parse. ``fields`` maps alias → tag name.
+
+    The projection is one ``selectExpr`` over SQL strings: one Py4J round
+    trip per column instead of the lookups and calls behind ``F.col``,
+    ``F.regexp_extract`` and ``alias``. An XML tag name holds no quote or
+    backslash, so the pattern is a plain SQL string literal."""
+    src = sql_name(xml_col)
+    exprs = [sql_name(c) for c in keep]
     for alias, tag in fields.items():
-        pattern = rf"<{tag}>([^<]*)</{tag}>"
-        cols.append(
-            F.regexp_extract(F.col(xml_col), pattern, 1).alias(alias)
-        )
-    return df.select(*cols)
+        exprs.append(f"regexp_extract({src}, '<{tag}>([^<]*)</{tag}>', 1) AS {sql_name(alias)}")
+    return df.selectExpr(*exprs)

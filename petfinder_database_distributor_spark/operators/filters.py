@@ -3,6 +3,12 @@
 All are narrow (no shuffle) Column-expression filters — at 100 TB they
 execute inside the parquet scan stage; simple comparisons push down to the
 reader as ``PushedFilters``.
+
+The filters that take column names build their condition as one SQL
+expression over backtick-quoted names (``F.expr``): the analyzed condition
+is the same as the Column-built one, for a handful of Py4J round trips
+instead of dozens per column, which matters because the ingest path
+rebuilds them for every micro-batch.
 """
 
 from __future__ import annotations
@@ -12,7 +18,7 @@ from collections.abc import Iterable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from petfinder_database_distributor_spark.functions.scalars import failed_field_count
+from petfinder_database_distributor_spark.functions.scalars import failed_field_count, sql_name
 
 # Reference thresholds (pet_scraper.py:403-405, verify.py:25-31)
 NULL_RATIO_DROP = 0.5
@@ -23,8 +29,9 @@ PLACEHOLDER_NAMES = ("dog", "cat")
 def placeholder_name_filter(df: DataFrame, name_col: str = "name") -> DataFrame:
     """F1 — drop rows whose trimmed lowercase name is a placeholder
     (exact equality, not substring). Reference: pet_scraper.py:375-377."""
-    n = F.lower(F.trim(F.col(name_col)))
-    return df.filter(~n.isin(*PLACEHOLDER_NAMES) | n.isNull())
+    n = f"lower(trim({sql_name(name_col)}))"
+    names = ", ".join(f"'{p}'" for p in PLACEHOLDER_NAMES)
+    return df.filter(F.expr(f"NOT ({n} IN ({names})) OR {n} IS NULL"))
 
 
 def null_ratio_filter(
@@ -39,7 +46,7 @@ def null_ratio_filter(
     string_cols, bool_cols = list(string_cols), list(bool_cols)
     total = len(string_cols) + len(bool_cols)
     nulls = failed_field_count(string_cols, bool_cols)
-    return df.filter(nulls < F.lit(drop_ratio * total))
+    return df.filter(nulls < drop_ratio * total)
 
 
 def liveness_filter(
@@ -52,12 +59,13 @@ def liveness_filter(
     missing (the verification predicate). Reference: verify.py:25-31,
     failed-field counter pet_scraper.py:550-566."""
     failed = failed_field_count(list(string_cols), list(bool_cols))
-    return df.filter(failed < F.lit(max_failed))
+    return df.filter(failed < max_failed)
 
 
 def nonblank_key_filter(df: DataFrame, key_col: str = "link") -> DataFrame:
     """F5 — ignore rows with a blank/NULL key. Reference: server.py:265-267."""
-    return df.filter(F.col(key_col).isNotNull() & (F.trim(F.col(key_col)) != ""))
+    k = sql_name(key_col)
+    return df.filter(F.expr(f"{k} IS NOT NULL AND trim({k}) != ''"))
 
 
 def failed_fields_col(

@@ -5,6 +5,20 @@ same plans scale to a real cluster: AQE on (runtime coalesce + skew-join
 handling), Arrow on (fast pandas interchange for the few Pandas-UDF
 operators), explicit shuffle partitioning (never the 200 default blindly),
 UTC session timezone so timestamp semantics match the DuckDB oracle.
+
+Call-site capture is off (``spark.python.sql.dataFrameDebugging.enabled``
+is ``false``). PySpark wraps every Column operator and DataFrame method so
+that it records the Python file and line in the JVM before the call and
+clears it after: an active-session lookup, a conf read and two
+``PySparkCurrentOrigin`` calls. One ``a | b`` over two Columns costs 11
+Py4J round trips with capture on and 1 with it off. The ingest path
+rebuilds its extract/clean/validate tree for every micro-batch, so that
+bookkeeping dominated driver-side plan building. What is lost: an
+``AnalysisException`` no longer names the Python file and line of the
+offending expression. To get it back, pass
+``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``.
+PySpark reads the setting once per Python process, at the first Column
+operation with an active session, so it must be set before then.
 """
 
 from __future__ import annotations
@@ -45,6 +59,9 @@ def get_spark(
         # rejects by default; read as long and convert in the loader.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        # No Python call-site capture per Column/DataFrame call (see the
+        # module docstring); extra_conf can turn it back on.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     for k, v in (extra_conf or {}).items():

@@ -653,7 +653,10 @@ def test_shingle_family_tokenizes_once_per_branch(spark):
     and not 5x (the shingle zip_with chain referencing an INLINE
     tokens(text) from interpreted HOF slots). One chain per branch =
     every `split(lower(translate` occurrence sits in its own projection
-    over a distinct scan of the documents table."""
+    over a distinct scan of the documents table. The counts are the
+    observed ones, pinned exactly: an extra chain on any branch fails."""
+    import re
+
     for name, branches in [
         ("dedup_ngram_jaccard_baseline", 4),
         ("dedup_ngram_containment", 4),
@@ -661,10 +664,24 @@ def test_shingle_family_tokenizes_once_per_branch(spark):
     ]:
         p = plan_of(spark, name)
         chains = p.count("split(lower(translate")
-        assert chains <= branches, (
-            f"{name}: {chains} tokenize chains for <= {branches} scan"
-            " branches — the duplication trap is back"
+        scans = len(re.findall(r"Location: [^\n]*documents\.parquet", p))
+        assert (chains, scans) == (branches, branches), (
+            f"{name}: {chains} tokenize chains over {scans} document scans,"
+            f" want exactly {branches} of each — the duplication trap is back"
         )
+
+
+def test_pushdown_barrier_keeps_pushdown_below_it(spark):
+    """The barrier stops pushdown through its own projection only: in
+    quality_classifier_score, the ``doc_id IS NOT NULL`` filter under the
+    wrapped token projection must still reach the parquet scan. This pins
+    pruning, where test_pushdown_barrier_survives_optimizer pins only that
+    the barrier is not folded away."""
+    import re
+
+    p = plan_of(spark, "quality_classifier_score")
+    assert "rand(" in p, "the barrier must be in the plan"
+    assert re.findall(r"PushedFilters: \[([^\]]*)\]", p) == ["IsNotNull(doc_id)"]
 
 
 def test_span_overlap_bucketed_join_only(spark):

@@ -54,3 +54,33 @@ def test_parse_boolean_matches_reference_model(spark, batch):
     }
     for i, raw in enumerate(batch):
         assert got[i] == _reference_parse(raw), f"mismatch on {raw!r}"
+
+
+# Every indicator alone, mixed with every other (glued and spaced), padded
+# and upper-cased: the random alphabet above rarely forms a whole indicator,
+# so this fixed table is what exercises each needle.
+_INDICATORS = NEGATIVE_INDICATORS + POSITIVE_INDICATORS
+BOOL_TABLE = [
+    *_INDICATORS,
+    *(a + sep + b for a in _INDICATORS for b in _INDICATORS if a != b for sep in ("", " ")),
+    *(f"  {w}  " for w in _INDICATORS),
+    *(w.upper() for w in _INDICATORS),
+    *(f"  {w.upper()} " for w in _INDICATORS),
+    "✓", "✗ yes", "on", "unknown", "Y", None, "", "   ",
+]
+
+
+def test_parse_boolean_matches_reference_model_on_indicator_table(spark):
+    df = spark.createDataFrame(list(enumerate(BOOL_TABLE)), "id int, raw string")
+    for empty_as_null in (True, False):
+        got = {
+            r["id"]: r["b"]
+            for r in df.select(
+                "id", parse_boolean(F.col("raw"), empty_as_null=empty_as_null).alias("b")
+            ).collect()
+        }
+        for i, raw in enumerate(BOOL_TABLE):
+            want = _reference_parse(raw)
+            if want is None and not empty_as_null:
+                want = False  # the raw function: empty or missing → False
+            assert got[i] is want, f"parse_boolean({raw!r}, {empty_as_null=}) = {got[i]}"

@@ -139,6 +139,42 @@ def test_liveness_boundary(spark):
     assert kept == {"keep_2_failed"}
 
 
+def test_sql_built_counters_quote_column_names(spark):
+    """failed_field_count and the filters over it are one SQL expression
+    over backtick-quoted names: a dot, a space or a backtick in a column
+    name must name that column, and the counts must equal a pure-Python
+    count over null, blank and whitespace-only strings, with boolean
+    False present."""
+    import itertools
+
+    from pyspark.sql import types as T
+
+    from petfinder_database_distributor_spark.functions.scalars import failed_field_count
+
+    strs, bools = ["a.b", "has space", "we`ird"], ["ok.flag"]
+    schema = T.StructType(
+        [T.StructField("id", T.IntegerType())]
+        + [T.StructField(c, T.StringType()) for c in strs]
+        + [T.StructField(c, T.BooleanType()) for c in bools]
+    )
+    values = itertools.product(*[[None, "", "   ", "x"]] * len(strs), [None, False, True])
+    rows = [(i, *v) for i, v in enumerate(values)]
+    missing = {
+        r[0]: sum(v is None or v.strip() == "" for v in r[1:-1]) + (r[-1] is None)
+        for r in rows
+    }
+    df = spark.createDataFrame(rows, schema)
+    got = {
+        r["id"]: r["n"]
+        for r in df.select("id", failed_field_count(strs, bools).alias("n")).collect()
+    }
+    assert got == missing
+    kept = {r["id"] for r in null_ratio_filter(df, strs, bools, drop_ratio=0.5).collect()}
+    assert kept == {i for i, n in missing.items() if n < 2}
+    live = {r["id"] for r in liveness_filter(df, strs, bools, max_failed=3).collect()}
+    assert live == {i for i, n in missing.items() if n < 3}
+
+
 def test_upsert_column_preserving(spark):
     old = spark.createDataFrame(
         [("L1", "Bella", "NY", True), ("L2", "Max", "LA", False)],
