@@ -34,7 +34,5 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB oracle SQL per query; omitted for non-SQL-expressible ops."""
-    return {
-        name: spec.oracle for name, spec in load_all().items() if spec.oracle is not None
-    }
+    """DuckDB oracle SQL for every query."""
+    return {name: spec.oracle for name, spec in load_all().items()}

@@ -1057,3 +1057,302 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(n_tri))
         .select("n_nodes", "n_edges", "n_wedges", "n_triangles")
     )
+
+
+# ---------------------------------------------------------------------------
+# graph_kcore_decomposition
+# ---------------------------------------------------------------------------
+
+_KCORE_K = 3
+# Bounded peeling rounds, UNROLLED identically in both engines: parity
+# holds by construction at any round count; convergence at the fixture
+# scales is pinned separately (tests/test_mining.py asserts a further
+# round is a fixed point). At 100 TB the round count is the usual
+# O(peeling depth) bulk-synchronous iteration — same class as the
+# components/label-prop loops.
+_KCORE_ROUNDS = 6
+
+
+def _kcore_oracle() -> str:
+    # AS MATERIALIZED on every unrolled CTE: each round references the
+    # previous round's edge CTE three times, and inlining would expand
+    # the chain into 3^rounds scans of lineitem (observed: fd exhaustion)
+    ctes = [
+        # part nodes 2p, supplier nodes 2s+1 (the pagerank namespacing)
+        "e0 AS MATERIALIZED (SELECT DISTINCT l_partkey * 2 AS a, l_suppkey * 2 + 1 AS b"
+        " FROM lineitem WHERE l_partkey IS NOT NULL AND l_suppkey IS NOT NULL)",
+    ]
+    prev = "e0"
+    for i in range(1, _KCORE_ROUNDS + 1):
+        ctes.append(
+            f"""d{i} AS MATERIALIZED (
+      SELECT node, count(*)::BIGINT AS deg FROM (
+        SELECT a AS node FROM {prev} UNION ALL SELECT b FROM {prev})
+      GROUP BY node HAVING count(*) >= {_KCORE_K})"""
+        )
+        ctes.append(
+            f"e{i} AS MATERIALIZED (SELECT e.a, e.b FROM {prev} e"
+            f" JOIN d{i} da ON da.node = e.a"
+            f" JOIN d{i} db ON db.node = e.b)"
+        )
+        prev = f"e{i}"
+    return (
+        "WITH "
+        + ",\n    ".join(ctes)
+        + f"""
+    SELECT node, count(*)::BIGINT AS degree,
+           CASE WHEN node % 2 = 0 THEN 'part' ELSE 'supplier' END AS side
+    FROM (SELECT a AS node FROM {prev} UNION ALL SELECT b FROM {prev})
+    GROUP BY node HAVING count(*) >= {_KCORE_K}
+    """
+    )
+
+
+@register("graph_kcore_decomposition", oracle=_kcore_oracle())
+def graph_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """k-core decomposition (k=3) of the bipartite part–supplier graph
+    from lineitem (nodes namespaced 2p / 2s+1, the pagerank convention):
+    iteratively delete nodes with degree < k — with their edges — until
+    the remaining subgraph is stable; survivors with their final in-core
+    degrees are the k-core (Seidman 1983), graph-curation's cohesion
+    primitive (a crawl page kept only by low-degree link spam peels
+    away; a dense topical cluster survives). Spark runs the bounded
+    peeling loop — each round ONE degree agg + one semi-join edge
+    filter, localCheckpoint-materialized so round r+1 never re-runs
+    round r's lineage (the components-loop discipline; driver pulls are
+    zero) — and the oracle UNROLLS the identical rounds, so hash parity
+    holds by construction at every scale; an extra-round fixed-point
+    test pins that _KCORE_ROUNDS rounds suffice at the fixture scales. At
+    100 TB this is the O(depth) bulk-synchronous shape of the
+    components/label-prop family: per-round cost is one shuffle on
+    node id, state is the shrinking edge list itself."""
+    li = load_table(spark, sf_dir, "lineitem").filter(
+        F.col("l_partkey").isNotNull() & F.col("l_suppkey").isNotNull()
+    )
+    edges = (
+        li.select(
+            (F.col("l_partkey") * 2).alias("a"),
+            (F.col("l_suppkey") * 2 + 1).alias("b"),
+        )
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    for _ in range(_KCORE_ROUNDS):
+        nodes = edges.select(F.col("a").alias("node")).unionAll(
+            edges.select(F.col("b").alias("node"))
+        )
+        deg = (
+            nodes.groupBy("node")
+            .agg(F.count(F.lit(1)).alias("deg"))
+            .filter(F.col("deg") >= _KCORE_K)
+        )
+        edges = (
+            edges.join(deg.select(F.col("node").alias("a")), "a", "leftsemi")
+            .join(deg.select(F.col("node").alias("b")), "b", "leftsemi")
+            .select("a", "b")
+            .localCheckpoint(eager=True)
+        )
+    survivors = edges.select(F.col("a").alias("node")).unionAll(
+        edges.select(F.col("b").alias("node"))
+    )
+    return (
+        survivors.groupBy("node")
+        .agg(F.count(F.lit(1)).cast("long").alias("degree"))
+        .filter(F.col("degree") >= _KCORE_K)
+        .select(
+            "node",
+            "degree",
+            F.when(F.col("node") % 2 == 0, F.lit("part"))
+            .otherwise(F.lit("supplier"))
+            .alias("side"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# graph_bfs_layers
+# ---------------------------------------------------------------------------
+
+_BFS_ROUNDS = 4
+_BFS_SEED_MAX = 10  # seed nodes: parts with partkey < 10 present in the graph
+
+
+def _bfs_oracle() -> str:
+    ctes = [
+        "e AS (SELECT DISTINCT l_partkey AS p, l_suppkey AS s FROM lineitem"
+        " WHERE l_partkey IS NOT NULL AND l_suppkey IS NOT NULL)",
+        f"f0 AS (SELECT DISTINCT 'P' AS node_type, p AS node_id, 0 AS dist"
+        f" FROM e WHERE p < {_BFS_SEED_MAX})",
+        "v0 AS (SELECT node_type, node_id FROM f0)",
+    ]
+    for i in range(1, _BFS_ROUNDS + 1):
+        prev, side = f"f{i - 1}", ("S" if i % 2 == 1 else "P")
+        join_on = "e.p = f.node_id" if side == "S" else "e.s = f.node_id"
+        nxt_id = "e.s" if side == "S" else "e.p"
+        ctes.append(
+            f"f{i} AS (SELECT DISTINCT '{side}' AS node_type,"
+            f" {nxt_id} AS node_id, {i} AS dist"
+            f" FROM e JOIN {prev} f ON {join_on}"
+            f" WHERE NOT EXISTS (SELECT 1 FROM v{i - 1} v"
+            f"  WHERE v.node_type = '{side}' AND v.node_id = {nxt_id}))"
+        )
+        ctes.append(
+            f"v{i} AS (SELECT node_type, node_id FROM v{i - 1}"
+            f" UNION ALL SELECT node_type, node_id FROM f{i})"
+        )
+    union = "\n      UNION ALL ".join(
+        f"SELECT node_type, node_id, dist::BIGINT AS dist FROM f{i}"
+        for i in range(_BFS_ROUNDS + 1)
+    )
+    return "WITH " + ",\n    ".join(ctes) + "\n    " + union
+
+
+@register("graph_bfs_layers", oracle=_bfs_oracle())
+def graph_bfs_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bounded-round breadth-first search over the bipartite
+    part-supplier co-purchase graph — the traversal primitive the graph
+    family lacked beside k-core (peeling), PageRank (power iteration),
+    and triangles (joins): from the seed layer (part nodes with
+    partkey < 10 that appear in any lineitem), expand 4 alternating
+    frontier rounds (part -> supplier -> part -> ...), recording each
+    node's FIRST discovery distance — the reachability/lineage query of
+    supply-chain and curation graphs ('everything within k hops of the
+    flagged nodes'). Spark runs the bounded frontier loop — each round
+    is ONE equi-join of the frontier against the edge list plus one
+    anti-join against the visited set, all key-partitioned shuffles —
+    and the oracle UNROLLS the identical rounds, so parity holds by
+    construction round for round (the same bounded-unroll discipline as
+    graph_kcore_decomposition). Distances are exact integers; frontier
+    dedup is DISTINCT on (type, id). At 100 TB: 4 shuffle-join rounds
+    over an edge list that never amplifies beyond its true degree, a
+    visited set that only grows by frontier size, and no driver-side
+    state at all — the textbook Pregel-without-Pregel BFS shape."""
+    li = load_table(spark, sf_dir, "lineitem").filter(
+        F.col("l_partkey").isNotNull() & F.col("l_suppkey").isNotNull()
+    )
+    e = li.select(
+        F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s")
+    ).distinct()
+    f0 = (
+        e.filter(F.col("p") < _BFS_SEED_MAX)
+        .select(
+            F.lit("P").alias("node_type"),
+            F.col("p").alias("node_id"),
+            F.lit(0).alias("dist"),
+        )
+        .distinct()
+    )
+    layers = [f0]
+    visited = f0.select("node_type", "node_id")
+    frontier = f0
+    for i in range(1, _BFS_ROUNDS + 1):
+        side = "S" if i % 2 == 1 else "P"
+        join_key, nxt = ("p", "s") if side == "S" else ("s", "p")
+        # The frontier is distinct BY CONSTRUCTION (f0
+        # is a distinct; every later frontier is an anti-join of a
+        # distinct expansion) and single-typed, so the join-key
+        # projection needs no second distinct shuffle.
+        nxt_nodes = (
+            e.join(
+                frontier.select(F.col("node_id").alias(join_key)),
+                join_key,
+            )
+            .select(
+                F.lit(side).alias("node_type"),
+                F.col(nxt).alias("node_id"),
+                F.lit(i).alias("dist"),
+            )
+            .distinct()
+        )
+        fresh = nxt_nodes.join(
+            visited, ["node_type", "node_id"], "left_anti"
+        ).localCheckpoint(eager=True)
+        layers.append(fresh)
+        visited = visited.unionByName(
+            fresh.select("node_type", "node_id")
+        ).localCheckpoint(eager=True)
+        frontier = fresh
+    out = layers[0]
+    for lay in layers[1:]:
+        out = out.unionByName(lay)
+    return out.select(
+        "node_type", "node_id", F.col("dist").cast("long").alias("dist")
+    )
+
+
+# ---------------------------------------------------------------------------
+# json_kv_profile
+# ---------------------------------------------------------------------------
+
+# MAP-cast form, not per-key path extraction: re-extracting each key
+# via a '$."<key>"' path string (a) breaks
+# on keys containing a double quote, and (b) reads only the FIRST value
+# of a duplicate key while Spark's from_json map carries BOTH entries
+# (MapData does not enforce key uniqueness; explode emits each entry —
+# the collect-to-dict display hides this) — two latent hash divergences
+# on dirty JSON. TRY_CAST(props::JSON AS MAP(VARCHAR, VARCHAR)) yields
+# the IDENTICAL value canonicalization as Spark's map<string,string>
+# (probed: 'abc' / '7' / '1.5' / 'true' / NULL / compact '{"x":1}' /
+# '[1,2]'), handles any key bytes, NULLs on every non-object shape
+# exactly like from_json, and keeps duplicate entries just like
+# MapData — so the contract is simply DUPLICATES PRESERVED.
+_JSON_KV_ORACLE = """
+    WITH m AS (
+      SELECT TRY_CAST(CASE WHEN json_valid(props) THEN props END::JSON
+                      AS MAP(VARCHAR, VARCHAR)) AS mp
+      FROM events),
+    kv AS (
+      SELECT map_keys(mp)[u.i] AS key, map_values(mp)[u.i] AS v
+      FROM m, unnest(range(1, cardinality(mp)::BIGINT + 1)) u(i)
+      WHERE mp IS NOT NULL)
+    SELECT key,
+           count(*)::BIGINT AS n_present,
+           sum(CASE WHEN v IS NULL THEN 1 ELSE 0 END)::BIGINT AS n_null_vals,
+           sum(CASE WHEN TRY_CAST(v AS DOUBLE) IS NOT NULL
+                    THEN 1 ELSE 0 END)::BIGINT AS n_numeric,
+           count(DISTINCT v)::BIGINT AS n_distinct_vals,
+           min(v) AS min_val,
+           max(v) AS max_val
+    FROM kv GROUP BY key
+    """
+
+
+@register("json_kv_profile", oracle=_JSON_KV_ORACLE)
+def json_kv_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Semi-structured SCHEMA PROFILING over the events.props JSON column
+    — the discovery query every JSON ingest starts with ('what keys
+    exist, how often, what types do their values parse as, what range do
+    they span'): every VALID props object is flattened into (key, value)
+    pairs (Spark: from_json to map<string,string> + explode — scalars
+    coerce to their canonical text, malformed/array/scalar JSON to a
+    NULL map, i.e. zero rows, duplicate keys carried as SEPARATE entries
+    — MapData does not dedupe and explode emits each — exactly matching
+    the oracle's TRY_CAST-to-MAP form probed value-by-value; JSON nulls
+    survive as NULL values), then profiled
+    per key: presence count, JSON-null count, numeric-parse count
+    (TRY_CAST to double on BOTH engines — the malformed-JSON contract's
+    try-everything discipline), distinct-value count, and the
+    lexicographic value range. Dirty inputs are first-class: the dirty
+    fixture's '{bad json' / 'not json at all' / '' rows contribute
+    nothing on either engine, its '{"k": "abc"}' row lands in
+    n_present - n_numeric. Plan shape: ONE JVM-side JSON parse +
+    map-explode (no Python, no UDF) feeding ONE hash aggregate keyed on
+    the JSON key — at 100 TB a single shuffle whose key cardinality is
+    the SCHEMA size (tens of keys), with count(DISTINCT v) the only
+    expander (two-phase partial distinct under AQE)."""
+    ev = load_table(spark, sf_dir, "events")
+    kv = ev.select(
+        F.explode(F.from_json("props", "map<string,string>")).alias("key", "v")
+    )
+    return kv.groupBy("key").agg(
+        F.count(F.lit(1)).cast("long").alias("n_present"),
+        F.sum(F.when(F.col("v").isNull(), 1).otherwise(0))
+        .cast("long")
+        .alias("n_null_vals"),
+        F.sum(F.when(F.col("v").try_cast("double").isNotNull(), 1).otherwise(0))
+        .cast("long")
+        .alias("n_numeric"),
+        F.countDistinct("v").cast("long").alias("n_distinct_vals"),
+        F.min("v").alias("min_val"),
+        F.max("v").alias("max_val"),
+    )

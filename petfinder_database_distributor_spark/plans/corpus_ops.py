@@ -46,6 +46,7 @@ from petfinder_database_distributor_spark.operators.text import (
     token_count,
 )
 from petfinder_database_distributor_spark.plans.llm_pipeline import (
+    _COS_SQL,
     _SHINGLES_SQL,
     _TOKS_SQL,
     _load_embeddings,
@@ -442,6 +443,288 @@ def domain_budget_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         c.crossJoin(F.broadcast(budget))
         .filter(F.col("cum_tok") <= F.col("budget"))
         .select("doc_id", "source", "n_tok", "cum_tok")
+    )
+
+
+# ---------------------------------------------------------------------------
+# domain_budget_unimax
+# ---------------------------------------------------------------------------
+
+# UniMax epoch cap in milli-epochs: 1.15 epochs. Integer throughout —
+# cap_tok = n_tok * 1150 div 1000 — so both engines agree bit-for-bit.
+_UNIMAX_EPOCH_MILLI = 1150
+
+_UNIMAX_ORACLE = f"""
+    WITH tt AS (
+      SELECT coalesce(source, '') AS source,
+             len(list_filter(string_split_regex(lower(replace(replace(
+                   trim(coalesce(text, '')), 'İ', 'i'), 'Σ', 'σ')), '\\s+'),
+                 x -> x <> ''))::BIGINT AS n_tok
+      FROM documents WHERE doc_id IS NOT NULL
+    ),
+    c AS (SELECT source, sum(n_tok)::BIGINT AS c FROM tt GROUP BY 1),
+    tot AS (SELECT sum(c)::BIGINT AS b FROM c),
+    o AS (SELECT source, c,
+                 (c * {_UNIMAX_EPOCH_MILLI}) // 1000 AS cap,
+                 row_number() OVER (ORDER BY c, source) AS rk,
+                 count(*) OVER () AS n,
+                 coalesce(sum((c * {_UNIMAX_EPOCH_MILLI}) // 1000)
+                            OVER (ORDER BY c, source
+                                  ROWS BETWEEN UNBOUNDED PRECEDING
+                                  AND 1 PRECEDING), 0) AS caps_before
+          FROM c),
+    f AS (SELECT o.*, tot.b,
+                 (cap * (n - rk + 1) <= b - caps_before) AS cond
+          FROM o, tot),
+    m AS (SELECT coalesce(min(rk) FILTER (WHERE NOT cond),
+                          (SELECT max(n) FROM f) + 1) - 1 AS m FROM f),
+    cs AS (SELECT coalesce((SELECT sum(cap) FROM f, m WHERE rk <= m.m),
+                           0)::BIGINT AS caps_m)
+    SELECT source, c AS n_tok, cap AS cap_tok,
+           (CASE WHEN rk <= m.m THEN cap
+                 ELSE (b - cs.caps_m) // (n - m.m) END)::BIGINT AS alloc_tok,
+           rk <= m.m AS capped,
+           (CASE WHEN c > 0
+                 THEN (CASE WHEN rk <= m.m THEN cap
+                            ELSE (b - cs.caps_m) // (n - m.m) END) * 1000 // c
+                 ELSE 0 END)::BIGINT AS epochs_milli
+    FROM f, m, cs
+"""
+
+
+@register("domain_budget_unimax", oracle=_UNIMAX_ORACLE)
+def domain_budget_unimax(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """UniMax budget allocation (Chung et al. 2023): give every domain its
+    fair share of the total token budget, but never more than an epoch
+    cap (here 1.15 epochs of its own corpus — milli-epoch integers so
+    both engines agree exactly). Waterfilling closed form: sort domains
+    ascending by cap; the capped set is a PREFIX (once one domain's cap
+    exceeds the even share of the remaining budget, every later — larger
+    — domain's does too, because the level is invariant across uncapped
+    domains), so m = first rank where cap_i*(domains remaining) exceeds
+    the budget left by all-capped-priors, minus one; capped domains get
+    their cap, the rest split the remainder evenly (floor division —
+    truncate == floor since every operand is non-negative by the prefix
+    invariant). Plan shape: one hash agg per-doc -> per-source (bounded
+    by |domains|), then windows/aggregates over that REGISTER-TABLE-sized
+    frame only — at 100 TB the per-source frame is still ~dozens of rows;
+    the corpus-sized work is the single token-count agg. Budget B = total
+    corpus tokens (re-mixing, not subsetting: under-represented domains
+    repeat up to the cap, over-represented ones are cut to the level)."""
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id").isNotNull())
+    # NULL source ≡ '' domain (the compaction_bin_pack contract) — the
+    # rank's (c, source) total order must never see a NULL key: Spark
+    # sorts NULLS FIRST, DuckDB NULLS LAST, and the waterfill prefix is
+    # rank-determined
+    c = (
+        docs.select(
+            F.coalesce(F.col("source"), F.lit("")).alias("source"),
+            token_count(F.col("text")).cast("long").alias("n_tok"),
+        )
+        .groupBy("source")
+        .agg(F.sum("n_tok").alias("c"))
+    )
+    cap = F.expr(f"c * {_UNIMAX_EPOCH_MILLI} div 1000")
+    # every window below runs over the per-SOURCE frame (|domains| rows —
+    # a register table, same discipline as the sketch registers)
+    o = c.select(
+        "source",
+        "c",
+        cap.alias("cap"),
+        F.row_number().over(Window.orderBy("c", "source")).alias("rk"),
+        F.count(F.lit(1)).over(Window.partitionBy()).alias("n"),
+        F.coalesce(
+            F.sum(cap).over(
+                Window.orderBy("c", "source").rowsBetween(
+                    Window.unboundedPreceding, -1
+                )
+            ),
+            F.lit(0).cast("long"),
+        ).alias("caps_before"),
+        F.sum("c").over(Window.partitionBy()).alias("b"),
+    )
+    f = o.withColumn(
+        "cond", F.col("cap") * (F.col("n") - F.col("rk") + 1) <= F.col("b") - F.col("caps_before")
+    )
+    m = f.agg(
+        (
+            F.coalesce(
+                F.min(F.when(~F.col("cond"), F.col("rk"))), F.max("n") + 1
+            )
+            - 1
+        ).alias("m")
+    )
+    withm = f.crossJoin(F.broadcast(m))
+    caps_m = withm.agg(
+        F.coalesce(
+            F.sum(F.when(F.col("rk") <= F.col("m"), F.col("cap"))), F.lit(0)
+        )
+        .cast("long")
+        .alias("caps_m")
+    )
+    alloc = F.when(F.col("rk") <= F.col("m"), F.col("cap")).otherwise(
+        F.expr("(b - caps_m) div (n - m)")
+    )
+    return (
+        withm.crossJoin(F.broadcast(caps_m))
+        .select(
+            "source",
+            F.col("c").alias("n_tok"),
+            F.col("cap").alias("cap_tok"),
+            alloc.cast("long").alias("alloc_tok"),
+            (F.col("rk") <= F.col("m")).alias("capped"),
+            F.when(F.col("c") > 0, F.expr("1000") * alloc)
+            .otherwise(F.lit(0))
+            .alias("_em"),
+            "c",
+        )
+        .select(
+            "source",
+            "n_tok",
+            "cap_tok",
+            "alloc_tok",
+            "capped",
+            F.when(F.col("c") > 0, F.expr("_em div c"))
+            .otherwise(F.lit(0))
+            .cast("long")
+            .alias("epochs_milli"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# domain_budget_temperature
+# ---------------------------------------------------------------------------
+
+# tau=2 (alpha=0.5): weight ∝ sqrt(domain token count). sqrt is the ONE
+# non-integer op — IEEE-754 requires it correctly rounded, so JVM and
+# DuckDB produce the identical double; floor(sqrt(c) * 1000) then
+# quantizes to an integer milli-weight (the multiply is a single
+# correctly-rounded op on identical inputs — also bit-identical).
+_TEMP_W_SQL = "floor(sqrt(c::DOUBLE) * 1000)::BIGINT"
+
+_TEMP_ORACLE = f"""
+    WITH tt AS (
+      SELECT coalesce(source, '') AS source,
+             len(list_filter(string_split_regex(lower(replace(replace(
+                   trim(coalesce(text, '')), 'İ', 'i'), 'Σ', 'σ')), '\\s+'),
+                 x -> x <> ''))::BIGINT AS n_tok
+      FROM documents WHERE doc_id IS NOT NULL
+    ),
+    c AS (SELECT source, sum(n_tok)::BIGINT AS c FROM tt GROUP BY 1),
+    w AS (SELECT source, c, {_TEMP_W_SQL} AS w FROM c),
+    tot AS (SELECT sum(c)::BIGINT AS b, sum(w)::HUGEINT AS wsum FROM w),
+    base AS (
+      -- wsum = 0 guard (r12 advice): an all-empty-text corpus gives
+      -- every domain weight 0, so the apportionment divisor vanishes —
+      -- there is no budget to apportion and the contract is ZERO ROWS
+      -- (same degenerate-corpus convention as text_vocab_coverage).
+      SELECT w.source, w.c, w.w, tot.b,
+             ((tot.b::HUGEINT * w.w) // tot.wsum)::BIGINT AS base_tok,
+             ((tot.b::HUGEINT * w.w) % tot.wsum)::HUGEINT AS rem,
+             row_number() OVER (
+               ORDER BY ((tot.b::HUGEINT * w.w) % tot.wsum) DESC, w.source
+             ) AS rrank
+      FROM w, tot WHERE tot.wsum > 0),
+    short AS (SELECT (max(b) - sum(base_tok))::BIGINT AS leftover FROM base)
+    SELECT source, c AS n_tok, w AS weight_milli,
+           (base_tok + CASE WHEN rrank <= short.leftover THEN 1 ELSE 0 END)::BIGINT
+             AS alloc_tok,
+           (rrank <= short.leftover) AS got_bonus
+    FROM base, short
+"""
+
+
+@register("domain_budget_temperature", oracle=_TEMP_ORACLE)
+def domain_budget_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Temperature-scaled domain sampling budget (tau=2, alpha=0.5 — the
+    sqrt-share mixing rule of XLM-R/mT5): each domain's share of the
+    token budget B (= total corpus tokens) is proportional to
+    sqrt(its corpus size), flattening the head and lifting the tail one
+    principled notch less aggressively than UniMax's hard epoch cap.
+    Integer-exact end to end: milli-weights w = floor(sqrt(c)*1000)
+    (correctly-rounded IEEE sqrt — bit-identical cross-engine), base
+    allocation B*w div W in DECIMAL(38,0) (B*w overflows int64 at
+    ~100 TB corpus sizes; decimal/HUGEINT products are exact in both
+    engines), and the floor shortfall is distributed by LARGEST
+    REMAINDER (Hamilton apportionment, remainder-then-source order), so
+    sum(alloc_tok) == B exactly — the no-silent-drift property a
+    production mixer needs, pinned by test. Plan: one corpus-sized
+    token-count agg; every window/aggregate after runs over the
+    |domains|-row register frame (the UniMax discipline — see the
+    plan-quality allowlist)."""
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id").isNotNull())
+    c = (
+        docs.select(
+            F.coalesce(F.col("source"), F.lit("")).alias("source"),
+            token_count(F.col("text")).cast("long").alias("n_tok"),
+        )
+        .groupBy("source")
+        .agg(F.sum("n_tok").alias("c"))
+    )
+    # |domains|-row frame whose LINEAGE is the corpus-sized token agg —
+    # materialize once (localCheckpoint) or every downstream consumer
+    # (tot / ranked / short) re-runs the corpus scan (4 scans observed)
+    w = c.select(
+        "source",
+        "c",
+        F.floor(F.sqrt(F.col("c").cast("double")) * 1000).cast("long").alias("w"),
+    ).localCheckpoint(eager=True)
+    tot = w.agg(
+        F.sum("c").cast("long").alias("b"),
+        F.sum("w").cast("decimal(38,0)").alias("wsum"),
+    )
+    # |domains|-row frame from here on (register-table class).
+    # wsum = 0 guard: an all-empty-text corpus zeroes every
+    # milli-weight, so ANSI `bw div wsum` would raise DIVIDE_BY_ZERO —
+    # with no weight mass there is no apportionment; contract = 0 rows
+    # on BOTH engines (the oracle's base CTE carries the same filter).
+    base = (
+        w.crossJoin(F.broadcast(tot))
+        .filter(F.col("wsum") > F.lit(0))
+        .select(
+            "source",
+            "c",
+            "w",
+            "b",
+            (
+                (F.col("b").cast("decimal(38,0)") * F.col("w"))
+                .cast("decimal(38,0)")
+            ).alias("bw"),
+            F.col("wsum"),
+        )
+        .select(
+            "source",
+            "c",
+            "w",
+            "b",
+            F.expr("CAST(bw div wsum AS BIGINT)").alias("base_tok"),
+            F.expr("CAST(bw % wsum AS DECIMAL(38,0))").alias("rem"),
+        )
+    )
+    ranked = base.select(
+        "*",
+        F.row_number()
+        .over(Window.orderBy(F.col("rem").desc(), "source"))
+        .alias("rrank"),
+    )
+    short = ranked.agg(
+        (F.max("b") - F.sum("base_tok")).cast("long").alias("leftover")
+    )
+    return (
+        ranked.crossJoin(F.broadcast(short))
+        .select(
+            "source",
+            F.col("c").alias("n_tok"),
+            F.col("w").alias("weight_milli"),
+            (
+                F.col("base_tok")
+                + F.when(F.col("rrank") <= F.col("leftover"), 1).otherwise(0)
+            )
+            .cast("long")
+            .alias("alloc_tok"),
+            (F.col("rrank") <= F.col("leftover")).alias("got_bonus"),
+        )
     )
 
 
@@ -1121,6 +1404,133 @@ def dedup_semantic_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return semdedup_decisions(members)
 
 
+# ---------------------------------------------------------------------------
+# knn_graph_cells
+# ---------------------------------------------------------------------------
+
+_KNN_K = 3
+
+
+def _knn_graph_oracle(corpus_pred: str | None = None) -> str:
+    """The recompute ground truth over the index corpus; ``corpus_pred``
+    overrides the trained slice (knn_graph_retrain_recover's trimmed
+    witness corpus — the refusal argument is scale-free, so the witness
+    proves the identical lifecycle on a quarter of the data)."""
+    from petfinder_database_distributor_spark.operators.similarity import (
+        NONZERO_VEC_SQL,
+    )
+
+    cos = _COS_SQL.format(a="ea.embedding", b="eb.embedding")
+    nz_pred = NONZERO_VEC_SQL.format(v="embedding")
+    train = (
+        _ann_idx_train_sql(corpus_pred) if corpus_pred else _ann_idx_train_sql()
+    )
+    return f"""
+    WITH {train},
+    nz AS (SELECT vec_id FROM embeddings WHERE {nz_pred}),
+    pairs AS (SELECT a.vec_id, b.vec_id AS nbr_id
+              FROM ivf a JOIN ivf b USING (centroid_id)
+              WHERE a.vec_id <> b.vec_id
+                AND a.vec_id IN (SELECT vec_id FROM nz)
+                AND b.vec_id IN (SELECT vec_id FROM nz)),
+    scored AS (SELECT p.vec_id, p.nbr_id, {cos} AS cos
+               FROM pairs p
+               JOIN embeddings ea ON ea.vec_id = p.vec_id
+               JOIN embeddings eb ON eb.vec_id = p.nbr_id)
+    SELECT vec_id, nbr_id, rank, round(cos, 6) AS cos_r
+    FROM (SELECT vec_id, nbr_id, cos,
+                 row_number() OVER (PARTITION BY vec_id
+                                    ORDER BY cos DESC, nbr_id) AS rank
+          FROM scored)
+    WHERE rank <= {_KNN_K}
+    """
+
+
+@register("knn_graph_cells", oracle=_knn_graph_oracle())
+def knn_graph_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """k-NN GRAPH over every corpus vector via the committed IVF cells —
+    the curation-graph shape (graph-based filtering, cluster-quality
+    audits, SemDeDup-style analyses) that the fixed-8-query ann_* serving
+    family can't provide: EVERY vector is a query, candidates are its own
+    committed cell's members (the SemDeDup candidate discipline turned
+    into a reusable artifact), scores are exact cosine on the raw
+    embeddings, and each vector keeps its top-3 neighbors through a
+    hash-partitioned per-vector window. Reuses the staged snapshot index
+    (v0 reads, zero Lloyd iterations in the plan) and
+    semdedup_decisions' Sum(|cell|^2) pair budget guard — a corpus that
+    outgrew its cell count REFUSES with the executable fix named
+    (ann_index_retrain with more cells) instead of launching a quadratic
+    shuffle. The oracle retrains the identical integer-exact structures
+    from scratch, so parity also proves committed-cells == recompute.
+    Scale: within-cell self-join is Sum(|cell|^2) ~ n^2/n_clusters —
+    bounded by the same guard+retrain loop SemDeDup uses; vectors in
+    singleton cells have no in-cell neighbors and are absent, as in
+    FAISS's IVF-restricted search."""
+    emb = load_table(spark, sf_dir, "embeddings").filter(
+        F.col("vec_id").isNotNull() & F.col("embedding").isNotNull()
+    )
+    root = _ann_index_root(spark, sf_dir)
+    codes = snapshot_read(spark, f"{root}/codes", version=0)
+    members = codes.select("vec_id", "centroid_id").join(emb, "vec_id")
+    return knn_graph_decisions(members)
+
+
+def knn_graph_decisions(
+    members: DataFrame, k: int = _KNN_K, pair_budget: int = 10_000_000
+) -> DataFrame:
+    """The graph core over an assigned membership frame (vec_id,
+    centroid_id, embedding) — split out of the query (the
+    semdedup_decisions discipline) so the guard -> retrain(n_clusters up)
+    -> rerun recovery loop is an executable, tested path
+    (tests/test_corpus_ops.py::test_knn_guard_retrain_recovery), not just
+    a message. Sum(|cell|^2) refusal guard: one bounded n_clusters-row
+    agg; past the budget the within-cell self-join is refused with the
+    fix named rather than launched."""
+    from petfinder_database_distributor_spark.operators.similarity import (
+        as_double,
+        cosine,
+    )
+
+    # Zero-norm contract — see operators/similarity.py::nonzero_vectors
+    # (ANSI divide-by-zero on dirty rows; the family-wide guard)
+    from petfinder_database_distributor_spark.operators.similarity import (
+        nonzero_vectors,
+    )
+
+    members = nonzero_vectors(members)
+    pairs_est = sum(
+        r["n"] * r["n"]
+        for r in members.groupBy("centroid_id")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    )
+    if pairs_est > pair_budget:
+        raise ValueError(
+            f"knn_graph_cells: within-cell pair volume ~{pairs_est:,} exceeds "
+            f"the {pair_budget:,} budget — retrain the index with more cells "
+            "(ann_index_retrain(n_clusters=...)) so cell sizes shrink"
+        )
+    a = members.select(
+        F.col("vec_id"), "centroid_id", as_double(F.col("embedding")).alias("va")
+    )
+    b = members.select(
+        F.col("vec_id").alias("nbr_id"),
+        "centroid_id",
+        as_double(F.col("embedding")).alias("vb"),
+    )
+    scored = (
+        a.join(b, "centroid_id")
+        .filter(F.col("vec_id") != F.col("nbr_id"))
+        .select("vec_id", "nbr_id", cosine(F.col("va"), F.col("vb")).alias("cos"))
+    )
+    w = Window.partitionBy("vec_id").orderBy(F.col("cos").desc(), "nbr_id")
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("vec_id", "nbr_id", "rank", F.round("cos", 6).alias("cos_r"))
+    )
+
+
 # The recovery witness's OWN corpus slice (r12 verdict #3: the witness
 # was the single most expensive registered query; the pigeonhole refusal
 # argument is scale-free, so a quarter-sized slice proves the identical
@@ -1129,12 +1539,12 @@ def dedup_semantic_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 KNN_RECOVER_PRED_SQL = "vec_id % 5 <> 0 AND (vec_id < 16 OR vec_id % 4 = 1)"
 
 
-# Registered from plans/staged_r12.py (whose _knn_graph_oracle() is the
-# shared recompute ground truth) — the oracle must be importable without
-# a module cycle: staged_r12 -> corpus_ops is the one legal direction.
+@register(
+    "knn_graph_retrain_recover", oracle=_knn_graph_oracle(KNN_RECOVER_PRED_SQL)
+)
 def knn_graph_retrain_recover(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The index-lifecycle recovery loop as a REGISTERED, driver-facing
-    query (r11 verdict #5): build a deliberately under-provisioned IVF
+    query: build a deliberately under-provisioned IVF
     index (4 cells), let knn_graph_decisions' Sum(|cell|^2) pair-budget
     guard REFUSE it, run the guard's named fix — ann_index_retrain with
     the oracle's 16 cells committed as an atomic group version — and
@@ -1154,18 +1564,13 @@ def knn_graph_retrain_recover(spark: SparkSession, sf_dir: str) -> DataFrame:
     The witness corpus is a quarter-slice (KNN_RECOVER_PRED_SQL): the
     pigeonhole argument is scale-free, so the trimmed slice proves the
     identical guard -> retrain -> rerun lifecycle at a quarter of the
-    quadratic cost (r12 verdict #3). The oracle is the SAME recompute
+    quadratic cost. The oracle is the SAME recompute
     ground truth as knn_graph_cells over the same slice, so hash parity
     proves the recovered index converges to the well-provisioned answer
     — the SemDeDup/kNN guard's escape hatch (more cells => smaller cells
-    => bounded pairs) exercised end-to-end in the driver window, where
-    the tests (test_staged_r12.py::test_knn_guard_retrain_recovery,
-    test_ann_retrain.py) previously proved it only locally."""
-    from petfinder_database_distributor_spark.plans.staged_r12 import (
-        _KNN_K,
-        knn_graph_decisions,
-    )
-
+    => bounded pairs) exercised end-to-end against the oracle, beside the
+    local tests (test_corpus_ops.py::test_knn_guard_retrain_recovery,
+    test_ann_retrain.py)."""
     from petfinder_database_distributor_spark.operators.similarity import (
         _assign_int,
         _update_int,
@@ -1428,4 +1833,100 @@ def stream_ann_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
             "aggregate(zip_with(code, sequence(1, size(code)), (j, m) -> j * m),"
             " 0L, (a, x) -> a + x)"
         ).alias("code_crc"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# text_paragraph_dedup
+# ---------------------------------------------------------------------------
+
+_PD_KEEP_MILLI = 300  # keep docs whose duplicate-line share is < 30%
+
+
+def _paragraph_oracle() -> str:
+    h = MD5INT_SQL.format(x="ln")
+    return f"""
+    WITH lines AS (
+      SELECT doc_id, u.i - 1 AS line_idx, trim(d.ls[u.i]) AS ln
+      FROM (SELECT doc_id, string_split(coalesce(text, ''), chr(10)) AS ls
+            FROM documents WHERE doc_id IS NOT NULL) d,
+           unnest(range(1, len(d.ls) + 1)) u(i)
+      WHERE trim(d.ls[u.i]) <> ''),
+    ranked AS (
+      SELECT doc_id, line_idx,
+             row_number() OVER (PARTITION BY {h}
+                                ORDER BY doc_id, line_idx) AS occ
+      FROM lines),
+    per_doc AS (
+      SELECT doc_id, count(*) AS n_lines,
+             sum(CASE WHEN occ > 1 THEN 1 ELSE 0 END) AS n_dup
+      FROM ranked GROUP BY doc_id)
+    SELECT d.doc_id,
+           coalesce(p.n_lines, 0)::BIGINT AS n_lines,
+           coalesce(p.n_dup, 0)::BIGINT AS n_dup_lines,
+           CASE WHEN coalesce(p.n_lines, 0) > 0
+                THEN (p.n_dup * 1000 // p.n_lines) ELSE 0 END::BIGINT
+             AS dup_ratio_milli,
+           (CASE WHEN coalesce(p.n_lines, 0) > 0
+                 THEN (p.n_dup * 1000 // p.n_lines) ELSE 0 END
+            < {_PD_KEEP_MILLI}) AS keep
+    FROM (SELECT doc_id FROM documents WHERE doc_id IS NOT NULL) d
+    LEFT JOIN per_doc p USING (doc_id)
+    """
+
+
+@register("text_paragraph_dedup", oracle=_paragraph_oracle())
+def text_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Corpus-wide EXACT line-level deduplication — the C4/RefinedWeb
+    exact-dedup unit (Raffel et al. 2020 dedup three-sentence spans;
+    Penedo et al. 2023 dedup at document+line granularity): every
+    non-empty trimmed line is hashed (portable 60-bit md5int), the FIRST
+    occurrence corpus-wide (ordered by doc_id, then line index — a total
+    deterministic order) is the keeper, and every later occurrence marks
+    its document. Output is the per-document audit row: non-empty line
+    count, already-seen-line count, the duplicate share in milli, and
+    the keep verdict (< 30% duplicated lines) — zero-line documents
+    survive with n_lines = 0 and keep = true (nothing to hold against
+    them). Plan shape: ONE posexplode of the corpus's lines, ONE
+    hash-PARTITIONED window (partition = line hash, so first-occurrence
+    ranking shuffles on the dedup key exactly once and no partition
+    exceeds a line's global frequency), one per-doc hash re-agg, and a
+    left join back to the doc spine. At 100 TB that is the canonical
+    exact-dedup shape: shuffle on content hash, rank, re-agg — no
+    all-pairs anything; boilerplate lines (the hot hashes) skew their
+    partitions at worst linearly in their frequency."""
+    docs = load_table(spark, sf_dir, "documents").filter(
+        F.col("doc_id").isNotNull()
+    )
+    lines = (
+        docs.select(
+            "doc_id",
+            F.posexplode(F.split(F.coalesce(F.col("text"), F.lit("")), "\n", -1))
+            .alias("line_idx", "raw"),
+        )
+        .select("doc_id", "line_idx", F.trim(F.col("raw")).alias("ln"))
+        .filter(F.col("ln") != "")
+    )
+    w = Window.partitionBy(md5int(F.col("ln"))).orderBy("doc_id", "line_idx")
+    ranked = lines.select(
+        "doc_id", F.row_number().over(w).alias("occ")
+    )
+    per_doc = ranked.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n_lines"),
+        F.sum(F.when(F.col("occ") > 1, 1).otherwise(0)).alias("n_dup"),
+    )
+    ratio = F.when(
+        F.coalesce(F.col("n_lines"), F.lit(0)) > 0,
+        F.expr("n_dup * 1000 div n_lines"),
+    ).otherwise(F.lit(0))
+    return (
+        docs.select("doc_id")
+        .join(per_doc, "doc_id", "left")
+        .select(
+            "doc_id",
+            F.coalesce(F.col("n_lines"), F.lit(0)).cast("long").alias("n_lines"),
+            F.coalesce(F.col("n_dup"), F.lit(0)).cast("long").alias("n_dup_lines"),
+            ratio.cast("long").alias("dup_ratio_milli"),
+            (ratio < _PD_KEEP_MILLI).alias("keep"),
+        )
     )

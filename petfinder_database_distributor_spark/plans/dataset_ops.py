@@ -12,7 +12,7 @@ exact row set.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -764,4 +764,442 @@ def keydedup_first_occurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("string")
         .alias("sum_ts_us"),
         F.sum(F.length("props")).alias("sum_props_len"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# sample_kcenter_greedy
+# ---------------------------------------------------------------------------
+
+_KCENTER_K = 8
+# same embedding quantization as the ANN oracle family: round(x*1000) as
+# int64, so squared-L2 distances are exact integers in both engines
+_KC_QE_SQL = "list_transform(embedding::DOUBLE[], x -> round(x * 1000))"
+_KC_DIST_SQL = (
+    "(list_inner_product({a}, {a}) + list_inner_product({b}, {b})"
+    " - 2 * list_inner_product({a}, {b}))::BIGINT"
+)
+
+
+def _kcenter_oracle(k: int = _KCENTER_K) -> str:
+    """Unrolled k-step farthest-point-sampling in DuckDB: seed = lowest
+    vec_id, then k-1 rounds of (argmax running min-distance, update)."""
+    d = _KC_DIST_SQL
+    ctes = [
+        f"q AS (SELECT vec_id, {_KC_QE_SQL} AS qe FROM embeddings"
+        " WHERE vec_id IS NOT NULL AND embedding IS NOT NULL)",
+        "s0 AS (SELECT vec_id, qe FROM q ORDER BY vec_id LIMIT 1)",
+        "d0 AS (SELECT q.vec_id, q.qe, q.vec_id = s0.vec_id AS picked, "
+        + d.format(a="q.qe", b="s0.qe")
+        + " AS mind FROM q, s0)",
+    ]
+    for i in range(1, k):
+        ctes.append(
+            f"s{i} AS (SELECT vec_id, qe, mind FROM d{i - 1}"
+            f" WHERE NOT picked ORDER BY mind DESC, vec_id LIMIT 1)"
+        )
+        ctes.append(
+            f"d{i} AS (SELECT d.vec_id, d.qe,"
+            f" d.picked OR d.vec_id = s.vec_id AS picked,"
+            f" least(d.mind, " + d.format(a="d.qe", b="s.qe") + ") AS mind"
+            f" FROM d{i - 1} d, s{i} s)"
+        )
+    sel = ["SELECT 1::BIGINT AS sel_rank, vec_id, 0::BIGINT AS dist_sq FROM s0"]
+    sel += [
+        f"SELECT {i + 1}::BIGINT, vec_id, mind::BIGINT FROM s{i}"
+        for i in range(1, k)
+    ]
+    return "WITH " + ",\n    ".join(ctes) + "\n    " + "\n    UNION ALL ".join(sel)
+
+
+_KCENTER_ORACLE = _kcenter_oracle()
+
+
+def _kc_qe(col: Column) -> Column:
+    return F.transform(
+        col.cast("array<double>"), lambda x: F.round(x * 1000).cast("long")
+    )
+
+
+def _kc_dist(qe_col: str, center: list[int]) -> Column:
+    # One F.expr per center: the element-wise F.lit/zip_with form
+    # issues 64+ py4j calls per center per round —
+    # ~2k driver round-trips across the k rounds for identical
+    # aggregate(zip_with(...)) semantics.
+    lits = ",".join(f"{int(v)}L" for v in center)
+    return F.expr(
+        f"aggregate(zip_with({qe_col}, array({lits}),"
+        f" (a, b) -> (a - b) * (a - b)), 0L, (acc, x) -> acc + x)"
+    )
+
+
+@register("sample_kcenter_greedy", oracle=_KCENTER_ORACLE)
+def sample_kcenter_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """k-Center greedy coreset selection (farthest-point sampling; Sener &
+    Savarese 2018, the classic active-learning/data-pruning selector):
+    seed with the lowest vec_id, then k-1 rounds of "pick the vector
+    farthest from everything selected so far" — the 2-approximation of
+    the k-Center cover, and the geometry-COVERAGE complement to DSIR's
+    distribution-matching draw. dist_sq at selection is the corpus
+    covering radius as of that pick (monotone non-increasing — pinned in
+    tests). Integer-exact: embeddings quantize to round(x*1000) int64,
+    distances are squared L2 (<= 64 * 2000^2 — no overflow), argmax ties
+    break on vec_id. Plan shape: k-1 bounded driver iterations, each ONE
+    narrow map over the corpus (running-min distance to <=k inlined
+    literal centers — 64 ints each, no join, no shuffle) closed by a
+    TakeOrderedAndProject(1); the only driver pulls are k single-row
+    collects (the same bounded-metadata discipline as the k-means seed
+    pulls). DEPLOYMENT POSTURE: this is the EXACTNESS WITNESS, not the
+    default-scale path — its k sequential corpus scans are the last
+    serial-scan shape in the engine's top-15. Deploy
+    sample_kcenter_bucketed (below): two corpus passes total at any k,
+    with this query as the quality reference its covering radius is
+    audited against."""
+    emb = load_table(spark, sf_dir, "embeddings").filter(
+        F.col("vec_id").isNotNull() & F.col("embedding").isNotNull()
+    )
+    # The k-1 rounds below each re-scan the corpus; the quantized frame
+    # is the only input they share, so materialize it ONCE (DISK_ONLY —
+    # corpus-bulk discipline) instead of paying the parquet scan +
+    # quantize transform k times (the witness's sequential shape itself
+    # is unchanged — sample_kcenter_bucketed stays the 100 TB path).
+    # Persist + try/finally unpersist rather than localCheckpoint:
+    # checkpoint blocks are not cache-manager-tracked, so they linger on
+    # executors until driver GC (a leak across a 216-query bench
+    # session), and the truncated lineage makes the query unrecoverable
+    # on executor loss. The persisted plan is re-analyzed per round, but
+    # it is three nodes deep — recompute safety and deterministic cleanup
+    # win.
+    from pyspark.storagelevel import StorageLevel
+
+    q = emb.select("vec_id", _kc_qe(F.col("embedding")).alias("qe")).persist(
+        StorageLevel.DISK_ONLY
+    )
+    try:
+        seed_rows = q.orderBy("vec_id").limit(1).collect()
+        if not seed_rows:
+            # degenerate input: no vectors → empty selection, same schema
+            # the oracle produces (its seed CTE is empty too) — never an
+            # IndexError
+            return spark.createDataFrame(
+                [], "sel_rank bigint, vec_id bigint, dist_sq bigint"
+            )
+        # populate the cache fully before the rounds (count scans every
+        # partition of the persisted relation, caching all its columns)
+        q.count()
+        seed = seed_rows[0]
+        selected = [(1, int(seed["vec_id"]), 0, list(seed["qe"]))]
+        for i in range(2, _KCENTER_K + 1):
+            mind = F.least(
+                *[_kc_dist("qe", c[3]) for c in selected]
+            ) if len(selected) > 1 else _kc_dist("qe", selected[0][3])
+            picked_ids = [c[1] for c in selected]
+            nxt = (
+                q.filter(~F.col("vec_id").isin(picked_ids))
+                .select("vec_id", "qe", mind.alias("mind"))
+                .orderBy(F.col("mind").desc(), "vec_id")
+                .limit(1)
+                .collect()
+            )
+            if not nxt:
+                break
+            r = nxt[0]
+            selected.append((i, int(r["vec_id"]), int(r["mind"]), list(r["qe"])))
+        return spark.createDataFrame(
+            [(r, v, d) for r, v, d, _ in selected],
+            "sel_rank bigint, vec_id bigint, dist_sq bigint",
+        )
+    finally:
+        q.unpersist()
+
+
+# ---------------------------------------------------------------------------
+# sample_kcenter_bucketed
+# ---------------------------------------------------------------------------
+
+_KCB_K = 8
+# expected candidate-set size: S = max(1, n // _KCB_TARGET) keeps ~128
+# candidates at EVERY corpus scale — the whole point of the variant
+_KCB_TARGET = 128
+# loud hard bound on the driver pull (ORDER BY vec_id LIMIT, i.e.
+# TakeOrderedAndProject — never an unbounded collect even if the hash
+# sample comes in heavy); at the expected 128 it never binds
+_KCB_CAP = 4096
+
+
+def _kcb_oracle() -> str:
+    d = _KC_DIST_SQL
+    h = MD5INT_SQL.format(x="vec_id::VARCHAR")
+    ctes = [
+        f"q AS (SELECT vec_id, {_KC_QE_SQL} AS qe FROM embeddings"
+        " WHERE vec_id IS NOT NULL AND embedding IS NOT NULL)",
+        f"nn AS (SELECT greatest(1, count(*) // {_KCB_TARGET}) AS s,"
+        " min(vec_id) AS mn FROM q)",
+        f"cand AS (SELECT q.vec_id, q.qe FROM q, nn"
+        f" WHERE ({h}) % nn.s = 0 OR q.vec_id = nn.mn"
+        f" ORDER BY q.vec_id LIMIT {_KCB_CAP})",
+        "s0 AS (SELECT vec_id, qe FROM cand ORDER BY vec_id LIMIT 1)",
+        "d0 AS (SELECT c.vec_id, c.qe, c.vec_id = s0.vec_id AS picked, "
+        + d.format(a="c.qe", b="s0.qe")
+        + " AS mind FROM cand c, s0)",
+    ]
+    for i in range(1, _KCB_K):
+        ctes.append(
+            f"s{i} AS (SELECT vec_id, qe, mind FROM d{i - 1}"
+            f" WHERE NOT picked ORDER BY mind DESC, vec_id LIMIT 1)"
+        )
+        ctes.append(
+            f"d{i} AS (SELECT d.vec_id, d.qe,"
+            f" d.picked OR d.vec_id = s.vec_id AS picked,"
+            f" least(d.mind, " + d.format(a="d.qe", b="s.qe") + ") AS mind"
+            f" FROM d{i - 1} d, s{i} s)"
+        )
+    sel = ["SELECT 1::BIGINT AS sel_rank, vec_id, qe, 0::BIGINT AS dist_sq FROM s0"]
+    sel += [
+        f"SELECT {i + 1}::BIGINT, vec_id, qe, mind::BIGINT FROM s{i}"
+        for i in range(1, _KCB_K)
+    ]
+    union = "\n      UNION ALL ".join(sel)
+    return (
+        "WITH "
+        + ",\n    ".join(ctes)
+        + f""",
+    sel AS ({union}),
+    rad AS (SELECT coalesce(max(m), 0)::BIGINT AS r FROM (
+      SELECT q.vec_id, min({d.format(a="q.qe", b="sel.qe")}) AS m
+      FROM q, sel GROUP BY q.vec_id))
+    SELECT sel_rank, vec_id, dist_sq, rad.r AS corpus_radius_sq
+    FROM sel, rad
+    """
+    )
+
+
+@register("sample_kcenter_bucketed", oracle=_kcb_oracle())
+def sample_kcenter_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """k-Center coreset selection WITHOUT the k-round corpus loop — the
+    100 TB twin of sample_kcenter_greedy. Greedy
+    farthest-point sampling is a 2-approximation but serializes k FULL
+    corpus scans; the MapReduce-style variant here (the
+    sample-then-solve composition of Ene/Im/Moseley 2011's k-center
+    pattern) does the whole job in TWO corpus passes at any k: (1) ONE
+    hash-sampled candidate pass — md5int(vec_id) % S == 0 with
+    S = max(1, n // 128), so the candidate set is ~128 vectors at every
+    corpus scale (plus the min-id vector so it is provably non-empty,
+    TakeOrderedAndProject-capped at 4096 as a loud driver-pull bound);
+    (2) the EXACT integer greedy over that bounded set (driver-side,
+    same quantized squared-L2 and vec_id tie-breaks as the greedy twin);
+    (3) ONE corpus pass measuring the TRUE covering radius of the chosen
+    centers — max over all vectors of min squared distance to a center
+    (broadcast of 8 rows; coalesced to 0 on an empty corpus) — the
+    quality certificate against the greedy's radius. Deterministic end
+    to end (hash sampling, integer distances, lexical ties), hence
+    oracle-checkable: the oracle replays the identical sample + unrolled
+    greedy + radius. At 100 TB: two embarrassingly-parallel scans and a
+    <=4096-row driver pull replace k serialized scans — the 8x scale
+    probe must come in at or under the greedy's 1.7x."""
+    emb = load_table(spark, sf_dir, "embeddings").filter(
+        F.col("vec_id").isNotNull() & F.col("embedding").isNotNull()
+    )
+    q = emb.select("vec_id", _kc_qe(F.col("embedding")).alias("qe"))
+    nn = q.agg(
+        F.greatest(
+            F.lit(1).cast("long"),
+            F.expr(f"count(*) div {_KCB_TARGET}"),
+        ).alias("s"),
+        F.min("vec_id").alias("mn"),
+    )
+    h = md5int(F.col("vec_id").cast("string"))
+    cand_rows = (
+        q.crossJoin(F.broadcast(nn))
+        .filter((h % F.col("s") == 0) | (F.col("vec_id") == F.col("mn")))
+        .select("vec_id", "qe")
+        .orderBy("vec_id")
+        .limit(_KCB_CAP)
+        .collect()
+    )
+    if not cand_rows:
+        return spark.createDataFrame(
+            [],
+            "sel_rank bigint, vec_id bigint, dist_sq bigint,"
+            " corpus_radius_sq bigint",
+        )
+    # exact greedy over the bounded candidate set — pure-Python integers,
+    # bit-identical to the oracle's unrolled SQL greedy (same seed, same
+    # squared-L2, same (dist desc, vec_id) ties)
+    cand = sorted(
+        ((int(r["vec_id"]), [int(x) for x in r["qe"]]) for r in cand_rows)
+    )
+
+    def dist2(a: list[int], b: list[int]) -> int:
+        return sum((x - y) * (x - y) for x, y in zip(a, b))
+
+    selected = [(1, cand[0][0], 0, cand[0][1])]
+    remaining = dict(cand[1:])
+    mind = {v: dist2(vec, cand[0][1]) for v, vec in remaining.items()}
+    for i in range(2, _KCB_K + 1):
+        if not remaining:
+            break
+        pick = max(remaining, key=lambda v: (mind[v], -v))
+        # (dist desc, vec_id asc) ties — max on (mind, -vec_id)
+        selected.append((i, pick, mind[pick], remaining[pick]))
+        pvec = remaining.pop(pick)
+        del mind[pick]
+        for v, vec in remaining.items():
+            d = dist2(vec, pvec)
+            if d < mind[v]:
+                mind[v] = d
+    centers = [(r, v, d) for r, v, d, _ in selected]
+    center_vecs = [vec for _, _, _, vec in selected]
+    radius_col = F.least(
+        *[_kc_dist("qe", c) for c in center_vecs]
+    ) if len(center_vecs) > 1 else _kc_dist("qe", center_vecs[0])
+    rad = q.agg(
+        F.coalesce(F.max(radius_col), F.lit(0)).cast("long").alias("r")
+    )
+    sel_df = spark.createDataFrame(
+        centers, "sel_rank bigint, vec_id bigint, dist_sq bigint"
+    )
+    return sel_df.crossJoin(F.broadcast(rad)).select(
+        "sel_rank", "vec_id", "dist_sq", F.col("r").alias("corpus_radius_sq")
+    )
+
+
+# ---------------------------------------------------------------------------
+# sample_stratified_neyman
+# ---------------------------------------------------------------------------
+
+_NEY_BUDGET = 1000  # total sample size to allocate across strata
+
+
+_NEYMAN_ORACLE = f"""
+    WITH ev AS (
+      SELECT event_type, CAST(round(value * 100) AS BIGINT) AS c
+      FROM events
+      WHERE event_type IS NOT NULL AND value IS NOT NULL
+        AND isfinite(value) AND abs(value) < 1000000000000.0),
+    st AS (
+      SELECT event_type, count(*)::HUGEINT AS n, sum(c)::HUGEINT AS s
+      FROM ev GROUP BY 1),
+    disp AS (
+      SELECT e.event_type, st.n,
+             sum(abs(st.n * e.c - st.s))::HUGEINT AS adev
+      FROM ev e JOIN st USING (event_type)
+      GROUP BY e.event_type, st.n),
+    wts AS (
+      SELECT event_type, n::BIGINT AS n_rows,
+             (adev // (n * n))::BIGINT AS mad_cents,
+             (n * (adev // (n * n)))::HUGEINT AS w
+      FROM disp),
+    tot AS (SELECT sum(w)::HUGEINT AS wsum FROM wts),
+    base AS (
+      SELECT w.event_type, w.n_rows, w.mad_cents,
+             (({_NEY_BUDGET}::HUGEINT * w.w) // tot.wsum)::BIGINT AS base_n,
+             (({_NEY_BUDGET}::HUGEINT * w.w) % tot.wsum)::HUGEINT AS rem,
+             row_number() OVER (
+               ORDER BY (({_NEY_BUDGET}::HUGEINT * w.w) % tot.wsum) DESC,
+                        w.event_type) AS rrank
+      FROM wts w, tot WHERE tot.wsum > 0),
+    short AS (SELECT ({_NEY_BUDGET} - sum(base_n))::BIGINT AS leftover FROM base)
+    SELECT event_type, n_rows, mad_cents,
+           (base_n + CASE WHEN rrank <= short.leftover THEN 1 ELSE 0 END)::BIGINT
+             AS alloc_n,
+           (rrank <= short.leftover) AS got_bonus
+    FROM base, short
+    """
+
+
+@register("sample_stratified_neyman", oracle=_NEYMAN_ORACLE)
+def sample_stratified_neyman(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Neyman-style OPTIMAL stratified-sample allocation (Neyman 1934:
+    sample stratum h proportionally to N_h * sigma_h — high-variance
+    strata get more budget than proportional allocation gives them),
+    made integer-exact end to end by an L1 dispersion proxy: sigma_h is
+    replaced with the mean absolute deviation in cents, computed as
+    sum(|n*c - S|) div n^2 — all integer (no sqrt, whose operand here
+    would exceed 2^53 and hit the probed DuckDB decimal->double
+    last-bit mis-rounding; MAD is proportional to sigma for a fixed
+    distribution shape, so the allocation ORDER matches Neyman's). The
+    1000-row budget is apportioned over w_h = n_h * mad_h by LARGEST
+    REMAINDER (Hamilton — the domain_budget_temperature pattern), so
+    sum(alloc_n) == 1000 exactly; an all-constant corpus (every
+    stratum's dispersion zero => wsum = 0) yields ZERO rows on both
+    engines — domain_budget_temperature's wsum-guard contract.
+    HUGEINT/decimal(38,0) products throughout (n*c and budget*w overflow int64 inside the
+    widened measure envelope). Plan shape: TWO corpus-sized hash aggs
+    (moments, then deviations against the broadcast stratum moments) —
+    map-side partials both; every window after runs over the
+    |event_type|-row register frame. At 100 TB this is the survey-
+    sampling design pass every labeling/eval pipeline budgets with."""
+    ev = (
+        finite_measures(
+            load_table(spark, sf_dir, "events").filter(
+                F.col("event_type").isNotNull() & F.col("value").isNotNull()
+            )
+        )
+        .select(
+            "event_type",
+            F.round(F.col("value") * 100).cast("long").alias("c"),
+        )
+    )
+    st = ev.groupBy("event_type").agg(
+        F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
+        F.sum(F.col("c").cast("decimal(38,0)")).alias("s"),
+    )
+    disp = (
+        ev.join(F.broadcast(st), "event_type")
+        .select(
+            "event_type",
+            "n",
+            F.abs(F.col("n") * F.col("c") - F.col("s")).alias("ad"),
+        )
+        .groupBy("event_type", "n")
+        .agg(F.sum("ad").cast("decimal(38,0)").alias("adev"))
+    )
+    wts = disp.select(
+        "event_type",
+        F.col("n").cast("long").alias("n_rows"),
+        F.expr("CAST(adev div (n * n) AS BIGINT)").alias("mad_cents"),
+        F.expr("CAST(n * (adev div (n * n)) AS DECIMAL(38,0))").alias("w"),
+    )
+    tot = wts.agg(F.sum("w").cast("decimal(38,0)").alias("wsum"))
+    base = (
+        wts.crossJoin(F.broadcast(tot))
+        .filter(F.col("wsum") > F.lit(0))
+        .select(
+            "event_type",
+            "n_rows",
+            "mad_cents",
+            F.expr(
+                f"CAST((CAST({_NEY_BUDGET} AS DECIMAL(38,0)) * w) div wsum"
+                " AS BIGINT)"
+            ).alias("base_n"),
+            F.expr(
+                f"CAST((CAST({_NEY_BUDGET} AS DECIMAL(38,0)) * w) % wsum"
+                " AS DECIMAL(38,0))"
+            ).alias("rem"),
+        )
+    )
+    ranked = base.select(
+        "*",
+        F.row_number()
+        .over(Window.orderBy(F.col("rem").desc(), "event_type"))
+        .alias("rrank"),
+    )
+    short = ranked.agg(
+        (F.lit(_NEY_BUDGET) - F.sum("base_n")).cast("long").alias("leftover")
+    )
+    return (
+        ranked.crossJoin(F.broadcast(short))
+        .select(
+            "event_type",
+            "n_rows",
+            "mad_cents",
+            (
+                F.col("base_n")
+                + F.when(F.col("rrank") <= F.col("leftover"), 1).otherwise(0)
+            )
+            .cast("long")
+            .alias("alloc_n"),
+            (F.col("rrank") <= F.col("leftover")).alias("got_bonus"),
+        )
     )

@@ -9,8 +9,9 @@ restate the same algorithm in DuckDB list/lambda dialect.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from petfinder_database_distributor_spark.operators.dedup_fuzzy import (
     SIMHASH_BITS,
@@ -34,6 +35,7 @@ from petfinder_database_distributor_spark.operators.similarity import (
     srp_plane_matrix,
 )
 from petfinder_database_distributor_spark.operators.text import (
+    DEFAULT_STOPWORDS,
     MD5INT_SQL,
     bag_of_words_fingerprint,
     bpe_ish_token_count,
@@ -44,6 +46,7 @@ from petfinder_database_distributor_spark.operators.text import (
     quality_score,
     stopword_ratio,
     token_count,
+    tokens,
 )
 from petfinder_database_distributor_spark.registry import register
 from petfinder_database_distributor_spark.schema import finite_measures, load_table
@@ -1339,8 +1342,8 @@ _BM25_TERMS = ("spark", "merge", "vector")
 
 
 def _bm25_term_score(i: int):
-    """One BM25 term of the exact-rational form, shared by
-    search_bm25_topk and the staged hybrid-RRF head (staged_r15).
+    """One BM25 term of the exact-rational form used by
+    search_bm25_topk.
 
     Overflow envelope (the r14 integer-product audit): the rational
     numerator (2n-2df+1)*22*tf*tt overflows BIGINT once n*tt crosses
@@ -2917,4 +2920,580 @@ def corpus_span_excision(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("n") - F.coalesce(F.col("n_dead"), F.lit(0)))
         .cast("long")
         .alias("n_tokens_after"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# text_gopher_rules
+# ---------------------------------------------------------------------------
+
+# Gopher's stop-word rule ("contains at least 2 of a required stop-word
+# set") parameterized with the repo-wide DEFAULT_STOPWORDS (operators/
+# text.py) instead of the paper's English 8 ('be'/'to'/'that'/... never
+# occur in the synthetic corpus vocabulary, which would make the rule a
+# constant-false — a production deployment swaps the list per language).
+# Imported, not copied, so the two lists cannot drift.
+_GOPHER_STOPS = DEFAULT_STOPWORDS
+
+
+def _gopher_oracle() -> str:
+    stop_sum = " + ".join(
+        f"CASE WHEN list_contains(t, '{s}') THEN 1 ELSE 0 END"
+        for s in _GOPHER_STOPS
+    )
+    return f"""
+    WITH toks AS ({_TOKS_SQL}),
+    base AS (
+      SELECT doc_id, coalesce(text, '') AS raw, t,
+             len(t)::BIGINT AS n,
+             coalesce(list_sum(list_transform(t, w -> length(w))), 0)::BIGINT AS chars,
+             len(list_filter(t, w -> regexp_matches(w, '[a-z]')))::BIGINT AS alpha_w,
+             ({stop_sum})::BIGINT AS stops
+      FROM toks),
+    m AS (
+      SELECT doc_id, n,
+             CASE WHEN n > 0 THEN chars * 1000 // n ELSE 0 END AS mwl_milli,
+             (length(raw) - length(replace(raw, '#', '')))::BIGINT AS hash_cnt,
+             ((length(raw) - length(replace(raw, '...', ''))) // 3)::BIGINT AS ell_cnt,
+             string_split(raw, chr(10)) AS lines,
+             alpha_w, stops
+      FROM base),
+    l AS (
+      SELECT doc_id, n, mwl_milli, hash_cnt, ell_cnt, alpha_w, stops,
+             len(lines)::BIGINT AS n_lines,
+             len(list_filter(lines, x -> starts_with(ltrim(x), '- ')
+                                       OR starts_with(ltrim(x), '* ')
+                                       OR starts_with(ltrim(x), '•')))::BIGINT AS bullet_lines,
+             len(list_filter(lines, x -> ends_with(rtrim(x), '...')))::BIGINT AS endell_lines
+      FROM m)
+    SELECT doc_id, n AS n_words, mwl_milli,
+           (n BETWEEN 50 AND 100000) AS r_wordcount,
+           (mwl_milli BETWEEN 3000 AND 10000) AS r_meanwordlen,
+           (hash_cnt * 10 <= n AND ell_cnt * 10 <= n) AS r_symbol,
+           (bullet_lines * 10 <= 9 * n_lines) AS r_bullet,
+           (endell_lines * 10 <= 3 * n_lines) AS r_ellipsis,
+           (alpha_w * 5 >= 4 * n) AS r_alpha,
+           (stops >= 2) AS r_stopwords,
+           ((n BETWEEN 50 AND 100000)
+            AND (mwl_milli BETWEEN 3000 AND 10000)
+            AND (hash_cnt * 10 <= n AND ell_cnt * 10 <= n)
+            AND (bullet_lines * 10 <= 9 * n_lines)
+            AND (endell_lines * 10 <= 3 * n_lines)
+            AND (alpha_w * 5 >= 4 * n)
+            AND (stops >= 2)) AS keep
+    FROM l
+    """
+
+
+@register("text_gopher_rules", oracle=_gopher_oracle())
+def text_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The full Gopher quality rule set (Rae et al. 2021, appendix A1.1)
+    as per-rule flags — the rule-level transparency a production corpus
+    pipeline needs for ablations, where text_quality_score collapses four
+    signals into one scalar: word count in [50, 100k]; mean word length
+    in [3, 10] (milli-integer — no float division); symbol-to-word ratio
+    <= 0.1 for EACH of '#' and '...' separately (the paper applies the
+    threshold per symbol); <= 90% of lines bullet-led; <= 30% of
+    lines ellipsis-terminated; >= 80% of words containing an [a-z]
+    letter; >= 2 distinct required stopwords present. Every comparison is
+    integer cross-multiplication (ratio <= p/q as q*count <= p*total) —
+    zero float arithmetic, so both engines agree bit-for-bit. Plan: pure
+    per-row narrow projections over one tokenization — no joins, no
+    shuffles, no UDFs; at 100 TB this is a single embarrassingly-parallel
+    scan with full column pruning."""
+    docs = load_table(spark, sf_dir, "documents")
+    raw = F.coalesce(F.col("text"), F.lit(""))
+    # The flags below reference the token array ~9x
+    # (size, aggregate, filter, one array_contains per required stopword)
+    # through interpreted HOF slots, which get no codegen CSE — inline,
+    # every document tokenized ~9x/row. Materialize the array once.
+    toked = docs.select(
+        "doc_id", F.col("text"), tokens(F.col("text")).alias("__toks")
+    )
+    t = F.col("__toks")
+    base = toked.select(
+        "doc_id",
+        raw.alias("raw"),
+        t.alias("t"),
+        F.size(t).cast("long").alias("n"),
+        F.coalesce(
+            F.aggregate(
+                t, F.lit(0).cast("long"), lambda acc, w: acc + F.length(w)
+            ),
+            F.lit(0),
+        ).alias("chars"),
+        F.size(F.filter(t, lambda w: w.rlike("[a-z]"))).cast("long").alias("alpha_w"),
+        sum(
+            [
+                F.when(F.array_contains(t, s), F.lit(1)).otherwise(F.lit(0))
+                for s in _GOPHER_STOPS
+            ],
+            F.lit(0),
+        )
+        .cast("long")
+        .alias("stops"),
+    )
+    m = base.select(
+        "doc_id",
+        "n",
+        F.when(F.col("n") > 0, F.expr("chars * 1000 div n"))
+        .otherwise(F.lit(0))
+        .cast("long")
+        .alias("mwl_milli"),
+        (F.length("raw") - F.length(F.expr("replace(raw, '#', '')")))
+        .cast("long")
+        .alias("hash_cnt"),
+        F.expr("(length(raw) - length(replace(raw, '...', ''))) div 3")
+        .cast("long")
+        .alias("ell_cnt"),
+        F.split(F.col("raw"), "\n", -1).alias("lines"),
+        "alpha_w",
+        "stops",
+    )
+    is_bullet = (
+        lambda x: F.ltrim(x).startswith("- ")
+        | F.ltrim(x).startswith("* ")
+        | F.ltrim(x).startswith("•")
+    )
+    l = m.select(
+        "doc_id",
+        "n",
+        "mwl_milli",
+        "hash_cnt",
+        "ell_cnt",
+        "alpha_w",
+        "stops",
+        F.size("lines").cast("long").alias("n_lines"),
+        F.size(F.filter(F.col("lines"), is_bullet)).cast("long").alias("bullet_lines"),
+        F.size(F.filter(F.col("lines"), lambda x: F.rtrim(x).endswith("...")))
+        .cast("long")
+        .alias("endell_lines"),
+    )
+    r_wc = F.col("n").between(50, 100000)
+    r_mwl = F.col("mwl_milli").between(3000, 10000)
+    r_sym = (F.col("hash_cnt") * 10 <= F.col("n")) & (
+        F.col("ell_cnt") * 10 <= F.col("n")
+    )
+    r_bul = F.col("bullet_lines") * 10 <= 9 * F.col("n_lines")
+    r_ell = F.col("endell_lines") * 10 <= 3 * F.col("n_lines")
+    r_alp = F.col("alpha_w") * 5 >= 4 * F.col("n")
+    r_stp = F.col("stops") >= 2
+    return l.select(
+        "doc_id",
+        F.col("n").alias("n_words"),
+        "mwl_milli",
+        r_wc.alias("r_wordcount"),
+        r_mwl.alias("r_meanwordlen"),
+        r_sym.alias("r_symbol"),
+        r_bul.alias("r_bullet"),
+        r_ell.alias("r_ellipsis"),
+        r_alp.alias("r_alpha"),
+        r_stp.alias("r_stopwords"),
+        (r_wc & r_mwl & r_sym & r_bul & r_ell & r_alp & r_stp).alias("keep"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# text_c4_rules
+# ---------------------------------------------------------------------------
+
+# A kept line ends in terminal punctuation AND carries >= 5 words AND
+# does not mention javascript (C4 drops those outright). Document gates:
+# >= 3 kept lines (the sentence-count proxy — the fixture has no
+# sentence segmenter, and C4's own gate is "at least 3 sentences"),
+# no 'lorem ipsum', no '{'.
+_C4_MIN_WORDS = 5
+_C4_MIN_KEPT_LINES = 3
+_C4_TERMINALS = (".", "!", "?", '"')
+
+
+def _c4_oracle() -> str:
+    term = " OR ".join(
+        f"ends_with(rtrim(x), '{t}')" for t in _C4_TERMINALS
+    ).replace('"', '"')
+    # DuckDB needs the double-quote terminal escaped inside the lambda
+    term = term.replace("ends_with(rtrim(x), '\"')", "ends_with(rtrim(x), chr(34))")
+    nwords = (
+        "len(list_filter(string_split_regex(x, '\\s+'), w -> w <> ''))"
+    )
+    return f"""
+    WITH l AS (
+      SELECT doc_id,
+             string_split(coalesce(text, ''), chr(10)) AS lines,
+             contains(lower(coalesce(text, '')), 'lorem ipsum') AS has_lorem,
+             contains(coalesce(text, ''), '{{') AS has_brace
+      FROM documents WHERE doc_id IS NOT NULL),
+    m AS (
+      SELECT doc_id, has_lorem, has_brace,
+             len(lines)::BIGINT AS n_lines,
+             len(list_filter(lines, x -> ({term})
+                   AND {nwords} >= {_C4_MIN_WORDS}
+                   AND NOT contains(lower(x), 'javascript')))::BIGINT AS kept_lines,
+             len(list_filter(lines, x -> NOT ({term})))::BIGINT AS dropped_punct,
+             len(list_filter(lines, x -> {nwords} < {_C4_MIN_WORDS}))::BIGINT AS dropped_short
+      FROM l)
+    SELECT doc_id, n_lines, kept_lines, dropped_punct, dropped_short,
+           has_lorem, has_brace,
+           (kept_lines >= {_C4_MIN_KEPT_LINES}
+            AND NOT has_lorem AND NOT has_brace) AS keep
+    FROM m
+    """
+
+
+@register("text_c4_rules", oracle=_c4_oracle())
+def text_c4_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The C4 cleaning rules (Raffel et al. 2020 §2.2) as per-rule flags —
+    line gates (ends in terminal punctuation; >= 5 words; no
+    'javascript') counted per document, document gates (>= 3 kept lines
+    as the sentence proxy; no 'lorem ipsum'; no '{') as booleans, and
+    the composite keep. All counting is integer, all predicates are
+    byte-exact string tests, so both engines agree bit-for-bit. On the
+    punctuation-free synthetic corpus the verdict is constant-reject —
+    C4's verbatim answer for non-prose (the terminal-punctuation gate is
+    the C4 rule that bites hardest on web text too); the per-rule
+    counters are the ablation surface, and the synthetic-edge test pins
+    each gate in isolation. Plan:
+    ONE narrow projection over one split — no joins, no shuffles, no
+    UDFs; at 100 TB an embarrassingly-parallel scan with full column
+    pruning, the same shape as text_gopher_rules (PLANS.md)."""
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id").isNotNull())
+    raw = F.coalesce(F.col("text"), F.lit(""))
+    # The four line-counters below each reference the
+    # line array from interpreted HOF slots (no codegen CSE) — inline,
+    # every document re-split 4x/row. Materialize the split once.
+    lined = docs.select(
+        "doc_id", F.col("text"), F.split(raw, "\n", -1).alias("__lines")
+    )
+    lines = F.col("__lines")
+
+    def is_term(x: Column) -> Column:
+        r = F.rtrim(x)
+        out = r.endswith(_C4_TERMINALS[0])
+        for t in _C4_TERMINALS[1:]:
+            out = out | r.endswith(t)
+        return out
+
+    def n_words(x: Column) -> Column:
+        return F.size(F.filter(F.split(x, r"\s+", -1), lambda w: w != ""))
+
+    kept = F.filter(
+        lines,
+        lambda x: is_term(x)
+        & (n_words(x) >= _C4_MIN_WORDS)
+        & ~F.lower(x).contains("javascript"),
+    )
+    m = lined.select(
+        "doc_id",
+        F.size(lines).cast("long").alias("n_lines"),
+        F.size(kept).cast("long").alias("kept_lines"),
+        F.size(F.filter(lines, lambda x: ~is_term(x))).cast("long").alias("dropped_punct"),
+        F.size(F.filter(lines, lambda x: n_words(x) < _C4_MIN_WORDS))
+        .cast("long")
+        .alias("dropped_short"),
+        F.lower(raw).contains("lorem ipsum").alias("has_lorem"),
+        raw.contains("{").alias("has_brace"),
+    )
+    return m.select(
+        "doc_id",
+        "n_lines",
+        "kept_lines",
+        "dropped_punct",
+        "dropped_short",
+        "has_lorem",
+        "has_brace",
+        (
+            (F.col("kept_lines") >= _C4_MIN_KEPT_LINES)
+            & ~F.col("has_lorem")
+            & ~F.col("has_brace")
+        ).alias("keep"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# text_gopher_repetition
+# ---------------------------------------------------------------------------
+
+# Gopher A1.2 repetition thresholds, in ppm of document characters:
+# top-2-gram <= 20%, top-3 <= 18%, top-4 <= 16%, duplicated-5-gram
+# <= 15%. (The paper also gates n = 6..10 and duplicate lines/paragraphs;
+# the 2-4 top-gram + 5-dup-gram core is the discriminative half on
+# single-line corpora, and the line half lives in text_c4_rules'
+# counters.) A gram's character mass is the length of its joined
+# "a b c" form times its occurrence count; the denominator is the
+# token-joined document length — both integer, so every rule is an
+# exact cross-multiplication-free ppm compare on identical integers.
+_REP_RULES = {2: 200_000, 3: 180_000, 4: 160_000}
+_REP_DUP_N = 5
+_REP_DUP_PPM = 150_000
+
+
+def _repetition_oracle() -> str:
+    gram_sel = "\n      UNION ALL ".join(
+        f"SELECT doc_id, {n} AS n, g FROM base, "
+        f"unnest([list_aggr(t[i:i+{n - 1}], 'string_agg', ' ') "
+        f"for i in range(1, len(t) - {n - 2})]) u(g)"
+        for n in (*_REP_RULES, _REP_DUP_N)
+    )
+    top_cols = ", ".join(
+        f"coalesce(max(CASE WHEN n = {n} AND rk = 1 THEN mass END), 0) AS m{n}"
+        for n in _REP_RULES
+    )
+    rules = " AND ".join(
+        f"(m{n} * 1000000 <= {ppm} * denom)" for n, ppm in _REP_RULES.items()
+    )
+    return f"""
+    WITH toks AS ({_TOKS_SQL}),
+    base AS (
+      SELECT doc_id, t,
+             greatest(length(list_aggr(t, 'string_agg', ' ')), 1) AS denom
+      FROM (SELECT doc_id, t FROM toks WHERE doc_id IS NOT NULL) _
+    ),
+    grams AS ({gram_sel}),
+    cnt AS (SELECT doc_id, n, g, count(*)::BIGINT AS c,
+                   (count(*) * length(g))::BIGINT AS mass
+            FROM grams GROUP BY 1, 2, 3),
+    ranked AS (SELECT doc_id, n, mass,
+                      row_number() OVER (PARTITION BY doc_id, n
+                                         ORDER BY c DESC, g) AS rk
+               FROM cnt WHERE n < {_REP_DUP_N}),
+    tops AS (SELECT doc_id, {top_cols} FROM ranked GROUP BY doc_id),
+    dups AS (SELECT doc_id, sum(mass)::BIGINT AS dupmass
+             FROM cnt WHERE n = {_REP_DUP_N} AND c >= 2 GROUP BY doc_id)
+    SELECT b.doc_id,
+           len(b.t)::BIGINT AS n_tokens,
+           b.denom::BIGINT AS denom_chars,
+           {", ".join(f"least(coalesce(m{n}, 0), b.denom) * 1000000 // b.denom AS top{n}_ppm" for n in _REP_RULES)},
+           least(coalesce(d.dupmass, 0), b.denom) * 1000000 // b.denom AS dup{_REP_DUP_N}_ppm,
+           {", ".join(f"(least(coalesce(m{n}, 0), b.denom) * 1000000 <= {ppm} * b.denom) AS r_top{n}" for n, ppm in _REP_RULES.items())},
+           (least(coalesce(d.dupmass, 0), b.denom) * 1000000
+              <= {_REP_DUP_PPM} * b.denom) AS r_dup{_REP_DUP_N},
+           ({" AND ".join(f"least(coalesce(m{n}, 0), b.denom) * 1000000 <= {ppm} * b.denom" for n, ppm in _REP_RULES.items())}
+            AND least(coalesce(d.dupmass, 0), b.denom) * 1000000
+                  <= {_REP_DUP_PPM} * b.denom) AS keep
+    FROM base b
+    LEFT JOIN tops ON tops.doc_id = b.doc_id
+    LEFT JOIN dups d ON d.doc_id = b.doc_id
+    """
+
+
+@register("text_gopher_repetition", oracle=_repetition_oracle())
+def text_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gopher's repetition-removal rules (Rae et al. 2021, A1.2, n-gram
+    half) as per-rule flags: the character fraction claimed by the single
+    most frequent 2-/3-/4-gram must stay under 20/18/16%, and characters
+    inside DUPLICATED 5-grams (occurring twice or more) under 15% —
+    the "same phrase looping" failure mode of scraped text that slips
+    past length/vocabulary gates (each occurrence counts its full
+    character span; the paper's overlap de-double-count is simplified,
+    identically in both engines, with the mass capped at the document
+    length). Integer-exact: gram mass = occurrences x joined-gram length,
+    denominator = token-joined document length, every rule an integer
+    ppm compare; top-gram ties break lexicographically. Plan: ONE
+    explode of tagged 2/3/4/5-grams -> ONE (doc, n, gram) count agg with
+    map-side partials -> a (doc, n)-PARTITIONED rank window (never
+    global) -> two per-doc joins back to the token base. At 100 TB
+    everything is keyed by doc_id — embarrassingly parallel after the
+    one gram-count shuffle, the same budget as the bigram/shingle
+    family."""
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id").isNotNull())
+    # t and denom both need the token array — inline,
+    # the checkpoint job tokenized every document twice; materialize the
+    # array in its own projection (referenced 2x, CollapseProject keeps
+    # the two-stage shape) so the checkpoint pays one tokenize per row.
+    toked = docs.select("doc_id", tokens(F.col("text")).alias("__toks"))
+    tk = F.col("__toks")
+    base = toked.select(
+        "doc_id",
+        tk.alias("t"),
+        F.greatest(F.length(F.array_join(tk, " ")), F.lit(1)).alias("denom"),
+    ).localCheckpoint(eager=True)
+
+    def grams(n: int) -> Column:
+        # [t[i] || ' ' || ... for each window of n] — the shingle
+        # pattern. The short-doc guard must be a CASE, not greatest(..,0):
+        # Spark's sequence(1, 0) yields the DESCENDING [1, 0] and the 0
+        # start crashes slice (caught by the extremes sweep's 1-token doc).
+        return F.expr(
+            f"CASE WHEN size(t) >= {n} THEN "
+            f"transform(sequence(1, size(t) - {n - 1}), "
+            f"i -> array_join(slice(t, i, {n}), ' ')) "
+            f"ELSE array() END"
+        )
+
+    tagged = None
+    for n in (*_REP_RULES, _REP_DUP_N):
+        part = base.select(
+            "doc_id", F.lit(n).alias("n"), F.explode(grams(n)).alias("g")
+        )
+        tagged = part if tagged is None else tagged.unionAll(part)
+    cnt = tagged.groupBy("doc_id", "n", "g").agg(
+        F.count(F.lit(1)).alias("c"),
+        (F.count(F.lit(1)) * F.length("g")).cast("long").alias("mass"),
+    )
+    # ONE consumption of the gram-count frame: per (doc, n) the top-1
+    # mass rides a struct-min ((-count, gram, mass) — max count, then
+    # lexicographically smallest gram; no window, no second shuffle of
+    # cnt) and the duplicated mass is a conditional sum in the SAME agg.
+    per_n = cnt.groupBy("doc_id", "n").agg(
+        F.min(
+            F.struct(
+                (-F.col("c")).alias("nc"), F.col("g").alias("g"),
+                F.col("mass").alias("mass"),
+            )
+        )["mass"].alias("topmass"),
+        F.sum(F.when(F.col("c") >= 2, F.col("mass"))).alias("dupmass_n"),
+    )
+    per_doc = per_n.groupBy("doc_id").agg(
+        *[
+            F.coalesce(
+                F.max(F.when(F.col("n") == n, F.col("topmass"))), F.lit(0)
+            ).alias(f"m{n}")
+            for n in _REP_RULES
+        ],
+        F.max(F.when(F.col("n") == _REP_DUP_N, F.col("dupmass_n"))).alias(
+            "dupmass"
+        ),
+    )
+    j = (
+        base.join(per_doc, "doc_id", "left")
+        .select(
+            "doc_id",
+            F.size("t").cast("long").alias("n_tokens"),
+            F.col("denom").cast("long").alias("denom_chars"),
+            # least(mass, denom): occurrences of a SELF-OVERLAPPING gram
+            # ("the the the...") jointly cover more characters than the
+            # document holds under the per-occurrence count — cap at 100%
+            # (identical cap in the oracle; rule outcomes are unaffected
+            # since any capped mass already exceeds every threshold)
+            *[
+                F.least(F.coalesce(F.col(f"m{n}"), F.lit(0)), F.col("denom"))
+                .cast("long")
+                .alias(f"m{n}")
+                for n in _REP_RULES
+            ],
+            F.least(F.coalesce(F.col("dupmass"), F.lit(0)), F.col("denom"))
+            .cast("long")
+            .alias("dupmass"),
+        )
+    )
+    rule_cols = [
+        (F.col(f"m{n}") * 1000000 <= F.lit(ppm) * F.col("denom_chars")).alias(
+            f"r_top{n}"
+        )
+        for n, ppm in _REP_RULES.items()
+    ]
+    keep = (
+        F.col("dupmass") * 1000000 <= F.lit(_REP_DUP_PPM) * F.col("denom_chars")
+    )
+    for n, ppm in _REP_RULES.items():
+        keep = keep & (F.col(f"m{n}") * 1000000 <= F.lit(ppm) * F.col("denom_chars"))
+    return j.select(
+        "doc_id",
+        "n_tokens",
+        "denom_chars",
+        *[
+            F.expr(f"m{n} * 1000000 div denom_chars").alias(f"top{n}_ppm")
+            for n in _REP_RULES
+        ],
+        F.expr("dupmass * 1000000 div denom_chars").alias(f"dup{_REP_DUP_N}_ppm"),
+        *rule_cols,
+        (
+            F.col("dupmass") * 1000000
+            <= F.lit(_REP_DUP_PPM) * F.col("denom_chars")
+        ).alias(f"r_dup{_REP_DUP_N}"),
+        keep.alias("keep"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# sketch_kmv_distinct
+# ---------------------------------------------------------------------------
+
+_KMV_K = 64
+_KMV_M = 1 << 60  # md5int hash space
+
+
+def _kmv_oracle() -> str:
+    h = MD5INT_SQL.format(x="user_id::VARCHAR")
+    est = (
+        f"CASE WHEN cnt < {_KMV_K} THEN cnt"
+        f" ELSE (({_KMV_K} - 1)::HUGEINT * {_KMV_M} // kth)::BIGINT END"
+    )
+    return f"""
+    WITH hx AS (SELECT DISTINCT event_type AS scope, {h} AS h
+                FROM events WHERE user_id IS NOT NULL AND event_type IS NOT NULL),
+    ranked AS (SELECT scope, h,
+                      row_number() OVER (PARTITION BY scope ORDER BY h) AS rk
+               FROM hx),
+    groups AS (SELECT scope, count(*) AS cnt,
+                      max(h) FILTER (WHERE rk <= {_KMV_K}) AS kth
+               FROM ranked GROUP BY scope),
+    allh AS (SELECT DISTINCT h FROM hx),
+    allr AS (SELECT h, row_number() OVER (ORDER BY h) AS rk FROM allh),
+    allg AS (SELECT 'ALL' AS scope, count(*) AS cnt,
+                    max(h) FILTER (WHERE rk <= {_KMV_K}) AS kth
+             FROM allr HAVING count(*) > 0)
+    SELECT scope, cnt::BIGINT AS n_exact, {est} AS est_distinct,
+           CASE WHEN cnt >= {_KMV_K} THEN kth ELSE NULL END AS kth_hash
+    FROM (SELECT * FROM groups UNION ALL SELECT * FROM allg)
+    """
+
+
+@register("sketch_kmv_distinct", oracle=_kmv_oracle())
+def sketch_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """K-Minimum-Values distinct sketch (Bar-Yossef et al. 2002; the theta
+    sketch of Apache DataSketches) over events.user_id, per event_type
+    and merged: keep the k=64 smallest 60-bit hashes per group; estimate
+    distinct = (k-1) * M / h_k when the register is full, exact count
+    below k. The fourth portable sketch beside HLL/CMS/Bloom, and the
+    one with the cleanest MERGE story: the union of two registers'
+    k-minima contains the union's k-minima, so merged == direct-built —
+    the 'ALL' row here is computed from the same hash set the per-group
+    registers see, and tests/test_sketches.py pins merged-register ==
+    direct-register equality explicitly. Integer-exact end to end
+    (md5int hashes, HUGEINT/decimal(38,0) for the (k-1)*2^60 numerator
+    that overflows int64), so both engines agree bit-for-bit; exact
+    distinct (n_exact) rides along as the error witness. Plan shape: one
+    distinct hash-agg (map-side partial), per-group top-k through a
+    PARTITIONED window over distinct hashes, global top-k through
+    orderBy().limit() (TakeOrderedAndProject) — at 100 TB the register
+    per group is 64 longs (512 bytes), the whole point of a sketch."""
+    ev = load_table(spark, sf_dir, "events").filter(
+        F.col("user_id").isNotNull() & F.col("event_type").isNotNull()
+    )
+    hx = ev.select(
+        F.col("event_type").alias("scope"),
+        md5int(F.col("user_id").cast("string")).alias("h"),
+    ).distinct()
+    w = Window.partitionBy("scope").orderBy("h")
+    groups = (
+        hx.withColumn("rk", F.row_number().over(w))
+        .groupBy("scope")
+        .agg(
+            F.count(F.lit(1)).alias("cnt"),
+            F.max(F.when(F.col("rk") <= _KMV_K, F.col("h"))).alias("kth"),
+        )
+    )
+    allh = hx.select("h").distinct()
+    allg = (
+        allh.orderBy("h")
+        .limit(_KMV_K)
+        .agg(
+            F.max("h").alias("kth"),
+        )
+        .crossJoin(F.broadcast(allh.agg(F.count(F.lit(1)).alias("cnt"))))
+        .filter(F.col("cnt") > 0)
+        .select(F.lit("ALL").alias("scope"), "cnt", "kth")
+    )
+    both = groups.unionByName(allg)
+    est = F.when(F.col("cnt") < _KMV_K, F.col("cnt")).otherwise(
+        F.expr(
+            f"CAST(CAST({_KMV_K - 1} AS DECIMAL(38,0)) * {_KMV_M} div kth AS BIGINT)"
+        )
+    )
+    return both.select(
+        "scope",
+        F.col("cnt").cast("long").alias("n_exact"),
+        est.cast("long").alias("est_distinct"),
+        F.when(F.col("cnt") >= _KMV_K, F.col("kth")).alias("kth_hash"),
     )

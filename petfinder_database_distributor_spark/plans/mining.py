@@ -12,12 +12,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from petfinder_database_distributor_spark.operators.clustering import (
     kmeans_int8,
     pagerank_integer,
 )
-from petfinder_database_distributor_spark.operators.text import token_count
+from petfinder_database_distributor_spark.operators.text import token_count, tokens
 from petfinder_database_distributor_spark.registry import register
 from petfinder_database_distributor_spark.schema import load_table
 from petfinder_database_distributor_spark.util import ensure_parallelism
@@ -1657,4 +1658,238 @@ def sample_importance_dsir_draw(spark: SparkSession, sf_dir: str) -> DataFrame:
         sc.select("doc_id", "n_feats", "logw_fp", "gumbel_fp", "score_fp")
         .orderBy(F.col("score_fp").desc(), "doc_id")
         .limit(_DSIR_DRAW_K)
+    )
+
+
+# ---------------------------------------------------------------------------
+# text_vocab_coverage
+# ---------------------------------------------------------------------------
+
+_VOCAB_KS = (100, 1000, 10000)
+
+
+def _vocab_oracle() -> str:
+    from petfinder_database_distributor_spark.plans.llm_pipeline import _TOKS_SQL
+
+    ks = ", ".join(f"({k})" for k in _VOCAB_KS)
+    return f"""
+    WITH toks AS ({_TOKS_SQL}),
+    tf AS (SELECT u.x AS term, count(*)::BIGINT AS tf
+           FROM toks, unnest(toks.t) u(x) GROUP BY 1),
+    tot AS (SELECT sum(tf)::BIGINT AS total_tok, count(*)::BIGINT AS vocab_size
+            FROM tf HAVING count(*) > 0),
+    top AS (SELECT term, tf, row_number() OVER (ORDER BY tf DESC, term) AS rk
+            FROM tf ORDER BY tf DESC, term LIMIT {max(_VOCAB_KS)}),
+    ks(k) AS (VALUES {ks})
+    SELECT ks.k::BIGINT AS k, tot.vocab_size,
+           coalesce(sum(top.tf) FILTER (WHERE top.rk <= ks.k), 0)::BIGINT
+             AS covered_tok,
+           tot.total_tok,
+           (coalesce(sum(top.tf) FILTER (WHERE top.rk <= ks.k), 0)
+              * 1000000 // tot.total_tok)::BIGINT AS coverage_ppm
+    FROM ks, tot LEFT JOIN top ON true
+    GROUP BY ks.k, tot.vocab_size, tot.total_tok
+    """
+
+
+@register("text_vocab_coverage", oracle=_vocab_oracle())
+def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tokenizer-planning vocabulary coverage curve: for k in {100, 1k,
+    10k}, the fraction (ppm integer) of all corpus token OCCURRENCES
+    covered by the k most frequent terms (ties broken lexically) — the
+    measurement that sizes a vocabulary before training one (a 10k vocab
+    covering 99.9% of occurrences says most of a larger vocab would be
+    tail singletons). Plan: one corpus-sized term-frequency agg with
+    map-side partials; the global top-k rides orderBy().limit() —
+    TakeOrderedAndProject (per-partition heaps, never a full sort) — and
+    everything after runs over that bounded <=10k-row frame (the
+    register-table window class, see the plan-quality allowlist) plus
+    two broadcast scalars. At 100 TB the only corpus-sized work is the
+    tf agg; the curve itself is metadata-sized. An EMPTY corpus has no
+    curve: zero rows on both engines (the oracle's HAVING empties its
+    scalar CTE; Spark's empty top-k crossJoin is already empty)."""
+    docs = load_table(spark, sf_dir, "documents")
+    # |vocab|-row frame feeding TWO consumers (scalars + top-k) —
+    # materialize once so the corpus explode+agg runs a single time
+    tf = (
+        docs.select(F.explode(tokens(F.col("text"))).alias("term"))
+        .groupBy("term")
+        .agg(F.count(F.lit(1)).alias("tf"))
+        .localCheckpoint(eager=True)
+    )
+    # two corpus-level scalars in ONE pass, broadcast to the 3-row output
+    tot = tf.agg(
+        F.sum("tf").cast("long").alias("total_tok"),
+        F.count(F.lit(1)).cast("long").alias("vocab_size"),
+    )
+    top = (
+        tf.orderBy(F.col("tf").desc(), "term")
+        .limit(max(_VOCAB_KS))
+        .select(
+            "term",
+            "tf",
+            F.row_number()
+            .over(Window.orderBy(F.col("tf").desc(), "term"))
+            .alias("rk"),
+        )
+    )
+    ks = spark.range(1).select(
+        F.explode(F.array(*[F.lit(k) for k in _VOCAB_KS])).alias("k")
+    )
+    covered = (
+        ks.crossJoin(top)
+        .groupBy("k")
+        .agg(
+            F.coalesce(
+                F.sum(F.when(F.col("rk") <= F.col("k"), F.col("tf"))), F.lit(0)
+            )
+            .cast("long")
+            .alias("covered_tok")
+        )
+    )
+    return (
+        covered.crossJoin(F.broadcast(tot))
+        .select(
+            F.col("k").cast("long").alias("k"),
+            "vocab_size",
+            "covered_tok",
+            "total_tok",
+            F.expr("covered_tok * 1000000 div total_tok").alias("coverage_ppm"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# text_zipf_fit
+# ---------------------------------------------------------------------------
+
+_ZIPF_TOPK = 64
+_ZIPF_CLAMP = 1 << 30  # the log2 kernel's domain ceiling
+_ZIPF_FRAC = 20  # the kernel's fixed-point fraction bits (mining._PPL_FRAC_BITS)
+
+
+def _zipf_oracle() -> str:
+    from petfinder_database_distributor_spark.plans.llm_pipeline import _TOKS_SQL
+
+    log2_of = f"(30 * {1 << _ZIPF_FRAC} - {{c}})"
+    return f"""
+    WITH toks AS ({_TOKS_SQL}),
+    tf AS (SELECT u.x AS term, count(*)::BIGINT AS tf
+           FROM toks, unnest(toks.t) u(x) GROUP BY 1),
+    top AS (SELECT term, tf,
+                   least(tf, {_ZIPF_CLAMP}) AS tfc,
+                   row_number() OVER (ORDER BY tf DESC, term) AS rk
+            FROM tf ORDER BY tf DESC, term LIMIT {_ZIPF_TOPK}),
+    vals AS (SELECT DISTINCT tq FROM (
+       SELECT rk AS tq FROM top UNION SELECT tfc FROM top)),
+    {_log2fp_sql_ctes("vals", prefix="zf")},
+    xy AS (SELECT t.rk, t.tf,
+                  {log2_of.format(c="cx.cost_fp")} AS x,
+                  {log2_of.format(c="cy.cost_fp")} AS y
+           FROM top t
+           JOIN zf_cost cx ON cx.tq = t.rk
+           JOIN zf_cost cy ON cy.tq = t.tfc),
+    s AS (SELECT count(*)::HUGEINT AS n,
+                 sum(x)::HUGEINT AS sx, sum(y)::HUGEINT AS sy,
+                 sum(x::HUGEINT * y)::HUGEINT AS sxy,
+                 sum(x::HUGEINT * x)::HUGEINT AS sxx
+          FROM xy),
+    fit AS (SELECT n, (n * sxy - sx * sy) AS num,
+                   (n * sxx - sx * sx) AS den
+            FROM s WHERE (n * sxx - sx * sx) > 0)
+    SELECT n::BIGINT AS n_terms,
+           (CASE WHEN num < 0 THEN -((1000 * -num) // den)
+                 ELSE (1000 * num) // den END)::BIGINT AS slope_milli,
+           (SELECT term FROM top WHERE rk = 1) AS top_term,
+           (SELECT tf FROM top WHERE rk = 1)::BIGINT AS top_tf,
+           (SELECT max(tf) > {_ZIPF_CLAMP} FROM top) AS freq_clamped
+    FROM fit
+    """
+
+
+@register("text_zipf_fit", oracle=_zipf_oracle())
+def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Integer-exact Zipf's-law slope fit over the top-64 term
+    frequencies — the vocabulary-health diagnostic of corpus curation
+    (natural language fits log(freq) ~ slope * log(rank) with slope
+    ~ -1; template/boilerplate-heavy or synthetic corpora deviate hard,
+    so the slope is a one-number corpus fingerprint to track across
+    ingest batches). NOTHING here is float: ranks and (2^30-clamped,
+    loudly flagged) frequencies run through the same 20-bit fixed-point
+    square-and-shift log2 kernel as the perplexity family
+    (plans/mining.py::_log2fp_cost — pow/log are NOT cross-libm
+    reproducible; this is), and the least-squares slope is exact integer
+    arithmetic — slope_milli = trunc(1000 * (n*Sxy - Sx*Sy) /
+    (n*Sxx - Sx^2)) with decimal(38,0)/HUGEINT products (the cross terms
+    overflow int64 at ~8e20) and an explicit sign-split so BOTH engines
+    truncate toward zero (Spark div truncates, DuckDB // floors — they
+    disagree on negatives, and a Zipf slope IS negative). Degenerate
+    corpora (< 2 distinct top terms => zero fit variance) yield ZERO
+    rows on both engines. Plan shape: one corpus-sized term-frequency
+    hash agg with map-side partials; the top-64 rides orderBy().limit()
+    (TakeOrderedAndProject); the kernel and the fit run over a <=128-row
+    register frame (window over 64 rows — the plan-quality allowlist's
+    register-table class). At 100 TB the only corpus-sized work is the
+    tf agg — identical posture to text_vocab_coverage."""
+    docs = load_table(spark, sf_dir, "documents")
+    tf = (
+        docs.select(F.explode(tokens(F.col("text"))).alias("term"))
+        .groupBy("term")
+        .agg(F.count(F.lit(1)).alias("tf"))
+    )
+    top = (
+        tf.orderBy(F.col("tf").desc(), "term")
+        .limit(_ZIPF_TOPK)
+        .select(
+            "term",
+            "tf",
+            F.least(F.col("tf"), F.lit(_ZIPF_CLAMP)).alias("tfc"),
+            F.row_number()
+            .over(Window.orderBy(F.col("tf").desc(), "term"))
+            .cast("long")
+            .alias("rk"),
+        )
+        .localCheckpoint(eager=True)  # 64-row register frame, 3 consumers
+    )
+    vals = (
+        top.select(F.col("rk").alias("tq"))
+        .union(top.select(F.col("tfc").alias("tq")))
+        .distinct()
+    )
+    cost = _log2fp_cost(vals)
+    log2_of = (F.lit(30 * (1 << _ZIPF_FRAC)) - F.col("cost_fp")).cast("long")
+    cx = cost.select(F.col("tq").alias("rk"), log2_of.alias("x"))
+    cy = cost.select(F.col("tq").alias("tfc"), log2_of.alias("y"))
+    xy = top.join(cx, "rk").join(cy, "tfc")
+    dec = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
+    s = xy.agg(
+        F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
+        F.sum("x").cast("decimal(38,0)").alias("sx"),
+        F.sum("y").cast("decimal(38,0)").alias("sy"),
+        F.sum(dec("x") * dec("y")).cast("decimal(38,0)").alias("sxy"),
+        F.sum(dec("x") * dec("x")).cast("decimal(38,0)").alias("sxx"),
+    )
+    fit = s.select(
+        "n",
+        (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).alias("num"),
+        (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).alias("den"),
+    ).filter(F.col("den") > 0)
+    slope = F.when(
+        F.col("num") < 0,
+        -F.expr("CAST((1000 * -num) div den AS BIGINT)"),
+    ).otherwise(F.expr("CAST((1000 * num) div den AS BIGINT)"))
+    top1 = top.filter(F.col("rk") == 1).select(
+        F.col("term").alias("top_term"), F.col("tf").alias("top_tf")
+    )
+    flag = top.agg((F.max("tf") > _ZIPF_CLAMP).alias("freq_clamped"))
+    return (
+        fit.crossJoin(F.broadcast(top1))
+        .crossJoin(F.broadcast(flag))
+        .select(
+            F.col("n").cast("long").alias("n_terms"),
+            slope.cast("long").alias("slope_milli"),
+            "top_term",
+            F.col("top_tf").cast("long").alias("top_tf"),
+            "freq_clamped",
+        )
     )

@@ -1730,3 +1730,65 @@ def snapshot_clone_cow(spark: SparkSession, sf_dir: str) -> DataFrame:
         "k", F.col("name").alias("clone_name")
     )
     return src_now.join(clone_now, "k")
+
+
+# ---------------------------------------------------------------------------
+# snapshot_vacuum_retention
+# ---------------------------------------------------------------------------
+
+_VACUUM_ORACLE = """
+    SELECT doc_id, source, n_chars FROM documents
+    WHERE doc_id IS NOT NULL
+      AND (doc_id % 3 <> 0 OR doc_id % 2 = 0)
+"""
+
+
+@register("snapshot_vacuum_retention", oracle=_VACUUM_ORACLE)
+def snapshot_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Storage-retention vacuum as a driver-facing query — the lakehouse
+    GC step (Delta VACUUM / Iceberg expire_snapshots) that completes the
+    snapshot table's lifecycle: three committed versions (full write ->
+    filtered overwrite -> append), then ``snapshot_vacuum(keep_last=2)``
+    reclaims v0's now-unreferenced files while provably NOT touching any
+    file a retained manifest references. The returned frame is the
+    post-vacuum LATEST content; the oracle recomputes it from the source
+    table, so hash parity proves vacuum is content-neutral — it deletes
+    storage, never state. The sibling invariants (expired time-travel
+    RAISES instead of serving a ghost; retained versions stay readable;
+    the reclaimed file count is exactly v0's unreferenced set) are
+    pinned in tests/test_corpus_ops.py, which also asserts real file
+    deletion happened. At 100 TB vacuum is a driver-side manifest walk
+    plus unlink calls — zero Spark jobs, O(files in expired versions) —
+    and without it every full rewrite doubles storage forever."""
+    import shutil
+
+    from petfinder_database_distributor_spark.sources.snapshot import (
+        snapshot_append,
+        snapshot_read,
+        snapshot_vacuum,
+        snapshot_write,
+    )
+    from petfinder_database_distributor_spark.streaming.incremental import (
+        SCRATCH_ROOT,
+    )
+
+    docs = load_table(spark, sf_dir, "documents").filter(
+        F.col("doc_id").isNotNull()
+    ).select("doc_id", "source", "n_chars")
+    tag = sf_dir.strip("/").replace("/", "_").replace(".", "_").replace("-", "_")
+    table = f"{SCRATCH_ROOT}/vacuum_retention/{tag}"
+    shutil.rmtree(table, ignore_errors=True)  # deterministic per call
+    # v0: full corpus; v1: overwrite to the %3 != 0 subset (v0's files
+    # become unreferenced once v0 expires); v2: append the %3 = 0 half
+    # of the evens back
+    snapshot_write(spark, table, docs)
+    snapshot_write(
+        spark, table, docs.filter(F.col("doc_id") % 3 != 0), base_version=0
+    )
+    snapshot_append(
+        spark,
+        table,
+        docs.filter((F.col("doc_id") % 3 == 0) & (F.col("doc_id") % 2 == 0)),
+    )
+    snapshot_vacuum(table, keep_last=2)
+    return snapshot_read(spark, table)

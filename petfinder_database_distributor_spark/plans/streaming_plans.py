@@ -19,7 +19,12 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from petfinder_database_distributor_spark.plans.llm_pipeline import _HLL_ORACLE_SQL
+from petfinder_database_distributor_spark.operators.text import MD5INT_SQL, md5int
+from petfinder_database_distributor_spark.plans.llm_pipeline import (
+    _HLL_ORACLE_SQL,
+    _KMV_K,
+    _KMV_M,
+)
 from petfinder_database_distributor_spark.registry import register
 from petfinder_database_distributor_spark.schema import finite_measures
 from petfinder_database_distributor_spark.streaming.incremental import (
@@ -623,4 +628,87 @@ def stream_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = _run_to_memory(stateful_retention_cells(ev), "update")
     return cells.groupBy("cohort_week", "week_offset").agg(
         F.count(F.lit(1)).alias("n_active")
+    )
+
+
+# ---------------------------------------------------------------------------
+# stream_sketch_kmv
+# ---------------------------------------------------------------------------
+
+_KMV_STREAM_ORACLE = f"""
+    WITH hx AS (SELECT DISTINCT {{h}} AS h
+                FROM events WHERE user_id IS NOT NULL),
+    allr AS (SELECT h, row_number() OVER (ORDER BY h) AS rk FROM hx),
+    allg AS (SELECT count(*) AS cnt,
+                    max(h) FILTER (WHERE rk <= {_KMV_K}) AS kth
+             FROM allr HAVING count(*) > 0)
+    SELECT 'ALL' AS scope,
+           CASE WHEN cnt < {_KMV_K} THEN cnt
+                ELSE (({_KMV_K} - 1)::HUGEINT * {_KMV_M} // kth)::BIGINT
+           END AS est_distinct,
+           CASE WHEN cnt >= {_KMV_K} THEN kth ELSE NULL END AS kth_hash
+    FROM allg
+    """.format(h=MD5INT_SQL.format(x="user_id::VARCHAR"))
+
+
+@register("stream_sketch_kmv", oracle=_KMV_STREAM_ORACLE)
+def stream_sketch_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The KMV distinct sketch maintained over an UNBOUNDED stream with
+    O(k) state — the DataSketches-theta production shape that
+    dropDuplicates-style streaming distinct (state grows with the key
+    universe) cannot give: each micro-batch reduces to its own 64-hash
+    register (distinct + TakeOrderedAndProject inside foreachBatch),
+    which merges into the running register driver-side — the union's
+    k-minima, 64 longs FOREVER, the sketch-merge monoid
+    sketch_kmv_distinct's test proves equal to direct construction. The
+    final register's estimate therefore equals the batch sketch
+    bit-for-bit, so a batch oracle hash-checks a STREAMING query (the
+    stream_sketch_hll discipline; mergeability is exactly why these
+    sketches exist at 100 TB — per-executor partial registers merge the
+    same way). Below k the register IS the exact distinct set, so
+    est_distinct is exact there by construction; an empty stream yields
+    the typed zero-row frame."""
+    stage = stage_event_chunks(spark, sf_dir, n_chunks=4)
+    stream = read_event_stream(spark, stage, max_files=2).filter(
+        F.col("user_id").isNotNull()
+    )
+    sketch: list[int] = []
+
+    def merge_batch(batch_df: DataFrame, _batch_id: int) -> None:
+        local = (
+            batch_df.select(
+                md5int(F.col("user_id").cast("string")).alias("h")
+            )
+            .distinct()
+            .orderBy("h")
+            .limit(_KMV_K)
+            .collect()
+        )
+        merged = sorted(set(sketch) | {int(r["h"]) for r in local})
+        sketch[:] = merged[:_KMV_K]
+
+    with scoped_conf(
+        spark, spark__sql__shuffle__partitions=STREAM_SHUFFLE_PARTITIONS
+    ):
+        # temporary checkpoint (auto-created, auto-deleted): the register
+        # rebuilds from scratch per call, so there is no resume state
+        q = (
+            stream.writeStream.foreachBatch(merge_batch)
+            .queryName(f"kmv_{uuid.uuid4().hex[:10]}")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    if not sketch:
+        return spark.createDataFrame(
+            [], "scope string, est_distinct bigint, kth_hash bigint"
+        )
+    cnt = len(sketch)
+    if cnt < _KMV_K:
+        est, kth = cnt, None
+    else:
+        kth = sketch[-1]
+        est = (_KMV_K - 1) * _KMV_M // kth
+    return spark.createDataFrame(
+        [("ALL", est, kth)], "scope string, est_distinct bigint, kth_hash bigint"
     )

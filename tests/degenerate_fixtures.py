@@ -1,12 +1,9 @@
-"""Shared degenerate-fixture builders (round 13, r12 verdict #4).
+"""Shared degenerate fixtures.
 
-Round 12 ran its empty / one-row / dirty sweeps ad hoc (tools/
-empty_probe.py plus hand-built fixtures inside individual test modules)
-and caught ten real bugs. This module makes the three degenerate shapes
-— plus the all-empty-text corpus the r12 advice added — reusable
-builders, so the STAGE-PROMOTION GATE (tests/test_staged_gate.py) can
-require every staged query to hold cross-engine parity on all of them
-BEFORE registration, with zero per-round test edits.
+The empty / one-row / dirty shapes — plus the all-empty-text corpus —
+as reusable fixture functions, so the degenerate gate
+(tests/test_degenerate_gate.py) can require its queries to hold
+cross-engine parity on all of them.
 
 Each builder writes a full 10-table parquet fixture into ``tmp`` and
 returns it, so any (spark, sf_dir) query callable runs unchanged.

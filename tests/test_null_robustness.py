@@ -158,6 +158,16 @@ SWEPT = [
     "dedup_semantic_semdedup",
     "ann_index_retrain_check",
     "snapshot_concurrent_merge",
+    # unimax groups NULL source as '' (the compaction_bin_pack precedent —
+    # its rank needs a NULL-free total order) and inherits NULL text ≡ 0
+    # tokens; gopher rules coalesce text and emit the NULL-doc_id row like
+    # any other; the two vector queries ride the family's NULL id/vector
+    # exclusion (kcenter filters at entry, the kNN graph's committed codes
+    # are built from the filtered corpus)
+    "domain_budget_unimax",
+    "text_gopher_rules",
+    "sample_kcenter_greedy",
+    "knn_graph_cells",
 ]
 
 
@@ -199,27 +209,3 @@ def test_null_parity(spark, null_sf_dir, name):
 
     spec = load_all()[name]
     assert_parity(spec.fn(spark, null_sf_dir), run_oracle(spec.oracle, null_sf_dir), name)
-
-
-# r11 continuation: the staged round-12 queries hold the same bar before
-# registration. Contracts: unimax groups NULL source as '' (the
-# compaction_bin_pack precedent — its rank needs a NULL-free total order)
-# and inherits NULL text ≡ 0 tokens; gopher rules coalesce text and emit
-# the NULL-doc_id row like any other; the two vector queries ride the
-# family's NULL id/vector exclusion (kcenter filters at entry, the kNN
-# graph's committed codes are built from the filtered corpus).
-@pytest.mark.parametrize(
-    "name",
-    [
-        "domain_budget_unimax",
-        "text_gopher_rules",
-        "sample_kcenter_greedy",
-        "knn_graph_cells",
-    ],
-)
-def test_null_parity_staged(spark, null_sf_dir, name):
-    from petfinder_database_distributor_spark.plans.staged_r12 import STAGED
-    from tests.oracle_compare import assert_parity, run_oracle
-
-    fn, oracle, _doc = STAGED[name]
-    assert_parity(fn(spark, null_sf_dir), run_oracle(oracle, null_sf_dir), name)

@@ -72,16 +72,3 @@ def test_bm25_oracle_carries_the_hugeint_widening():
     from petfinder_database_distributor_spark.plans.llm_pipeline import _BM25_SQL
 
     assert _BM25_SQL.count("::HUGEINT") >= 12
-
-
-def test_rrf_head_shares_the_widened_score():
-    """The staged hybrid-RRF BM25 head must reuse _bm25_term_score, not
-    re-derive its own product chain (one envelope, one fix)."""
-    import inspect
-
-    from petfinder_database_distributor_spark.plans.staged_r15 import (
-        search_hybrid_rrf,
-    )
-
-    src = inspect.getsource(search_hybrid_rrf)
-    assert "_bm25_term_score" in src

@@ -888,25 +888,21 @@ def test_no_unpartitioned_windows_over_data_scale_frames():
         # |domains|-row per-source register frame (UniMax waterfilling —
         # the corpus-sized work is one hash agg; every window runs over
         # the bounded per-source result):
-        ("staged_r12.py", "domain_budget_unimax"),
+        ("corpus_ops.py", "domain_budget_unimax"),
         # |domains|-row remainder-rank frame (largest-remainder
         # apportionment; same register class as UniMax — the frame is
         # localCheckpoint-materialized from the one corpus agg):
-        ("staged_r13.py", "domain_budget_temperature"),
+        ("corpus_ops.py", "domain_budget_temperature"),
         # <=10k-row TakeOrderedAndProject result (the top-k vocabulary —
         # bounded by construction before the rank window runs):
-        ("staged_r13.py", "text_vocab_coverage"),
+        ("mining.py", "text_vocab_coverage"),
         # <=64-row TakeOrderedAndProject result (the top-64 term
         # frequencies — the rank window runs after the limit):
-        ("staged_r14.py", "text_zipf_fit"),
-        # <=50-row TakeOrderedAndProject result (the BM25 fusion head —
-        # the rank window runs after the depth-50 limit, same shape as
-        # text_zipf_fit):
-        ("staged_r15.py", "search_hybrid_rrf"),
+        ("mining.py", "text_zipf_fit"),
         # |event_type|-row remainder-rank frame (largest-remainder
         # apportionment — same register class as the domain budgets;
         # the corpus-sized work is the two hash aggs before it):
-        ("staged_r14.py", "sample_stratified_neyman"),
+        ("dataset_ops.py", "sample_stratified_neyman"),
         # one-off streaming-FIXTURE staging (balanced chunk split for the
         # micro-batch tests; never an operator plan — the r10 verdict's
         # adjudication, now pinned by the repo-wide scan):

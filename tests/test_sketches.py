@@ -1,14 +1,18 @@
 """Sketch + observability operators that can't hash-match a DuckDB oracle:
 HLL approximate distinct (error-bounded vs exact) and observe() metrics
-(A2 running counters surfaced from a batch action without a second scan)."""
+(A2 running counters surfaced from a batch action without a second scan),
+plus the KMV sketch's merge, error-band and streaming-register pins."""
 
 from __future__ import annotations
 
 from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
+from petfinder_database_distributor_spark.registry import load_all
 from petfinder_database_distributor_spark.schema import load_table
 from tests.conftest import SF_SMALL
+
+SPECS = load_all()
 
 
 def test_approx_count_distinct_error_bounded(spark):
@@ -185,3 +189,65 @@ def test_histogram_quantiles_within_bin_width(spark):
                 f"FROM '{sf_dir}/events.parquet'"
             ).fetchone()[0]
             assert abs(est - exact) <= 2.0, f"q={q}: est {est} vs exact {exact}"
+
+
+def test_kmv_register_merge_equals_direct(spark):
+    """The theta-sketch merge theorem, checked concretely: the k smallest
+    hashes of the UNION of the per-type registers equal the directly
+    built global register (every global top-k hash is inside its own
+    type's top-k), so the ALL row is exactly the merged estimate."""
+    from petfinder_database_distributor_spark.operators.text import md5int
+    from petfinder_database_distributor_spark.plans.llm_pipeline import _KMV_K
+    from petfinder_database_distributor_spark.schema import load_table
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
+
+    ev = load_table(spark, SF_SMALL, "events").filter(
+        F.col("user_id").isNotNull() & F.col("event_type").isNotNull()
+    )
+    hx = ev.select(
+        F.col("event_type").alias("scope"),
+        md5int(F.col("user_id").cast("string")).alias("h"),
+    ).distinct()
+    w = Window.partitionBy("scope").orderBy("h")
+    per_type_registers = (
+        hx.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= _KMV_K)
+        .select("h")
+        .distinct()
+    )
+    merged = [
+        r["h"] for r in per_type_registers.orderBy("h").limit(_KMV_K).collect()
+    ]
+    direct = [
+        r["h"]
+        for r in hx.select("h").distinct().orderBy("h").limit(_KMV_K).collect()
+    ]
+    assert merged == direct
+
+
+def test_kmv_estimate_quality(spark):
+    """KMV's relative error is ~1/sqrt(k) = 12.5% at k=64; assert a slack
+    2x band on every full register, and exactness below k."""
+    fn = SPECS["sketch_kmv_distinct"].fn
+    for r in fn(spark, SF_SMALL).collect():
+        if r["kth_hash"] is None:
+            assert r["est_distinct"] == r["n_exact"]
+        else:
+            assert abs(r["est_distinct"] - r["n_exact"]) <= 0.25 * r["n_exact"], r
+
+
+def test_stream_kmv_equals_batch_register(spark):
+    """The streaming register (per-batch reduce + monoid merge) must
+    equal the batch sketch's ALL row — mergeability is the property that
+    makes the sketch distributable at all."""
+    fn_stream = SPECS["stream_sketch_kmv"].fn
+    fn_batch = SPECS["sketch_kmv_distinct"].fn
+    stream_rows = fn_stream(spark, SF_SMALL).collect()
+    batch_all = [
+        r for r in fn_batch(spark, SF_SMALL).collect() if r["scope"] == "ALL"
+    ]
+    assert len(stream_rows) == 1 and len(batch_all) == 1
+    s, b = stream_rows[0], batch_all[0]
+    assert s["est_distinct"] == b["est_distinct"]
+    assert s["kth_hash"] == b["kth_hash"]

@@ -47,6 +47,10 @@ FAMILY = [
     "sample_importance_dsir",
     "sample_importance_dsir_draw",
     "dedup_multimodal_phash",
+    # gopher's per-word [a-z] regex and unimax's token counts both see the
+    # portable_lower-normalized forms
+    "text_gopher_rules",
+    "domain_budget_unimax",
 ]
 
 
@@ -73,19 +77,6 @@ def test_unicode_parity(spark, uni_sf_dir, name):
 
     spec = load_all()[name]
     assert_parity(spec.fn(spark, uni_sf_dir), run_oracle(spec.oracle, uni_sf_dir), name)
-
-
-# r11 continuation: staged round-12 text queries tokenize through the same
-# portable_lower path (gopher's per-word [a-z] regex and unimax's token
-# counts both see the normalized forms), so they hold the parity bar on
-# the Turkish/Greek/ligature fixture before registration.
-@pytest.mark.parametrize("name", ["text_gopher_rules", "domain_budget_unimax"])
-def test_unicode_parity_staged(spark, uni_sf_dir, name):
-    from petfinder_database_distributor_spark.plans.staged_r12 import STAGED
-    from tests.oracle_compare import assert_parity, run_oracle
-
-    fn, oracle, _doc = STAGED[name]
-    assert_parity(fn(spark, uni_sf_dir), run_oracle(oracle, uni_sf_dir), name)
 
 
 def test_turkish_duplicates_fingerprint_identically(spark, uni_sf_dir):

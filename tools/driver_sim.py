@@ -47,12 +47,9 @@ for name in todo:
     t0 = time.perf_counter()
     try:
         sdf = qs[name](spark, sf)
-        if name in os_:
-            opdf = run_oracle(os_[name], sf)
-            assert_parity(sdf, opdf, name)
-            print(f"PASS {name} ({len(opdf)} rows, {time.perf_counter()-t0:.1f}s)")
-        else:
-            print(f"PASS(rows-only) {name} ({sdf.count()} rows)")
+        opdf = run_oracle(os_[name], sf)
+        assert_parity(sdf, opdf, name)
+        print(f"PASS {name} ({len(opdf)} rows, {time.perf_counter()-t0:.1f}s)")
     except Exception as exc:  # noqa: BLE001 — isolate per query like the driver
         fails.append(name)
         print(f"FAIL {name}: {type(exc).__name__}: {str(exc)[:300]}")

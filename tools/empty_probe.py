@@ -58,12 +58,11 @@ def main() -> int:
         except Exception as e:  # noqa: BLE001 — isolate, keep probing
             spark_err.append((name, f"{type(e).__name__}: {str(e).splitlines()[0][:120]}"))
             continue
-        if spec.oracle:
-            try:
-                len(run_oracle(spec.oracle, tmp))
-            except Exception as e:  # noqa: BLE001
-                oracle_err.append((name, f"{type(e).__name__}: {str(e).splitlines()[0][:120]}"))
-                continue
+        try:
+            len(run_oracle(spec.oracle, tmp))
+        except Exception as e:  # noqa: BLE001
+            oracle_err.append((name, f"{type(e).__name__}: {str(e).splitlines()[0][:120]}"))
+            continue
         ok += 1
     print(f"== ok {ok} / spark_err {len(spark_err)} / oracle_err {len(oracle_err)}")
     for n, e in spark_err:

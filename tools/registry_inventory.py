@@ -43,28 +43,11 @@ for name, spec in specs.items():
     fn = inspect.unwrap(spec.fn)
     src = os.path.relpath(inspect.getsourcefile(fn))
     line = inspect.getsourcelines(fn)[1]
-    oracle = "value-hash" if spec.oracle else "rows-only (non-SQL-expressible)"
     drv = f"r{sampled[name]}" if name in sampled else "local gates (sf0.001 + sf0.01)"
-    lines.append(f"| `{name}` | `{src}:{line}` | {oracle} | {drv} |")
+    lines.append(f"| `{name}` | `{src}:{line}` | value-hash | {drv} |")
 
 with open('REGISTRY.md', 'w') as fh:
     fh.write("\n".join(lines) + "\n")
 print(f"wrote REGISTRY.md: {len(specs)} queries, "
       f"{sum(1 for n in specs if n in sampled)} with driver rows")
 
-
-# Cadence helper (round-2/3 verdict #1): print the names whose newest
-# driver row is stale (or absent) — the raw material for next round's
-# PRIORITY window head, so the hand-maintained registry comment can be
-# cross-checked mechanically.
-this_round = max(sampled.values(), default=0)
-stale = sorted(
-    (n for n in specs if sampled.get(n, -10) <= this_round - 2),
-    key=lambda n: sampled.get(n, -10),
-)
-print(f"cadence check vs newest archived round r{this_round}:")
-print(f"  {sum(1 for n in specs if n not in sampled)} never sampled, "
-      f"{sum(1 for n in stale if n in sampled)} stale (<= r{this_round - 2})")
-for n in stale:
-    tag = f"r{sampled[n]}" if n in sampled else "never"
-    print(f"  {tag:>6}  {n}")

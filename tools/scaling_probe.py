@@ -106,24 +106,7 @@ def main() -> None:
     print(f"building {factor}x inputs under {out_dir} ...", flush=True)
     build_scaled(spark, factor, out_dir)
 
-    qs = dict(load_all())
-    # staged-but-unregistered queries carry the same probe bar before
-    # promotion (the staged_r12+ discipline): merge every plans/staged_r*
-    # STAGED manifest so `python tools/scaling_probe.py 8 <staged-name>`
-    # works without registering first
-    import importlib
-    import pkgutil
-    from types import SimpleNamespace
-
-    from petfinder_database_distributor_spark import plans as _plans
-
-    for _mod in pkgutil.iter_modules(_plans.__path__):
-        if _mod.name.startswith("staged_r"):
-            _m = importlib.import_module(
-                f"petfinder_database_distributor_spark.plans.{_mod.name}"
-            )
-            for _name, (_fn, _oracle, _doc) in getattr(_m, "STAGED", {}).items():
-                qs.setdefault(_name, SimpleNamespace(fn=_fn, oracle=_oracle))
+    qs = load_all()
     spark.range(1000).selectExpr("sum(id)").collect()
     # Same calibration block as bench.py: the per-job JVM floor this
     # machine sustains RIGHT NOW + the OS run queue, so the growth ratios
