@@ -33,6 +33,17 @@ request was most of the serving cost: on the benchmark's
 ``serve_under_ingest`` workload (a 1,000-1,400-row table, 4-vCPU VM),
 encoding once per version cut the server's CPU time per request from a
 median of 12.8 ms to 4.4 ms over 10 runs each.
+
+A cache miss (a new version, or ``?version=`` draws that overflow the
+cache) writes the body straight from Arrow columns
+(:func:`_encode_version`): one JSON text per cell, made column by
+column without an Arrow scalar per cell or a dict per row, and joined
+through one row template per file. Decoding rows with
+``Table.to_pylist()`` took 36 of the 53 ms a 1,345-row miss cost. On
+versions of 1,000-1,330 benchmark rows, a miss now averages 14 ms of
+CPU time against 44 ms for decode-then-``json.dumps``.
+:func:`load_snapshot_rows` stays as the reference decoder the served
+bytes are tested against.
 """
 
 from __future__ import annotations
@@ -45,6 +56,7 @@ import os
 import threading
 from collections import OrderedDict
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from json.encoder import encode_basestring_ascii
 from urllib.parse import parse_qs, urlparse
 
 AUTH_ERROR = {"error": "Invalid or missing endpoint key"}
@@ -54,9 +66,12 @@ AUTH_ERROR = {"error": "Invalid or missing endpoint key"}
 # committed version's file list and file contents are immutable, so
 # caching by RESOLVED version is exact: a hit costs one pointer read and
 # a write of the stored bytes, and a merge that advances the pointer is
-# picked up on the next request as a miss. The body takes less than
-# half the memory of the decoded row dicts (0.84 MB against 1.83 MB for
-# 1,368 benchmark rows). Bounded at 4 versions so long-lived serving
+# picked up on the next request as a miss. A miss reads and encodes the
+# version's files, about 10x the CPU time of a hit at the benchmark's
+# 1,000-1,330 rows (14 ms against 1.4 ms); ``?version=`` draws over more
+# retained versions than the cache holds make those misses. The body
+# takes less than half the memory of the decoded row dicts (0.84 MB
+# against 1.83 MB for 1,368 benchmark rows). Bounded at 4 versions so long-lived serving
 # across many commits doesn't hold every historical version; evicting
 # the least recently used keeps the hot latest version when a run of
 # ``?version=`` misses would have pushed it out first.
@@ -86,13 +101,77 @@ def snapshot_body(table_dir: str, version: int | None = None) -> bytes:
         if body is not None:
             _BODY_CACHE.move_to_end(key)
             return body
-    body = _pets_body(load_snapshot_rows(table_dir, v))
+    body = _encode_version(table_dir, v)
     with _BODY_CACHE_LOCK:
         _BODY_CACHE[key] = body
         _BODY_CACHE.move_to_end(key)
         while len(_BODY_CACHE) > _BODY_CACHE_MAX:
             _BODY_CACHE.popitem(last=False)
     return body
+
+
+_BOOL_TEXT = {True: "true", False: "false", None: "null"}
+
+
+def _json_texts(col) -> list[str]:
+    """The JSON text of each value of one Arrow column: exactly
+    ``json.dumps`` of the Python value ``to_pylist`` would give. Where the
+    type allows, the column converts in bulk (``to_numpy``) instead of
+    boxing every cell as an Arrow scalar, which is what makes
+    ``to_pylist`` slow. Strings go through the C escaper ``json.dumps``
+    itself uses; every type not special-cased here goes through
+    ``json.dumps`` per value, so floats (NaN, ±inf) and the TypeError on
+    unsupported types behave as in the reference encoding."""
+    import pyarrow as pa
+
+    t = col.type
+    if pa.types.is_string(t) or pa.types.is_large_string(t):
+        values = col.to_numpy(zero_copy_only=False)
+        if col.null_count == 0:
+            return list(map(encode_basestring_ascii, values))
+        return ["null" if v is None else encode_basestring_ascii(v) for v in values]
+    if pa.types.is_boolean(t):
+        values = col.to_numpy(zero_copy_only=False).tolist()
+        return list(map(_BOOL_TEXT.__getitem__, values))
+    if pa.types.is_integer(t) and col.null_count == 0:
+        return list(map(int.__repr__, col.to_numpy().tolist()))
+    return list(map(json.dumps, col.to_pylist()))
+
+
+def _encode_version(table_dir: str, version: int) -> bytes:
+    """The ``GET /pets`` body of one committed version, written straight
+    from Arrow columns. Byte-identical to ``_pets_body`` over
+    :func:`load_snapshot_rows`, the reference decoder. Each data file
+    gets a ``%`` row template built from its OWN column names, so a file
+    written before a schema-evolving append keeps its shorter rows, as
+    ``to_pylist`` gives them; tombstoned rows are dropped with an Arrow
+    filter before any value is encoded."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from petfinder_database_distributor_spark.sources.snapshot import (
+        _manifest_files,
+        load_tombstone_keys,
+        read_manifest,
+    )
+
+    manifest = read_manifest(table_dir, version)
+    tombs = manifest.get("tombstones", [])
+    key_cols = manifest["key_cols"] if tombs else []
+    dead = set(load_tombstone_keys(table_dir, tombs, key_cols))
+    rows: list[str] = []
+    for rel in _manifest_files(manifest):
+        table = pq.read_table(os.path.join(table_dir, rel), use_threads=False)
+        if dead:
+            keys = zip(*[table.column(c).to_pylist() for c in key_cols])
+            table = table.filter(pa.array([k not in dead for k in keys], pa.bool_()))
+        template = "{%s}" % ", ".join(
+            encode_basestring_ascii(name).replace("%", "%%") + ": %s"
+            for name in table.column_names
+        )
+        texts = [_json_texts(col) for col in table.columns]
+        rows.extend(map(template.__mod__, zip(*texts)))
+    return ('{"count": %d, "pets": [%s]}' % (len(rows), ", ".join(rows))).encode()
 
 
 def load_snapshot_rows(table_dir: str, version: int | None = None) -> list[dict]:
@@ -102,13 +181,15 @@ def load_snapshot_rows(table_dir: str, version: int | None = None) -> list[dict]
     immutable and the manifest names exactly one version's files, a reader
     holding version N is immune to concurrent merges/compactions — the
     reference's serving-during-rewrite guarantee (`server.py:299-307`),
-    plus time travel to any retained version via ``?version=``. Uncached:
-    the server caches the encoded body instead (:func:`snapshot_body`)."""
+    plus time travel to any retained version via ``?version=``. The
+    reference decoder of the served body: the server encodes straight
+    from Arrow columns instead (:func:`snapshot_body`)."""
     import pyarrow.parquet as pq
 
     from petfinder_database_distributor_spark.sources.snapshot import (
         _manifest_files,
         latest_version,
+        load_tombstone_keys,
         read_manifest,
     )
 
@@ -124,10 +205,7 @@ def load_snapshot_rows(table_dir: str, version: int | None = None) -> list[dict]
         # merge-on-read deletes (snapshot_delete): drop tombstoned keys
         # exactly like the Spark reader's anti-join
         key_cols = manifest["key_cols"]
-        dead = set()
-        for rel in tombs:
-            for t in pq.read_table(os.path.join(table_dir, rel)).to_pylist():
-                dead.add(tuple(t[k] for k in key_cols))
+        dead = set(load_tombstone_keys(table_dir, tombs, key_cols))
         rows = [r for r in rows if tuple(r[k] for k in key_cols) not in dead]
     return rows
 

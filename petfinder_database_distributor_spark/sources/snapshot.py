@@ -525,10 +525,33 @@ def _apply_tombstones(
     tombs = manifest.get("tombstones", [])
     if not tombs:
         return df
-    keys = spark.read.parquet(
-        *[os.path.join(table_dir, rel) for rel in tombs]
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    # An explicit schema from one footer, read here: Spark's own
+    # inference reads one footer too, but inside a job, so every read of
+    # a version with deletes would launch one before any action ran.
+    paths = [os.path.join(table_dir, rel) for rel in tombs]
+    keys = spark.read.schema(from_arrow_schema(pq.read_schema(paths[0]))).parquet(
+        *paths
     )
     return df.join(keys, on=manifest["key_cols"], how="left_anti")
+
+
+def load_tombstone_keys(
+    table_dir: str, rels: list[str], key_cols: list[str]
+) -> list[tuple]:
+    """Driver-side: the key tuples of the tombstone files ``rels``, in
+    file order (bounded: O(delete keys) by the format's contract). The
+    one pyarrow decode of tombstones shared by the Spark-free readers:
+    serving, the snapshot data source and its stream reader."""
+    import pyarrow.parquet as pq
+
+    keys: list[tuple] = []
+    for rel in rels:
+        t = pq.read_table(os.path.join(table_dir, rel), columns=key_cols)
+        keys.extend(zip(*[t.column(c).to_pylist() for c in key_cols]))
+    return keys
 
 
 def snapshot_read(
@@ -633,9 +656,10 @@ def snapshot_append(
     indexes, event feeds); the merge/winner machinery is for keyed
     upserts, and paying its whole-table rewrite for a pure append is the
     reference's O(table)-per-row CSV mistake again. Tombstones and their
-    key columns carry forward unchanged (they filter by key at read
-    time, so they also apply to appended rows — append-after-delete of
-    the same key is a resurrection, same rule as merge). Crash/conflict
+    key columns carry forward unchanged. They filter by key at read
+    time, so they also apply to appended rows: a row appended after a
+    delete of its key stays hidden. Only a merge, which folds the
+    tombstones into fresh files, re-inserts a deleted key. Crash/conflict
     semantics are inherited from the shared commit path.
 
     ``evolve_schema=True`` additionally allows the batch to ADD columns

@@ -137,23 +137,6 @@ def make_snapshot_datasource():
             table = table.filter(mask)
         yield from table.to_batches()
 
-    def _load_tombstones(table_dir, manifest):
-        """Driver-side: the manifest's accumulated tombstone key rows as
-        a list of tuples (bounded: O(delete keys) by contract)."""
-        import os
-
-        import pyarrow.parquet as pq
-
-        tombs = manifest.get("tombstones", [])
-        if not tombs:
-            return [], []
-        key_cols = manifest["key_cols"]
-        rows = []
-        for rel in tombs:
-            t = pq.read_table(os.path.join(table_dir, rel))
-            rows.extend(zip(*[t.column(c).to_pylist() for c in key_cols]))
-        return rows, key_cols
-
     def _resolve(options):
         import json
 
@@ -342,7 +325,13 @@ def make_snapshot_datasource():
             return files
 
         def partitions(self):
-            tomb_keys, key_cols = _load_tombstones(self.table_dir, self.manifest)
+            from petfinder_database_distributor_spark.sources.snapshot import (
+                load_tombstone_keys,
+            )
+
+            tombs = self.manifest.get("tombstones", [])
+            key_cols = self.manifest["key_cols"] if tombs else []
+            tomb_keys = load_tombstone_keys(self.table_dir, tombs, key_cols)
             return [
                 FileScan(self.table_dir, rel, self.schema_json, tomb_keys, key_cols)
                 for rel in self._kept_files()
@@ -692,11 +681,8 @@ def make_snapshot_datasource():
             return {"version": latest_version(self.table_dir)}
 
         def partitions(self, start, end):
-            import os
-
-            import pyarrow.parquet as pq
-
             from petfinder_database_distributor_spark.sources.snapshot import (
+                load_tombstone_keys,
                 read_manifest,
             )
 
@@ -754,16 +740,7 @@ def make_snapshot_datasource():
                 prev = set(files_v)
             schema_json = _schema_json_of(self.table_dir, end_manifest)
             tomb_rows = {
-                rel: list(
-                    zip(
-                        *[
-                            pq.read_table(os.path.join(self.table_dir, rel))
-                            .column(c)
-                            .to_pylist()
-                            for c in key_cols
-                        ]
-                    )
-                )
+                rel: load_tombstone_keys(self.table_dir, [rel], key_cols)
                 for rel in tomb_last_seen
             }
             parts = []

@@ -475,6 +475,33 @@ def test_tombstone_delete_reuses_files_and_hides_rows(spark, table_dir):
     assert set(_as_dict(snapshot_read(spark, table_dir, version=0))) == set(range(6))
 
 
+def test_tombstone_read_builds_without_a_job(spark, table_dir):
+    """Building the read of a version with tombstones is lazy: the
+    tombstone scan gets its schema from one footer read on the driver,
+    not from Spark's inference, which would launch a job before any
+    action. The action itself runs in the same group, so the group is
+    really tracked."""
+    import uuid
+
+    from petfinder_database_distributor_spark.sources.snapshot import (
+        snapshot_delete,
+    )
+
+    snapshot_write(spark, table_dir, _rows(spark, [(i, f"v{i}") for i in range(4)]))
+    snapshot_delete(spark, table_dir, spark.createDataFrame([(2,)], "k long"), ["k"])
+    snapshot_delete(spark, table_dir, spark.createDataFrame([(3,)], "k long"), ["k"])
+    sc = spark.sparkContext
+    group = f"tombstone-read-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        df = snapshot_read(spark, table_dir)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert set(_as_dict(df)) == {0, 1}
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc._jsc.clearJobGroup()  # noqa: SLF001 -- not exposed on the Python SparkContext
+
+
 def test_tombstones_accumulate_and_compaction_folds_them(spark, table_dir):
     from petfinder_database_distributor_spark.sources.snapshot import (
         snapshot_compact,
