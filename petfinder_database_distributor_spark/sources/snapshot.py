@@ -398,40 +398,6 @@ def bloom_prune_files(table_dir: str, manifest: dict, col: str, values) -> list[
     return kept
 
 
-def snapshot_read_lookup(
-    spark: SparkSession,
-    table_dir: str,
-    col: str,
-    values,
-    version: int | None = None,
-) -> DataFrame:
-    """Point lookup with bloom file skipping: resolve the manifest, keep
-    only files whose bloom might contain one of ``values``, scan those,
-    and re-apply the exact IN predicate (blooms admit false positives,
-    never false negatives — over the committed values — so the result is
-    exact). The needle-in-100TB shape: a k-row lookup touches O(k) files
-    instead of every file whose zone map happens to span the key."""
-    v = latest_version(table_dir) if version is None else version
-    if v is None:
-        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
-    manifest = read_manifest(table_dir, v)
-    vals = list(values)
-    kept = bloom_prune_files(table_dir, manifest, col, vals)
-    if not kept:
-        from pyspark.sql.types import StructType
-
-        empty = spark.createDataFrame(
-            [], StructType.fromJson(manifest["schema"])
-        )
-        return empty.filter(empty[col].isin(vals))
-    df = _manifest_reader(spark, manifest).parquet(
-        *[os.path.join(table_dir, rel) for rel in kept]
-    )
-    return _apply_tombstones(spark, table_dir, manifest, df).filter(
-        df[col].isin(vals)
-    )
-
-
 def snapshot_write(
     spark: SparkSession,
     table_dir: str,
@@ -809,9 +775,6 @@ def snapshot_merge(
     reference's serving-during-rewrite guarantee (server.py:299-307) at
     table granularity. Compaction is the degenerate case (updates = empty,
     or a filtered rewrite) and inherits the same safety."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
     base = latest_version(table_dir)
     merged = (
         updates
@@ -821,16 +784,10 @@ def snapshot_merge(
         # a reader time-traveling to v0 gets the same invariant as v{N}.
         else snapshot_read(spark, table_dir, base).unionByName(updates)
     )
-    w = Window.partitionBy(*key_cols).orderBy(*[F.col(c).desc() for c in order_cols])
-    winner = (
-        merged.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
     return snapshot_write(
         spark,
         table_dir,
-        winner,
+        _winner(merged, key_cols, order_cols),
         base_version=base,
         extra_manifest={"operation": "merge"},
         # bloom indexing is a table property: a rewrite re-derives the

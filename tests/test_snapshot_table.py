@@ -1043,12 +1043,15 @@ def test_bloom_point_lookup_prunes_and_stays_exact(spark, table_dir):
     """Bloom file skipping: a high-cardinality key hash-scrambled across
     files defeats zone maps (every file's min/max spans everything), but
     the committed per-file blooms keep only files that might contain the
-    probe keys — and the lookup re-applies the exact predicate, so false
+    probe keys. The snapshot source scans exactly those files for a
+    pushed IN filter, and Spark re-applies the predicate, so false
     positives cost I/O, never correctness."""
     from petfinder_database_distributor_spark.sources.snapshot import (
         bloom_prune_files,
-        snapshot_read_lookup,
         snapshot_write,
+    )
+    from petfinder_database_distributor_spark.sources.snapshot_datasource import (
+        register_snapshot_source,
     )
 
     n = 4000
@@ -1065,11 +1068,19 @@ def test_bloom_point_lookup_prunes_and_stays_exact(spark, table_dir):
     probe = (7 * 2654435761) % 1000003
     kept = bloom_prune_files(table_dir, m, "k", [probe])
     assert 1 <= len(kept) <= 2, kept
-    got = snapshot_read_lookup(spark, table_dir, "k", [probe]).collect()
-    assert [(r["k"], r["payload"]) for r in got] == [(probe, 7)]
-    # an absent key prunes to ~nothing and returns NO rows even through
-    # bloom false positives (exact re-apply)
-    assert snapshot_read_lookup(spark, table_dir, "k", [999983]).count() == 0
+    register_snapshot_source(spark)
+    scan = spark.read.format("snapshot").load(table_dir)
+    hit = scan.filter(F.col("k").isin([probe]))
+    assert hit.rdd.getNumPartitions() == len(kept)
+    assert [(r["k"], r["payload"]) for r in hit.collect()] == [(probe, 7)]
+    # an absent key prunes to ~nothing (an all-pruned scan is one empty
+    # partition) and returns NO rows even through bloom false positives
+    # (exact re-apply)
+    absent = scan.filter(F.col("k").isin([999983]))
+    assert absent.rdd.getNumPartitions() == max(
+        1, len(bloom_prune_files(table_dir, m, "k", [999983]))
+    )
+    assert absent.count() == 0
     # zone maps alone would keep every file for this probe (scrambled
     # layout): bloom is what makes the point lookup O(matching files)
     from petfinder_database_distributor_spark.sources.snapshot import prune_files
@@ -1099,11 +1110,17 @@ def test_bloom_survives_append_merge_and_vacuum(spark, table_dir):
     m2 = read_manifest(table_dir, 2)
     assert set(m2["file_blooms"]) == set(m2["files"])
     from petfinder_database_distributor_spark.sources.snapshot import (
-        snapshot_read_lookup,
+        bloom_prune_files,
+    )
+    from petfinder_database_distributor_spark.sources.snapshot_datasource import (
+        register_snapshot_source,
     )
 
-    got = {r["k"]: r["v"] for r in snapshot_read_lookup(spark, table_dir, "k", [5, 150]).collect()}
-    assert got == {5: 500, 150: 150}
+    register_snapshot_source(spark)
+    lookup = spark.read.format("snapshot").load(table_dir).filter(F.col("k").isin([5, 150]))
+    kept = bloom_prune_files(table_dir, m2, "k", [5, 150])
+    assert lookup.rdd.getNumPartitions() == len(kept)
+    assert {r["k"]: r["v"] for r in lookup.collect()} == {5: 500, 150: 150}
     # vacuum: expired versions' sidecars go with their data files;
     # retained ones survive (they're manifest-referenced)
     m0_blooms = list(read_manifest(table_dir, 0)["file_blooms"].values())
