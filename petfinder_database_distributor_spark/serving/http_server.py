@@ -36,9 +36,11 @@ per route, two runs), ``/health`` cost 0.63-0.73 ms per request with a
 thread per connection and 0.34-0.35 ms on the workers, and a cached
 ``/pets`` hit 0.98-1.08 ms against 0.58-0.67 ms. With a fixed number of
 workers, an idle connection must not hold one for good: a connection
-that sends nothing is dropped after ``PetServingHandler.timeout``
-(30 s, gunicorn's default), and connects that arrive while every worker
-is busy wait in the kernel's accept queue (``request_queue_size``).
+that sends nothing reaches a worker only after 30 s (Linux's
+``TCP_DEFER_ACCEPT``), one that stalls in its request or stops reading
+its response is dropped after ``PetServingHandler.timeout`` (30 s,
+gunicorn's default), and connects that arrive while every worker is
+busy wait in the kernel's accept queue (``request_queue_size``).
 
 Every ``/pets`` and ``/pets.csv`` answer is bytes encoded once, not once
 per request: ``reload()`` encodes the artifact's two bodies, and a
@@ -241,12 +243,16 @@ def load_csv_artifact(path: str) -> tuple[str, list[dict]]:
     return text, [dict(r) for r in csv.DictReader(io.StringIO(text))]
 
 
+# Bytes per write of a response body (see ``PetServingHandler._send``).
+_SEND_SLICE = 1 << 16
+
+
 class PetServingHandler(BaseHTTPRequestHandler):
     server_version = "PetServing/1.0"
-    # Seconds a connection may sit idle in a read or a write before the
-    # worker drops it. A client that connects and sends nothing would
-    # otherwise hold one of the server's WORKERS for good; gunicorn's
-    # default --timeout.
+    # Seconds a connection may stall before the worker drops it: a read
+    # that gets no byte, or one ``_SEND_SLICE`` of the body that the
+    # client does not take. A stalled client would otherwise hold one of
+    # the server's WORKERS for good; gunicorn's default --timeout.
     timeout = 30
 
     # -- helpers ----------------------------------------------------------
@@ -272,7 +278,12 @@ class PetServingHandler(BaseHTTPRequestHandler):
         for k, v in (extra or {}).items():
             self.send_header(k, v)
         self.end_headers()
-        self.wfile.write(body)
+        # A socket timeout caps one sendall in total, so the body goes out
+        # in slices: the timeout then bounds a stalled reader, not a slow
+        # but steady one.
+        view = memoryview(body)
+        for i in range(0, len(view), _SEND_SLICE):
+            self.wfile.write(view[i : i + _SEND_SLICE])
 
     def _json(self, code: int, obj) -> None:
         self._send(code, json.dumps(obj).encode(), "application/json")
@@ -404,8 +415,10 @@ class PetServer(HTTPServer):
     the connection they get inline (see the module docstring)."""
 
     # A burst of connects waits in the kernel's accept queue instead of
-    # meeting SYN retries (the TCPServer default is 5); gunicorn's
-    # default --backlog.
+    # meeting SYN retries: with the TCPServer default of 5, 64 closed-loop
+    # clients saw a p99 latency of 4.4-14.5 s, against 0.47-0.59 s with
+    # this queue (4-vCPU VM, three runs each). gunicorn's default
+    # --backlog; the kernel caps it at net.core.somaxconn.
     request_queue_size = 2048
 
     def __init__(
@@ -430,7 +443,18 @@ class PetServer(HTTPServer):
         self.lifecycle_lock = threading.Lock()
         self._stopping = threading.Event()
         self._workers: list[threading.Thread] = []
+        self._serving: list[socket.socket | None] = []
         self.reload()
+
+    def server_bind(self) -> None:
+        # Linux hands a connection to accept() only once request bytes
+        # arrive, or after about 30 s of silence (the handler's timeout
+        # then applies): a client that connects and waits, as a browser's
+        # preconnect does, holds no worker. Without it, four such clients
+        # stopped all serving for the 30 s timeout.
+        if hasattr(socket, "TCP_DEFER_ACCEPT"):
+            self.socket.setsockopt(socket.IPPROTO_TCP, socket.TCP_DEFER_ACCEPT, 30)
+        super().server_bind()
 
     def reload(self) -> None:
         """(Re)load the CSV artifact and encode its ``/pets`` and
@@ -461,56 +485,77 @@ class PetServer(HTTPServer):
         return out
 
     def _start_workers(self) -> None:
-        self._workers = [
-            threading.Thread(target=self._work, name=f"PetServer-{i}", daemon=True)
-            for i in range(WORKERS)
-        ]
-        for w in self._workers:
+        # A worker is listed only once started: shutdown() from another
+        # thread may join the list while serve_forever() is filling it,
+        # and a worker started after shutdown() exits at its accept().
+        self._serving = [None] * WORKERS
+        for i in range(WORKERS):
+            w = threading.Thread(target=self._work, args=(i,), name=f"PetServer-{i}", daemon=True)
             w.start()
+            self._workers.append(w)
 
-    def _work(self) -> None:
+    def _work(self, slot: int) -> None:
         """One worker: accept a connection and answer it on this thread
-        (``BaseServer.process_request`` without the handoff) until
-        :meth:`shutdown`. The handler speaks HTTP/1.0, so a connection
-        carries one request and a worker is free again after it."""
-        while not self._stopping.is_set():
+        (``BaseServer.process_request`` without the handoff) until the
+        server stops accepting. The handler speaks HTTP/1.0, so a
+        connection carries one request and a worker is free again after
+        it. ``self._serving[slot]`` is the connection being answered, for
+        :meth:`shutdown`."""
+        while True:
             try:
                 request, client_address = self.get_request()
             except OSError:
-                if self.socket.fileno() < 0:  # server_close(): nothing to accept
+                if self._stopping.is_set():
                     return
                 continue
-            if self._stopping.is_set():  # a shutdown wake-up
-                self.shutdown_request(request)
-                return
+            self._serving[slot] = request
             try:
                 self.finish_request(request, client_address)
             except Exception:  # noqa: BLE001 — report, keep the worker
                 self.handle_error(request, client_address)
             finally:
+                self._serving[slot] = None
                 self.shutdown_request(request)
 
     def serve_forever(self, poll_interval: float = 0.5) -> None:
         """Answer requests on ``WORKERS`` standing threads until
-        :meth:`shutdown`. ``poll_interval`` is unused: the workers block
-        in ``accept()`` instead of polling."""
+        :meth:`shutdown` or :meth:`server_close`. ``poll_interval`` is
+        unused: the workers block in ``accept()`` instead of polling."""
         self._start_workers()
         for w in self._workers:
             w.join()
 
+    def _stop_accepting(self) -> None:
+        """Refuse new connections and wake every worker blocked in
+        ``accept()``: on Linux, shutting a listening socket down fails
+        each blocked ``accept()`` at once."""
+        self._stopping.set()
+        try:
+            self.socket.shutdown(socket.SHUT_RDWR)
+        except OSError:  # already shut down or closed
+            pass
+
     def shutdown(self) -> None:
         """Stop the workers and return once they have exited; the server
-        does not serve again. Each worker blocked in ``accept()`` is woken
-        by a throwaway connection; one answering a request finishes it
-        first, bounded by the handler's ``timeout``."""
-        self._stopping.set()
-        for _ in self._workers:
-            try:
-                socket.create_connection(self.server_address, timeout=1).close()
-            except OSError:
-                break
-        for w in self._workers:
+        does not serve again. Reading a request stops at end-of-file at
+        once, so a stalled client does not hold shutdown up; a response
+        already being written is finished first, each slice bounded by
+        the handler's ``timeout``."""
+        self._stop_accepting()
+        for conn in list(self._serving):
+            if conn is not None:
+                try:
+                    conn.shutdown(socket.SHUT_RD)
+                except OSError:  # answered and closed meanwhile
+                    pass
+        for w in list(self._workers):
             w.join()
+
+    def server_close(self) -> None:
+        """Close the listening socket; workers finish the request they are
+        answering, if any, and exit without accepting another."""
+        self._stop_accepting()
+        super().server_close()
 
 
 def serve_export(

@@ -1,8 +1,11 @@
 """The serving worker model: requests are answered by the server's
 standing workers, never a thread per connection; bodies stay exact under
-concurrent clients; an idle connection costs one worker for at most the
-handler's timeout; shutdown is prompt. Spark-free: the snapshot table and
-the CSV artifact are written by hand."""
+concurrent clients; a silent connection holds no worker, a stalled one
+holds it for at most the handler's timeout, and a slow reader for as
+long as it keeps reading;
+shutdown is prompt, and server_close alone stops the workers.
+Spark-free: the snapshot table and the CSV artifact are written by
+hand."""
 
 from __future__ import annotations
 
@@ -100,6 +103,13 @@ def _silent(port: int) -> socket.socket:
     return socket.create_connection(("127.0.0.1", port), timeout=10)
 
 
+def _stalled(port: int) -> socket.socket:
+    """A connection that sends a request line and then nothing more."""
+    sock = _silent(port)
+    sock.sendall(b"GET /health HTTP/1.0\r\n")
+    return sock
+
+
 def test_requests_start_no_threads(served, monkeypatch):
     """Thread-per-connection would start one thread per request."""
     httpd, _, _ = served
@@ -153,33 +163,34 @@ def test_concurrent_clients_get_exact_bodies(served):
     assert snapshot_body(table) == expected["/pets"]
 
 
-def test_silent_connection_does_not_delay_health(served):
+def test_silent_connections_do_not_delay_health(served):
+    """More silent connections than workers: none holds a worker."""
     httpd, _, _ = served
     port = httpd.server_address[1]
-    idle = _silent(port)
+    idle = [_silent(port) for _ in range(2 * WORKERS)]
     try:
         t0 = time.perf_counter()
         assert _get(port, "/health", timeout=5)[0] == 200
         assert time.perf_counter() - t0 < 5
     finally:
-        idle.close()
+        for sock in idle:
+            sock.close()
 
 
-def test_silent_connections_time_out_and_service_resumes(served, monkeypatch):
-    """One silent connection per worker occupies every worker; each is
+def test_stalled_requests_time_out_and_service_resumes(served, monkeypatch):
+    """One stalled request per worker occupies every worker; each is
     dropped after the handler's timeout, and requests are answered
     again."""
     monkeypatch.setattr(PetServingHandler, "timeout", 0.5)
     httpd, _, _ = served
     port = httpd.server_address[1]
-    idle = [_silent(port) for _ in range(WORKERS)]
+    stalled = [_stalled(port) for _ in range(WORKERS)]
     try:
-        for sock in idle:
-            sock.settimeout(10)
+        for sock in stalled:
             assert sock.recv(1) == b""  # closed by the server, unanswered
         assert _get(port, "/health")[0] == 200
     finally:
-        for sock in idle:
+        for sock in stalled:
             sock.close()
 
 
@@ -195,6 +206,69 @@ def test_shutdown_is_prompt_and_closes_the_port(served):
         socket.create_connection(("127.0.0.1", port), timeout=2)
 
 
+def test_shutdown_drops_a_stalled_request_instead_of_waiting(served):
+    """A worker waiting for the rest of a request does not hold shutdown
+    up for the handler's timeout."""
+    httpd, _, _ = served
+    stalled = _stalled(httpd.server_address[1])
+    try:
+        time.sleep(0.2)  # a worker has accepted it and waits in a read
+        t0 = time.perf_counter()
+        httpd.shutdown()
+        assert time.perf_counter() - t0 < 2
+        while stalled.recv(1 << 16):  # the server has closed it
+            pass
+    finally:
+        stalled.close()
+
+
+def test_server_close_alone_refuses_connections_and_ends_workers(tmp_path):
+    artifact = str(tmp_path / "export")
+    _write_artifact(artifact)
+    httpd = serve_export(artifact, KEY)
+    port = httpd.server_address[1]
+    assert _get(port, "/health")[0] == 200
+    httpd.server_close()
+    with pytest.raises(ConnectionRefusedError):
+        socket.create_connection(("127.0.0.1", port), timeout=2)
+    for w in httpd._workers:
+        w.join(timeout=2)
+    assert not any(w.is_alive() for w in httpd._workers)
+
+
+def test_slow_steady_reader_gets_the_whole_body(tmp_path, monkeypatch):
+    """The timeout bounds a stall, not the whole response: a body that
+    takes many timeouts to reach a slow reader still arrives whole."""
+    monkeypatch.setattr(PetServingHandler, "timeout", 0.5)
+    artifact = str(tmp_path / "export")
+    os.makedirs(artifact)
+    csv_bytes = b"link,about\n" + b"".join(
+        b"https://pets.example/%d,%s\n" % (i, b"x" * 80_000) for i in range(100)
+    )  # 8 MB, more than the kernel buffers the server's writes
+    with open(os.path.join(artifact, "part-00000.csv"), "wb") as fh:
+        fh.write(csv_bytes)
+    httpd = serve_export(artifact, KEY)
+    client = socket.socket()
+    try:
+        client.setsockopt(socket.SOL_SOCKET, socket.SO_RCVBUF, 1 << 15)
+        client.settimeout(10)
+        client.connect(httpd.server_address)
+        client.sendall(b"GET /pets.csv HTTP/1.0\r\nX-API-Key: " + KEY.encode() + b"\r\n\r\n")
+        chunks = []
+        t0 = time.perf_counter()
+        while chunk := client.recv(1 << 15):
+            chunks.append(chunk)
+            time.sleep(0.01)
+        assert time.perf_counter() - t0 > 2 * PetServingHandler.timeout
+        head, _, body = b"".join(chunks).partition(b"\r\n\r\n")
+        assert head.startswith(b"HTTP/1.0 200")
+        assert body == csv_bytes
+    finally:
+        client.close()
+        httpd.shutdown()
+        httpd.server_close()
+
+
 def test_direct_serve_forever_returns_after_shutdown(tmp_path):
     artifact = str(tmp_path / "export")
     csv_bytes = _write_artifact(artifact)
@@ -208,6 +282,21 @@ def test_direct_serve_forever_returns_after_shutdown(tmp_path):
         assert not loop.is_alive()
     finally:
         httpd.server_close()
+
+
+def test_shutdown_while_serve_forever_starts_its_workers(tmp_path):
+    artifact = str(tmp_path / "export")
+    _write_artifact(artifact)
+    for _ in range(20):
+        httpd = PetServer(artifact, KEY)
+        loop = threading.Thread(target=httpd.serve_forever, daemon=True)
+        loop.start()
+        try:
+            httpd.shutdown()
+            loop.join(timeout=2)
+            assert not loop.is_alive()
+        finally:
+            httpd.server_close()
 
 
 def test_miss_reads_each_data_file_without_dataset_discovery(tmp_path, monkeypatch):
