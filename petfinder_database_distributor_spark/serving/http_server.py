@@ -52,13 +52,17 @@ encoding once per version cut the server's CPU time per request from a
 median of 12.8 ms to 4.4 ms over 10 runs each.
 
 A cache miss (a new version, or ``?version=`` draws that overflow the
-cache) writes the body straight from Arrow columns
-(:func:`_encode_version`): one JSON text per cell, made column by
-column without an Arrow scalar per cell or a dict per row, and joined
-through one row template per file. Decoding rows with
-``Table.to_pylist()`` took 36 of the 53 ms a 1,345-row miss cost. On
-versions of 1,000-1,330 benchmark rows, a miss now averages 14 ms of
-CPU time against 44 ms for decode-then-``json.dumps``.
+cache) builds the body with Arrow kernels (:func:`_encode_version`):
+per data file, each column becomes one Arrow array of JSON texts and
+one ``binary_join_element_wise`` writes every row, so strings that need
+no escaping, booleans and integers cost no Python call per cell or per
+row. Decoding rows with ``Table.to_pylist()`` took 36 of the 53 ms a
+1,345-row miss cost; a JSON text per cell made in Python and a ``%``
+row template per row then left 12.8-13.3 ms for a 1,284-row benchmark
+version, and the Arrow kernels take 6.4 ms (CPU time in-process, median
+of 200 misses, two runs, 4-vCPU VM). Over HTTP, on versions of
+1,000-1,353 rows, a miss costs the server 7.0-8.4 ms of CPU time
+against 12.9-14.8 ms with a Python text per cell.
 :func:`load_snapshot_rows` stays as the reference decoder the served
 bytes are tested against.
 """
@@ -85,10 +89,10 @@ AUTH_ERROR = {"error": "Invalid or missing endpoint key"}
 # caching by RESOLVED version is exact: a hit costs one pointer read and
 # a write of the stored bytes, and a merge that advances the pointer is
 # picked up on the next request as a miss. A miss reads and encodes the
-# version's files, about 10x the CPU time of a hit at the benchmark's
-# 1,000-1,330 rows (14 ms against 1.4 ms); ``?version=`` draws over more
-# retained versions than the cache holds make those misses. The body
-# takes less than half the memory of the decoded row dicts (0.84 MB
+# version's files, about 9x the CPU time of a hit at the benchmark's
+# 1,000-1,353 rows (7.0-8.4 ms against 0.7-1.0 ms); ``?version=`` draws
+# over more retained versions than the cache holds make those misses. The
+# body takes less than half the memory of the decoded row dicts (0.84 MB
 # against 1.83 MB for 1,368 benchmark rows). Bounded at 4 versions so long-lived serving
 # across many commits doesn't hold every historical version; evicting
 # the least recently used keeps the hot latest version when a run of
@@ -128,18 +132,14 @@ def snapshot_body(table_dir: str, version: int | None = None) -> bytes:
     return body
 
 
-_BOOL_TEXT = {True: "true", False: "false", None: "null"}
-
-
 def _json_texts(col) -> list[str]:
-    """The JSON text of each value of one Arrow column: exactly
-    ``json.dumps`` of the Python value ``to_pylist`` would give. Where the
-    type allows, the column converts in bulk (``to_numpy``) instead of
-    boxing every cell as an Arrow scalar, which is what makes
-    ``to_pylist`` slow. Strings go through the C escaper ``json.dumps``
-    itself uses; every type not special-cased here goes through
-    ``json.dumps`` per value, so floats (NaN, ±inf) and the TypeError on
-    unsupported types behave as in the reference encoding."""
+    """The JSON text of each value of one Arrow array, exactly
+    ``json.dumps`` of the Python value ``to_pylist`` would give: the
+    per-value path for the columns :func:`_file_rows` cannot write with
+    Arrow kernels. Strings convert in bulk (``to_numpy``) and go through
+    the C escaper ``json.dumps`` itself uses; every other type goes
+    through ``json.dumps`` per value, so floats (NaN, ±inf) and the
+    TypeError on unsupported types behave as in the reference encoding."""
     import pyarrow as pa
 
     t = col.type
@@ -148,23 +148,109 @@ def _json_texts(col) -> list[str]:
         if col.null_count == 0:
             return list(map(encode_basestring_ascii, values))
         return ["null" if v is None else encode_basestring_ascii(v) for v in values]
-    if pa.types.is_boolean(t):
-        values = col.to_numpy(zero_copy_only=False).tolist()
-        return list(map(_BOOL_TEXT.__getitem__, values))
-    if pa.types.is_integer(t) and col.null_count == 0:
-        return list(map(int.__repr__, col.to_numpy().tolist()))
     return list(map(json.dumps, col.to_pylist()))
+
+
+def _is_plain(arr) -> bool:
+    """Whether every value of a string array is its own JSON text
+    between quotes, as ``json.dumps`` (``ensure_ascii``) writes it: its
+    slice of the UTF-8 data buffer holds only printable ASCII, with no
+    ``"`` and no ``\\``."""
+    import numpy as np
+    import pyarrow as pa
+
+    offsets, data = arr.buffers()[1:3]
+    bounds = np.frombuffer(offsets, np.int64 if pa.types.is_large_string(arr.type) else np.int32)
+    start, end = bounds[arr.offset], bounds[arr.offset + len(arr)]
+    if start == end:  # all null or all empty: maybe no data buffer at all
+        return True
+    data = np.frombuffer(data, np.uint8, end - start, start)
+    return bool(
+        ((data - np.uint8(0x20)) < 0x5F).all()  # 0x20-0x7E; the rest wraps above
+        and not (data == ord('"')).any()
+        and not (data == ord("\\")).any()
+    )
+
+
+def _file_rows(table):
+    """The rows of a data file (at least one row and one column) as JSON
+    objects, each followed by ``", "``, as one bytes-like fragment. Built
+    with Arrow kernels: one Arrow string array of JSON texts per column,
+    then one ``binary_join_element_wise`` over all columns, with the
+    escaped key names as scalar literals between them. Strings that need
+    no escaping join raw, their quotes folded into the literals; only the
+    columns Arrow cannot write (strings that need escaping, floats,
+    nested values, dates) take the per-value :func:`_json_texts`."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    parts: list = []
+    literal = "{"
+    for i, (name, col) in enumerate(zip(table.column_names, table.combine_chunks().columns)):
+        literal += (", " if i else "") + encode_basestring_ascii(name) + ": "
+        arr = col.chunk(0)
+        t = arr.type
+        if (pa.types.is_string(t) or pa.types.is_large_string(t)) and _is_plain(arr):
+            arr = arr.cast(pa.string())
+            if not arr.null_count:
+                parts += [literal + '"', arr]
+                literal = '"'
+                continue
+            texts = pc.binary_join_element_wise('"', arr, '"', "")
+        elif pa.types.is_boolean(t):
+            texts = pc.if_else(arr, "true", "false")
+        elif pa.types.is_integer(t):
+            texts = arr.cast(pa.string())
+        else:
+            texts = pa.array(_json_texts(arr), pa.string())
+        parts += [literal, texts.fill_null("null") if texts.null_count else texts]
+        literal = ""
+    joined = pc.binary_join_element_wise(*parts, literal + "}, ", "")
+    offsets, data = joined.buffers()[1:3]
+    bounds = np.frombuffer(offsets, np.int32)
+    return memoryview(data)[bounds[joined.offset] : bounds[joined.offset + len(joined)]]
+
+
+def _live_rows(table, key_cols: list[str], dead: set):
+    """The mask of ``table``'s rows whose key is not in ``dead``. A
+    single string, binary or integer key is tested with ``is_in`` over
+    the keys of its own type; float keys (NaN equality differs) and
+    composite keys test each row's key tuple against the set."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if len(key_cols) == 1:
+        col = table.column(key_cols[0])
+        t = col.type
+        kind = (
+            int if pa.types.is_integer(t)
+            else str if pa.types.is_string(t) or pa.types.is_large_string(t)
+            else bytes if pa.types.is_binary(t) or pa.types.is_large_binary(t)
+            else None
+        )
+        values = [k[0] for k in dead]
+        # exact types only: Python's 1 == 1.0 == True must not reach is_in
+        if kind is not None and all(type(v) is kind for v in values):
+            if kind is int:  # a key outside the column's range matches nothing
+                signed = pa.types.is_signed_integer(t)
+                low = -(1 << (t.bit_width - 1)) if signed else 0
+                high = (1 << (t.bit_width - signed)) - 1
+                values = [v for v in values if low <= v <= high]
+            value_set = pa.array(values, t)
+            return pc.invert(pc.is_in(col, value_set=value_set, skip_nulls=True))
+    keys = zip(*[table.column(c).to_pylist() for c in key_cols])
+    return pa.array([k not in dead for k in keys], pa.bool_())
 
 
 def _encode_version(table_dir: str, version: int) -> bytes:
     """The ``GET /pets`` body of one committed version, written straight
     from Arrow columns. Byte-identical to ``_pets_body`` over
-    :func:`load_snapshot_rows`, the reference decoder. Each data file
-    gets a ``%`` row template built from its OWN column names, so a file
-    written before a schema-evolving append keeps its shorter rows, as
-    ``to_pylist`` gives them; tombstoned rows are dropped with an Arrow
-    filter before any value is encoded."""
-    import pyarrow as pa
+    :func:`load_snapshot_rows`, the reference decoder. Each data file's
+    rows are built from its OWN column names (:func:`_file_rows`), so a
+    file written before a schema-evolving append keeps its shorter rows,
+    as ``to_pylist`` gives them; tombstoned rows are dropped with an
+    Arrow filter before any value is encoded."""
     import pyarrow.parquet as pq
 
     from petfinder_database_distributor_spark.sources.snapshot import (
@@ -177,22 +263,20 @@ def _encode_version(table_dir: str, version: int) -> bytes:
     tombs = manifest.get("tombstones", [])
     key_cols = manifest["key_cols"] if tombs else []
     dead = set(load_tombstone_keys(table_dir, tombs, key_cols))
-    rows: list[str] = []
+    count, fragments = 0, []
     for rel in _manifest_files(manifest):
         # ParquetFile reads the one file without read_table's dataset
         # discovery, about an eighth of a miss
         with pq.ParquetFile(os.path.join(table_dir, rel)) as data_file:
             table = data_file.read(use_threads=False)
         if dead:
-            keys = zip(*[table.column(c).to_pylist() for c in key_cols])
-            table = table.filter(pa.array([k not in dead for k in keys], pa.bool_()))
-        template = "{%s}" % ", ".join(
-            encode_basestring_ascii(name).replace("%", "%%") + ": %s"
-            for name in table.column_names
-        )
-        texts = [_json_texts(col) for col in table.columns]
-        rows.extend(map(template.__mod__, zip(*texts)))
-    return ('{"count": %d, "pets": [%s]}' % (len(rows), ", ".join(rows))).encode()
+            table = table.filter(_live_rows(table, key_cols, dead))
+        if table.num_rows:
+            count += table.num_rows
+            fragments.append(_file_rows(table))
+    if fragments:  # no ", " after the last row
+        fragments[-1] = fragments[-1][:-2]
+    return b"".join([b'{"count": %d, "pets": [' % count, *fragments, b"]}"])
 
 
 def load_snapshot_rows(table_dir: str, version: int | None = None) -> list[dict]:

@@ -510,13 +510,19 @@ def load_tombstone_keys(
     """Driver-side: the key tuples of the tombstone files ``rels``, in
     file order (bounded: O(delete keys) by the format's contract). The
     one pyarrow decode of tombstones shared by the Spark-free readers:
-    serving, the snapshot data source and its stream reader."""
+    serving, the snapshot data source and its stream reader.
+
+    A key with a null component is dropped: it deletes nothing, as in
+    :func:`snapshot_read`'s anti-join, where a null key equals no row
+    (SQL equality)."""
     import pyarrow.parquet as pq
 
     keys: list[tuple] = []
     for rel in rels:
         t = pq.read_table(os.path.join(table_dir, rel), columns=key_cols)
-        keys.extend(zip(*[t.column(c).to_pylist() for c in key_cols]))
+        keys.extend(
+            k for k in zip(*[t.column(c).to_pylist() for c in key_cols]) if None not in k
+        )
     return keys
 
 

@@ -4,7 +4,9 @@ must be byte-identical to the reference encoding,
 ``load_snapshot_rows``. A differential property over random Arrow tables
 (committed by hand, Spark-free), the commit paths that shape a version
 (empty write, schema-evolving append, delete, append after delete), and
-a structural pin that a miss never decodes a data file row by row."""
+a structural pin that a miss reads no data file through ``read_table``,
+decodes none row by row, and encodes per value only the columns Arrow
+kernels cannot write."""
 
 from __future__ import annotations
 
@@ -19,7 +21,10 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from petfinder_database_distributor_spark.serving import http_server
 from petfinder_database_distributor_spark.serving.http_server import (
+    _file_rows,
+    _json_texts as json_texts,
     load_snapshot_rows,
     snapshot_body,
 )
@@ -28,19 +33,30 @@ from petfinder_database_distributor_spark.sources.snapshot import _commit_metada
 KEY = "k"  # the key column every generated file carries
 
 # Names and strings mix JSON-special, template-special (%), control,
-# non-ASCII and astral characters.
+# non-ASCII and astral characters. Plain strings are printable ASCII
+# without " or \, which a miss joins without escaping.
 SPECIAL = '%"\\\x00\x01\x1f\x7f\t\n é✓𝔘'
+PLAIN = "".join(chr(c) for c in range(0x20, 0x7F) if chr(c) not in '"\\')
 names = st.text(alphabet=st.sampled_from(SPECIAL + "abcxyz"), min_size=1, max_size=6)
+plain_texts = st.text(alphabet=st.sampled_from(PLAIN), max_size=8)
 texts = st.one_of(
-    st.text(max_size=12), st.text(alphabet=st.sampled_from(SPECIAL), max_size=8)
+    st.text(max_size=12),
+    st.text(alphabet=st.sampled_from(SPECIAL), max_size=8),
+    st.text(alphabet=st.sampled_from(PLAIN + '"\\\x1f\x7f'), max_size=8),
 )
 INT32 = st.integers(-(2**31), 2**31 - 1)
 INT64 = st.integers(-(2**63), 2**63 - 1)
+UINT64 = st.one_of(st.just(2**64 - 1), st.integers(0, 2**64 - 1))
 KINDS = {
     "string": (pa.string(), texts),
+    "plain": (pa.string(), plain_texts),
+    "all-null": (pa.string(), st.none()),
+    "all-empty": (pa.string(), st.just("")),
+    "large_string": (pa.large_string(), st.one_of(plain_texts, texts)),
     "bool": (pa.bool_(), st.booleans()),
     "int32": (pa.int32(), INT32),
     "int64": (pa.int64(), INT64),
+    "uint64": (pa.uint64(), UINT64),
     "double": (pa.float64(), st.floats(allow_nan=True, allow_infinity=True)),
 }
 
@@ -62,14 +78,20 @@ def arrow_file(draw):
     return pa.table({c: cols[c] for c in order})
 
 
-def _commit(table_dir: str, files: list[pa.Table], dead: list[int] | None) -> None:
-    """Commit ``files`` (and ``dead`` key tombstones) as version 0."""
+def _commit(
+    table_dir: str,
+    files: list[pa.Table],
+    dead: list[int] | None,
+    row_group_size: int | None = None,
+) -> None:
+    """Commit ``files`` (and ``dead`` key tombstones) as version 0; a
+    small ``row_group_size`` writes each file in several row groups."""
     for sub in ("_manifests", "data/v0/t", "tombstones/v0/t"):
         os.makedirs(os.path.join(table_dir, sub))
     rels = []
     for i, t in enumerate(files):
         rels.append(f"data/v0/t/part-{i:05d}.parquet")
-        pq.write_table(t, os.path.join(table_dir, rels[-1]))
+        pq.write_table(t, os.path.join(table_dir, rels[-1]), row_group_size=row_group_size)
     manifest = {"version": 0, "files": rels, "columns": [KEY], "operation": "write"}
     if dead is not None:
         tomb = "tombstones/v0/t/part-00000.parquet"
@@ -88,11 +110,27 @@ def _reference(table_dir: str, version: int) -> bytes:
 @given(
     st.lists(arrow_file(), min_size=1, max_size=3),
     st.one_of(st.none(), st.lists(st.integers(0, 9), max_size=4)),
+    st.sampled_from([None, 1, 5]),
 )
-def test_arrow_encoding_matches_reference_on_random_tables(files, dead):
+def test_arrow_encoding_matches_reference_on_random_tables(files, dead, row_group_size):
     with tempfile.TemporaryDirectory() as table_dir:
-        _commit(table_dir, files, dead)
+        _commit(table_dir, files, dead, row_group_size)
         assert snapshot_body(table_dir, 0) == _reference(table_dir, 0)
+
+
+@settings(max_examples=100, deadline=None)
+@given(arrow_file(), st.data())
+def test_file_rows_honor_array_offsets(table, data):
+    """A data file's rows encode like ``json.dumps`` when its arrays
+    start past their buffers' beginnings, as a slice or a tombstone
+    filter may leave them."""
+    if table.num_rows == 0:
+        return
+    start = data.draw(st.integers(0, table.num_rows - 1))
+    stop = data.draw(st.integers(start + 1, table.num_rows))
+    part = table.slice(start, stop - start)
+    expected = b"".join(json.dumps(r).encode() + b", " for r in part.to_pylist())
+    assert bytes(_file_rows(part)) == expected
 
 
 def test_arrow_encoding_covers_type_extremes():
@@ -103,6 +141,8 @@ def test_arrow_encoding_covers_type_extremes():
         "b": pa.array([True, False, True, False, True]),
         "i32": pa.array([-(2**31), 2**31 - 1, 0, -1, 1], pa.int32()),
         "i64": pa.array([-(2**63), 2**63 - 1, 0, -1, 1], pa.int64()),
+        "u64": pa.array([0, 2**64 - 1, 2**63, 1, 2], pa.uint64()),
+        "ls": pa.array(["plain", "", "a b", "é", "~"], pa.large_string()),
         "x": pa.array([float("nan"), float("inf"), float("-inf"), -0.0, 1e308]),
     }
     with_nulls = {
@@ -194,17 +234,50 @@ class _NoRowDecode:
 
 
 def test_miss_never_decodes_a_data_file_row_by_row(monkeypatch):
-    """Pins the fast path without timing it: on a miss, no data file
-    read goes through ``Table.to_pylist``, with or without tombstones.
-    The reference decoder trips the same trap, so the trap is live."""
-    t = pa.table({KEY: pa.array([1, 2, 3]), "name": pa.array(["a", None, "c"])})
-    with tempfile.TemporaryDirectory() as table_dir:
-        _commit(table_dir, [t, t], [2])
-        expected = _reference(table_dir, 0)
-        read_table = pq.read_table
+    """Pins the fast path without timing it. On a miss, with or without
+    tombstones, each data file is read through ``ParquetFile.read``,
+    never ``read_table`` with its dataset discovery, and never row by row
+    (``Table.to_pylist``; the reference decoder trips the same trap, so
+    the trap is live). Plain strings, booleans and integers never reach
+    the per-value ``_json_texts``; a column of strings that need escaping
+    reaches it alone."""
+    plain = pa.table(
+        {
+            KEY: pa.array([1, 2, 3]),
+            "name": pa.array(["a", None, "c"]),
+            "kind": pa.array(["dog", "cat", ""]),
+            "ok": pa.array([True, None, False]),
+            "n": pa.array([7, None, -1], pa.int32()),
+        }
+    )
+    escaped = plain.append_column("note", pa.array(["é", "b", None]))
+    read_table, read = pq.read_table, pq.ParquetFile.read
+    table_reads = []
+
+    def traced_read_table(path, *args, **kwargs):
+        table_reads.append(str(path))
+        return _NoRowDecode(read_table(path, *args, **kwargs))
+
+    def no_per_value(col):
+        raise AssertionError(f"per-value encoding of {col.type}")
+
+    with tempfile.TemporaryDirectory() as plain_dir, tempfile.TemporaryDirectory() as escaped_dir:
+        _commit(plain_dir, [plain, plain], [2])
+        _commit(escaped_dir, [escaped], None)
+        expected = {d: _reference(d, 0) for d in (plain_dir, escaped_dir)}
+        monkeypatch.setattr(pq, "read_table", traced_read_table)
         monkeypatch.setattr(
-            pq, "read_table", lambda *a, **k: _NoRowDecode(read_table(*a, **k))
+            pq.ParquetFile, "read", lambda self, *a, **k: _NoRowDecode(read(self, *a, **k))
         )
-        assert snapshot_body(table_dir, 0) == expected
+        monkeypatch.setattr(http_server, "_json_texts", no_per_value)
+        assert snapshot_body(plain_dir, 0) == expected[plain_dir]
+
+        per_value = []
+        monkeypatch.setattr(
+            http_server, "_json_texts", lambda col: per_value.append(col) or json_texts(col)
+        )
+        assert snapshot_body(escaped_dir, 0) == expected[escaped_dir]
+        assert [col.to_pylist() for col in per_value] == [["é", "b", None]]
+        assert not [p for p in table_reads if "tombstones" not in p], "read_table on a data file"
         with pytest.raises(AssertionError, match="row by row"):
-            load_snapshot_rows(table_dir, 0)
+            load_snapshot_rows(plain_dir, 0)

@@ -141,6 +141,52 @@ def test_format_read_applies_tombstones(spark, table_dir):
     }
 
 
+@pytest.mark.parametrize("key_type", ["string", "long"])
+def test_null_tombstone_key_deletes_nothing_in_any_reader(spark, tmp_path, key_type):
+    """A tombstone key of null deletes no row (SQL equality, as the Spark
+    reader's anti-join has it): the Spark reader, the snapshot data
+    source, the Spark-free decoder and the served ``/pets`` body agree,
+    and a compaction, which reads through the Spark reader, changes no
+    reader's rows."""
+    import json
+
+    from petfinder_database_distributor_spark.serving.http_server import (
+        load_snapshot_rows,
+        snapshot_body,
+    )
+    from petfinder_database_distributor_spark.sources.snapshot import snapshot_compact
+
+    table_dir = str(tmp_path / "table")  # its own path: the body cache is keyed by path
+    a, b = ("a", "b") if key_type == "string" else (1, 2)
+    schema = f"k {key_type}, v string"
+    snapshot_write(
+        spark, table_dir, spark.createDataFrame([(None, "x"), (a, "y"), (b, "z")], schema)
+    )
+    snapshot_delete(
+        spark, table_dir, spark.createDataFrame([(None,), (a,)], f"k {key_type}"), ["k"]
+    )
+
+    def readers(v):
+        return {
+            "snapshot_read": _as_dict(snapshot_read(spark, table_dir, v)),
+            "format": _as_dict(
+                spark.read.format("snapshot").option("version", v).load(table_dir)
+            ),
+            "load_snapshot_rows": {
+                r["k"]: r["v"] for r in load_snapshot_rows(table_dir, v)
+            },
+            "/pets": {
+                r["k"]: r["v"] for r in json.loads(snapshot_body(table_dir, v))["pets"]
+            },
+        }
+
+    deleted = latest_version(table_dir)
+    compacted = snapshot_compact(spark, table_dir)
+    for v in (deleted, compacted):
+        for reader, rows in readers(v).items():
+            assert rows == {None: "x", b: "z"}, (v, reader)
+
+
 def _zone_mapped_table(spark, table_dir, n_slices=4):
     """One file per disjoint k-range, zone maps recorded at commit."""
     for s in range(n_slices):
