@@ -178,7 +178,9 @@ def _file_rows(table):
     with Arrow kernels: one Arrow string array of JSON texts per column,
     then one ``binary_join_element_wise`` over all columns, with the
     escaped key names as scalar literals between them. Strings that need
-    no escaping join raw, their quotes folded into the literals; only the
+    no escaping join raw, their quotes folded into the literals: quoting
+    each null-free column with its own ``binary_join_element_wise`` made
+    a 1,284-row benchmark miss 8.0-8.8 ms against 6.0-6.4 ms. Only the
     columns Arrow cannot write (strings that need escaping, floats,
     nested values, dates) take the per-value :func:`_json_texts`."""
     import numpy as np
@@ -216,7 +218,10 @@ def _live_rows(table, key_cols: list[str], dead: set):
     """The mask of ``table``'s rows whose key is not in ``dead``. A
     single string, binary or integer key is tested with ``is_in`` over
     the keys of its own type; float keys (NaN equality differs) and
-    composite keys test each row's key tuple against the set."""
+    composite keys test each row's key tuple against the set. With 50 of
+    a 1,284-row benchmark version's string keys deleted, a miss cost
+    11.1-11.2 ms with the tuple set for every key and 8.4-8.9 ms with
+    ``is_in``."""
     import pyarrow as pa
     import pyarrow.compute as pc
 

@@ -25,6 +25,7 @@ from petfinder_database_distributor_spark.serving import http_server
 from petfinder_database_distributor_spark.serving.http_server import (
     _file_rows,
     _json_texts as json_texts,
+    _live_rows,
     load_snapshot_rows,
     snapshot_body,
 )
@@ -61,13 +62,32 @@ KINDS = {
 }
 
 
+# Tombstone key types against the data files' int32, int64 or string key
+# column: in-range keys, int64 keys outside int32's range, and keys that
+# only Python's == matches across types (1 == 1.0 == True), so every
+# tombstone mask path is drawn. A null key deletes nothing.
+TOMBSTONES = {
+    "int64": (pa.int64(), st.one_of(st.integers(0, 9), st.sampled_from([2**31, -(2**63)]))),
+    "string": (pa.string(), st.integers(0, 9).map(str)),
+    "double": (pa.float64(), st.sampled_from([1.0, 2.5, float("nan")])),
+    "bool": (pa.bool_(), st.booleans()),
+}
+
+
+@st.composite
+def tombstones(draw):
+    typ, values = TOMBSTONES[draw(st.sampled_from(sorted(TOMBSTONES)))]
+    return pa.array(draw(st.lists(st.one_of(st.none(), values), max_size=4)), typ)
+
+
 @st.composite
 def arrow_file(draw):
-    """One data file: the int64 key column plus 0-5 random columns, each
-    either null-free or with nulls."""
+    """One data file: the key column (int32, int64 or string) plus 0-5
+    random columns, each either null-free or with nulls."""
     n = draw(st.integers(0, 12))
     keys = draw(st.lists(st.integers(0, 9), min_size=n, max_size=n))
-    cols = {KEY: pa.array(keys, pa.int64())}
+    key_type = draw(st.sampled_from([pa.int32(), pa.int64(), pa.string()]))
+    cols = {KEY: pa.array(map(str, keys) if key_type == pa.string() else keys, key_type)}
     extra = draw(st.lists(names.filter(lambda s: s != KEY), max_size=5, unique=True))
     for name in extra:
         typ, values = KINDS[draw(st.sampled_from(sorted(KINDS)))]
@@ -81,11 +101,12 @@ def arrow_file(draw):
 def _commit(
     table_dir: str,
     files: list[pa.Table],
-    dead: list[int] | None,
+    dead: pa.Array | list[int] | None,
     row_group_size: int | None = None,
 ) -> None:
-    """Commit ``files`` (and ``dead`` key tombstones) as version 0; a
-    small ``row_group_size`` writes each file in several row groups."""
+    """Commit ``files`` (and ``dead`` key tombstones, int64 unless given
+    as an Arrow array) as version 0; a small ``row_group_size`` writes
+    each file in several row groups."""
     for sub in ("_manifests", "data/v0/t", "tombstones/v0/t"):
         os.makedirs(os.path.join(table_dir, sub))
     rels = []
@@ -95,7 +116,7 @@ def _commit(
     manifest = {"version": 0, "files": rels, "columns": [KEY], "operation": "write"}
     if dead is not None:
         tomb = "tombstones/v0/t/part-00000.parquet"
-        keys = pa.table({KEY: pa.array(dead, pa.int64())})
+        keys = pa.table({KEY: dead if isinstance(dead, pa.Array) else pa.array(dead, pa.int64())})
         pq.write_table(keys, os.path.join(table_dir, tomb))
         manifest.update(tombstones=[tomb], key_cols=[KEY])
     _commit_metadata(table_dir, 0, None, manifest)
@@ -109,7 +130,7 @@ def _reference(table_dir: str, version: int) -> bytes:
 @settings(max_examples=150, deadline=None, suppress_health_check=[HealthCheck.too_slow])
 @given(
     st.lists(arrow_file(), min_size=1, max_size=3),
-    st.one_of(st.none(), st.lists(st.integers(0, 9), max_size=4)),
+    st.one_of(st.none(), tombstones()),
     st.sampled_from([None, 1, 5]),
 )
 def test_arrow_encoding_matches_reference_on_random_tables(files, dead, row_group_size):
@@ -131,6 +152,59 @@ def test_file_rows_honor_array_offsets(table, data):
     part = table.slice(start, stop - start)
     expected = b"".join(json.dumps(r).encode() + b", " for r in part.to_pylist())
     assert bytes(_file_rows(part)) == expected
+
+
+# Key column types for the tombstone mask, and the values tombstone keys
+# draw besides the column's own: integers outside every column's range,
+# and values of other Python types that == may or may not match.
+KEY_KINDS = {
+    "int8": (pa.int8(), st.integers(-(2**7), 2**7 - 1)),
+    "int32": (pa.int32(), INT32),
+    "uint64": (pa.uint64(), UINT64),
+    "string": (pa.string(), st.sampled_from(["", "a", "1"])),
+    "large_string": (pa.large_string(), st.sampled_from(["", "a", "1"])),
+    "binary": (pa.binary(), st.sampled_from([b"", b"a", b"1"])),
+    "double": (pa.float64(), st.sampled_from([0.0, 1.0, 2.5, float("nan")])),
+    "bool": (pa.bool_(), st.booleans()),
+}
+FOREIGN_KEYS = st.one_of(
+    st.integers(-(2**65), 2**65),
+    st.sampled_from([-1, 0, 1, 128, -129, 2**31, 2**63, 2**64 - 1, 2**64]),
+    st.booleans(),
+    st.sampled_from([0.0, 1.0, 2.5, float("nan")]),
+    st.sampled_from(["", "a", "1", b"", b"a", b"1"]),
+)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.data())
+def test_live_rows_match_the_tuple_set_mask(data):
+    """The tombstone mask of a miss keeps exactly the rows whose key
+    tuple is not in the dead set, as ``load_snapshot_rows`` tests them:
+    one or two key columns of any key type, chunked, against dead keys
+    that mix the column's own values with integers outside its range
+    and values of other Python types."""
+    n = data.draw(st.integers(0, 10))
+    cols = {}
+    for name in data.draw(st.sampled_from([["a"], ["a", "b"]])):
+        typ, values = KEY_KINDS[data.draw(st.sampled_from(sorted(KEY_KINDS)))]
+        cols[name] = pa.array(
+            data.draw(st.lists(st.one_of(st.none(), values), min_size=n, max_size=n)), typ
+        )
+    table = pa.table(cols)
+    cut = data.draw(st.integers(0, n))
+    table = pa.concat_tables([table.slice(0, cut), table.slice(cut)])
+    own = {c: [v for v in cols[c].to_pylist() if v is not None] for c in cols}
+    component = {
+        c: st.one_of(st.sampled_from(own[c]), FOREIGN_KEYS) if own[c] else FOREIGN_KEYS
+        for c in cols
+    }
+    dead = set(
+        data.draw(st.lists(st.tuples(*component.values()), min_size=1, max_size=5))
+    )
+    keys = zip(*[table.column(c).to_pylist() for c in cols])
+    expected = [k not in dead for k in keys]
+    assert _live_rows(table, list(cols), dead).to_pylist() == expected
 
 
 def test_arrow_encoding_covers_type_extremes():

@@ -147,7 +147,8 @@ def test_null_tombstone_key_deletes_nothing_in_any_reader(spark, tmp_path, key_t
     reader's anti-join has it): the Spark reader, the snapshot data
     source, the Spark-free decoder and the served ``/pets`` body agree,
     and a compaction, which reads through the Spark reader, changes no
-    reader's rows."""
+    reader's rows. The stream reader, fed every version from the write
+    through the delete to the compaction, keeps the null-key row too."""
     import json
 
     from petfinder_database_distributor_spark.serving.http_server import (
@@ -185,6 +186,18 @@ def test_null_tombstone_key_deletes_nothing_in_any_reader(spark, tmp_path, key_t
     for v in (deleted, compacted):
         for reader, rows in readers(v).items():
             assert rows == {None: "x", b: "z"}, (v, reader)
+
+    out = str(tmp_path / "stream_out")
+    q = (
+        spark.readStream.format("snapshot")
+        .load(table_dir)
+        .writeStream.foreachBatch(lambda df, _id: df.write.mode("append").parquet(out))
+        .option("checkpointLocation", str(tmp_path / "stream_ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    assert _as_dict(spark.read.parquet(out)) == {None: "x", b: "z"}
 
 
 def _zone_mapped_table(spark, table_dir, n_slices=4):
