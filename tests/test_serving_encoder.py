@@ -2,11 +2,12 @@
 must be byte-identical to the reference encoding,
 ``json.dumps({"count": len(rows), "pets": rows}).encode()`` over
 ``load_snapshot_rows``. A differential property over random Arrow tables
-(committed by hand, Spark-free), the commit paths that shape a version
-(empty write, schema-evolving append, delete, append after delete), and
-a structural pin that a miss reads no data file through ``read_table``,
-decodes none row by row, and encodes per value only the columns Arrow
-kernels cannot write."""
+(committed by hand, Spark-free), a property that the tombstone mask
+keeps the rows the reference's key-tuple test keeps, the commit paths
+that shape a version (empty write, schema-evolving append, delete,
+append after delete), and a structural pin that a miss reads no data
+file through ``read_table``, decodes none row by row, and encodes per
+value only the columns Arrow kernels cannot write."""
 
 from __future__ import annotations
 
