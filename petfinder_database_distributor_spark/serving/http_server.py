@@ -45,14 +45,17 @@ busy wait in the kernel's accept queue (``request_queue_size``).
 Every ``/pets`` and ``/pets.csv`` answer is bytes encoded once, not once
 per request: ``reload()`` encodes the artifact's two bodies, and a
 snapshot-backed ``/pets`` serves the JSON body of its resolved version
-from a small LRU cache (see ``_BODY_CACHE``). Re-encoding the rows per
-request was most of the serving cost: on the benchmark's
-``serve_under_ingest`` workload (a 1,000-1,400-row table, 4-vCPU VM),
-encoding once per version cut the server's CPU time per request from a
-median of 12.8 ms to 4.4 ms over 10 runs each.
+from an LRU cache bounded by the bytes it holds, 64 MiB (see
+``_BODY_CACHE``). Re-encoding the rows per request was most of the
+serving cost: on the benchmark's ``serve_under_ingest`` workload (a
+1,000-1,400-row table, 4-vCPU VM), encoding once per version cut the
+server's CPU time per request from a median of 12.8 ms to 4.4 ms over 10
+runs each. The budget holds every retained version of that table, where
+a bound of 4 entries left most ``?version=`` requests missing: it cut
+the CPU time per request from 0.96 to 0.61 ms (median of 10 pairs).
 
-A cache miss (a new version, or ``?version=`` draws that overflow the
-cache) builds the body with Arrow kernels (:func:`_encode_version`):
+A cache miss (a new version, or a version the budget could not keep)
+builds the body with Arrow kernels (:func:`_encode_version`):
 per data file, each column becomes one Arrow array of JSON texts and
 one ``binary_join_element_wise`` writes every row, so strings that need
 no escaping, booleans and integers cost no Python call per cell or per
@@ -84,22 +87,34 @@ from urllib.parse import parse_qs, urlparse
 AUTH_ERROR = {"error": "Invalid or missing endpoint key"}
 
 
-# (table_dir, version) -> the encoded ``/pets`` body of that version. A
-# committed version's file list and file contents are immutable, so
-# caching by RESOLVED version is exact: a hit costs one pointer read and
-# a write of the stored bytes, and a merge that advances the pointer is
-# picked up on the next request as a miss. A miss reads and encodes the
+# (table_dir, version) -> (the bytes of the version's manifest, the
+# encoded ``/pets`` body of that version). A committed version's file list
+# and file contents are immutable, so a body is exact for as long as its
+# manifest is the one on disk: a hit reads the pointer and the manifest
+# file and writes the stored bytes, and a merge that advances the pointer
+# is picked up on the next request as a miss. Comparing the manifest's
+# bytes makes a table deleted and re-created at the same path a miss (its
+# writers stage files under new unique directories, so its manifests
+# differ), and a vacuumed version a 404; the read and the compare took a
+# hit from 21 to 35 us in-process. A miss reads and encodes the
 # version's files, about 9x the CPU time of a hit at the benchmark's
-# 1,000-1,353 rows (7.0-8.4 ms against 0.7-1.0 ms); ``?version=`` draws
-# over more retained versions than the cache holds make those misses. The
-# body takes less than half the memory of the decoded row dicts (0.84 MB
-# against 1.83 MB for 1,368 benchmark rows). Bounded at 4 versions so long-lived serving
-# across many commits doesn't hold every historical version; evicting
-# the least recently used keeps the hot latest version when a run of
-# ``?version=`` misses would have pushed it out first.
-_BODY_CACHE: OrderedDict[tuple[str, int], bytes] = OrderedDict()
-_BODY_CACHE_MAX = 4
+# 1,000-1,353 rows (7.0-8.4 ms against 0.7-1.0 ms).
+#
+# Bounded by the bytes of the bodies it holds, least recently used out
+# first, so the hot latest version stays when a run of ``?version=``
+# misses would have pushed it out first. A body of 1,000-1,353 benchmark
+# rows is 0.61-0.83 MB, so the budget keeps all 5-11 retained versions
+# of ``serve_under_ingest`` (7.5 MiB for 11). A 25,078-row version of
+# ``ingest_verify``'s table is 15.1 MB, so a 20,000-row one is about
+# 12 MB and the budget keeps five. In a traced benchmark run, 544 of 672
+# ``?version=`` requests took over 3 ms, a miss, under the old bound of
+# 4 entries (8.1 % of all requests); under the budget 15 of 1,096 did
+# (0.14 %). The entry just inserted always stays, even alone over the
+# budget: it is in memory anyway while it is sent.
+_BODY_CACHE: OrderedDict[tuple[str, int], tuple[bytes, bytes]] = OrderedDict()
+_BODY_CACHE_BYTES = 64 << 20
 _BODY_CACHE_LOCK = threading.Lock()
+_body_cache_total = 0  # bytes of the cached bodies, under _BODY_CACHE_LOCK
 
 
 def _pets_body(rows: list[dict]) -> bytes:
@@ -109,26 +124,37 @@ def _pets_body(rows: list[dict]) -> bytes:
 
 def snapshot_body(table_dir: str, version: int | None = None) -> bytes:
     """The ``GET /pets`` body of one committed version (default: the
-    latest pointer), from the body cache; only a miss decodes the
-    version. Raises FileNotFoundError when the version has no manifest:
-    never committed, or vacuumed before it was cached."""
-    from petfinder_database_distributor_spark.sources.snapshot import latest_version
+    latest pointer), from the body cache while the version's manifest is
+    the one cached with it; otherwise the version is decoded. Raises
+    FileNotFoundError when the version has no manifest: never committed,
+    or vacuumed, even when its body is still cached."""
+    from petfinder_database_distributor_spark.sources.snapshot import (
+        _manifest_path,
+        latest_version,
+    )
 
+    global _body_cache_total
     v = latest_version(table_dir) if version is None else version
     if v is None:
         return _pets_body([])
+    with open(_manifest_path(table_dir, v), "rb") as fh:
+        manifest = fh.read()
     key = (table_dir, v)
     with _BODY_CACHE_LOCK:
-        body = _BODY_CACHE.get(key)
-        if body is not None:
+        cached = _BODY_CACHE.get(key)
+        if cached is not None and cached[0] == manifest:
             _BODY_CACHE.move_to_end(key)
-            return body
-    body = _encode_version(table_dir, v)
+            return cached[1]
+    body = _encode_version(table_dir, json.loads(manifest))
     with _BODY_CACHE_LOCK:
-        _BODY_CACHE[key] = body
-        _BODY_CACHE.move_to_end(key)
-        while len(_BODY_CACHE) > _BODY_CACHE_MAX:
-            _BODY_CACHE.popitem(last=False)
+        # the key may hold a stale body, or a concurrent miss's copy
+        replaced = _BODY_CACHE.pop(key, None)
+        if replaced is not None:
+            _body_cache_total -= len(replaced[1])
+        _BODY_CACHE[key] = (manifest, body)
+        _body_cache_total += len(body)
+        while _body_cache_total > _BODY_CACHE_BYTES and len(_BODY_CACHE) > 1:
+            _body_cache_total -= len(_BODY_CACHE.popitem(last=False)[1][1])
     return body
 
 
@@ -217,13 +243,15 @@ def _file_rows(table):
 def _live_rows(table, key_cols: list[str], dead: set):
     """The mask of ``table``'s rows whose key is not in ``dead``. A
     single string, binary or integer key is tested with ``is_in`` over
-    the keys of its own type; float keys (NaN equality differs) and
-    composite keys test each row's key tuple against the set. With 50 of
-    a 1,284-row benchmark version's string keys deleted, a miss cost
-    11.1-11.2 ms with the tuple set for every key and 8.4-8.9 ms with
-    ``is_in``."""
+    the keys of its own type; float keys (``is_in`` tells -0.0 from 0.0)
+    and composite keys test each row's key tuple with
+    :func:`live_key_mask`. With 50 of a 1,284-row benchmark version's
+    string keys deleted, a miss cost 11.1-11.2 ms with the tuple set for
+    every key and 8.4-8.9 ms with ``is_in``."""
     import pyarrow as pa
     import pyarrow.compute as pc
+
+    from petfinder_database_distributor_spark.sources.snapshot import live_key_mask
 
     if len(key_cols) == 1:
         col = table.column(key_cols[0])
@@ -245,26 +273,25 @@ def _live_rows(table, key_cols: list[str], dead: set):
             value_set = pa.array(values, t)
             return pc.invert(pc.is_in(col, value_set=value_set, skip_nulls=True))
     keys = zip(*[table.column(c).to_pylist() for c in key_cols])
-    return pa.array([k not in dead for k in keys], pa.bool_())
+    return pa.array(live_key_mask(keys, dead), pa.bool_())
 
 
-def _encode_version(table_dir: str, version: int) -> bytes:
-    """The ``GET /pets`` body of one committed version, written straight
-    from Arrow columns. Byte-identical to ``_pets_body`` over
-    :func:`load_snapshot_rows`, the reference decoder. Each data file's
-    rows are built from its OWN column names (:func:`_file_rows`), so a
-    file written before a schema-evolving append keeps its shorter rows,
-    as ``to_pylist`` gives them; tombstoned rows are dropped with an
-    Arrow filter before any value is encoded."""
+def _encode_version(table_dir: str, manifest: dict) -> bytes:
+    """The ``GET /pets`` body of the committed version ``manifest``
+    names, written straight from Arrow columns. Byte-identical to
+    ``_pets_body`` over :func:`load_snapshot_rows`, the reference decoder.
+    Each data file's rows are built from its OWN column names
+    (:func:`_file_rows`), so a file written before a schema-evolving
+    append keeps its shorter rows, as ``to_pylist`` gives them;
+    tombstoned rows are dropped with an Arrow filter before any value is
+    encoded."""
     import pyarrow.parquet as pq
 
     from petfinder_database_distributor_spark.sources.snapshot import (
         _manifest_files,
         load_tombstone_keys,
-        read_manifest,
     )
 
-    manifest = read_manifest(table_dir, version)
     tombs = manifest.get("tombstones", [])
     key_cols = manifest["key_cols"] if tombs else []
     dead = set(load_tombstone_keys(table_dir, tombs, key_cols))
@@ -299,6 +326,7 @@ def load_snapshot_rows(table_dir: str, version: int | None = None) -> list[dict]
     from petfinder_database_distributor_spark.sources.snapshot import (
         _manifest_files,
         latest_version,
+        live_key_mask,
         load_tombstone_keys,
         read_manifest,
     )
@@ -316,7 +344,8 @@ def load_snapshot_rows(table_dir: str, version: int | None = None) -> list[dict]
         # exactly like the Spark reader's anti-join
         key_cols = manifest["key_cols"]
         dead = set(load_tombstone_keys(table_dir, tombs, key_cols))
-        rows = [r for r in rows if tuple(r[k] for k in key_cols) not in dead]
+        live = live_key_mask((tuple(r[k] for k in key_cols) for r in rows), dead)
+        rows = [r for r, keep in zip(rows, live) if keep]
     return rows
 
 

@@ -526,6 +526,31 @@ def load_tombstone_keys(
     return keys
 
 
+def live_key_mask(keys, dead: set) -> list[bool]:
+    """For each key tuple of ``keys``, whether no tombstone key tuple of
+    ``dead`` equals it, as in :func:`snapshot_read`'s anti-join: the one
+    tuple-set test of the Spark-free readers (serving, the snapshot data
+    source and its stream reader). Spark's join matches NaN to NaN, but
+    distinct Python NaN objects compare unequal and hash apart, so when
+    some dead key holds a NaN, every NaN component on both sides becomes
+    one shared NaN object; without one, no key is touched. -0.0 and 0.0
+    are equal in both. Names no module global, so the data source's
+    executors can run a by-value copy without this package."""
+
+    def is_nan(c) -> bool:
+        return isinstance(c, float) and c != c
+
+    if not any(is_nan(c) for k in dead for c in k):
+        return [k not in dead for k in keys]
+    nan = float("nan")
+
+    def one_nan(key: tuple) -> tuple:
+        return tuple(nan if is_nan(c) else c for c in key)
+
+    dead = set(map(one_nan, dead))
+    return [one_nan(k) not in dead for k in keys]
+
+
 def snapshot_read(
     spark: SparkSession, table_dir: str, version: int | None = None
 ) -> DataFrame:

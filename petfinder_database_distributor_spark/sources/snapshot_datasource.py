@@ -70,6 +70,7 @@ SOURCE_NAME = "snapshot"
 
 
 def make_snapshot_datasource():
+    import types
     from dataclasses import dataclass
     from typing import Iterator
 
@@ -90,7 +91,15 @@ def make_snapshot_datasource():
     )
     from pyspark.sql.types import StructType
 
+    from petfinder_database_distributor_spark.sources.snapshot import live_key_mask
+
     # ---------------------------------------------------------------- shared
+
+    # The tombstone test of snapshot.live_key_mask, copied without its
+    # module: executors need not import this package (see the deployment
+    # note), and cloudpickle ships a function it finds in no module by
+    # value.
+    _live_key_mask = types.FunctionType(live_key_mask.__code__, {})
 
     class FileScan(InputPartition):
         """One committed parquet file plus everything the executor needs
@@ -131,10 +140,8 @@ def make_snapshot_datasource():
         if part.tomb_keys:
             dead = set(map(tuple, part.tomb_keys))
             key_tbl = [table.column(c).to_pylist() for c in part.key_cols]
-            mask = pa.array(
-                [row not in dead for row in zip(*key_tbl)], pa.bool_()
-            )
-            table = table.filter(mask)
+            mask = _live_key_mask(zip(*key_tbl), dead)
+            table = table.filter(pa.array(mask, pa.bool_()))
         yield from table.to_batches()
 
     def _resolve(options):

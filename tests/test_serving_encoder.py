@@ -30,7 +30,10 @@ from petfinder_database_distributor_spark.serving.http_server import (
     load_snapshot_rows,
     snapshot_body,
 )
-from petfinder_database_distributor_spark.sources.snapshot import _commit_metadata
+from petfinder_database_distributor_spark.sources.snapshot import (
+    _commit_metadata,
+    live_key_mask,
+)
 
 KEY = "k"  # the key column every generated file carries
 
@@ -181,7 +184,8 @@ FOREIGN_KEYS = st.one_of(
 @given(st.data())
 def test_live_rows_match_the_tuple_set_mask(data):
     """The tombstone mask of a miss keeps exactly the rows whose key
-    tuple is not in the dead set, as ``load_snapshot_rows`` tests them:
+    tuple is not in the dead set, as ``load_snapshot_rows`` tests them
+    (``live_key_mask``):
     one or two key columns of any key type, chunked, against dead keys
     that mix the column's own values with integers outside its range
     and values of other Python types."""
@@ -204,7 +208,7 @@ def test_live_rows_match_the_tuple_set_mask(data):
         data.draw(st.lists(st.tuples(*component.values()), min_size=1, max_size=5))
     )
     keys = zip(*[table.column(c).to_pylist() for c in cols])
-    expected = [k not in dead for k in keys]
+    expected = live_key_mask(keys, dead)
     assert _live_rows(table, list(cols), dead).to_pylist() == expected
 
 

@@ -2,25 +2,30 @@
 `server.py:407-518`): the stdlib HTTP layer over a real engine export —
 auth matrix (missing / wrong / query-param / header key), JSON envelope
 equality with the artifact rows, raw-CSV byte equality, health routes,
-and the per-version body cache (reuse, LRU eviction, byte identity)."""
+and the per-version body cache (reuse, LRU eviction within its byte
+budget, byte identity)."""
 
 from __future__ import annotations
 
 import json
 import urllib.error
 import urllib.request
+from collections import OrderedDict
 
 import pytest
 
 from petfinder_database_distributor_spark.serving import (
+    http_server,
     load_csv_artifact,
     serve_export,
 )
+from petfinder_database_distributor_spark.serving.http_server import snapshot_body
 from petfinder_database_distributor_spark.sources.export import (
     encode_for_export,
     write_csv_table,
 )
 from tests.conftest import SF_SMALL
+from tests.test_serving_workers import VERSIONS, _commit_versions, _reference
 
 KEY = "test-endpoint-key"
 
@@ -264,30 +269,52 @@ def test_snapshot_body_cached_per_version(spark, tmp_path_factory):
     assert snapshot_body(table, version=0) is snapshot_body(table, version=0)
 
 
-def test_snapshot_body_cache_evicts_least_recently_used(spark, tmp_path_factory):
-    """More distinct ``?version=`` misses than the cache holds, each
-    followed by a latest-version hit, must not evict the hot latest body:
-    eviction is least-recently-used, not first-in-first-out."""
-    from petfinder_database_distributor_spark.serving.http_server import (
-        _BODY_CACHE_MAX,
-        snapshot_body,
-    )
-    from petfinder_database_distributor_spark.sources.snapshot import (
-        snapshot_append,
-        snapshot_write,
-    )
+@pytest.fixture()
+def body_cache(monkeypatch):
+    """An empty body cache for one test; the shared one comes back after."""
+    monkeypatch.setattr(http_server, "_BODY_CACHE", OrderedDict())
+    monkeypatch.setattr(http_server, "_body_cache_total", 0)
 
-    table = str(tmp_path_factory.mktemp("servelru") / "table")
-    snapshot_write(spark, table, spark.createDataFrame([(0, "0")], "k long, v string"))
-    for i in range(1, _BODY_CACHE_MAX + 2):
-        snapshot_append(
-            spark, table, spark.createDataFrame([(i, str(i))], "k long, v string")
-        )
+
+def test_snapshot_body_cache_evicts_least_recently_used(tmp_path, monkeypatch, body_cache):
+    """More distinct ``?version=`` misses than the byte budget holds,
+    each followed by a latest-version hit, must not evict the hot latest
+    body: eviction is least-recently-used, not first-in-first-out."""
+    table = str(tmp_path / "table")
+    _commit_versions(table)
+    sizes = [len(_reference(table, v)) for v in range(VERSIONS)]
+    # room for the latest body and any one other, never for three
+    monkeypatch.setattr(http_server, "_BODY_CACHE_BYTES", sizes[-1] + sizes[-2])
     latest = snapshot_body(table)
-    assert json.loads(latest)["count"] == _BODY_CACHE_MAX + 2
-    for v in range(_BODY_CACHE_MAX + 1):  # every version but the latest
-        assert json.loads(snapshot_body(table, version=v))["count"] == v + 1
+    for v in range(VERSIONS - 1):  # every version but the latest
+        assert snapshot_body(table, v) == _reference(table, v)
         assert snapshot_body(table) is latest, f"latest evicted after v{v}"
+
+
+def test_snapshot_body_cache_keeps_every_retained_version(tmp_path, body_cache):
+    """The default budget holds every version of a small table, more
+    than four: a repeat request of any version gets the cached object."""
+    table = str(tmp_path / "table")
+    _commit_versions(table)
+    first = [snapshot_body(table, v) for v in range(VERSIONS)]
+    for v, body in enumerate(first):
+        assert snapshot_body(table, v) is body, f"v{v} re-encoded"
+    assert len(http_server._BODY_CACHE) == VERSIONS
+
+
+def test_snapshot_body_over_the_budget_is_served_and_kept_alone(
+    tmp_path, monkeypatch, body_cache
+):
+    """A body larger than the whole budget is still served byte-exact,
+    and stays as the only cached entry."""
+    table = str(tmp_path / "table")
+    _commit_versions(table)
+    monkeypatch.setattr(http_server, "_BODY_CACHE_BYTES", 100)
+    snapshot_body(table, 0)
+    body = snapshot_body(table)
+    assert body == _reference(table, None) and len(body) > 100
+    assert list(http_server._BODY_CACHE) == [(table, VERSIONS - 1)]
+    assert http_server._body_cache_total == len(body)
 
 
 def test_snapshot_body_bytes_equal_reference_encoding(spark, tmp_path_factory):

@@ -1,8 +1,8 @@
 """The serving worker model: requests are answered by the server's
 standing workers, never a thread per connection; bodies stay exact under
-concurrent clients; a silent connection holds no worker, a stalled one
-holds it for at most the handler's timeout, and a slow reader for as
-long as it keeps reading;
+concurrent clients and for a table re-created at the same path; a silent
+connection holds no worker, a stalled one holds it for at most the
+handler's timeout, and a slow reader for as long as it keeps reading;
 shutdown is prompt, and server_close alone stops the workers.
 Spark-free: the snapshot table and the CSV artifact are written by
 hand."""
@@ -13,16 +13,20 @@ import csv
 import io
 import json
 import os
+import shutil
 import socket
 import sys
 import threading
 import time
+import urllib.error
 import urllib.request
+import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from petfinder_database_distributor_spark.serving import http_server
 from petfinder_database_distributor_spark.serving.http_server import (
     WORKERS,
     PetServer,
@@ -35,17 +39,19 @@ from petfinder_database_distributor_spark.sources.snapshot import _commit_metada
 from tests.test_serving_encoder import _NoRowDecode
 
 KEY = "workers-key"
-VERSIONS = 6  # more than the body cache holds, so ?version= draws miss
+VERSIONS = 6  # more than the 4 entries the body cache once held
 
 
-def _commit_versions(table_dir: str) -> None:
-    """Versions 0..VERSIONS-1, each the previous one plus one new file."""
+def _commit_versions(table_dir: str, first_key: int = 0) -> None:
+    """Versions 0..VERSIONS-1, each the previous one plus one new file of
+    40 keys, the first from ``first_key``. Each file sits in a directory
+    of its own, as writers stage theirs."""
     os.makedirs(os.path.join(table_dir, "_manifests"))
     files = []
     for v in range(VERSIONS):
-        rel = f"data/v{v}/part-00000.parquet"
+        rel = f"data/v{v}/{uuid.uuid4().hex}/part-00000.parquet"
         os.makedirs(os.path.join(table_dir, os.path.dirname(rel)))
-        ks = range(v * 40, v * 40 + 40)
+        ks = range(first_key + v * 40, first_key + v * 40 + 40)
         t = pa.table(
             {
                 "k": pa.array(ks, pa.int64()),
@@ -129,8 +135,9 @@ def test_requests_start_no_threads(served, monkeypatch):
 
 
 def test_concurrent_clients_get_exact_bodies(served):
-    """More clients than workers, cache misses racing each other and the
-    LRU evictions: every body is byte-exact."""
+    """More clients than workers and cache misses racing each other:
+    every body is byte-exact, and the cache's byte count is the sum of
+    the bodies it holds, within its budget."""
     httpd, table, csv_bytes = served
     port = httpd.server_address[1]
     expected = {f"/pets?version={v}": _reference(table, v) for v in range(VERSIONS)}
@@ -161,6 +168,9 @@ def test_concurrent_clients_get_exact_bodies(served):
     assert not any(c.is_alive() for c in clients)
     assert wrong == []
     assert snapshot_body(table) == expected["/pets"]
+    with http_server._BODY_CACHE_LOCK:
+        held = sum(len(body) for _, body in http_server._BODY_CACHE.values())
+        assert http_server._body_cache_total == held <= http_server._BODY_CACHE_BYTES
 
 
 def test_silent_connections_do_not_delay_health(served):
@@ -315,3 +325,30 @@ def test_miss_reads_each_data_file_without_dataset_discovery(tmp_path, monkeypat
         pq.ParquetFile, "read", lambda self, *a, **k: _NoRowDecode(read(self, *a, **k))
     )
     assert snapshot_body(table, VERSIONS - 1) == expected
+
+
+def test_recreated_table_serves_its_own_rows(tmp_path):
+    """A table deleted and re-created at the same path is served from
+    its own files, not from the cached bodies of the table before it:
+    a cached body is used only while its version's manifest is the one
+    on disk. Between the two, a version whose manifest is gone answers
+    404 though its body is cached."""
+    table = str(tmp_path / "table")
+    artifact = str(tmp_path / "export")
+    _write_artifact(artifact)
+    _commit_versions(table)
+    httpd = serve_export(artifact, KEY, snapshot_dir=table)
+    try:
+        port = httpd.server_address[1]
+        routes = ["/pets", "/pets?version=0"]
+        old = {route: _get(port, route)[1] for route in routes}
+        shutil.rmtree(table)
+        with pytest.raises(urllib.error.HTTPError, match="404"):
+            _get(port, "/pets?version=0")
+        _commit_versions(table, first_key=1000)
+        for route, version in zip(routes, (None, 0)):
+            status, body = _get(port, route)
+            assert status == 200 and body == _reference(table, version) != old[route], route
+    finally:
+        httpd.shutdown()
+        httpd.server_close()

@@ -141,52 +141,31 @@ def test_format_read_applies_tombstones(spark, table_dir):
     }
 
 
-@pytest.mark.parametrize("key_type", ["string", "long"])
-def test_null_tombstone_key_deletes_nothing_in_any_reader(spark, tmp_path, key_type):
-    """A tombstone key of null deletes no row (SQL equality, as the Spark
-    reader's anti-join has it): the Spark reader, the snapshot data
-    source, the Spark-free decoder and the served ``/pets`` body agree,
-    and a compaction, which reads through the Spark reader, changes no
-    reader's rows. The stream reader, fed every version from the write
-    through the delete to the compaction, keeps the null-key row too."""
+def _every_reader(spark, table_dir, v):
+    """Version ``v`` as {key: value} from each reader: the Spark reader,
+    the snapshot data source, the Spark-free decoder and ``/pets``."""
     import json
 
     from petfinder_database_distributor_spark.serving.http_server import (
         load_snapshot_rows,
         snapshot_body,
     )
-    from petfinder_database_distributor_spark.sources.snapshot import snapshot_compact
 
-    table_dir = str(tmp_path / "table")  # its own path: the body cache is keyed by path
-    a, b = ("a", "b") if key_type == "string" else (1, 2)
-    schema = f"k {key_type}, v string"
-    snapshot_write(
-        spark, table_dir, spark.createDataFrame([(None, "x"), (a, "y"), (b, "z")], schema)
-    )
-    snapshot_delete(
-        spark, table_dir, spark.createDataFrame([(None,), (a,)], f"k {key_type}"), ["k"]
-    )
+    return {
+        "snapshot_read": _as_dict(snapshot_read(spark, table_dir, v)),
+        "format": _as_dict(
+            spark.read.format("snapshot").option("version", v).load(table_dir)
+        ),
+        "load_snapshot_rows": {r["k"]: r["v"] for r in load_snapshot_rows(table_dir, v)},
+        "/pets": {
+            r["k"]: r["v"] for r in json.loads(snapshot_body(table_dir, v))["pets"]
+        },
+    }
 
-    def readers(v):
-        return {
-            "snapshot_read": _as_dict(snapshot_read(spark, table_dir, v)),
-            "format": _as_dict(
-                spark.read.format("snapshot").option("version", v).load(table_dir)
-            ),
-            "load_snapshot_rows": {
-                r["k"]: r["v"] for r in load_snapshot_rows(table_dir, v)
-            },
-            "/pets": {
-                r["k"]: r["v"] for r in json.loads(snapshot_body(table_dir, v))["pets"]
-            },
-        }
 
-    deleted = latest_version(table_dir)
-    compacted = snapshot_compact(spark, table_dir)
-    for v in (deleted, compacted):
-        for reader, rows in readers(v).items():
-            assert rows == {None: "x", b: "z"}, (v, reader)
-
+def _streamed(spark, table_dir, tmp_path):
+    """Every row the snapshot stream reader delivers from version 0 to
+    the latest, as {key: value}."""
     out = str(tmp_path / "stream_out")
     q = (
         spark.readStream.format("snapshot")
@@ -197,7 +176,91 @@ def test_null_tombstone_key_deletes_nothing_in_any_reader(spark, tmp_path, key_t
         .start()
     )
     q.awaitTermination(120)
-    assert _as_dict(spark.read.parquet(out)) == {None: "x", b: "z"}
+    return _as_dict(spark.read.parquet(out))
+
+
+def _delete_then_compact(spark, table_dir, key_type, rows, dead_keys, kept):
+    """Write ``rows``, delete ``dead_keys``, compact; every reader of the
+    delete and of the compaction gives ``kept``."""
+    from petfinder_database_distributor_spark.sources.snapshot import snapshot_compact
+
+    snapshot_write(spark, table_dir, spark.createDataFrame(rows, f"k {key_type}, v string"))
+    snapshot_delete(
+        spark, table_dir, spark.createDataFrame([(k,) for k in dead_keys], f"k {key_type}"), ["k"]
+    )
+    deleted = latest_version(table_dir)
+    compacted = snapshot_compact(spark, table_dir)
+    for v in (deleted, compacted):
+        for reader, got in _every_reader(spark, table_dir, v).items():
+            assert got == kept, (v, reader)
+
+
+@pytest.mark.parametrize("key_type", ["string", "long"])
+def test_null_tombstone_key_deletes_nothing_in_any_reader(spark, tmp_path, key_type):
+    """A tombstone key of null deletes no row (SQL equality, as the Spark
+    reader's anti-join has it): the Spark reader, the snapshot data
+    source, the Spark-free decoder and the served ``/pets`` body agree,
+    and a compaction, which reads through the Spark reader, changes no
+    reader's rows. The stream reader, fed every version from the write
+    through the delete to the compaction, keeps the null-key row too."""
+    table_dir = str(tmp_path / "table")
+    a, b = ("a", "b") if key_type == "string" else (1, 2)
+    kept = {None: "x", b: "z"}
+    _delete_then_compact(
+        spark, table_dir, key_type, [(None, "x"), (a, "y"), (b, "z")], [None, a], kept
+    )
+    assert _streamed(spark, table_dir, tmp_path) == kept
+
+
+def test_nan_tombstone_key_deletes_nan_in_any_reader(spark, tmp_path):
+    """Spark's anti-join matches a NaN key to a NaN tombstone and -0.0
+    to 0.0, so every reader, the stream reader included, deletes both
+    rows, though distinct Python NaN objects compare unequal."""
+    table_dir = str(tmp_path / "table")
+    nan = float("nan")
+    kept = {1.0: "z"}
+    _delete_then_compact(
+        spark, table_dir, "double", [(nan, "x"), (-0.0, "y"), (1.0, "z")], [nan, 0.0], kept
+    )
+    assert _streamed(spark, table_dir, tmp_path) == kept
+
+
+def test_file_scan_reads_without_this_package(spark, tmp_path):
+    """The executor side of the data source needs only pyarrow and
+    pyspark (the module's deployment note), tombstone test included: a
+    pickled reader and its partitions read a NaN-tombstoned version in
+    an interpreter that cannot import this package."""
+    import pickle
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    from petfinder_database_distributor_spark.sources.snapshot_datasource import (
+        make_snapshot_datasource,
+    )
+
+    table_dir = str(tmp_path / "table")
+    nan = float("nan")
+    rows = [(nan, "x"), (-0.0, "y"), (1.0, "z")]
+    snapshot_write(spark, table_dir, spark.createDataFrame(rows, "k double, v string"))
+    snapshot_delete(spark, table_dir, spark.createDataFrame([(nan,), (0.0,)], "k double"), ["k"])
+    reader = make_snapshot_datasource()({"path": table_dir}).reader(None)
+    code = (
+        "import pickle, sys\n"
+        "sys.modules['petfinder_database_distributor_spark'] = None\n"
+        "reader, parts = pickle.loads(sys.stdin.buffer.read())\n"
+        "batches = [b for p in parts for b in reader.read(p)]\n"
+        "sys.stdout.buffer.write(pickle.dumps([r['v'] for b in batches for r in b.to_pylist()]))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        input=cloudpickle.dumps((reader, reader.partitions())),
+        capture_output=True,
+        cwd=tmp_path,
+        check=True,
+    )
+    assert pickle.loads(out.stdout) == ["z"]
 
 
 def _zone_mapped_table(spark, table_dir, n_slices=4):
