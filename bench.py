@@ -1,9 +1,12 @@
-"""Benchmark harness (driver-run per round → BENCH_r{N}.json).
+"""Benchmark harness: times every registered query.
 
-Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
-/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON
-line. Results are forced with a count-style action (``noop`` write) so we
-measure distributed compute, not driver-side row transfer.
+Runs the queries at ``$SPARK_GRAFT_SF_DIR`` (default: the sf0.1
+testdata directory) on ``local[$SPARK_GRAFT_CPUS]`` and prints two JSON
+lines: the full per-query record, then a compact summary that fits a
+2,000-character tail capture of stdout. The full record also lands in
+``bench_records/BENCH_SELF_c{cpus}.json``. Results are forced with a
+count-style action (``noop`` write) so we measure distributed compute,
+not driver-side row transfer.
 """
 
 from __future__ import annotations
@@ -18,9 +21,9 @@ if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
 
 # Headline set: flagship pipeline + relational + north-star representatives
-# (one per family: fuzzy dedup, sketch, clustering) so the driver-archived
-# compact line tracks the LLM-ops families round-over-round, not just the
-# reference queries.
+# (one per family: fuzzy dedup, sketch, clustering) so the compact line
+# tracks the LLM-ops families run over run, not just the reference
+# queries.
 HEADLINE = [
     "flagship_distributor_pipeline",
     "q1_pricing_summary",
@@ -42,11 +45,11 @@ HEADLINE = [
 def run_queries(
     spark, specs, names: list[str], sf_dir: str, passes: int = 2
 ) -> tuple[dict[str, float | None], dict[str, str]]:
-    """Best-of-N timing loop with per-query fault isolation (round-3
-    post-mortem: one AnalysisException aborted the whole run and the round
-    lost its bench artifact entirely). A failing query records null + a
-    one-line error; the loop always completes, and failures cost the run
-    nothing but their own slot. Unit-tested in tests/test_bench_harness.py."""
+    """Best-of-N timing loop with per-query fault isolation: without it,
+    one AnalysisException aborts the whole run and no record is written.
+    A failing query records null + a one-line error; the loop always
+    completes, and failures cost the run nothing but their own slot.
+    Unit-tested in tests/test_bench_harness.py."""
     timings: dict[str, float | None] = {}
     errors: dict[str, str] = {}
     for _pass in range(passes):
@@ -62,8 +65,8 @@ def run_queries(
                     timings[name] = None
                 errors[name] = f"{type(exc).__name__}: {exc}".split("\n")[0][:200]
                 continue
-            # 2 decimals keeps the single JSON line compact — the driver's
-            # capture truncated the r1 tail at 4-decimal precision.
+            # 2 decimals keeps the JSON lines compact: the tail line must
+            # fit a 2,000-character capture whole.
             elapsed = round(time.perf_counter() - t0, 2)
             prev = timings.get(name)
             timings[name] = elapsed if prev is None else min(prev, elapsed)
@@ -81,14 +84,14 @@ def compact_summary(
     """One compact JSON line (< ``max_bytes``) printed AFTER the full record:
     total + the headline set + the top-15 slowest queries + error count.
 
-    Why: the driver archives only the final 2000 characters of stdout, and
-    the full per-query dict is ~3 KB — four rounds of BENCH_r0N.json carry
-    ``parsed: null`` with the front of the record truncated away (round-4
-    verdict #1). The trailing compact line always fits the tail capture
-    whole, so the archived artifact parses and keeps the numbers that
-    matter. Guaranteed under budget: if the line would exceed ``max_bytes``
-    the top-15 block is shed first, then the headline block (never reached
-    in practice — both blocks together are ~1 KB)."""
+    Why: a runner that keeps only the final 2000 characters of stdout
+    loses the front of the full per-query record (several KB), and the
+    truncated record does not parse. The trailing compact line always
+    fits such a tail capture whole, so the kept text parses and holds
+    the numbers that matter. Guaranteed under budget: if the line would
+    exceed ``max_bytes`` the top-15 block is shed first, then the
+    headline block (never reached in practice — both blocks together are
+    ~1 KB)."""
     top15 = dict(
         sorted(
             ((n, t) for n, t in timings.items() if t is not None),
@@ -117,14 +120,14 @@ def compact_summary(
 
 
 def calibration(spark) -> dict:
-    """Machine-load calibration recorded with every run (round-7 verdict
-    #3: the r7 driver bench read 3.2x an idle re-run of identical code and
-    nothing in the artifact could prove it was load, not regression).
+    """Machine-load calibration recorded with every run: a loaded machine
+    can read 3x an idle re-run of identical code, and without a load
+    probe the record cannot tell load from regression.
 
     ``floor_sec`` is the best-of-3 wall of a fixed reference job
     (``spark.range(10**7).count()`` — pure JVM, no I/O, no Python), i.e.
     the per-job floor THIS machine sustains RIGHT NOW; ``loadavg`` is the
-    OS 1/5/15-minute run queue. To compare two rounds, normalize totals by
+    OS 1/5/15-minute run queue. To compare two runs, normalize totals by
     the floor ratio (or just reject a comparison whose floors differ >2x).
     """
     floor = min(
@@ -146,17 +149,15 @@ SELF_RECORD_DIR = os.path.join(REPO_ROOT, "bench_records")
 
 
 def write_self_record(out: dict, cpus: int, path: str | None = None) -> str | None:
-    """Write the FULL per-query record to a file (r15, r14 verdict #2b):
-    the driver archives only the last 2000 chars of stdout, so the
-    216-entry map never survived its capture and PERF's per_query
-    round-over-round table came back empty two rounds running. Called
-    after both stdout prints — additions only, nothing in the timed path
-    changes. The record is ``out`` (which carries the calibration floor)
-    plus the ``cpus`` it ran on; the default target is
-    ``bench_records/BENCH_SELF_c{cpus}.json`` (gitignored), so runs at
-    different core counts keep separate records and never dirty the
-    tree. A read-only checkout degrades to the stdout record (returns
-    None)."""
+    """Write the FULL per-query record to a file, because a 2000-char
+    tail capture of stdout keeps only the compact line, never the
+    216-entry map. Called after both stdout prints — additions only,
+    nothing in the timed path changes. The record is ``out`` (which
+    carries the calibration floor) plus the ``cpus`` it ran on; the
+    default target is ``bench_records/BENCH_SELF_c{cpus}.json``
+    (gitignored), so runs at different core counts keep separate records
+    and never dirty the tree. A read-only checkout degrades to the
+    stdout record (returns None)."""
     try:
         if path is None:
             os.makedirs(SELF_RECORD_DIR, exist_ok=True)
@@ -197,9 +198,8 @@ def main() -> None:
         n for n in sorted(specs) if n not in HEADLINE
     ]
     # Best-of-2: two full passes over the list, report the per-query MIN.
-    # Round-2 driver numbers carried 1.3-4.9x transient-load noise (judge
-    # re-measurement adjudicated every apparent regression as load); one
-    # loaded moment can no longer manufacture a regression, while a real
+    # Single passes carry 1.3-4.9x transient-load noise; with two, one
+    # loaded moment cannot manufacture a regression, while a real
     # slowdown still shows in both passes. Pass 2 is also the honest
     # steady-state number: plan compilation (Catalyst analysis + codegen)
     # is measured cold in pass 1 and cached after.
@@ -217,8 +217,8 @@ def main() -> None:
     if errors:
         out["errors"] = errors
     print(json.dumps(out))
-    # Trailing compact record — the driver's 2000-char tail capture always
-    # contains this line whole (the full line above is ~3 KB and truncates).
+    # Trailing compact record — a 2000-char tail capture always contains
+    # this line whole (the full line above is several KB and truncates).
     print(compact_summary(timings, errors, total, out["sf"], calibration=cal))
     write_self_record(out, spark.sparkContext.defaultParallelism)
 

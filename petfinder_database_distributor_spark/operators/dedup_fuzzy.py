@@ -54,15 +54,15 @@ def exact_dedup_groups(
 
 
 def with_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
-    # ONE tokenize per document (r15; guide §4.4 + §1.2). Two separate
+    # ONE tokenize per document. Two separate
     # multipliers previously re-ran the tokenize chain per row:
     #
-    # 1. Filter duplication: dropping the explicit size(sh) > 0 filter in
-    #    r14 was a no-op — InferFiltersFromGenerate re-infers
+    # 1. Filter duplication: dropping the explicit size(sh) > 0 filter
+    #    is a no-op — InferFiltersFromGenerate re-infers
     #    `size(sh) > 0 AND isnotnull(sh)` from every downstream explode
     #    and pushes it below this projection, inlining the whole
-    #    tokenize+shingle tree into the Filter (the r14 after-plans still
-    #    carried the duplicated split/translate chains; r14 verdict #1).
+    #    tokenize+shingle tree into the Filter (the plan then carries
+    #    duplicated split/translate chains).
     #    pushdown_barrier makes the sh field non-deterministic so no
     #    filter can cross the projection: inferred filters stay above and
     #    read the computed attribute.
@@ -119,7 +119,7 @@ def ngram_jaccard_pairs(
       longer count toward |A∩B|, so Jaccard only UNDERestimates: no false
       positives, bounded recall loss on stopword-shingle overlap).
     * ``hot_cap``: EXACT results with the quadratic hot-shingle work
-      spread evenly, via a salted two-phase join (round-4 verdict #4).
+      spread evenly, via a salted two-phase join.
       Shingles with df <= hot_cap join directly. For each hot shingle
       the posting list buckets into s = ceil(df/hot_cap) id-hash salts;
       side A carries its own bucket i and replicates over all j, side B
@@ -161,8 +161,8 @@ def ngram_jaccard_pairs(
     # codegen explode per consumer (+0.4-0.5 s at sf0.1 when tried).
     #
     # Postings carry the 60-bit md5int fold of the shingle, not the
-    # string (r15, guide §2.3 — the round-7 minhash bucket-key trick
-    # applied to the postings join): every downstream stage — the Σdf²
+    # string (the minhash bucket-key trick applied to the postings
+    # join): every downstream stage — the Σdf²
     # estimate, the df_cap/hot_cap directories, and above all the
     # self-join exchange — shuffles and probes an 8-byte long instead of
     # a ~20-char string. Result-identical by the established
@@ -375,16 +375,16 @@ def minhash_band_buckets(
     engines; ``cast(long as string)`` is plain decimal digits in Spark,
     DuckDB's ``::VARCHAR`` and Python's ``str()`` alike, so band hashes
     stay identical to the oracle's. The bucket key is the 8-byte integer
-    fold rather than the 32-char md5 hex string (round-7 verdict #4):
+    fold rather than the 32-char md5 hex string:
     the candidate join shuffles and probes on (int, long) instead of
     (int, string) — same collision classes (both are the md5 prefix), a
     quarter of the key bytes.
 
-    History (why expressions, and why THESE expressions): a k=32-unrolled
-    per-row ``array_min(transform(...))`` HOF forest cost ~3.3s Catalyst
-    analysis + ~4s Janino codegen per embedding query and was replaced by
-    an Arrow/hashlib pandas UDF (round 3); the UDF then became the dedup
-    family's hot spot (round-5 verdict #1: per-shingle Python-loop md5).
+    Why expressions, and why THESE expressions: a k=32-unrolled per-row
+    ``array_min(transform(...))`` HOF forest costs ~3.3s Catalyst
+    analysis + ~4s Janino codegen per embedding query, and an
+    Arrow/hashlib pandas UDF is the dedup family's hot spot (a
+    per-shingle Python-loop md5).
     The explode+groupBy form has neither problem: k flat arithmetic
     aggregates compile in milliseconds and the md5 runs JVM-side inside
     whole-stage codegen."""
@@ -396,7 +396,7 @@ def minhash_band_buckets(
             % MERSENNE_P
         ).alias("h"),
     )
-    # Expressions rendered as SQL strings (r14 optimization): the
+    # Expressions rendered as SQL strings: the
     # per-element Column-builder form issued ~300 py4j round-trips per
     # invocation (k min-aggregates x 6 calls + bands x r concat chains);
     # one F.expr per aggregate / per band hash builds the IDENTICAL
@@ -443,9 +443,8 @@ def minhash_lsh_pairs(
     the shingle arrays — at 100 TB this is the only scalable shape for
     unknown-similarity dedup (no all-pairs stage exists anywhere).
 
-    Working-set discipline (round-8 rework of the round-5 shingle
-    checkpoint): the shingle frame still feeds three subtrees (signature
-    + both verify sides) and is still materialized exactly once — but as
+    Working-set discipline: the shingle frame feeds three subtrees
+    (signature + both verify sides) and is materialized exactly once, as
     HASHED 60-bit long arrays (:func:`hash_shingles`), not strings. The
     md5 work happens once per (doc, shingle) during the checkpoint job
     (the signature stage needed it anyway), the checkpointed payload
@@ -453,7 +452,8 @@ def minhash_lsh_pairs(
     the exact-verify intersections compare longs instead of strings.
     The DuckDB oracle hashes with the same shared md5int fold, so parity
     is exact even in the (2^-60) collision case — both engines merge the
-    same shingles. Measured at sf0.1: 2.4 s -> 1.6 s.
+    same shingles. Measured at sf0.1: 1.6 s, against 2.4 s with string
+    shingles.
 
     The verify join broadcasts the candidate pairs (tiny by LSH
     construction — bands x rows tuned so random collisions vanish) so
@@ -469,7 +469,7 @@ def minhash_lsh_pairs(
     # without this checkpoint the full signature subtree (explode +
     # k-way min aggregate + band hashes) executes twice — DataFrame
     # reuse is lineage, not materialization (visible as two duplicate
-    # aggregation subtrees in the r7 plan). (id, band, bh) rows are a
+    # aggregation subtrees in the plan). (id, band, bh) rows are a
     # fraction of the shingle payload, so the materialization is cheap.
     buckets = minhash_band_buckets(
         sh, id_col, k, bands, pre_hashed=True
@@ -495,7 +495,7 @@ def minhash_lsh_pairs(
 # SimHash signature width. 60 = the full width of the portable md5int
 # primitive (first 15 hex chars of md5 → 60-bit int), so every signature bit
 # is oracle-checkable in DuckDB with the same `('0x'||substr(md5(x),1,15))`
-# construction. Round-3 verdict: the old 16-bit width blocked into ~5-bit
+# construction. A 16-bit width blocks into ~5-bit
 # pigeonhole keys, making ~37% of ALL pairs candidates at 500 docs —
 # near-quadratic at 100 TB. 60 bits → 3 blocks of 20-bit keys (d<=2):
 # 2^20 key space per block, so block collisions at corpus scale are real
@@ -651,8 +651,8 @@ EDGES_PER_LOOP_PARTITION = 100_000
 
 def _auto_loop_partitions(spark, n_edges: int) -> int:
     """Loop-shuffle reducer count derived from the measured edge count,
-    capped by the session conf (the cluster-sized ceiling). Replaces the
-    literal per-plan counts the round-5 verdict flagged: the edge list is
+    capped by the session conf (the cluster-sized ceiling), instead of a
+    literal per-plan count that is right at one scale only: the edge list is
     already eagerly checkpointed when this runs, so the count is a cheap
     scan of materialized blocks, not a recompute."""
     session = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -895,12 +895,12 @@ def connected_components_star(
     )
 
 
-# The DEFAULT clustering entry point for pipeline consumers (round-4
-# verdict stretch #9): star contraction — O(log n) rounds of bulk
-# equi-joins — is the petabyte shape, so composition sites
-# (dedup_apply_corpus and anything new) bind to this name; the
-# label-propagation form above stays as the independently-implemented
-# parity baseline both queries and tests cross-check against.
+# The DEFAULT clustering entry point for pipeline consumers: star
+# contraction — O(log n) rounds of bulk equi-joins — is the petabyte
+# shape, so composition sites (dedup_apply_corpus and anything new) bind
+# to this name; the label-propagation form above stays as the
+# independently-implemented parity baseline both queries and tests
+# cross-check against.
 resolve_components = connected_components_star
 
 
@@ -965,7 +965,7 @@ def levenshtein_neardup_counts(
     b = inv.select(
         F.col(id_col).alias("id_b"), F.col(name_col).alias("nb"), "variant"
     )
-    # r14 optimization (guide §2.3 — shuffle fewer bytes): verify BEFORE
+    # shuffle fewer bytes: verify BEFORE
     # the pair-dedup. The old order shuffled every duplicated candidate
     # row (a d<=1 pair shares MANY deletion variants) carrying BOTH name
     # strings through the distinct; running the threshold-early-exit

@@ -130,8 +130,8 @@ def decisions_from_committed_index(
     n: int = 3,
     threshold: float = 0.5,
 ) -> DataFrame:
-    """Decision core for the APPEND-FIRST ingest loop (r15 trigger
-    fusion): the batch's signatures are committed to the index BEFORE
+    """Decision core for the APPEND-FIRST ingest loop (trigger fusion):
+    the batch's signatures are committed to the index BEFORE
     decisions run, so ``index_incl`` already CONTAINS the batch, and one
     probe join with a single ``cid < bid`` predicate replaces the two
     probe legs (corpus index + batch-internal self-join) plus union of
@@ -145,10 +145,10 @@ def decisions_from_committed_index(
     ascending-id document staging provides. Equivalence to the two-leg
     form under that contract: index_incl = index_before ∪ own_buckets;
     probe ⋈ own_buckets [cid < bid] is exactly the old batch-internal
-    leg, and probe ⋈ index_before [cid < bid] equals the old unfiltered
+    leg, and probe ⋈ index_before [cid < bid] equals the unfiltered
     corpus leg because every corpus cid is smaller than every bid.
 
-    Replay safety (the cut walk, re-proven for append-first): a replayed
+    Replay safety (the cut walk for append-first): a replayed
     trigger — any crash between the signature append and the offset
     commit — re-runs against an index that already holds its OWN
     signatures (possibly twice). ``cid < bid`` makes them inert: self
@@ -157,11 +157,11 @@ def decisions_from_committed_index(
     exist yet (triggers are sequential; replay restarts at the failed
     one). Decision VALUES are therefore a deterministic function of
     (batch, signatures committed for smaller ids) at EVERY crash point.
-    This is strictly stronger than the pre-r15 decisions-before-append
-    ordering, which was only self-match-free when the trigger ran
-    exactly once: a replay after a committed append re-probed its own
-    signatures through the unfiltered corpus leg (cid = bid, Jaccard 1)
-    and could flip its own rows to dup_of = bid.
+    This is strictly stronger than a decisions-before-append ordering,
+    which is only self-match-free when the trigger runs exactly once: a
+    replay after a committed append re-probes its own signatures through
+    the unfiltered corpus leg (cid = bid, Jaccard 1) and can flip its own
+    rows to dup_of = bid.
     tests/test_corpus_ops.py::test_incdedup_trigger_replay_idempotent
     pins the replayed-trigger decision values."""
     probe = buckets.select(F.col(id_col).alias("bid"), "band", "bh")

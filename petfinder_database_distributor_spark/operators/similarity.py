@@ -41,15 +41,14 @@ def as_double(vec: Column) -> Column:
     return vec.cast("array<double>")
 
 
-# Zero-norm vector contract (round-11 continuation finding): a zero
+# Zero-norm vector contract: a zero
 # vector has no direction, so cosine is undefined on it — and under
 # Spark 4.x's default ANSI mode the norm-product division RAISES
 # DIVIDE_BY_ZERO, killing a 100 TB job on one dirty row (DuckDB's
 # double 0/0 diverges to NULL/NaN instead — asymmetric either way).
 # Zero-norm rows are excluded at the family entry exactly like NULL
-# vectors. Round 12 applies this pair at every registered cosine-family
-# entry (PLANS.md, round-11 continuation findings); the staged kNN graph
-# already rides it.
+# vectors. This pair applies at every registered cosine-family entry;
+# the staged kNN graph rides it too.
 NONZERO_VEC_SQL = "len(list_filter({v}, x -> x <> 0)) > 0"
 
 
@@ -113,7 +112,7 @@ def lsh_topk(
     probe_bits=1) — corpus rows still carry one key per band, so the index
     size is unchanged and the join stays a (band, key) equi-join. On the
     driver testdata, where true top-5 cosines are a hard ~0.30-0.39,
-    measured recall@5 went 0.475 (16 bands × 6 bits, no probes, round 2) →
+    measured recall@5 is 0.475 at 16 bands × 6 bits without probes and
     0.875 at 16 bands × 8 bits with 1-bit probes, with candidate volume
     ~bands·(1+band_bits)·|corpus|/2^band_bits per query — pinned in
     tests/test_ann_recall.py. Every join is a (band, key) or id equi-join,
@@ -181,8 +180,8 @@ def _splitmix64(x: int) -> int:
 def srp_plane_matrix(n_planes: int, dim: int) -> list[list[int]]:
     """Integer hyperplane coefficients in [-1000, 1000] from splitmix64.
 
-    The linear-congruential formula the round-1 srp_bucket used
-    ((i*A + j*B) % 2001 - 1000) produces CORRELATED planes — adjacent rows
+    A linear-congruential formula ((i*A + j*B) % 2001 - 1000) produces
+    CORRELATED planes — adjacent rows
     are shifts of one arithmetic progression, which collapsed 256-value
     band keys to ~26-76 distinct values on real data (23% of all pairs
     became candidates, and single-bucket ANN recall@5 was 10%).
@@ -199,9 +198,9 @@ def srp_band_keys_udf(bands: int = 8, band_bits: int = 8, dim: int = 64):
 
     Exact-integer construction: quantized vector round(1000*x)::int64
     dotted against the integer plane coefficients from
-    :func:`srp_plane_matrix` (splitmix64-avalanched, in [-1000, 1000]; the
-    round-1 linear-congruential formula produced correlated planes and is
-    retired — see that function's docstring). Products ≤1e9, 64-term sums
+    :func:`srp_plane_matrix` (splitmix64-avalanched, in [-1000, 1000]; a
+    linear-congruential formula produces correlated planes — see that
+    function's docstring). Products ≤1e9, 64-term sums
     ≤2^40, so the math is exact in both int64 (here) and DuckDB's double
     accumulation (< 2^53), and the sign of every dot — hence every key —
     is engine-independent."""
@@ -447,7 +446,7 @@ def ivf_pq_train(
         centroids = _update_int(assigned, cid).localCheckpoint(eager=True)
     # DISK_ONLY for both corpus-sized materializations (inverted file,
     # codes): memory-store checkpoints pin bulk blocks across queries in
-    # a small-heap session — the round-8 OOM post-mortem; the tiny
+    # a small-heap session until the driver runs out of heap; the tiny
     # centroid/codebook checkpoints stay in memory
     ivf = _assign_int(qcorpus, centroids, cid).localCheckpoint(
         eager=True, storageLevel=StorageLevel.DISK_ONLY

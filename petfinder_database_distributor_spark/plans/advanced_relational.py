@@ -143,7 +143,7 @@ def set_ops_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "json_props_extract",
-    # Malformed-JSON contract (r11 continuation finding #3, landed r12):
+    # Malformed-JSON contract:
     # DuckDB's json_extract RAISES on malformed JSON while Spark's
     # get_json_object returns NULL — one bad record would turn this row
     # red (and ANSI string→int casts raise on garbage in BOTH engines).
@@ -399,7 +399,7 @@ def j4_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
       ON s.s_suppkey = (CASE WHEN l.l_suppkey % 10 <> 0 THEN 1 ELSE l.l_suppkey END)
     GROUP BY 1
     """,
-    doc="AQE skew-join demonstration (round-5 verdict #5), the runtime "
+    doc="AQE skew-join demonstration, the runtime "
     "complement to the manual j4_salted_join: ~90% of lineitem rows are "
     "remapped onto ONE supplier key before the join, so the shuffle "
     "partition for that key dwarfs the rest. Under adaptive execution "
@@ -852,7 +852,7 @@ def market_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
              CAST(round(value * 100) AS BIGINT) AS c,
              count(*) OVER w AS n,
              sum(CAST(round(value * 100) AS BIGINT)) OVER w AS s,
-             -- HUGEINT quadratics (r12 verdict #2): c*c wraps int64 at
+             -- HUGEINT quadratics: c*c wraps int64 at
              -- |v| ~ 3.8e6 — the OLD envelope's binding constraint;
              -- 128-bit keeps every in-envelope term exact to |v| < 1e12
              -- ((16e14)^2 ~ 2.6e30 << 1.7e38)

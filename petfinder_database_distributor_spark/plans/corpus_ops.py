@@ -1,10 +1,10 @@
-"""Corpus-curation ingest operators: the round-7 additions that execute
-the 100 TB ingest loop end-to-end rather than analyzing a frozen corpus.
+"""Corpus-curation ingest operators: they execute the 100 TB ingest loop
+end-to-end rather than analyzing a frozen corpus.
 
 * ``dedup_incremental_batch`` — near-dup dedup of a NEW ingest batch
   against a snapshot-committed MinHash band index of the existing corpus:
   O(batch + collisions) per ingest, never O(corpus). Composes the
-  round-6 snapshot table (atomic index commits, time travel) with the
+  snapshot table (atomic index commits, time travel) with the
   dedup family; the per-batch ingest pattern every production pipeline
   (CCNet, RefinedWeb, Dolma) runs instead of corpus-wide re-dedup.
 * ``stream_incremental_dedup`` — the same ingest loop as a structured
@@ -81,9 +81,9 @@ def _corpus_index_table(spark: SparkSession, sf_dir: str) -> str:
     corpus-only index; admit-merges land as later versions, so reads
     pinned at v0 are deterministic across repeated calls."""
     tag = sf_dir.strip("/").replace("/", "_").replace(".", "_").replace("-", "_")
-    # _i64 suffix: band hashes changed from md5 hex strings to the 60-bit
-    # md5int fold (round-8) — the path bump invalidates stale staged
-    # indexes whose bh column would never collide with the new probes
+    # _i64 suffix: band hashes are the 60-bit md5int fold, not md5 hex
+    # strings; the suffix keeps an index staged with string hashes (whose
+    # bh column would never collide with these probes) from being reused
     table = f"{SCRATCH_ROOT}/minhash_index_i64/{tag}"
 
     def build(table: str) -> None:
@@ -134,7 +134,7 @@ def _corpus_index_table(spark: SparkSession, sf_dir: str) -> str:
     "text fetch, batch-internal dups caught by a smaller-id-wins "
     "self-join, and admitted signatures are merged back into the index "
     "as snapshot v1 (one atomic pointer-swap commit per ingest — the "
-    "audit-log/time-travel chain from round 6). dup_of = min matching "
+    "snapshot table's audit-log/time-travel chain). dup_of = min matching "
     "id; decisions are order-independent (non-recursive batch rule, "
     "see operators/dedup_incremental.py). The oracle recomputes all "
     "signatures from scratch — the INDEX is an execution artifact, so "
@@ -173,17 +173,17 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _incdedup_trigger(
     table_dir: str, dec_dir: str, all_docs: DataFrame, batch_df: DataFrame
 ) -> None:
-    """One ingest trigger, APPEND-FIRST (r15 trigger fusion): commit the
+    """One ingest trigger, APPEND-FIRST (trigger fusion): commit the
     batch's band signatures to the index, then probe the committed index
     with ``cid < bid`` for the decisions. The append's data write IS the
-    bucket materialization — the pre-r15 shape paid a separate
-    localCheckpoint job for the buckets AND ran two probe legs (corpus
-    index + batch self-join) whose union the single filtered probe
-    replaces; see decisions_from_committed_index for the equivalence and
-    the re-proven replay-cut walk (append-first is also strictly SAFER:
-    a replayed trigger's own committed signatures are inert under
-    cid < bid, where the old unfiltered corpus leg would self-match
-    them at Jaccard 1). Module-level so the replay test can invoke one
+    bucket materialization — deciding before the append would pay a
+    separate localCheckpoint job for the buckets AND run two probe legs
+    (corpus index + batch self-join) whose union the single filtered
+    probe replaces; see decisions_from_committed_index for the
+    equivalence and the replay-cut walk (append-first is also strictly
+    SAFER: a replayed trigger's own committed signatures are inert under
+    cid < bid, where an unfiltered corpus leg would self-match them at
+    Jaccard 1). Module-level so the replay test can invoke one
     trigger directly."""
     from petfinder_database_distributor_spark.operators.dedup_fuzzy import (
         minhash_band_buckets,
@@ -259,7 +259,7 @@ def _incdedup_trigger(
     "trigger computes signatures for ITS batch only, probes the "
     "snapshot-committed band index of everything seen so far, "
     "exact-verifies band collisions, and appends per-doc decisions. "
-    "APPEND-FIRST (r15): the batch's signatures commit as the next index "
+    "APPEND-FIRST: the batch's signatures commit as the next index "
     "version BEFORE decisions run — an O(batch) manifest-level file "
     "append, never an index rewrite (one atomic pointer swap per "
     "trigger; the version chain IS the micro-batch audit log) — and the "
@@ -615,7 +615,7 @@ _TEMP_ORACLE = f"""
     w AS (SELECT source, c, {_TEMP_W_SQL} AS w FROM c),
     tot AS (SELECT sum(c)::BIGINT AS b, sum(w)::HUGEINT AS wsum FROM w),
     base AS (
-      -- wsum = 0 guard (r12 advice): an all-empty-text corpus gives
+      -- wsum = 0 guard: an all-empty-text corpus gives
       -- every domain weight 0, so the apportionment divisor vanishes —
       -- there is no budget to apportion and the contract is ZERO ROWS
       -- (same degenerate-corpus convention as text_vocab_coverage).
@@ -784,7 +784,7 @@ def quality_classifier_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id").isNotNull()
     )
-    # r15 (guide §1.2 + §4.4): inline, the hashed-feature fold tokenized
+    # inline, the hashed-feature fold tokenized
     # every document 3x/row — once in the aggregate, once in size, and
     # once more inside the pushed-down n_toks > 0 filter. Materialize
     # the token array behind a pushdown barrier: one tokenize per row,
@@ -1028,10 +1028,10 @@ def ann_index_probe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM scored)
     WHERE rank <= 5
     """,
-    doc="IVF-FLAT ANN top-5 against the PERSISTED index — r10 fold of the "
-    "former in-line retraining form onto the committed tables (the r9 "
-    "verdict's redundant-witness ask; ann_ivf_pq_topk remains the sole "
-    "retraining witness): the query path is ivf_flat_probe ALONE — rank "
+    doc="IVF-FLAT ANN top-5 against the PERSISTED index — it reads the "
+    "committed tables instead of retraining in-line (a second retraining "
+    "witness would be redundant; ann_ivf_pq_topk is the sole retraining "
+    "witness): the query path is ivf_flat_probe ALONE — rank "
     "the 16 committed centroids (snapshot v0), keep nprobe=6 cells, pull "
     "their members from the committed codes table's inverted-file column, "
     "score members EXACTLY on raw embeddings. Zero Lloyd iterations in "
@@ -1063,9 +1063,9 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH {_ANN_IDX_TRAIN_SQL},
     {_ann_idx_probe_sql(ivf="ivf", codes="codes", nprobe=16, rerank=64)}
     """,
-    doc="Exhaustive PQ-ADC ANN top-5 against the PERSISTED index — r10 "
-    "fold of the former in-line codebook-training form onto the committed "
-    "tables: the query path is ivf_pq_probe with nprobe=16 (EVERY cell "
+    doc="Exhaustive PQ-ADC ANN top-5 against the PERSISTED index — the "
+    "codebook is trained once into the committed tables, not in-line per "
+    "query: the query path is ivf_pq_probe with nprobe=16 (EVERY cell "
     "probed, so no IVF pruning — pure asymmetric-distance computation "
     "over the committed residual codes, rerank=64 exact re-rank). This is "
     "the memory-bound end of the committed-index ladder: a 100 TB corpus "
@@ -1210,7 +1210,7 @@ RETRAIN_DRIFT_PPM = 1_500_000
     FROM m
     """,
     doc="The retrain TRIGGER that completes the index lifecycle (train/"
-    "add/search exist since r9; this decides WHEN appends have degraded "
+    "add/search are the other stages; this decides WHEN appends have degraded "
     "the index): mean residual energy — exact integer "
     "||qe - icvec||^2 against each vector's committed cell — of the "
     "APPENDED slice vs the TRAINED corpus's, as a fixed-point ppm "
@@ -1531,7 +1531,7 @@ def knn_graph_decisions(
     )
 
 
-# The recovery witness's OWN corpus slice (r12 verdict #3: the witness
+# The recovery witness's OWN corpus slice (the witness
 # was the single most expensive registered query; the pigeonhole refusal
 # argument is scale-free, so a quarter-sized slice proves the identical
 # lifecycle at a quarter of the quadratic cost). vec_id < 16 stays dense
@@ -1553,8 +1553,8 @@ def knn_graph_retrain_recover(spark: SparkSession, sf_dir: str) -> DataFrame:
     Sum(|cell|^2) >= n^2/4 on any <=4-cell assignment, and the budget is
     n^2/5 < n^2/4; after the 16-cell retrain the balanced assignment
     sits near n^2/16, well under budget (the scale probes pin the
-    margin). n_clusters is PINNED to the oracle's 16 (r12 advice: the
-    old doubling loop silently diverged from the fixed 16-cell oracle
+    margin). n_clusters is PINNED to the oracle's 16 (a
+    doubling loop silently diverged from the fixed 16-cell oracle
     recompute past ~12.6k vectors) — a corpus whose balanced 16-cell
     estimate n^2/16 still exceeds the budget is OUTSIDE this witness's
     envelope and REFUSES up front with the fix named (more cells via
@@ -1635,7 +1635,7 @@ def knn_graph_retrain_recover(spark: SparkSession, sf_dir: str) -> DataFrame:
         return graph(version=0)
     except ValueError:
         # the guard's named fix, executed: retrain with the ORACLE's
-        # cell count (16 — pinned, r12 advice: a doubling loop here
+        # cell count (16 — pinned: a doubling loop here
         # silently diverged from the fixed 16-cell oracle recompute on
         # corpora past ~12.6k vectors), committed as the next atomic
         # group version, then rerun. A corpus whose BALANCED 16-cell
@@ -1795,7 +1795,7 @@ def stream_ann_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
         # same entry contract as _load_embeddings: NULL ids/vectors AND
-        # zero-norm vectors are excluded (r12 dirty-data contract — the
+        # zero-norm vectors are excluded (dirty-data contract — the
         # arriving stream is exactly where dirty rows show up first)
         batch = batch_df.filter(
             F.col("vec_id").isNotNull()

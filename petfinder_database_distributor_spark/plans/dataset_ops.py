@@ -81,7 +81,7 @@ def shuffle_index(docs: DataFrame) -> DataFrame:
     The laid-out frame feeds BOTH the offsets aggregate and the final join
     — localCheckpoint (eager) materializes it once and, unlike persist(),
     releases its blocks on GC instead of pinning a session-lifetime cache
-    entry (round-5 advice).
+    entry.
     """
     laid = shuffle_layout(docs).localCheckpoint(eager=True)
     # counts is |partitions| rows — the single-partition window over it is a
@@ -397,7 +397,7 @@ def validate_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_type").alias("n_checked"),
             F.coalesce(F.col("bad_type"), F.lit(0)).alias("n_violations"),
         ),
-        # non-finite measure rule (r12 dirty-data contract): the validator
+        # non-finite measure rule (dirty-data contract): the validator
         # REPORTS NaN/±Inf rows — it is the one query in the value family
         # that must SEE them rather than filter them at entry
         F.struct(
@@ -405,14 +405,14 @@ def validate_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_value").alias("n_checked"),
             F.coalesce(F.col("nonfinite_value"), F.lit(0)).alias("n_violations"),
         ),
-        # exact-arithmetic envelope rule (r12): finite but outside the
+        # exact-arithmetic envelope rule: finite but outside the
         # measure range the decimal/cents pipeline can represent exactly
         F.struct(
             F.lit("value_in_range").alias("rule"),
             F.col("n_value").alias("n_checked"),
             F.coalesce(F.col("outofrange_value"), F.lit(0)).alias("n_violations"),
         ),
-        # aggregate-parity envelope rule (r14, the r13-advice guard): the
+        # aggregate-parity envelope rule: the
         # per-VALUE envelope above cannot bound a SUM. DOUBLE-typed
         # decimal-sum outputs (output scale <= 2 by the rescale contract)
         # are last-bit parity-exact only while |sum|*10^2 < 2^53 (DuckDB's
@@ -442,7 +442,7 @@ def validate_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev_rules = agg.select(F.explode(rules).alias("r")).select(
         "r.rule", "r.n_checked", "r.n_violations"
     )
-    # duplicate-primary-key rule (r14 dirt contract): a duplicate vec_id
+    # duplicate-primary-key rule (dirt contract): a duplicate vec_id
     # silently doubles rows through every index join downstream — the
     # validator REPORTS it; first_occurrence() is the canonicalization
     emb_rules = (
@@ -540,7 +540,7 @@ def timeseries_gapfill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # `daily` feeds THREE consumers (global max, per-user spine starts, and
     # the join probe side) — materialize it once (localCheckpoint: blocks
     # are GC-reclaimed with the plan, unlike persist(), which pins a cache
-    # entry for the session lifetime — round-5 advice).
+    # entry for the session lifetime).
     daily = (
         ev.groupBy(
             "user_id", (F.unix_micros("ts") / 86400000000).cast("long").alias("day")
@@ -732,7 +732,7 @@ _KEYDEDUP_TIEBREAK = ["ts", "user_id", "event_type", "value", "props"]
     FROM canon
     GROUP BY 1
     """,
-    doc="Duplicate-primary-key canonicalization (the r14 dirt contract's "
+    doc="Duplicate-primary-key canonicalization (the dirt contract's "
     "registered witness): events is reduced to ONE row per event_id via "
     "the deterministic first-occurrence rule — the row that sorts first "
     "by the content tiebreak (ts, user_id, event_type, value, props), "
@@ -756,7 +756,7 @@ def keydedup_first_occurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_rows"),
         F.sum("user_id").alias("sum_user"),
         # epoch-µs mass overflows BIGINT past ~5k rows/group (1.7e15 each;
-        # caught by the r14 sf0.1 bench, NOT the sf0.01 gate — 9.2e18/µs
+        # reached at sf0.1, NOT at the sf0.01 gate — 9.2e18/µs
         # epoch ≈ 5.3k rows): DECIMAL(38,0)-exact sum emitted as digit
         # STRING on both engines (the ref_scalar_suite checksum pattern;
         # DuckDB's HUGEINT sum would otherwise silently diverge in repr)

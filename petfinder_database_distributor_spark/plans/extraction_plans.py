@@ -225,8 +225,8 @@ def _malformed_pet_html(doc_id: F.Column) -> F.Column:
     "attrs, decoy + duplicate matches, missing field) and recover the "
     "reference's first-match-or-'' field contract (pet_scraper.py:135-161) "
     "through the streaming html.parser Arrow UDF — whitespace-normalized "
-    "('Rex &amp;__Pal' collapses, 'El  Paso' -> 'El Paso'); completes the "
-    "S1/P1 fidelity gap VERDICT r3 'What's missing' #3 flagged",
+    "('Rex &amp;__Pal' collapses, 'El  Paso' -> 'El Paso'), where the "
+    "other S1/P1 queries see only well-formed pages",
 )
 def p1_html_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     from petfinder_database_distributor_spark.operators.extraction import (

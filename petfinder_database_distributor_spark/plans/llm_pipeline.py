@@ -54,7 +54,7 @@ from petfinder_database_distributor_spark.schema import finite_measures, load_ta
 def _load_embeddings(spark: SparkSession, sf_dir: str):
     """Embeddings with the vector-family dirty-data contract applied: rows
     with a NULL id or NULL vector are excluded (they would crash the Arrow
-    kernels), and so are ZERO-NORM vectors (r11 continuation finding: a
+    kernels), and so are ZERO-NORM vectors (a
     zero vector has no direction, cosine's norm-product division RAISES
     DIVIDE_BY_ZERO under Spark 4.x default ANSI mode — one dirty row
     would kill a 100 TB job). Every oracle in the family carries the
@@ -96,7 +96,7 @@ _SHINGLES_SQL = f"""
   FROM ({_TOKS_SQL}) WHERE len(t) >= 3
 """
 
-# Candidate-bounded EXACT-Jaccard oracle (r14, r13 verdict #3): the
+# Candidate-bounded EXACT-Jaccard oracle: the
 # exact-Jaccard oracles previously verified with an all-pairs
 # list_intersect join — O(n²·|s|), 502 s at sf0.1, dwarfing the engine's
 # entire 207-query bench. Because shingle lists are list_distinct SETS,
@@ -149,7 +149,7 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    # r15 (guide §1.2): the three stats each tokenized inline (~5
+    # the three stats each tokenized inline (~5
     # evaluations/row through interpreted HOF slots, which get no
     # codegen CSE); materialize the token array once per row — the
     # two-stage text_lang_id pattern — and derive all three from the
@@ -287,7 +287,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = F.col("text")
     from petfinder_database_distributor_spark.operators.text import distinct_tokens
 
-    # r15 (guide §1.2): both output hashes are md5 over the SAME sorted
+    # both output hashes are md5 over the SAME sorted
     # distinct-token bag; materialize the bag once per row instead of
     # running the tokenize+distinct+sort chain twice (referenced 2x, so
     # CollapseProject keeps the two-stage shape).
@@ -328,7 +328,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # retired all-pairs form; see _EXACT_JACCARD_ORACLE).
     oracle=_EXACT_JACCARD_ORACLE,
     doc="EXACT near-dup pairs by 3-gram Jaccard; the unqualified name is the "
-    "deployable chooser (round-5 verdict #3): it measures Σdf² and picks the "
+    "deployable chooser: it measures Σdf² and picks the "
     "direct postings join when small, the salted two-phase join when "
     "duplication would skew-bind a reducer — never the unguarded baseline",
 )
@@ -399,7 +399,7 @@ def dedup_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     "pair still meets exactly once but the quadratic hot-shingle work "
     "spreads evenly across reducers instead of serializing on one — the "
     "deployable plan for users who need exact (not capped) Jaccard; the "
-    "uncapped form's guard now points here (round-4 verdict #4)",
+    "uncapped form's guard points here",
 )
 def dedup_ngram_jaccard_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -593,7 +593,8 @@ def dedup_embedding_cosine_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _load_embeddings(spark, sf_dir).filter(F.col("vec_id") % 4 == 0)
     # Two-layer size guard: all-pairs is O(n²) — baseline only.
     # Layer 1 (plan-build, free): footer-metadata count over the raw table
-    # (no Spark job; round-3 verdict #6). The plan scores the
+    # (no Spark job: a guard action at plan-build time costs a whole
+    # job before the query runs). The plan scores the
     # vec_id % 4 == 0 quarter, so the ~100k-scored budget corresponds to
     # 400k RAW rows — IF residues are uniform.
     n = parquet_num_rows(sf_dir, "embeddings")
@@ -976,7 +977,7 @@ def text_bigram_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
     # non-distinct bigrams: shingles() dedups, so build the raw list here.
-    # Token array materialized in its OWN projection (r15, guide §1.2):
+    # Token array materialized in its OWN projection:
     # the zip/slice/size slots below reference it 4x, and interpreted
     # HOFs get no codegen CSE — inline, every document tokenized 4x/row.
     toked = docs.select("doc_id", tokens(F.col("text")).alias("__toks"))
@@ -1094,7 +1095,7 @@ def text_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     window, stride = 32, 16
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
-    # pushdown_barrier (r15, guide §4.4): without it the size(t) > 0
+    # pushdown_barrier: without it the size(t) > 0
     # filter pushes below this projection with the tokenize tree inlined
     # — every document tokenized twice per row.
     from petfinder_database_distributor_spark.util import pushdown_barrier
@@ -1200,7 +1201,7 @@ def text_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     from petfinder_database_distributor_spark.util import pushdown_barrier
 
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
-    # r15 (guide §1.2 + §4.4): the trigram forest references the token
+    # the trigram forest references the token
     # array 6x from interpreted HOF slots (no codegen CSE) — materialize
     # it in its own projection; and the size(g) > 0 filter would push
     # below the g-projection with the whole tree inlined — the barrier
@@ -1345,7 +1346,7 @@ def _bm25_term_score(i: int):
     """One BM25 term of the exact-rational form used by
     search_bm25_topk.
 
-    Overflow envelope (the r14 integer-product audit): the rational
+    Overflow envelope (see tests/test_overflow_audit.py): the rational
     numerator (2n-2df+1)*22*tf*tt overflows BIGINT once n*tt crosses
     ~2^63/22/tf — reachable around 3e7 docs x 2e9 tokens, far below
     100 TB corpus shapes. Under ANSI mode (the Spark 4.x default) the
@@ -1414,7 +1415,7 @@ _BM25_SQL = """
     "(k1=1.2, b=0.75, rational IDF (N-df+.5)/(df+.5) instead of its log — a "
     "monotone per-term substitute that keeps every sub-expression an exact "
     "integer, so the score is one correctly-rounded IEEE division per term "
-    "and bit-identical cross-engine; since r14 the integer products run in "
+    "and bit-identical cross-engine; the integer products run in "
     "exact decimal(38,0)/HUGEINT — BIGINT wraps silently past ~3e7 docs, see "
     "_bm25_term_score's envelope note). Corpus stats (N, total tokens, "
     "per-term df) reduce to ONE broadcast row; the per-doc side is a narrow "
@@ -1480,8 +1481,8 @@ def search_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="Dedup-cluster resolution: MinHash-LSH pairs → connected components "
     "→ canonical representative = min doc_id per cluster. The unqualified "
-    "name now runs the DEPLOYABLE plan (round-5 verdict: registry-level "
-    "steering closes the baseline-as-default trap): alternating small-/"
+    "name runs the DEPLOYABLE plan (the default name must not be the "
+    "baseline): alternating small-/"
     "large-star contraction, O(log n) rounds — the label-propagation "
     "fixpoint stays registered as dedup_cluster_components_labelprop, the "
     "mutual-witness baseline. Oracle restates the fixpoint as a recursive "
@@ -1651,7 +1652,7 @@ def dedup_apply_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 _HLL_M = 512
 _HLL_ALPHA_SQL = "0.7213 / (1 + 1.079 / 512)"
 
-# Low-range linear-counting correction, made portable (round-4 verdict #5):
+# Low-range linear-counting correction, made portable:
 # the standard correction m·ln(m/V) needs ln(), the one libm op with NO
 # cross-engine rounding guarantee — but V = zero_regs has only 512 possible
 # non-trivial values, so ln(m/V) becomes a 512-entry lookup of exact
@@ -1801,7 +1802,7 @@ _HLL_ORACLE_SQL = f"""
     "raw estimate) PLUS hll_corrected_estimate: the low-range linear-"
     "counting correction m*ln(m/V) needs ln() — no cross-engine rounding "
     "guarantee — but V has only 512 possible values, so both engines index "
-    "the SAME 512-entry exact-double literal table (round-4 verdict #5) "
+    "the SAME 512-entry exact-double literal table "
     "and the correction itself hash-matches. Accuracy (<5% corrected, "
     "<14% raw at high range) is bound-tested in tests/test_sketches.py",
 )
@@ -2172,16 +2173,16 @@ def sketch_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "embedding_dim_stats",
-    # Integer-exact moments (r12 rework): the old mean-of-squares-minus-
-    # square-of-mean form computed variance as a DIFFERENCE OF DOUBLES,
-    # and at exactly-zero variance (one vector, or a constant dimension)
-    # the two engines' float residues straddled the round-to-6 boundary
-    # (Spark 1e-06 vs DuckDB 0.0 — the single-row probe's find). Now the
-    # variance numerator n*sum(q^2) - sum(q)^2 is computed EXACTLY over
-    # micro-quantized integers (q = round(v*1e6); HUGEINT/DECIMAL(38,0)
-    # products, bounds: |q|<=2^21, n<=1e12 => |num| < 4e36 < 38 digits),
-    # so both engines sqrt the IDENTICAL value — bit-exact by
-    # construction, and exact zeros stay exactly zero.
+    # Integer-exact moments: a mean-of-squares-minus-square-of-mean form
+    # computes variance as a DIFFERENCE OF DOUBLES, and at exactly-zero
+    # variance (one vector, or a constant dimension) the two engines' float
+    # residues straddle the round-to-6 boundary (Spark 1e-06 vs DuckDB 0.0
+    # on a single-row input). Instead the variance numerator n*sum(q^2) -
+    # sum(q)^2 is computed EXACTLY over micro-quantized integers (q =
+    # round(v*1e6); HUGEINT/DECIMAL(38,0) products, bounds: |q|<=2^21,
+    # n<=1e12 => |num| < 4e36 < 38 digits), so both engines sqrt the
+    # IDENTICAL value — bit-exact by construction, and exact zeros stay
+    # exactly zero.
     oracle="""
     WITH dims AS (
       SELECT u.i - 1 AS dim,
@@ -2474,7 +2475,7 @@ def sketch_hll_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Corpus-curation pair (round 5, late): cross-document boilerplate chunk
+# Corpus-curation pair: cross-document boilerplate chunk
 # suppression (the CCNet-style shape — shared headers/footers/navigation
 # repeat VERBATIM across many pages; removing repeated spans, not repeated
 # documents, is what exact dedup can't do) and per-language RELATIVE quality
@@ -2527,7 +2528,7 @@ def corpus_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = ensure_parallelism(
         load_table(spark, sf_dir, "documents").filter(F.col("doc_id").isNotNull())
     )
-    # pushdown_barrier (r15, guide §4.4): without it the size(t) > 0
+    # pushdown_barrier: without it the size(t) > 0
     # filter pushes below this projection with the tokenize tree inlined
     # — every document tokenized twice in the chunk-checkpoint job.
     from petfinder_database_distributor_spark.util import pushdown_barrier
@@ -2541,7 +2542,7 @@ def corpus_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # probe side of the broadcast join; checkpoint the compact triples so
     # the scan + tokenize + explode + hash pipeline runs once, not twice
     # (localCheckpoint, not persist: blocks release on GC instead of
-    # pinning a session-lifetime cache entry — round-5 advice).
+    # pinning a session-lifetime cache entry).
     chunks = (
         toked.select(
             "doc_id", F.explode(F.sequence(F.lit(0), n_chunks - 1)).alias("i"), "t"
@@ -2618,7 +2619,7 @@ def quality_percentile_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "documents").filter(F.col("doc_id").isNotNull())
     )
     t = F.col("text")
-    # r15 (guide §1.2): quality_score_from_tokens references its token
+    # quality_score_from_tokens references its token
     # argument ~6x through interpreted HOF slots (no codegen CSE) — an
     # inline tokens(t) tokenized every document ~6x/row. Materialize the
     # array once (the text_quality_score two-stage pattern).
@@ -2704,12 +2705,12 @@ def _span_overlap_frame(docs: DataFrame) -> DataFrame:
     from petfinder_database_distributor_spark.operators.text import md5int, tokens
     from petfinder_database_distributor_spark.util import pushdown_barrier
 
-    # pushdown_barrier (r15; guide §4.4): without it the size(t) >= 8
-    # filter is pushed below this projection with the WHOLE tokenize tree
-    # substituted into the Filter condition, so every document tokenizes
-    # twice (Filter + Project — the r14 span plans carried the duplicated
-    # split/translate chains). The barrier keeps the filter above the
-    # projection, reading the computed `t` attribute: one tokenize/row.
+    # pushdown_barrier: without it the size(t) >= 8 filter is pushed
+    # below this projection with the WHOLE tokenize tree substituted into
+    # the Filter condition, so every document tokenizes twice (Filter +
+    # Project each carry a split/translate chain). The barrier keeps the
+    # filter above the projection, reading the computed `t` attribute:
+    # one tokenize/row.
     toks = tokens(F.col("text"))
     chunks = (
         docs.select("doc_id", pushdown_barrier(toks).alias("t"))
@@ -3155,7 +3156,7 @@ def text_c4_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     each gate in isolation. Plan:
     ONE narrow projection over one split — no joins, no shuffles, no
     UDFs; at 100 TB an embarrassingly-parallel scan with full column
-    pruning, the same shape as text_gopher_rules (PLANS.md)."""
+    pruning, the same shape as text_gopher_rules."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id").isNotNull())
     raw = F.coalesce(F.col("text"), F.lit(""))
     # The four line-counters below each reference the

@@ -447,8 +447,8 @@ def dedup_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     "string (like ref_scalar_suite's checksum): DuckDB hands scale-0 "
     "DECIMAL(38,0) to pandas as float64, so a raw decimal column "
     "canonicalizes as '...0.0' vs Spark's Decimal '...0' and the "
-    "driver's value hash diverges on representation, not value "
-    "(CORRECTNESS_r06 events_funnel hash_match=false). Three cascaded aggregations all keyed on "
+    "driver's value hash diverges on representation, not value. "
+    "Three cascaded aggregations all keyed on "
     "user_id, so at scale every stage reuses the same hash partitioning "
     "(one logical shuffle key, no windows over the corpus); earliest-"
     "qualifying-event semantics via min() keeps it deterministic under "
@@ -977,8 +977,7 @@ def _log2fp_expr(in_col: str):
     codegen'd loop over ``sequence(1, 20)``. Same integer ops in the same
     order → bit-identical cost_fp; but the plan carries ONE expression
     instead of 20 stacked Project nodes, so Catalyst analysis, codegen
-    and the py4j plan-construction chatter all collapse (r14 optimization
-    round, guide §1.2 "per-task work" + §7.2 plan size: measured ~1.5-2 s
+    and the py4j plan-construction chatter all collapse (measured ~1.5-2 s
     of pure plan overhead per kernel application at sf0.1, ×2 in the
     Gumbel draw). cost_fp = -log2(in_col / 2^30) in 20.20 fixed point;
     domain [1, 2^30]."""
@@ -1015,8 +1014,8 @@ def _log2fp_cost_cols(df: DataFrame, in_col: str, out_col: str) -> DataFrame:
     narrow projections — no join, no shuffle — so it is the right form
     when the kernel input is PER-ROW (the DSIR draw's hashed uniform
     coin) rather than a bounded distinct-t frame: at 10^10 documents a
-    distinct+join-back would shuffle ~|docs| keys for no reuse. Since the
-    r14 optimization round the recurrence is ONE ``aggregate()``
+    distinct+join-back would shuffle ~|docs| keys for no reuse. The
+    recurrence is ONE ``aggregate()``
     expression (:func:`_log2fp_expr`) instead of 20 stacked projections —
     identical bits, a fraction of the plan."""
     keep = [c for c in df.columns if c != in_col]
@@ -1028,7 +1027,7 @@ def _global_ntile(per: DataFrame, order_cols: list, out_name: str, n: int = 3) -
     ``order_cols`` — the scale-safe twin of
     ``F.ntile(n).over(Window.orderBy(*order_cols))``, which moves the
     ENTIRE frame into ONE task (at 1e10 documents that is hundreds of GB
-    through a single sort — the round-10 verdict's scale-killer). Two-phase
+    through a single sort). Two-phase
     range-partition pattern, shared with dataset_ops.shuffle_index:
     range-repartition on the order key so partitions ARE contiguous rank
     ranges, count rows per partition (a |partitions|-row aggregate),
@@ -1138,8 +1137,8 @@ def _ppl_corpus_frames(spark: SparkSession, sf_dir: str):
     exploded bigram table. The bigram table feeds c2, c1 AND the per-doc
     re-agg: materialize once (same CSE argument as text_commonness_score's
     token frame) — DISK_ONLY, never the memory store: bigram occurrences
-    are a corpus-bulk wedge, exactly the shape the round-8 heap
-    post-mortem pinned as the 1-GiB-driver OOM cause."""
+    are a corpus-bulk wedge, exactly the shape that runs a 1-GiB driver
+    out of heap when checkpointed to memory."""
     from pyspark.storagelevel import StorageLevel
 
     from petfinder_database_distributor_spark.operators.text import tokens
@@ -1147,7 +1146,7 @@ def _ppl_corpus_frames(spark: SparkSession, sf_dir: str):
     from petfinder_database_distributor_spark.util import pushdown_barrier
 
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
-    # pushdown_barrier (r15, guide §4.4): the size(t) >= 2 filter below
+    # pushdown_barrier: the size(t) >= 2 filter below
     # otherwise pushes beneath this projection with the whole tokenize
     # tree inlined into the Filter — every document tokenized twice in
     # the bigram-checkpoint job (and again for the vocab branch, which
@@ -1187,8 +1186,8 @@ def _ppl_corpus_frames(spark: SparkSession, sf_dir: str):
     "bigram's surprise at 30 bits — reachable only when a history "
     "exceeds ~2^30 occurrences). The kernel is ONE aggregate() "
     "higher-order expression applied INLINE per corpus-bounded bigram "
-    "row (r14: the old distinct-t + broadcast join-back shape was "
-    "removed — 20 integer ops/row beat a shuffle in every regime). "
+    "row (20 integer ops/row beat a distinct-t aggregate + broadcast "
+    "join-back shuffle in every regime). "
     "Plan: two linear bigram aggs (c2, c1), a broadcast vocab scalar, "
     "the inline fixed-point kernel, one per-doc agg; the CCNet tercile "
     "closes through the distributed two-phase range-partition ntile "
@@ -1217,11 +1216,11 @@ def text_perplexity_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("tq"),
         )
     )
-    # r14 optimization: the kernel is one aggregate() expression now, so
-    # apply it INLINE on the (already corpus-bounded) tmap rows — 20
-    # integer ops per distinct bigram — instead of the old
-    # distinct-t + broadcast-join-back, which cost a distinct shuffle and
-    # a broadcast build per query for the same bits (guide §2.4).
+    # the kernel is one aggregate() expression, so apply it INLINE on
+    # the (already corpus-bounded) tmap rows — 20 integer ops per
+    # distinct bigram — instead of a distinct-t + broadcast-join-back,
+    # which costs a distinct shuffle and a broadcast build per query for
+    # the same bits.
     tmap = _log2fp_cost_cols(tmap, "tq", "cost_fp")
     bstat = big.groupBy("doc_id", "bg").agg(F.count(F.lit(1)).alias("cnt"))
     per = (
@@ -1370,7 +1369,7 @@ def text_perplexity_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("tq"),
         )
     )
-    # r14 optimization: inline single-expression kernel on tmap — same
+    # inline single-expression kernel on tmap — same
     # bits, no distinct shuffle, no broadcast join-back (see
     # text_perplexity_bucket).
     tmap = _log2fp_cost_cols(tmap, "tq", "cost_fp")
@@ -1500,7 +1499,7 @@ def _dsir_per_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     B = _DSIR_BUCKETS
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
-    # pushdown_barrier (r15, guide §4.4): the explode below makes
+    # pushdown_barrier: the explode below makes
     # Catalyst infer size(t) > 0 and push it beneath this projection
     # with the tokenize tree inlined — every document tokenized twice
     # in the feats-checkpoint job without the barrier.
@@ -1511,7 +1510,7 @@ def _dsir_per_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the exploded feature table feeds the raw counts, the target counts
     # AND the per-doc re-agg — materialize once; corpus-bulk, so
-    # DISK_ONLY per the heap post-mortem
+    # DISK_ONLY to keep it off the driver heap
     feats = (
         tk.select("doc_id", "lang", F.explode("t").alias("tok"))
         .select("doc_id", "lang", (md5int(F.col("tok")) % B).alias("b"))
@@ -1551,11 +1550,11 @@ def _dsir_per_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("tq_t"),
         )
     )
-    # r14 optimization: the stats frame is bounded at 4096 rows (the
+    # the stats frame is bounded at 4096 rows (the
     # hashed-bucket space), so run the single-expression kernel INLINE on
     # tq_r and tq_t — the old union+distinct shuffle and TWO broadcast
     # join-backs bought nothing but plan weight for the same bits
-    # (guide §2.4: remove shuffles outright).
+    # (remove shuffles outright).
     delta = _log2fp_cost_cols(
         _log2fp_cost_cols(stats, "tq_r", "cost_r"), "tq_t", "cost_t"
     ).select("b", (F.col("cost_r") - F.col("cost_t")).alias("delta_fp"))

@@ -92,8 +92,8 @@ _BOOL_FIELDS = ["f_flag"]
 # ---------------------------------------------------------------------------
 
 # X1 clean_text: trim + strip trailing footnote asterisks
-# (pet_scraper.py:125-132). Folded into ref_scalar_suite (round-5 verdict
-# #6) — the function and oracle fragment stay as the composite's X1 family.
+# (pet_scraper.py:125-132). Folded into ref_scalar_suite — the function and
+# oracle fragment stay as the composite's X1 family.
 _X1_ORACLE = """
     SELECT doc_id,
            coalesce(trim(regexp_replace(trim(text || ' *** '), '\\*+$', '')), '') AS cleaned
@@ -345,9 +345,9 @@ def q_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     # The already-ingested key set is a strict SUBSET of customers (keys with
     # c_custkey % 4 == 0 have not been seen yet), so the frontier batch
-    # contains genuinely-new links and the anti-join keeps real rows —
-    # round-4 verdict #3: the old fixture covered every key and its green
-    # driver row was a vacuous 0 == 0.
+    # contains genuinely-new links and the anti-join keeps real rows — a
+    # fixture that covers every key makes the parity check a vacuous
+    # 0 == 0.
     cust = (
         load_table(spark, sf_dir, "customer")
         .filter(F.col("c_custkey") % 4 != 0)
@@ -461,7 +461,7 @@ def q_timestamp_fmt(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Composite scalar suite (round-5 verdict #6): ONE driver row covering the
+# Composite scalar suite: ONE registered query covering the
 # seven trivially-green scalar/count checks above, at full value fidelity.
 # ---------------------------------------------------------------------------
 
@@ -554,7 +554,7 @@ def _str_render(*cols: str) -> F.Column:
     "encode, X6 url normalize, X8 timestamp format, A1 counts): one row "
     "per family with an exact order-free md5int checksum over every "
     "rendered value — full value fidelity of the seven previously-separate "
-    "trivial queries in ONE driver window slot (round-5 verdict #6). The "
+    "trivial queries in ONE registered query. The "
     "individual functions keep their unit tests in "
     "tests/test_reference_semantics.py.",
 )

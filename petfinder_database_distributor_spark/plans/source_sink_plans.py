@@ -405,7 +405,7 @@ def text_log_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so no rendered line can silently fail the match into a phantom
     # empty-string group.
     pat = r"^(-?\d+) user=(-?\d+) type=(.*) value=(\S+)$"
-    # ONE regex evaluation per row (round-5 advice: four regexp_extract
+    # ONE regex evaluation per row (four regexp_extract
     # calls quadruple the codegen regex work on a corpus-sized scan):
     # rewrite the matched line into \x01-separated groups, then project
     # the fields with cheap splits. \x01 cannot appear in rendered lines
@@ -445,9 +445,9 @@ def text_log_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
            coalesce(n.version, o.version) AS version
     FROM old o FULL OUTER JOIN new n ON o.event_id = n.event_id
     """,
-    doc="D2 upsert through the manifest-committed snapshot table (round-5 "
-    "verdict stretch #8): base snapshot -> atomic snapshot_merge of the "
-    "update batch -> read back the committed version. The commit protocol "
+    doc="D2 upsert through the manifest-committed snapshot table: base "
+    "snapshot -> atomic snapshot_merge of the update batch -> read back "
+    "the committed version. The commit protocol "
     "generalizes the reference's tmp+fsync+rename (pet_scraper.py:468-488) "
     "from one CSV to a many-file table: data files are immutable under "
     "data/v{N}/, a manifest names exactly version N's files, and a single "

@@ -365,21 +365,20 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stream_late_data_drop",
     # The oracle models the WATERMARK ITSELF, not a row-count proxy
-    # (r12 single-row probe find): a chunk-0 row is dropped iff its
-    # day-window had already CLOSED when it arrived — window_end <=
+    # (a one-row input tells the two apart): a chunk-0 row is dropped iff
+    # its day-window had already CLOSED when it arrived — window_end <=
     # watermark = (max ts of the earlier-arriving chunks) MINUS the
-    # 1-hour delay, i.e. window_end + 1h <= m (r12 advice: the first
-    # cut subtracted the delay — the wrong sign — which over-dropped
-    # any corpus whose day boundary fell within an hour ABOVE the
-    # watermark). late_max applies the SAME finite-measure predicate
-    # as the aggregation because Spark's plan filters finite_measures
-    # BEFORE the EventTimeWatermark node — a non-finite row with the
-    # latest ts never advances the real watermark, so it must not
-    # advance the modeled one either.
-    # With nothing arriving earlier (the whole corpus fits in chunk 0)
-    # nothing drops, which the old "drop the first ceil(n/4) ids"
-    # model got wrong on degenerate sizes; at the fixture scales the
-    # models agree exactly (quarter boundaries are days apart).
+    # 1-hour delay, i.e. window_end + 1h <= m (subtracting the delay there
+    # has the wrong sign and over-drops any corpus whose day boundary falls
+    # within an hour ABOVE the watermark). late_max applies the SAME
+    # finite-measure predicate as the aggregation because Spark's plan
+    # filters finite_measures BEFORE the EventTimeWatermark node — a
+    # non-finite row with the latest ts never advances the real watermark,
+    # so it must not advance the modeled one either. With nothing arriving
+    # earlier (the whole corpus fits in chunk 0) nothing drops, which a
+    # "drop the first ceil(n/4) ids" model gets wrong on degenerate sizes;
+    # at the fixture scales the two models agree exactly (quarter
+    # boundaries are days apart).
     oracle="""
     WITH per AS (SELECT (count(*) + 3) // 4 AS p FROM events),
     late_max AS (SELECT max(epoch_us(ts)) AS m

@@ -113,8 +113,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # UTC pin first: the ntz->timestamp cast below interprets the naive
         # value in the session timezone at *execution* time, and only under
         # UTC does the resulting instant agree with DuckDB's epoch_us over the
-        # same naive values (ADVICE r3: a tz-dependent cast would silently
-        # shift epochs instead of erroring).
+        # same naive values (a tz-dependent cast would silently shift
+        # epochs instead of erroring).
         spark.conf.set("spark.sql.session.timeZone", "UTC")
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
@@ -130,21 +130,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Non-finite measure contract (round-11 continuation finding #2, landed
-# round 12): CAST(double('NaN'|'Infinity') AS DECIMAL) is NULL in Spark 4
-# (silently dropped by sums) but an Invalid Input Error in DuckDB, so ONE
-# non-finite float in a measure column makes the oracle side of every
-# decimal-exact aggregate ERROR while Spark quietly excludes the row — a
-# red driver row from a single dirty record, and divergent results either
-# way. Contract: a non-finite measurement is not an observation — rows
-# whose measure is NaN/±Inf are excluded at the family entry on BOTH
-# engines. NULL rows are deliberately KEPT (each query's own NULL
-# contract governs them — this guard must not change NULL semantics, so
+# Non-finite measure contract: CAST(double('NaN'|'Infinity') AS DECIMAL) is
+# NULL in Spark 4 (silently dropped by sums) but an Invalid Input Error in
+# DuckDB, so ONE non-finite float in a measure column makes the oracle side
+# of every decimal-exact aggregate ERROR while Spark quietly excludes the
+# row — a failed parity check from a single dirty record, and divergent
+# results either way. Contract: a non-finite measurement is not an
+# observation — rows whose measure is NaN/±Inf are excluded at the family
+# entry on BOTH engines. NULL rows are deliberately KEPT (each query's own
+# NULL contract governs them — this guard must not change NULL semantics, so
 # clean-fixture and null-sweep hashes are unchanged by construction).
 # ---------------------------------------------------------------------------
 
-# Representable-range bound — WIDENED round 13 (r12 verdict #2: lift
-# the envelope with wider kernels instead of fencing it). The family
+# Representable-range bound — widened by lifting the envelope with
+# wider kernels instead of fencing it. The family
 # bound is the EXACT-ARITHMETIC ENVELOPE of its tightest member, and
 # after widening the z-score quadratics the tightest member is the
 # DECIMAL(18,6) entry cast itself:
@@ -155,19 +154,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 #     6-dp rounding of any in-range double cannot tip over the wall.
 #   * cents exactness: round(v*100) <= 1e14 < 2^53 — exact as a double
 #     and in BIGINT (9.2e18 headroom) for every in-envelope value.
-#   * z-score quadratics (the r12 binding constraint at |v|~3.8e6, now
+#   * z-score quadratics (BIGINT binds at |v|~3.8e6, so they run in
 #     DECIMAL(38,0)/HUGEINT — the embedding_dim_stats widening
 #     pattern): worst term (n*c - s)^2 <= (16e14)^2 ~ 2.6e30 << 1e38.
 #
-# Aggregate-magnitude headroom (volume- not value-bound — GUARDED as of
-# r14, the r13-advice fix): DOUBLE-typed decimal-sum outputs are
+# Aggregate-magnitude headroom (volume- not value-bound — GUARDED):
+# DOUBLE-typed decimal-sum outputs are
 # last-bit parity-exact while |sum| * 10^scale < 2^53 (probed: DuckDB's
 # decimal->double conversion mis-rounds the last bit past 2^53, Spark's
 # is correctly rounded) — 9.0e13 at the contract's output scale 2;
 # int64 cents totals hold to 9.2e18 cents and fail LOUDLY under ANSI
 # beyond. Because groups partition rows, the decimal-exact total mass
 # sum(|v|) bounds every group/window sum any registered query can form,
-# so ONE flag covers the registry: validate_constraints' r14
+# so ONE flag covers the registry: validate_constraints'
 # value_mass_parity rule reports when sum(|v|)*10^2 >= 2^53, and
 # tests/test_dirty_data_contracts.py both pins every fixture's mass
 # inside the envelope and witnesses the flag flipping (with cross-
@@ -208,8 +207,8 @@ def finite_measures(df: DataFrame, col: str = "value") -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Duplicate-primary-key contract (round 14 — the fourth dirt class, same
-# family as r12's zero-norm / non-finite / malformed-JSON three). The
+# Duplicate-primary-key contract (the fourth dirt class, same family as
+# the zero-norm / non-finite / malformed-JSON three). The
 # clean fixtures are generator-perfect: event_id and vec_id are unique.
 # Real 100 TB corpora are not — a retried ingest batch or a re-shipped
 # shard lands the same key twice, and a duplicate vec_id silently DOUBLES

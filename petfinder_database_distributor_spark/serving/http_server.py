@@ -126,15 +126,16 @@ def snapshot_body(table_dir: str, version: int | None = None) -> bytes:
     """The ``GET /pets`` body of one committed version (default: the
     latest pointer), from the body cache while the version's manifest is
     the one cached with it; otherwise the version is decoded. Raises
-    FileNotFoundError when the version has no manifest: never committed,
-    or vacuumed, even when its body is still cached."""
+    FileNotFoundError when the version is above the latest pointer
+    (never committed) or has no manifest (vacuumed), even when its body
+    is still cached."""
     from petfinder_database_distributor_spark.sources.snapshot import (
         _manifest_path,
-        latest_version,
+        resolve_version,
     )
 
     global _body_cache_total
-    v = latest_version(table_dir) if version is None else version
+    v = resolve_version(table_dir, version)
     if v is None:
         return _pets_body([])
     with open(_manifest_path(table_dir, v), "rb") as fh:
@@ -325,13 +326,13 @@ def load_snapshot_rows(table_dir: str, version: int | None = None) -> list[dict]
 
     from petfinder_database_distributor_spark.sources.snapshot import (
         _manifest_files,
-        latest_version,
         live_key_mask,
         load_tombstone_keys,
         read_manifest,
+        resolve_version,
     )
 
-    v = latest_version(table_dir) if version is None else version
+    v = resolve_version(table_dir, version)
     if v is None:
         return []
     manifest = read_manifest(table_dir, v)

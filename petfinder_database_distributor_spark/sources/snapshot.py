@@ -16,7 +16,8 @@ Delta Lake / Iceberg, restated here with nothing but the stdlib:
 
 Readers resolve ``_latest`` → manifest → explicit file list; they never
 list ``data/`` (half-written job output is invisible because nothing
-points at it). Row-level deletes are MERGE-ON-READ: ``snapshot_delete``
+points at it), and time travel to a version above ``_latest`` is refused
+(:func:`resolve_version`). Row-level deletes are MERGE-ON-READ: ``snapshot_delete``
 commits a tombstone key file and carries every data file forward
 untouched (O(delete keys) per request — the deletion-vector idea from
 the production formats); readers anti-join the tombstones out, and the
@@ -30,8 +31,8 @@ Concurrent WRITERS are handled optimistically: the committer records the
 version it based its write on and refuses the pointer swap if another
 writer got there first (``SnapshotConflictError``) — the loser retries on
 fresh state instead of silently clobbering the winner's files. Two
-mechanisms make that airtight rather than check-then-act (the round-6
-advice finding — the entry check alone spans the whole Spark write):
+mechanisms make that airtight rather than check-then-act (the entry
+check alone spans the whole Spark write):
 
 * every writer stages data under a WRITER-UNIQUE directory
   ``data/v{N}/{token}/`` — two writers that both derived version N can
@@ -100,9 +101,9 @@ def _check_base(table_dir: str, base_version: int | None) -> int | None:
 def _commit_metadata(
     table_dir: str, version: int, base_version: int | None, manifest: dict
 ) -> None:
-    """The commit: under the lock, re-verify the base (the round-6 advice
-    fix — the entry check alone is check-then-act across the whole Spark
-    write), then manifest, then pointer. A racing writer fails HERE with
+    """The commit: under the lock, re-verify the base (the entry check
+    alone is check-then-act across the whole Spark write), then
+    manifest, then pointer. A racing writer fails HERE with
     its data staged in its own unique directory, touching nothing
     committed."""
     import time
@@ -141,6 +142,24 @@ def latest_version(table_dir: str) -> int | None:
         return None
     with open(ptr) as fh:
         return int(fh.read().strip())
+
+
+def resolve_version(table_dir: str, version: int | None = None) -> int | None:
+    """The version a reader serves: the latest pointer when ``version`` is
+    None (None for an empty or absent table), else ``version`` once it is
+    known to be committed. A version above ``_latest`` is refused with
+    FileNotFoundError even when its manifest exists: a writer that died
+    between writing ``v{N}.json`` and swapping the pointer leaves one,
+    and the next writer overwrites it with different contents."""
+    latest = latest_version(table_dir)
+    if version is None:
+        return latest
+    if latest is None or version > latest:
+        raise FileNotFoundError(
+            f"snapshot v{version} of {table_dir} is not committed"
+            f" (latest: {latest})"
+        )
+    return version
 
 
 def _manifest_path(table_dir: str, version: int) -> str:
@@ -558,7 +577,7 @@ def snapshot_read(
     time travel). Resolves pointer → manifest → explicit file list, so
     uncommitted job output can never leak into the scan. Tombstoned rows
     (merge-on-read deletes) are anti-joined out."""
-    v = latest_version(table_dir) if version is None else version
+    v = resolve_version(table_dir, version)
     if v is None:
         raise FileNotFoundError(f"no committed snapshot in {table_dir}")
     manifest = read_manifest(table_dir, v)
@@ -901,20 +920,28 @@ def snapshot_commit_group(
     each atomic but three of them are not: a reader resolving
     centroids/codebook/codes pointers independently mid-retrain can get
     v1 centroids with v0 codes — meaningless ADC scores, no error
-    raised (the r10 retrain review finding). With a group pointer the
-    retrain's three table commits stay INVISIBLE until the single group
-    swap lands; readers resolve the group once and read its pinned
-    member versions. Iceberg's catalog-level atomic swap over multiple
-    tables, on the reference's own fsync-then-replace idiom.
+    raised. With a group pointer the retrain's three table commits stay
+    INVISIBLE until the single group swap lands; readers resolve the
+    group once and read its pinned member versions. Iceberg's
+    catalog-level atomic swap over multiple tables, on the reference's
+    own fsync-then-replace idiom.
 
     Same optimistic protocol as table commits: each named member version
-    must already be committed in its table (validated under the lock),
-    ``base_group`` is re-verified inside the lock window, and a racing
-    group committer fails with SnapshotConflictError — retry by
-    re-reading the winner's group and recomputing."""
+    must already be committed in its table (its manifest exists and it
+    is not above the table's ``_latest``; a manifest above the pointer
+    is a dead writer's and will be overwritten), ``base_group`` is
+    re-verified inside the lock window, and a racing group committer
+    fails with SnapshotConflictError — retry by re-reading the winner's
+    group and recomputing."""
     os.makedirs(os.path.join(root, "_group_manifests"), exist_ok=True)
     for name, version in members.items():
-        if not os.path.exists(_manifest_path(os.path.join(root, name), version)):
+        member_dir = os.path.join(root, name)
+        latest = latest_version(member_dir)
+        if (
+            latest is None
+            or version > latest
+            or not os.path.exists(_manifest_path(member_dir, version))
+        ):
             raise ValueError(
                 f"group member {name!r} has no committed v{version};"
                 " commit member tables before the group"
@@ -1120,8 +1147,8 @@ def snapshot_vacuum(
         # manifest: a file can outlive its own version's manifest because
         # a then-retained manifest referenced it (partition sharing);
         # once those referencing manifests expire too, this pass must
-        # still reclaim it (round-6 advice: keying the walk off manifest
-        # existence leaked such files forever).
+        # still reclaim it (keying the walk off manifest existence leaks
+        # such files forever).
         for vdir in (
             os.path.join(table_dir, "data", f"v{v}"),
             os.path.join(table_dir, "tombstones", f"v{v}"),
@@ -1213,9 +1240,10 @@ def snapshot_read_since(
     version still apply (a delivered-then-deleted row is NOT re-delivered
     nor resurrected here — delete visibility also belongs to
     :func:`snapshot_diff`)."""
-    v = latest_version(table_dir) if version is None else version
+    v = resolve_version(table_dir, version)
     if v is None:
         raise FileNotFoundError(f"no committed snapshot in {table_dir}")
+    since_version = resolve_version(table_dir, since_version)
     old_files = set(_manifest_files(read_manifest(table_dir, since_version)))
     manifest = read_manifest(table_dir, v)
     new_files = _manifest_files(manifest)
@@ -1272,7 +1300,7 @@ def snapshot_read_pruned(
     are absent. The exact predicate is re-applied on the survivors, so
     results are correct whatever the stats say; rows with NULL ``col``
     are excluded (the predicate is a range)."""
-    v = latest_version(table_dir) if version is None else version
+    v = resolve_version(table_dir, version)
     if v is None:
         raise FileNotFoundError(f"no committed snapshot in {table_dir}")
     manifest = read_manifest(table_dir, v)
@@ -1382,9 +1410,8 @@ def snapshot_write_partitioned(
     ``partition_col`` must be NON-NULL for every row: partition values
     key the manifest as strings, and a NULL cannot round-trip that
     mapping — the guard below raises instead of silently dropping the
-    rows (round-6 advice: ``col == None`` is SQL NULL semantics and
-    matches nothing, so null-partition rows used to vanish from the
-    committed snapshot)."""
+    rows (``col == None`` is SQL NULL semantics and matches nothing, so
+    null-partition rows would vanish from the committed snapshot)."""
     os.makedirs(os.path.join(table_dir, "_manifests"), exist_ok=True)
     current = _check_base(table_dir, base_version)
     version = (current if current is not None else -1) + 1
@@ -1439,7 +1466,7 @@ def snapshot_read_partitioned(
     at MANIFEST level — the file list never includes other partitions, so
     pruning costs zero I/O (Iceberg-style metadata pruning: at 100 TB the
     scan starts from exactly the needed files, no directory listing)."""
-    v = latest_version(table_dir) if version is None else version
+    v = resolve_version(table_dir, version)
     if v is None:
         raise FileNotFoundError(f"no committed snapshot in {table_dir}")
     manifest = read_manifest(table_dir, v)
@@ -1664,7 +1691,7 @@ def snapshot_clone(
     fail with the underlying missing-file error. Cloning is for
     experiments/branches WITHIN the source's retention window; promote
     with a deep copy (read + write) if the clone must outlive it."""
-    src_v = latest_version(src_dir) if version is None else version
+    src_v = resolve_version(src_dir, version)
     if src_v is None:
         raise FileNotFoundError(f"no committed snapshot in {src_dir}")
     if latest_version(dst_dir) is not None:

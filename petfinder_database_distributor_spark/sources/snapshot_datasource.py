@@ -148,8 +148,8 @@ def make_snapshot_datasource():
         import json
 
         from petfinder_database_distributor_spark.sources.snapshot import (
-            latest_version,
             read_manifest,
+            resolve_version,
             version_at_timestamp,
         )
 
@@ -162,10 +162,8 @@ def make_snapshot_datasource():
             raise ValueError("pass either version or timestampAsOf, not both")
         if opt_ts is not None:
             v = version_at_timestamp(table_dir, _parse_timestamp(opt_ts))
-        elif opt_v is not None:
-            v = int(opt_v)
         else:
-            v = latest_version(table_dir)
+            v = resolve_version(table_dir, None if opt_v is None else int(opt_v))
         if v is None:
             raise FileNotFoundError(f"no committed snapshot in {table_dir}")
         manifest = read_manifest(table_dir, v)

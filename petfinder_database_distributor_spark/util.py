@@ -11,7 +11,7 @@ def int_div(a: Column, b: int) -> Column:
     exact across the full int64 range — the cross-engine twin of DuckDB's
     integer ``//`` (probed: ``-5 // 2 = -2``, truncation).
 
-    Replaces the ``floor(a / b)`` idiom (round-5 advice): floor-of-double
+    Replaces the ``floor(a / b)`` idiom: floor-of-double
     (a) rounds toward -inf, diverging from the oracle for negative
     dividends, and (b) loses exactness once ``a`` exceeds 2^53.
     ``a - (a % b)`` is exactly divisible (Spark's ``%`` takes the
@@ -25,9 +25,9 @@ def execution_guard(df: DataFrame, ok: Column, msg: Column) -> DataFrame:
     """Attach a deferred scale guard to ``df``: ``ok`` (typically built from
     a ``DataFrame.scalar()`` subquery so it can aggregate over the data) is
     asserted at EXECUTION time. Query construction therefore launches no
-    Spark job (round-3 verdict #6: guard *actions* at plan-build time cost a
-    job per plan); a violated guard fails the job fast — the scalar subquery
-    stage runs first, and every map task throws on its first row, before the
+    Spark job (guard *actions* at plan-build time cost a job per plan); a
+    violated guard fails the job fast — the scalar subquery stage runs
+    first, and every map task throws on its first row, before the
     guarded shuffle materializes. The error surfaces as
     ``SparkRuntimeException [USER_RAISED_EXCEPTION] <msg>``.
 
@@ -40,17 +40,17 @@ def execution_guard(df: DataFrame, ok: Column, msg: Column) -> DataFrame:
 
 def pushdown_barrier(col: Column) -> Column:
     """Value-identical wrapper that stops Catalyst from pushing filters
-    below the projection computing ``col`` (the guide §4.4 duplication
+    below the projection computing ``col`` (the duplication
     trap, native-expression form): a filter on a computed column is
     pushed below its Project with the column's WHOLE expression tree
     substituted into the Filter condition, so every row evaluates the
     expression twice — once in the Filter, once again in the Project.
     Harmless for cheap columns; for the tokenize+shingle trees it doubles
     the dominant map-side CPU of the dedup family at corpus scale, and
-    the r14 attempt to fix it by dropping the explicit ``size(sh) > 0``
-    filter was a no-op because InferFiltersFromGenerate re-infers exactly
-    that filter from any downstream ``explode`` (r14 verdict: the
-    duplicated tree survived in every jaccard/containment/span plan).
+    dropping the explicit ``size(sh) > 0`` filter does not fix it because
+    InferFiltersFromGenerate re-infers exactly that filter from any
+    downstream ``explode`` (the duplicated tree then survives in every
+    jaccard/containment/span plan).
 
     Mechanism: ``rand() + 1.0 >= 0.0`` is always true (rand ∈ [0,1)), so
     the CASE evaluates to ``col`` on every row (the NULL else-branch is
@@ -101,8 +101,8 @@ def _estimated_scan_partitions(df: DataFrame) -> int:
     ``spark.sql.files.maxPartitionBytes``) — zero Spark jobs, and crucially
     NO physical planning: the old ``df.rdd.getNumPartitions()`` probe
     physical-planned the frame, which *executes* any scalar-subquery guard
-    already attached to it (round-4 verdict #4 — the invariant "probe before
-    guard" lived in a call-site comment; this estimator deletes the trap).
+    already attached to it (the invariant "probe before guard" lived in a
+    call-site comment; this estimator deletes the trap).
 
     Mirrors ``FilePartition`` packing to first order: splittable files are
     cut at ``maxPartitionBytes`` and small files are packed together, so

@@ -32,8 +32,8 @@ TABLES = (
 
 
 def build_one_row_fixture(tmp: str) -> str:
-    """LIMIT 1 of every table — the degenerate size that caught the
-    exact-zero-variance and one-chunk-watermark divergences in r12."""
+    """LIMIT 1 of every table — the degenerate size that catches the
+    exact-zero-variance and one-chunk-watermark divergences."""
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
@@ -45,7 +45,7 @@ def build_one_row_fixture(tmp: str) -> str:
 
 def build_all_empty_text_fixture(tmp: str) -> str:
     """Every document's text is whitespace — the all-empty-text corpus
-    that zeroes every token count (the r12-advice wsum=0 crash class in
+    that zeroes every token count (the wsum=0 crash class in
     domain_budget_temperature: a divisor built from token mass
     vanishes while the corpus itself is non-empty)."""
     con = duckdb.connect()
@@ -62,10 +62,10 @@ def build_all_empty_text_fixture(tmp: str) -> str:
 
 
 def build_dirty_fixture(tmp: str) -> str:
-    """The r12 dirty-data fixture: zero-norm / NULL embeddings, the three
+    """The dirty-data fixture: zero-norm / NULL embeddings, the three
     non-finite measure shapes, malformed JSON props, the cents-rounding
     and decimal-entry-cast pin rows, one out-of-envelope measure, and
-    (r13) the two IN-envelope huge measures that witness the widened
+    the two IN-envelope huge measures that witness the widened
     kernels. See tests/test_dirty_data_contracts.py for the per-class
     contracts this fixture exercises."""
     con = duckdb.connect()
@@ -119,12 +119,11 @@ def build_dirty_fixture(tmp: str) -> str:
       -- engines, REPORTED by the validator's value_in_range rule
       UNION ALL SELECT 99999, TIMESTAMP '2024-02-01 10:09:00', 16,
                  'purchase', 1e13, '{{"k": 10}}'
-      -- IN-envelope huge values (r13, the envelope WIDENING's witness
-      -- rows — r12 verdict #2): 1e9 would have been fenced by the old
-      -- |v| < 1e6 exclusion and would overflow the old int64 c*c
-      -- z-score quadratic (1e22 > 2^63); 9.87654321e11 sits just under
-      -- the DECIMAL(18,6) wall. Both must FLOW THROUGH every family
-      -- member with exact cross-engine parity via the HUGEINT /
+      -- IN-envelope huge values (the envelope WIDENING's witness rows):
+      -- 1e9 lies outside a |v| < 1e6 exclusion and would overflow an
+      -- int64 c*c z-score quadratic (1e22 > 2^63); 9.87654321e11 sits
+      -- just under the DECIMAL(18,6) wall. Both must FLOW THROUGH every
+      -- family member with exact cross-engine parity via the HUGEINT /
       -- decimal(38,0) widened kernels.
       UNION ALL SELECT 100000, TIMESTAMP '2024-02-01 10:10:00', 17,
                  'click', 1e9, '{{"k": 11}}'
@@ -138,7 +137,7 @@ def build_dirty_fixture(tmp: str) -> str:
 
 
 def build_dupkey_fixture(tmp: str) -> str:
-    """The r14 duplicate-primary-key fixture: re-ingested rows sharing an
+    """The duplicate-primary-key fixture: re-ingested rows sharing an
     event_id / vec_id, each duplicate pair exercising one branch of the
     first-occurrence content tiebreak (earlier ts wins; same-ts value
     tiebreak; NULLS LAST so a NULL props loses to a real one; a

@@ -6,8 +6,8 @@ k-means init), so these are exact pins, not flaky statistical bounds.
 The two paths trade differently and both numbers are asserted:
 - ann_lsh_topk (banded multi-probe SRP, 16 bands × 8 bits + 1-bit
   probes): 0.875 on this data where true top-5 cosines are a hard
-  ~0.30-0.39 (round-1 single-bucket measured 0.10; round-2 no-probe
-  banding 0.475).
+  ~0.30-0.39 (a single bucket measures 0.10; banding without probes
+  0.475).
 - the committed-index family (ann_index_probe_topk / ann_ivf_topk /
   ann_pq_adc_topk) serves from the staged v0 snapshot tables and is
   pinned against brute force over the index's own corpus subset.
@@ -40,13 +40,12 @@ def ground_truth(spark):
     [
         ("ann_lsh_topk", 0.85),
         # the retraining witness: the composition beats both halves
-        # (measured 0.95 vs the r9-era in-line IVF 0.925 / PQ 0.875):
-        # residual encoding spends the codebook on within-cell variance
-        # instead of re-describing the centroid direction. (Round-8
-        # sweep note kept for lineage: widening the exact re-rank beat a
-        # second Lloyd round, which REDUCED recall — 0.750/0.825 at
-        # rerank 32/64 — L2-tighter codebooks are not monotonically
-        # better for cosine top-k.)
+        # (measured 0.95 vs in-line IVF 0.925 / PQ 0.875): residual encoding
+        # spends the codebook on within-cell variance instead of
+        # re-describing the centroid direction. (Widening the exact re-rank
+        # beats a second Lloyd round, which REDUCES recall — 0.750/0.825 at
+        # rerank 32/64 — L2-tighter codebooks are not monotonically better
+        # for cosine top-k.)
         ("ann_ivf_pq_topk", 0.90),
     ],
 )
@@ -86,14 +85,14 @@ def subset_ground_truth(spark):
 @pytest.mark.parametrize(
     "name,min_recall",
     [
-        # measured 0.925 at nprobe=6/rerank=96 (0.875 at the r9 in-line
+        # measured 0.925 at nprobe=6/rerank=96 (0.875 in-line at
         # 4/64 — subset-trained cells are coarser; probe width buys back
         # training-data loss)
         ("ann_index_probe_topk", 0.90),
-        # r10 fold: IVF-FLAT against the committed inverted file,
+        # IVF-FLAT against the committed inverted file,
         # nprobe=6, exact scoring inside probed cells — measured 0.925
         ("ann_ivf_topk", 0.90),
-        # r10 fold: exhaustive ADC (nprobe=16 = every cell) over the
+        # exhaustive ADC (nprobe=16 = every cell) over the
         # committed residual codes, rerank=64 — measured 0.925
         ("ann_pq_adc_topk", 0.90),
     ],

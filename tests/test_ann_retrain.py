@@ -34,7 +34,7 @@ from petfinder_database_distributor_spark.streaming.incremental import SCRATCH_R
 
 import pytest
 
-# r15 (driver pytest budget): heavy tail — two full drift->retrain
+# heavy tail — two full drift->retrain
 # lifecycles (~130 s); excluded from the default fast set, run with -m slow.
 pytestmark = pytest.mark.slow
 
@@ -186,7 +186,7 @@ def test_drift_gate_trips_and_retrain_recovers_recall(spark):
 
 def test_semdedup_guard_retrain_recovery(spark):
     """The SemDeDup pair-budget guard's named fix must be executable and
-    sufficient (round-10 verdict #4): on a corpus that outgrew its
+    sufficient: on a corpus that outgrew its
     index's cell count the guard REFUSES (Sum(|cell|^2) > budget — with
     13.5k vectors in 16 cells that holds for ANY assignment, since
     min Sum(n^2) = n^2/k > 10M), then ann_index_retrain with

@@ -1,7 +1,7 @@
 """asof_join tie determinism: several right rows sharing (key, ts) must
 always match the same row — the max of the value-column tuple — no matter
-how the shuffle delivers them (ADVICE r1: last(ignorenulls) over a window
-ordered only by (ts, side) picked an arbitrary equal-ts row)."""
+how the shuffle delivers them (last(ignorenulls) over a window ordered
+only by (ts, side) picks an arbitrary equal-ts row)."""
 
 from __future__ import annotations
 

@@ -1,8 +1,7 @@
-"""bench.py fault isolation (round-3 post-mortem: an exception in one query
-aborted the entire bench and the round lost its artifact). The timing loop
-must survive failing queries — at plan time AND at action time — record
-null + a one-line error for them, and still produce timings for everything
-else. The driver's per-round BENCH_r{N}.json depends on this behavior."""
+"""bench.py fault isolation: an exception in one query must not abort the
+whole bench and lose its record. The timing loop must survive failing
+queries — at plan time AND at action time — record null + a one-line
+error for them, and still produce timings for everything else."""
 
 from __future__ import annotations
 
@@ -28,8 +27,8 @@ def plan_time_boom(spark, sf_dir):
 def action_time_boom(spark, sf_dir):
     from pyspark.sql import functions as F
 
-    # Analyzes fine; every task throws at execution (the round-3 failure
-    # mode was this class: valid-looking plan, dead at the action).
+    # Analyzes fine; every task throws at execution (a valid-looking
+    # plan, dead at the action).
     return spark.range(10).select(
         F.assert_true(F.col("id") < 0, F.lit("dead at action")).alias("x")
     )
@@ -60,9 +59,9 @@ def test_bench_isolates_failures_and_times_the_rest(spark):
 
 
 def test_compact_summary_fits_tail_capture_and_parses(spark):
-    """Round-4 verdict #1: the driver archives only the last 2000 chars of
-    stdout, so bench must end with a < 1.8 KB self-contained JSON line
-    (total + headline + top-15 + error count) that parses on its own."""
+    """A runner that keeps only the last 2000 chars of stdout must still
+    get a parseable record, so bench ends with a < 1.8 KB self-contained
+    JSON line (total + headline + top-15 + error count)."""
     from bench import HEADLINE, compact_summary
 
     # Worst realistic case: ~100 long-named queries, all timed, plus errors.
@@ -84,9 +83,8 @@ def test_compact_summary_fits_tail_capture_and_parses(spark):
 
 
 def test_calibration_probe_records_floor_and_load(spark):
-    """Round-7 verdict #3: the r7 driver bench read 3.2x an idle re-run of
-    identical code and the artifact couldn't prove load vs regression. The
-    parsed block now carries a machine-load calibration: a fixed reference
+    """A loaded machine can read 3x an idle re-run of identical code, so
+    the record carries a machine-load calibration: a fixed reference
     job's best-of-3 floor plus os.getloadavg(), and the compact tail line
     keeps it even under the shed-to-fit loop."""
     from bench import calibration, compact_summary
@@ -113,10 +111,10 @@ def test_bench_failed_query_not_retried_in_pass_two(spark):
 
 
 def test_write_self_record_roundtrip_and_readonly(tmp_path):
-    """r15: the full per-query record lands in a JSON file the driver's
-    2000-char stdout capture can't truncate, tagged with the core count
-    it ran on; an unwritable target degrades silently (the stdout record
-    still stands)."""
+    """The full per-query record lands in a JSON file that a 2000-char
+    stdout capture can't truncate, tagged with the core count it ran on;
+    an unwritable target degrades silently (the stdout record still
+    stands)."""
     import json
 
     from bench import write_self_record

@@ -130,15 +130,15 @@ def test_validate_constraints_rule_values(spark):
         "value_non_negative", "event_type_in_domain", "value_finite",
         "value_in_range", "vec_id_unique", "value_mass_parity",
     }
-    # the non-finite contract's reporting rule (r12): clean fixture = 0
+    # the non-finite contract's reporting rule: clean fixture = 0
     assert rows["value_finite"].n_violations == 0
     # the shipped fixture is clean on these rules; the null-fixture parity
     # run (tests/test_null_robustness.py) exercises the violation paths
     assert rows["event_id_complete"].n_violations == 0
     assert rows["event_id_unique"].n_violations == 0
-    # the r14 dup-key contract's reporting rule: clean fixture = 0
+    # the dup-key contract's reporting rule: clean fixture = 0
     assert rows["vec_id_unique"].n_violations == 0
-    # the r14 aggregate-parity guard (r13 ADVICE #1): the fixture's decimal
+    # the aggregate-parity guard: the fixture's decimal
     # mass sits orders below the 2^53 wall, so the flag must be 0
     assert rows["value_mass_parity"].n_violations == 0
     assert all(r.n_checked > 0 for r in rows.values())

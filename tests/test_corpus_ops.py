@@ -80,15 +80,15 @@ def test_incremental_dedup_decision_invariants(spark):
 
 
 def test_incdedup_trigger_replay_idempotent(spark, tmp_path):
-    """r15 append-first trigger fusion: replaying a trigger (any crash
+    """Append-first trigger fusion: replaying a trigger (any crash
     between the signature append and the offset commit re-runs the whole
     foreachBatch body) must not change decision VALUES. The replayed
     run probes an index that already holds its own signatures — once
     from each attempt — and cid < bid must keep them inert; the
     decisions parquet then holds duplicate rows with IDENTICAL values,
     which the read-back dropDuplicates collapses deterministically.
-    (Pre-r15 this was a real hole: the unfiltered corpus probe leg
-    self-matched a replayed batch at Jaccard 1.)"""
+    (Deciding before the append leaves a real hole here: an unfiltered
+    corpus probe leg self-matches a replayed batch at Jaccard 1.)"""
     from petfinder_database_distributor_spark.plans.corpus_ops import (
         _incdedup_trigger,
     )

@@ -1,10 +1,9 @@
-"""Dirty-data contract sweep (round 12) — the three r11-continuation
-findings, landed and pinned.
+"""Dirty-data contract sweep: three dirt classes, pinned.
 
 The clean driver fixtures are generator-perfect: every embedding has a
 direction, every double is finite, every props string parses. Real
 100 TB corpora do not — and each of the three dirt classes below was a
-LATENT wrong-answer or job-kill path before round 12:
+LATENT wrong-answer or job-kill path before these contracts:
 
 1. **Zero-norm vectors** — cosine's norm-product division RAISES
    DIVIDE_BY_ZERO under Spark 4's default ANSI mode (DuckDB diverges to
@@ -35,7 +34,7 @@ import pytest
 
 from tests.conftest import SF_SMALL
 
-# r15 (driver pytest budget): heavy tail — dirty-fixture contract sweep (~60 s);
+# heavy tail — dirty-fixture contract sweep (~60 s);
 # all mutated-fixture robustness sweeps live behind -m slow.
 pytestmark = pytest.mark.slow
 
@@ -59,7 +58,7 @@ VECTOR_FAMILY = [
     "ann_index_group_probe",
     "dedup_semantic_semdedup",
     "stream_ann_index_append",
-    # r12 registrations that consume embeddings: the kNN graph pair
+    # further queries that consume embeddings: the kNN graph pair
     # carries the nonzero_vectors guard inside knn_graph_decisions; the
     # k-center selector needs NO guard (squared-L2 is well-defined on a
     # zero vector) and must stay parity-identical WITH the dirty rows
@@ -100,8 +99,8 @@ JSON_FAMILY = ["json_props_extract", "variant_props_extract"]
 
 @pytest.fixture(scope="module")
 def dirty_sf_dir(tmp_path_factory):
-    # fixture body moved to tests/degenerate_fixtures.py::build_dirty_fixture
-    # (round 13) so the stage-promotion gate shares the exact same dirt
+    # fixture body lives in tests/degenerate_fixtures.py::build_dirty_fixture
+    # so the stage-promotion gate shares the exact same dirt
     from tests.degenerate_fixtures import build_dirty_fixture
 
     return build_dirty_fixture(str(tmp_path_factory.mktemp("dirtysweep")))
@@ -135,7 +134,7 @@ def test_malformed_json_parity(spark, dirty_sf_dir, name):
 
 
 def test_oracle_envelope_literals_match_measure_range():
-    """Anti-drift pin (r13, regex widened r14 per advice): the finite-
+    """Anti-drift pin: the finite-
     measure contract's range bound is embedded as a literal in ~20
     oracle strings (they are plain SQL, not f-strings); every such
     literal — decimal, integer, OR scientific form — must equal
@@ -187,7 +186,7 @@ def test_zero_vectors_present_and_excluded(spark, dirty_sf_dir):
 
 
 def test_fixture_mass_inside_parity_envelope(dirty_sf_dir):
-    """The r14 aggregate-parity guard's precondition, pinned: every
+    """The aggregate-parity guard's precondition, pinned: every
     fixture's decimal-exact value mass sum(|v|) over finite in-envelope
     rows satisfies mass * 10^2 < 2^53 — the bound under which every
     DOUBLE-typed decimal-sum output (rescale contract: output scale

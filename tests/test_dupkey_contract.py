@@ -1,5 +1,5 @@
-"""Duplicate-primary-key contract sweep (round 14 — the fourth dirt
-class, PLANS.md r14 #2).
+"""Duplicate-primary-key contract sweep (the fourth dirt class, after
+the three in test_dirty_data_contracts.py).
 
 The clean driver fixtures are generator-perfect: event_id and vec_id
 are unique. A retried ingest batch on a real 100 TB corpus is not —

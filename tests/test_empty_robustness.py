@@ -1,9 +1,9 @@
-"""Empty-fixture robustness sweep (round 12, the fifth robustness program
-beside the null / unicode / extremes / dirty-data sweeps).
+"""Empty-fixture robustness sweep (the fifth robustness program beside
+the null / unicode / extremes / dirty-data sweeps).
 
 An EMPTY slice of a 100 TB corpus is a normal input — an empty date
 partition, a filtered-out shard, a first run before any data lands — yet
-the round-12 probe (tools/empty_probe.py, full 201-query coverage) found
+the empty probe (tools/empty_probe.py, full 201-query coverage) found
 EIGHT queries that crashed on it, every one a staging/commit path that
 assumed at least one row: the sentinel chunk's max() over zero staged
 files, three streams reading state their zero micro-batches never
@@ -21,12 +21,12 @@ from __future__ import annotations
 
 import pytest
 
-# r15 (driver pytest budget): heavy tail — empty-fixture sweep (~25 s);
+# heavy tail — empty-fixture sweep (~25 s);
 # all mutated-fixture robustness sweeps live behind -m slow.
 pytestmark = pytest.mark.slow
 
 
-# the eight round-12 fixes — each crashed Spark-side before
+# the eight fixed queries — each crashed Spark-side before
 FIXED = [
     "j6_dpp_join",
     "stream_session_windows",
@@ -68,9 +68,10 @@ FAMILY_SAMPLE = [
 
 @pytest.fixture(scope="module")
 def empty_sf_dir():
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from tools.empty_probe import build_empty_fixture
 
     return build_empty_fixture()
@@ -78,7 +79,7 @@ def empty_sf_dir():
 
 @pytest.fixture(scope="module")
 def one_row_sf_dir(tmp_path_factory):
-    """LIMIT 1 of every table — the other degenerate size (r12 probe: it
+    """LIMIT 1 of every table — the other degenerate size (its probe
     caught a float-residue variance divergence in embedding_dim_stats and
     the late-data oracle's row-count watermark proxy breaking down)."""
     import duckdb

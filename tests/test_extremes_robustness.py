@@ -1,5 +1,5 @@
-"""Extremes-robustness parity sweep (round-11 continuation, the third
-robustness program beside the null and unicode sweeps).
+"""Extremes-robustness parity sweep (the third robustness program beside
+the null and unicode sweeps).
 
 The clean fixtures are statistically tame (~54 tokens/doc, balanced
 vocabulary). This sweep appends adversarial documents — a 20k-token
@@ -22,8 +22,9 @@ import pytest
 
 from tests.conftest import SF_SMALL
 
-# r15 (driver pytest budget): heavy tail — the 8x-extremes robustness sweep re-runs much of the registry over mutated fixtures (~520 s);
-# excluded from the default fast set, run with -m slow.
+# heavy tail — the 8x-extremes robustness sweep re-runs much of the
+# registry over mutated fixtures (~520 s); excluded from the default fast
+# set, run with -m slow.
 pytestmark = pytest.mark.slow
 
 

@@ -4,7 +4,7 @@ stub scraping server — proves the injectable-fetcher seam carries the real
 fetcher through the same pandas-UDF plan with no plan change, including T7
 error isolation (HTTP 500 → null row, never a task failure). Pure stdlib
 (http.server + urllib in the fetcher) so it runs in every container —
-round 2's version was gated on ``requests`` and silently skipped here."""
+a version gated on ``requests`` would silently skip where it is absent."""
 
 from __future__ import annotations
 

@@ -37,7 +37,8 @@ def test_int_div_matches_duckdb_trunc_division(spark):
 
 
 def test_int_div_differs_from_floor_where_it_must(spark):
-    # the two divergence classes the round-5 advice named
+    # the two divergence classes of floor(a / b): negative dividends and
+    # dividends past 2^53
     df = spark.createDataFrame([(-401,), (2**53 + 1,)], "a long")
     rows = {
         r["a"]: (r["q"], r["fl"])

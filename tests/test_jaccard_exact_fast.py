@@ -7,7 +7,7 @@ the grid at exactly (i=bucket(a), j=bucket(b)) — a double-count would
 inflate intersection counts and a miss would drop a qualifying pair, and
 sf0.01 parity might not catch either — so this pins equivalence on
 adversarial inputs. (A prefix-filter/SSJoin variant was measured worse
-under quadratic-output stress and dropped; see PLANS.md.)"""
+under quadratic-output stress and dropped.)"""
 
 from __future__ import annotations
 

@@ -1,9 +1,9 @@
 """Loaded-dtypes contract for every driver table.
 
-Round-3 post-mortem: the testdata/pyspark combination drifted (parquet
-``timestamp[us]`` no-tz now loads as TIMESTAMP_NTZ under pyspark 4.x) and
-four queries died at plan time because ``load_table`` only normalized the
-obsolete nanos-as-long encoding. This test pins the *output* contract of
+The testdata/pyspark combination can drift: parquet ``timestamp[us]``
+no-tz loads as TIMESTAMP_NTZ under pyspark 4.x, and four queries died at
+plan time when ``load_table`` only normalized the nanos-as-long
+encoding. This test pins the *output* contract of
 ``load_table`` — the dtype of every column of every driver table — in three
 session flavors, so any future environment/testdata drift fails one named
 test before any query breaks:
@@ -52,7 +52,7 @@ EXPECTED_DTYPES: dict[str, dict[str, str]] = {
     },
     "events": {
         "event_id": "bigint",
-        "ts": "timestamp",  # THE round-3 regression: must never be ntz/bigint
+        "ts": "timestamp",  # ntz/bigint here breaks unix_micros(ts) downstream
         "user_id": "bigint",
         "event_type": "string",
         "value": "double",
@@ -96,8 +96,8 @@ def test_vanilla_session_dtypes(spark, table):
 def test_non_utc_session_instants_match_duckdb(spark):
     """load_table must self-pin UTC: under a session that starts in a non-UTC
     timezone, unix_micros over the loaded ts must still equal DuckDB's
-    epoch_us over the same naive parquet values (ADVICE r3: a tz-dependent
-    cast would silently shift epochs instead of erroring)."""
+    epoch_us over the same naive parquet values (a tz-dependent cast
+    would silently shift epochs instead of erroring)."""
     from pyspark.sql import functions as F
 
     shifted = spark.newSession()

@@ -120,7 +120,7 @@ def test_pagerank_matches_python_reference(spark):
 
 
 def test_mining_parity_with_nulls(spark, tmp_path):
-    """Regression for the round-5 review findings: NULL embeddings /
+    """Regression for NULL-input parity faults: NULL embeddings /
     vec_ids and all-NULL-text domains broke cross-engine parity (Spark
     posexplode drops NULL vectors, the oracle's count(*) kept them; NULL
     vec_id crashed the seed sort; a zero-token domain got the full cap
@@ -212,7 +212,7 @@ def test_bpe_encode_two_pass_replace_is_fixpoint(spark):
 
 def test_global_ntile_matches_window_ntile(spark):
     """The distributed two-phase ntile must be BIT-IDENTICAL to the ANSI
-    ntile window it replaced (round-10 verdict #2), including the
+    ntile window it replaced, including the
     remainder distribution (first N mod n buckets take the extra row),
     tie-breaking through the total order, and the N < n edge. Checked
     against Spark's own F.ntile across sizes that exercise every

@@ -1,4 +1,4 @@
-"""Null-robustness regression suite (round-5 registry-wide sweep).
+"""Null-robustness regression suite (registry-wide sweep).
 
 A synthetic sf0.001 layout with NULLs injected into the three "dirty
 data" tables — documents (NULL/empty text, NULL lang/source), embeddings
@@ -23,7 +23,7 @@ import pytest
 
 from tests.conftest import SF_SMALL
 
-# r15 (driver pytest budget): heavy tail — null-fixture sweep over much of the registry (~80 s);
+# heavy tail — null-fixture sweep over much of the registry (~80 s);
 # all mutated-fixture robustness sweeps live behind -m slow.
 pytestmark = pytest.mark.slow
 
@@ -98,7 +98,7 @@ SWEPT = [
     # continuous aggregate: NULL ts/type/value rows contribute to neither
     # the materialized rollup nor the open-day path
     "rollup_incremental_merge",
-    # round-6 additions: the composite scalar suite renders every NULL
+    # the composite scalar suite renders every NULL
     # through explicit coalesce('∅') / tri-state cases before checksumming;
     # the snapshot upsert excludes NULL event_id (a keyless row can't be
     # merged); the Jaccard chooser inherits tokens()' NULL-text ≡ ''
@@ -108,7 +108,7 @@ SWEPT = [
     "snapshot_merge_upsert",
     "dedup_ngram_jaccard",
     "j8_aqe_skew_join",
-    # round-7: null doc_id rows must vanish from both the batch slice and
+    # null doc_id rows must vanish from both the batch slice and
     # the index build; null text = 0 tokens (kept, adds nothing to the
     # budget); null source forms its own budget window group but stays
     # out of count(DISTINCT source)
@@ -117,7 +117,7 @@ SWEPT = [
     # null doc_id rows are excluded from the snapshot commit AND from the
     # delete-slice; null source/n_chars ride through both engines
     "snapshot_tombstone_delete",
-    # round-7 late: the format-API snapshot queries filter null ids/types
+    # the format-API snapshot queries filter null ids/types
     # at entry (null event rows never reach a commit); the classifier
     # treats NULL text as 0 tokens (filtered by n_toks > 0); the PQ path
     # excludes null id/vector rows like every vector-family query
@@ -129,21 +129,20 @@ SWEPT = [
     # null user/ts/type rows are filtered before the commit (the Morton
     # key needs both dimensions; a NULL key row would vanish silently)
     "snapshot_zorder_optimize",
-    # round-9 additions, swept green on first try (each inherits an
-    # already-pinned contract): NULL text ≡ '' + len<2 excluded by
-    # construction (perplexity), NULL user/ts excluded from the ordered
-    # stateful stream (retention), NULL id/vector excluded from the
-    # vector family (all three index queries), NULL event_type/id
+    # each of these inherits an already-pinned contract: NULL text ≡ '' +
+    # len<2 excluded by construction (perplexity), NULL user/ts excluded
+    # from the ordered stateful stream (retention), NULL id/vector excluded
+    # from the vector family (all three index queries), NULL event_type/id
     # excluded at the append source (concurrent append)
     "text_perplexity_bucket",
     "stream_retention_cohorts",
     "ann_index_probe_topk",
     "ann_index_append_probe",
-    # r10: the group-pointer probe inherits the vector family's contract
+    # the group-pointer probe inherits the vector family's contract
     "ann_index_group_probe",
     "stream_ann_index_append",
     "snapshot_concurrent_append",
-    # r10 late + r11: the interp/DSIR family inherits the perplexity
+    # the interp/DSIR family inherits the perplexity
     # contracts (NULL text ≡ '' ≡ 0 tokens; a doc with no features never
     # reaches the per-doc frame; the orphan NULL-doc_id row groups like
     # any key — its tercile position is fixed by its distinct score);

@@ -40,6 +40,19 @@ def test_every_query_has_oracle_and_doc():
         assert spec.doc.strip(), f"{name}: doc required"
 
 
+def test_registry_inventory_lists_every_query():
+    """REGISTRY.md's query column is exactly the registry, in registry
+    order (regenerate it with ``python tools/registry_inventory.py``)."""
+    import os
+    import re
+
+    from tests.conftest import REPO_ROOT
+
+    with open(os.path.join(REPO_ROOT, "REGISTRY.md")) as fh:
+        listed = re.findall(r"^\| `([^`]+)` \|", fh.read(), re.M)
+    assert listed == list(SPECS)
+
+
 @pytest.mark.sf001
 @pytest.mark.parametrize("name", NAMES)
 def test_oracle_parity_driver_scale(spark, name):

@@ -1,4 +1,4 @@
-"""The r14 integer-product overflow audit (the round's self-probe class).
+"""The integer-product overflow audit.
 
 Spark 4.x runs ANSI mode by default, so a BIGINT product that exceeds
 2^63 HARD-FAILS the whole query with ARITHMETIC_OVERFLOW (legacy
@@ -7,7 +7,7 @@ Either behavior is wrong at 100 TB, and it bites exactly where no
 cross-engine oracle ever runs — the sf0.01/sf0.1 gates can stay green
 forever over an expression that cannot execute at deployment scale.
 
-Audit sweep (r14, recorded in PLANS.md): of the engine's integer
+Audit sweep: of the engine's integer
 arithmetic, 101 sites already ran exact decimal(38,0)/HUGEINT products
 (the perplexity family, KN, PMI, JSD, Neyman, ...); the log2 kernel is
 safe by construction (mantissa < 2^31 so each square < 2^62, documented

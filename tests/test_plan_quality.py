@@ -6,14 +6,18 @@ the dedup family — the absence of any all-pairs join)."""
 from __future__ import annotations
 
 import io
+import json
 from contextlib import redirect_stdout
 
 import pytest
 
 from petfinder_database_distributor_spark.registry import load_all
 from tests.conftest import SF_SMALL
+from tests.plan_digest import DIGEST_PATH, query_digest
 
 SPECS = load_all()
+with open(DIGEST_PATH) as _fh:
+    PINNED_DIGESTS = json.load(_fh)
 
 
 def plan_of(spark, name: str) -> str:
@@ -64,9 +68,9 @@ def test_dedup_family_never_all_pairs(spark, name):
 
 
 def test_simhash_candidate_ratio_bounded(spark):
-    """Round-3 verdict #5: the old 16-bit signature blocked into ~5-bit keys
-    and made ~37% of ALL pairs candidates at sf0.01 — near-quadratic at
-    100 TB. With 60-bit signatures / 20-bit block keys we pin two bounds:
+    """A 16-bit signature blocks into ~5-bit keys and makes ~37% of ALL
+    pairs candidates at sf0.01 — near-quadratic at 100 TB. With 60-bit
+    signatures / 20-bit block keys we pin two bounds:
 
     * overall candidate ratio < 10% (was 37%): at sf0.01 the documents
       corpus is duplication-dense by construction, so most surviving
@@ -136,7 +140,7 @@ def test_simhash_candidate_ratio_bounded(spark):
 
 
 def test_dpp_prunes_fact_partitions(spark):
-    """Dynamic partition pruning (round-4 verdict #7): the date-partitioned
+    """Dynamic partition pruning: the date-partitioned
     events fact joined to a selectively-filtered broadcast calendar dim must
     carry a ``dynamicpruning`` expression in the fact scan's
     PartitionFilters — whole partitions are skipped at runtime, the third
@@ -174,7 +178,7 @@ def test_dpp_prunes_fact_partitions(spark):
 
 
 def test_simhash_tokenizer_splits_ascii_whitespace_only(spark):
-    """Round-4 advice: Python's default \\s splits on Unicode whitespace
+    """Python's default \\s splits on Unicode whitespace
     (U+00A0 NBSP — reachable via the HTML extractor's &nbsp;) but both the
     expression-side tokens() (Java regex) and the DuckDB oracle (RE2) split
     on ASCII whitespace only. 'a\\xa0b' must therefore hash as ONE token —
@@ -510,7 +514,7 @@ def test_runtime_bloom_filter_injects(spark):
 
 
 def test_no_literal_reducer_counts_in_plans():
-    """Round-5 verdict #4: no registered plan may pin a literal shuffle
+    """No registered plan may pin a literal shuffle
     partition count — the clustering loops take shuffle_partitions="auto"
     (derived from the materialized edge count, capped by the session conf)
     or None, never a magic integer that is right at one scale factor and
@@ -563,7 +567,7 @@ def test_url_canonical_dedup_single_shuffle_no_python(spark):
 
 
 def test_ref_scalar_suite_stays_jvm_side(spark):
-    """Seven folded scalar families, one driver row each: every checksum
+    """Seven folded scalar families, one checksum each: every checksum
     is a decimal partial aggregate over native expressions — no Python
     stage anywhere, no join, no window."""
     p = plan_of(spark, "ref_scalar_suite")
@@ -577,7 +581,7 @@ def test_pq_adc_never_pairs_vectors(spark):
     join corpus-by-corpus — the memory-bound path must not reintroduce an
     all-pairs vector join. The only Cross join allowed is the hinted
     16-row centroid ranking. Equi-joins carry NO mandatory broadcast hint
-    (r9 advice: luts grows with the serving batch), so the static plan may
+    (luts grows with the serving batch), so the static plan may
     legitimately show a shuffle join on (centroid_id) / (query_id) — the
     shape that survives at 100 TB — while AQE broadcasts at small scale."""
     import re
@@ -592,7 +596,7 @@ def test_ann_probe_paths_no_mandatory_broadcast_on_query_growing_frames(spark):
     """The per-query LUT / raw-query-vector sides of the ANN probe and ADC
     joins grow WITH the serving batch, so they must carry NO mandatory
     F.broadcast() hint (AQE broadcasts while small, degrades to a shuffle
-    join instead of OOMing the driver — the same rule r8 pinned for
+    join instead of OOMing the driver — the same rule as for
     market_basket/graph_triangle). The only allowed hints are on
     config-bounded frames: the 16-row centroids and the 128-row codebook."""
     # per probe path: ivf_pq_probe hints centroids (16-row crossJoin) +
@@ -622,12 +626,12 @@ def test_classifier_is_expression_only(spark):
 
 
 def test_pushdown_barrier_survives_optimizer(spark):
-    """r15: pushdown_barrier keeps filters ABOVE the projection it wraps
-    (the guide §4.4 duplication trap — a filter pushed below a Project
+    """pushdown_barrier keeps filters ABOVE the projection it wraps
+    (the duplication trap — a filter pushed below a Project
     re-inlines the column's whole expression tree into the Filter). The
     wrapper's non-determinism relies on Spark NOT constant-folding
     `rand() + 1.0 >= 0.0`; Spark 4.1 already folds the direct form
-    `rand() >= -1.0` (probed during r15), so this pin fails loudly if an
+    `rand() >= -1.0`, so this pin fails loudly if an
     upgrade learns interval arithmetic and silently re-duplicates the
     tokenize trees."""
     from pyspark.sql import functions as F
@@ -647,7 +651,7 @@ def test_pushdown_barrier_survives_optimizer(spark):
 
 
 def test_shingle_family_tokenizes_once_per_branch(spark):
-    """r15 (r14 verdict #1): the tokenize chain must appear exactly ONCE
+    """The tokenize chain must appear exactly ONCE
     per document-scan branch — not twice (InferFiltersFromGenerate's
     re-inferred size(sh)>0 filter pushed below the shingle projection)
     and not 5x (the shingle zip_with chain referencing an INLINE
@@ -781,7 +785,7 @@ def test_ann_index_probe_has_zero_training_in_plan(spark):
     and must actually read the staged index root. This is the pin for
     'no query ever pays training' — the in-line ann_ivf_pq_topk plan,
     by contrast, is allowed its checkpoint scans."""
-    # r10: the folded former-retraining forms (ann_ivf_topk IVF-FLAT,
+    # the other probes of the committed index (ann_ivf_topk IVF-FLAT,
     # ann_pq_adc_topk exhaustive ADC) owe the identical zero-training pin
     import re
 
@@ -821,8 +825,8 @@ def test_perplexity_gate_stays_jvm_side(spark):
     "name", ["text_perplexity_bucket", "text_perplexity_interp", "sample_importance_dsir"]
 )
 def test_tercile_family_window_is_partitioned(spark, name):
-    """The round-10 verdict's scale-killer, pinned fixed: the per-document
-    tercile ranking must never move the corpus into one task. The only
+    """The per-document tercile ranking must never move the corpus into
+    one task (an ntile window over the whole corpus does). The only
     data-scale Window in the plan is the within-partition row_number,
     partitioned by the range-partition id; the sole single-partition
     exchange feeds the |partitions|-row offsets frame on the broadcast
@@ -841,7 +845,7 @@ def test_tercile_family_window_is_partitioned(spark, name):
 
 
 def test_no_unpartitioned_windows_over_data_scale_frames():
-    """Source-level ban (round-10 verdict #2): an unpartitioned
+    """Source-level ban: an unpartitioned
     ``Window.orderBy(...)`` anywhere in the package funnels its whole input frame into
     one task, which is only ever acceptable over metadata-scale frames.
     Every such site must appear in the documented allowlist below — all
@@ -904,8 +908,8 @@ def test_no_unpartitioned_windows_over_data_scale_frames():
         # the corpus-sized work is the two hash aggs before it):
         ("dataset_ops.py", "sample_stratified_neyman"),
         # one-off streaming-FIXTURE staging (balanced chunk split for the
-        # micro-batch tests; never an operator plan — the r10 verdict's
-        # adjudication, now pinned by the repo-wide scan):
+        # micro-batch tests; never an operator plan, so a one-task
+        # window over its small input is fine):
         ("incremental.py", "_build_document_chunks"),
         ("incremental.py", "_build_embedding_chunks"),
     }
@@ -916,7 +920,7 @@ def test_no_unpartitioned_windows_over_data_scale_frames():
 
 
 def test_exact_jaccard_oracle_identity():
-    """The r14 oracle rewrite's executable proof (r13 verdict #3): the
+    """The exact-Jaccard oracle rewrite's executable proof: the
     candidate-bounded postings-join oracle that replaced the all-pairs
     list_intersect form (502 s -> 0.7 s at sf0.1) is RESULT-IDENTICAL —
     shingle lists are list_distinct sets, so counting shared postings
@@ -945,3 +949,22 @@ def test_exact_jaccard_oracle_identity():
     old = canonical_rows(run_oracle(retired_all_pairs, SF_SMALL))
     new = canonical_rows(run_oracle(_EXACT_JACCARD_ORACLE, SF_SMALL))
     assert old == new and len(new) > 0
+
+
+def test_plan_digest_pins_every_query():
+    """tests/plan_digest.json holds exactly the registered queries."""
+    assert sorted(PINNED_DIGESTS) == sorted(SPECS)
+
+
+@pytest.mark.parametrize("name", sorted(SPECS))
+def test_plan_digest(spark, name):
+    """Each query's plan, before it runs, matches its committed digest
+    (tests/plan_digest.py says what a digest holds). A first build in
+    this process may still stage inputs or fill a cache, firing jobs
+    the committed count leaves out, so a mismatch is checked again on a
+    second build. After an intended plan change, regenerate the file
+    with ``python -m tests.plan_digest`` and review its diff."""
+    got = query_digest(spark, SPECS[name], SF_SMALL)
+    if got != PINNED_DIGESTS.get(name):
+        got = query_digest(spark, SPECS[name], SF_SMALL)
+    assert got == PINNED_DIGESTS.get(name)

@@ -3,9 +3,9 @@ instead of launching runaway shuffles (the posture
 dedup_embedding_cosine_exact pioneered with its 100k all-pairs guard).
 
 - ngram_jaccard_pairs (uncapped): the postings self-join produces exactly
-  Σ df(s)² rows — quadratic in duplication (8x replicas → 19x wall,
-  PLANS.md). A df-count aggregate estimates the join size and refuses above
-  max_join_rows, pointing at df_cap.
+  Σ df(s)² rows — quadratic in duplication (8x replicas → 19x wall in
+  tools/scaling_probe.py). A df-count aggregate estimates the join size
+  and refuses above max_join_rows, pointing at df_cap.
 - levenshtein_neardup_counts: deletion-variant postings scale with Σ len²,
   so a document-class text column must be rejected, not silently exploded —
   SymSpell is a short-string algorithm.
@@ -93,7 +93,7 @@ def test_levenshtein_guard_disable_and_short_ok(spark):
 
 
 def test_ensure_parallelism_never_plans_or_executes(spark):
-    """Round-4 verdict #4: the old ``df.rdd.getNumPartitions()`` probe
+    """A ``df.rdd.getNumPartitions()`` probe
     physical-planned the frame, which EXECUTES any scalar-subquery guard
     already attached — callers had to remember a fragile ordering. The
     metadata-based estimator must (a) launch zero Spark jobs, (b) be safe

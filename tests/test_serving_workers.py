@@ -35,7 +35,10 @@ from petfinder_database_distributor_spark.serving.http_server import (
     serve_export,
     snapshot_body,
 )
-from petfinder_database_distributor_spark.sources.snapshot import _commit_metadata
+from petfinder_database_distributor_spark.sources.snapshot import (
+    _commit_metadata,
+    snapshot_commit_group,
+)
 from tests.test_serving_encoder import _NoRowDecode
 
 KEY = "workers-key"
@@ -352,3 +355,36 @@ def test_recreated_table_serves_its_own_rows(tmp_path):
     finally:
         httpd.shutdown()
         httpd.server_close()
+
+
+def test_uncommitted_version_is_refused(served):
+    """A manifest above the latest pointer is what a writer that died
+    before swapping ``_latest`` leaves behind. It was never committed, so
+    no reader serves it: ``snapshot_body`` and ``load_snapshot_rows``
+    raise FileNotFoundError, ``/pets?version=`` answers 404 and a group
+    commit will not pin it, while the committed versions are served and
+    pinned as before."""
+    httpd, table, _ = served
+    latest = VERSIONS - 1
+    rel = f"data/dead/{uuid.uuid4().hex}/part-00000.parquet"
+    os.makedirs(os.path.join(table, os.path.dirname(rel)))
+    dead_rows = pa.table({"k": pa.array([-1], pa.int64())})
+    pq.write_table(dead_rows, os.path.join(table, rel))
+    with open(os.path.join(table, "_manifests", "v1.json")) as fh:
+        dead = json.load(fh)
+    dead.update(version=latest + 1, files=[rel])
+    with open(os.path.join(table, "_manifests", f"v{latest + 1}.json"), "w") as fh:
+        json.dump(dead, fh)
+    with pytest.raises(FileNotFoundError):
+        snapshot_body(table, latest + 1)
+    with pytest.raises(FileNotFoundError):
+        load_snapshot_rows(table, latest + 1)
+    port = httpd.server_address[1]
+    with pytest.raises(urllib.error.HTTPError, match="404"):
+        _get(port, f"/pets?version={latest + 1}")
+    for route, version in (("/pets", None), (f"/pets?version={latest}", latest)):
+        assert _get(port, route) == (200, _reference(table, version)), route
+    root, name = os.path.split(table)
+    with pytest.raises(ValueError, match="no committed"):
+        snapshot_commit_group(root, {name: latest + 1}, base_group=None)
+    assert snapshot_commit_group(root, {name: latest}, base_group=None) == 0

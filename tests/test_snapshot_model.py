@@ -43,7 +43,7 @@ from petfinder_database_distributor_spark.sources.snapshot import (
 )
 from petfinder_database_distributor_spark.streaming.incremental import SCRATCH_ROOT
 
-# r15 (driver pytest budget): heavy tail — model-based randomized walks (~55 s);
+# heavy tail — model-based randomized walks (~55 s);
 # excluded from the default fast set, run with -m slow.
 pytestmark = pytest.mark.slow
 

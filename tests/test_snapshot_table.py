@@ -1,7 +1,7 @@
 """Manifest-committed snapshots: the commit must be all-or-nothing at every
 intermediate crash point, old versions must stay readable (time travel /
 serving-during-rewrite), and concurrent writers must conflict loudly
-instead of clobbering each other (round-5 verdict stretch #8)."""
+instead of clobbering each other."""
 
 from __future__ import annotations
 
@@ -335,7 +335,7 @@ def test_vacuum_preserves_files_reused_by_retained_manifests(spark, table_dir):
 
 
 def test_late_racer_fails_at_commit_without_clobbering(spark, table_dir):
-    """Round-6 advice (medium): the entry check alone is check-then-act
+    """The entry check alone is check-then-act
     across the whole Spark write. A racer that passed the entry check,
     finished its data write into its own unique directory, and only then
     reaches the metadata commit must fail THERE — and the winner's
@@ -384,9 +384,9 @@ def test_same_version_writers_use_distinct_data_dirs(spark, table_dir):
 
 
 def test_partitioned_write_rejects_null_partition_values(spark, table_dir):
-    """Round-6 advice (medium): NULL partition values used to vanish
-    silently (col == None is SQL NULL, matches nothing). The writer must
-    refuse the commit loudly instead."""
+    """NULL partition values would vanish silently (col == None is SQL
+    NULL, matches nothing). The writer must refuse the commit loudly
+    instead."""
     from petfinder_database_distributor_spark.sources.snapshot import (
         snapshot_write_partitioned,
     )
@@ -402,7 +402,7 @@ def test_partitioned_write_rejects_null_partition_values(spark, table_dir):
 def test_vacuum_reclaims_shared_files_after_referencing_manifests_expire(
     spark, table_dir
 ):
-    """Round-6 advice (low): a file that survived an earlier vacuum
+    """A file that survived an earlier vacuum
     because a then-retained manifest referenced it must STILL be
     reclaimable after that referencing manifest itself expires — the walk
     is keyed off the data directory's existence, not the (long-gone)
@@ -442,7 +442,7 @@ def test_vacuum_reclaims_shared_files_after_referencing_manifests_expire(
 
 
 def test_read_of_zero_file_manifest_fails_cleanly(spark, table_dir):
-    """Round-6 advice (low): a committed version whose manifest lists no
+    """A committed version whose manifest lists no
     parquet files (an empty-DataFrame commit can emit zero part files)
     must raise the same clean empty-table error as the partitioned
     reader, not an unrelated Spark no-paths failure."""
@@ -1443,7 +1443,7 @@ def test_optimistic_merge_retry_rereads_winner(spark, table_dir, monkeypatch):
 
 
 def test_vacuum_sweeps_lost_commit_attempts(spark, table_dir, monkeypatch):
-    """The race-then-vacuum path (r9 verdict #7): a losing optimistic
+    """The race-then-vacuum path: a losing optimistic
     attempt leaves staged parquet under a RETAINED version directory
     (data/v2/<loser-token>), which the expired-version walk never visits.
     snapshot_vacuum(orphan_ttl_sec=0) must remove exactly the loser's
@@ -1558,7 +1558,7 @@ def test_group_commit_atomicity_and_validation(spark, table_dir):
 
 
 def test_group_commit_forced_race_retry_rereads_winner(spark, table_dir, monkeypatch):
-    """The group-level lost-update hazard (round-10 verdict #7):
+    """The group-level lost-update hazard:
     between a group writer's base read and its pointer swap, a RIVAL
     lands a new group that bumps a DIFFERENT member. A blind retry
     would re-commit the stale member map and silently roll the rival's

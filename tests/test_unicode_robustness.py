@@ -1,4 +1,4 @@
-"""Unicode-casing parity regression (round-5 probe).
+"""Unicode-casing parity regression.
 
 The JVM lowercases with full Unicode SpecialCasing — lower('İ') is
 'i'+U+0307 and capital Σ takes the context-aware final-sigma form —
@@ -21,7 +21,7 @@ import pytest
 
 from tests.conftest import SF_SMALL
 
-# r15 (driver pytest budget): heavy tail — unicode-fixture sweep (~15 s);
+# heavy tail — unicode-fixture sweep (~15 s);
 # all mutated-fixture robustness sweeps live behind -m slow.
 pytestmark = pytest.mark.slow
 
@@ -38,7 +38,7 @@ FAMILY = [
     "search_bm25_topk",
     "text_commonness_score",
     "bpe_first_merges",
-    # r11: the perplexity/DSIR family tokenizes through the same
+    # the perplexity/DSIR family tokenizes through the same
     # portable_lower path; the pHash dedup hashes raw UTF-8 BYTES (hex
     # nibbles per byte on the oracle side), so multibyte text must
     # produce identical strips cross-engine

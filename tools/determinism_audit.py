@@ -2,7 +2,7 @@
 re-runs every query twice): every query must produce IDENTICAL canonical
 results under different shuffle partitionings. Differences reveal
 tie-dependent picks / order-dependent float accumulation — the class of
-latent parity flake the round-1 asof_join had. Streaming queries are
+latent parity flake a tie-broken asof join can carry. Streaming queries are
 excluded (they scope their own confs; covered by tests/test_streaming.py).
 
 Round-2 result: all 84 non-streaming queries OK at sf0.01 (32 vs 7
@@ -19,10 +19,13 @@ upsert).
 
 Usage: python tools/determinism_audit.py
 """
-import sys
-sys.path.insert(0, '/root/repo')
 import os
-os.chdir('/root/repo')
+import sys
+
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
+os.chdir(REPO_ROOT)
+
 from petfinder_database_distributor_spark.session import get_spark
 from petfinder_database_distributor_spark.registry import load_all
 from tests.oracle_compare import *

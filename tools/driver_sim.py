@@ -5,13 +5,12 @@ the Spark callable and its DuckDB oracle side-by-side at sf0.01 and
 compare rows/schema/value-hash via tests/oracle_compare.
 
 Usage:
+    python tools/driver_sim.py                   # entire registry
     python tools/driver_sim.py name1,name2,...   # specific queries
-    python tools/driver_sim.py all               # entire registry
-    python tools/driver_sim.py window            # first 50 (driver window)
     append --entry to also smoke entry().
 
-Exit 0 iff everything passes. Used every round before committing changes
-to any registered query (verify-skill recipe step 1).
+Exit 0 iff everything passes. Run it before committing a change to any
+registered query.
 """
 import os
 import sys
@@ -27,16 +26,11 @@ import __spark_entry__ as E  # noqa: E402
 
 from tests.oracle_compare import assert_parity, run_oracle  # noqa: E402
 
-args = sys.argv[1:]
+args = [a for a in sys.argv[1:] if a != "--entry"]
 qs, os_ = E.queries(), E.oracle_sql()
-sel = args[0] if args else "window"
-if sel == "all":
-    todo = list(qs)
-elif sel == "window":
-    todo = list(qs)[:50]
-else:
-    todo = sel.split(",")
-if "--entry" in args:
+sel = args[0] if args else "all"
+todo = list(qs) if sel == "all" else sel.split(",")
+if "--entry" in sys.argv[1:]:
     df = E.entry(spark)
     rows = df.collect()
     print(f"entry(): {len(rows)} rows, schema={[f.name for f in df.schema.fields]}")

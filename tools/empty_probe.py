@@ -1,4 +1,4 @@
-"""Empty-fixture robustness probe (round 12): run EVERY registered query
+"""Empty-fixture robustness probe: run EVERY registered query
 against a fixture where all ten tables have zero rows (same schemas), and
 report Spark-side and oracle-side crashes. An empty slice of a 100 TB
 corpus is a normal input (an empty date partition, a filtered-out shard,
@@ -15,13 +15,14 @@ fixed set + a per-family sample permanently.
 Usage: python tools/empty_probe.py
 Exit 0 iff no query crashes on either engine.
 """
+import os
 import sys
 import tempfile
 
 import duckdb
 
-sys.path.insert(0, '/root/repo')
-sys.path.insert(0, '/root/repo/tests')
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings")

@@ -1,10 +1,14 @@
 """Oracle parity at sf0.1 for queries whose oracles are tractable there —
 catches data-dependent divergences invisible at sf0.01 (longer docs, more
 ties, bigger groups)."""
-import sys, time
-sys.path.insert(0, '/root/repo')
 import os
-os.chdir('/root/repo')
+import sys
+import time
+
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
+os.chdir(REPO_ROOT)
+
 from petfinder_database_distributor_spark.session import get_spark
 from petfinder_database_distributor_spark.registry import load_all
 from tests.oracle_compare import assert_parity, run_oracle
@@ -15,17 +19,15 @@ qs = load_all()
 SF = '/root/testdata/sf0.1'
 # skip quadratic / recursive / all-pairs oracles and the staged-stream queries
 SKIP = {
-    # r14: the ENTIRE dedup_ngram_jaccard family LEFT the skip set — the
-    # flagship/baseline/salted oracle was rewritten to the
-    # candidate-bounded postings-join form (502s -> 0.7s at sf0.1, r13
-    # verdict #3) and all four (incl. _capped) verified green at sf0.1
-    # on 2026-08-17 (10.6s / 3.3s / 3.8s / 3.2s wall each, Spark+oracle).
+    # the dedup_ngram_jaccard family is NOT skipped: its oracle is the
+    # candidate-bounded postings-join form (502s -> 0.7s at sf0.1), and
+    # all four (incl. _capped) run in 3-11 s each at sf0.1.
     'dedup_minhash_lsh',
     'dedup_simhash_pairs', 'dedup_cluster_components',
     'dedup_cluster_components_labelprop', 'dedup_apply_corpus',
     'dedup_embedding_cosine', 'dedup_embedding_cosine_exact',
-    # (ann_ivf_topk left the skip set in r10: folded onto the persisted
-    # index, its sf0.1 cost is one staged probe, not a retrain)
+    # (ann_ivf_topk is not skipped: it reads the persisted index, so
+    # its sf0.1 cost is one staged probe, not a retrain)
     'ann_bruteforce_topk', 'ann_lsh_topk',
 } | {n for n in qs if n.startswith('stream_')}
 failed = []

