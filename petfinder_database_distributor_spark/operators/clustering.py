@@ -192,24 +192,30 @@ def kmeans_int8(
     # interpreted-HOF quantization — the measured dominant cost at 8×
     # data. Caching the iterate is the standard Spark shape for iterative
     # algorithms (MLlib k-means does exactly this); MEMORY_AND_DISK spills
-    # rather than OOMs at scale. Freed by the ContextCleaner once the
-    # returned plan is unreferenced.
+    # rather than OOMs at scale. Freed before returning, on every path:
+    # the returned plan recomputes the quantization from its source
+    # instead of reading a cache entry that would outlive the call for
+    # the rest of the session.
     qdf = quantize_int8(emb).persist(StorageLevel.MEMORY_AND_DISK)
-    seed_rows = qdf.orderBy("vec_id").limit(k).collect()
-    if not seed_rows:
-        # degenerate input: no vectors -> no clusters, the typed empty
-        # assignment (the k-center empty-seed contract; an empty _assign
-        # would otherwise build a zero-arm least() and fail to resolve)
+    try:
+        seed_rows = qdf.orderBy("vec_id").limit(k).collect()
+        if not seed_rows:
+            # degenerate input: no vectors -> no clusters, the typed empty
+            # assignment (the k-center empty-seed contract; an empty
+            # _assign would otherwise build a zero-arm least() and fail to
+            # resolve)
+            return emb.sparkSession.createDataFrame(
+                [], "vec_id long, cluster int, dist bigint"
+            )
+        cents = [
+            (i, list(r["q"]))
+            for i, r in enumerate(sorted(seed_rows, key=lambda r: r["vec_id"]))
+        ]
+        for _ in range(iters):
+            cents = _update(assign(qdf, cents))
+        return assign(qdf, cents).select("vec_id", "cluster", "dist")
+    finally:
         qdf.unpersist()
-        return emb.sparkSession.createDataFrame(
-            [], "vec_id long, cluster int, dist bigint"
-        )
-    cents = [
-        (i, list(r["q"])) for i, r in enumerate(sorted(seed_rows, key=lambda r: r["vec_id"]))
-    ]
-    for _ in range(iters):
-        cents = _update(assign(qdf, cents))
-    return assign(qdf, cents).select("vec_id", "cluster", "dist")
 
 
 def pagerank_integer(

@@ -145,12 +145,7 @@ def merge_into_partitioned(
         merged = existing.unionByName(updates)
     else:  # first write: table does not exist yet (or holds no data)
         merged = updates
-    w = Window.partitionBy(*key_cols).orderBy(*[F.col(c).desc() for c in order_cols])
-    winner = (
-        merged.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    winner = key_dedup(merged, key_cols, [F.col(c).desc() for c in order_cols])
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:

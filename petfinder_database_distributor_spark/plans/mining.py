@@ -105,8 +105,9 @@ SELECT vec_id, cluster::INT AS cluster, dist FROM af WHERE rn = 1
     "iterative float algorithm becomes bit-identical cross-engine. Scale "
     "shape: assignment is a pure projection (k x dim literal centroids "
     "in the expression tree — vectors never ride a join), the quantized "
-    "working set is persisted across passes (the measured dominant cost "
-    "before caching; MLlib's own iterative shape), the only shuffle per "
+    "working set is persisted across the training passes (the measured "
+    "dominant cost before caching; MLlib's own iterative shape) and freed "
+    "before the assignment frame is returned, the only shuffle per "
     "round is the bounded (k x dim)-key update agg, and driver state is "
     "k centroid rows per round (bounded-scalar class). An Arrow int64 "
     "matmul kernel twin exists for the large-k regime — bit-identical, "

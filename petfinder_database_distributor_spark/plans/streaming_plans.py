@@ -461,66 +461,30 @@ def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="T1+T3 through the manifest-committed snapshot table: each micro-"
     "batch lands as ONE atomic snapshot version via snapshot_merge (pointer-"
     "swap commit, sources/snapshot.py), so readers serve a consistent table "
-    "at every instant of the stream and the retained version chain is the "
-    "micro-batch audit log (time travel back to any trigger). The winner "
+    "at every instant of the stream, and the last two triggers' versions "
+    "are retained for time travel (older ones are vacuumed). The winner "
     "rule (latest event per user by content ordering) makes replays "
     "idempotent — at-least-once delivery, exactly-once-effective state — "
     "and the final committed version equals the batch upsert exactly, "
-    "which is what the oracle states. NULL user_id/ts rows are excluded "
-    "(keyless rows cannot merge; NULL-ts rows have no position in the "
-    "content order).",
+    "which is what the oracle states. The same sink as stream_upsert_merge "
+    "(run_upsert_stream), fed a filtered stream: NULL user_id/ts rows are "
+    "excluded (keyless rows cannot merge; NULL-ts rows have no position in "
+    "the content order).",
 )
 def stream_snapshot_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
-    from petfinder_database_distributor_spark.sources.snapshot import (
-        snapshot_merge,
-        snapshot_read,
-    )
-
     stage = stage_event_chunks(spark, sf_dir, n_chunks=4)
     tag = sf_dir.strip("/").replace("/", "_").replace(".", "_")
-    run_dir = f"{SCRATCH_ROOT}/run_snapmerge_{tag}"
-    shutil.rmtree(run_dir, ignore_errors=True)
-    table_dir = f"{run_dir}/table"
-
-    def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        cleaned = batch_df.filter(
-            F.col("user_id").isNotNull() & F.col("ts").isNotNull()
-        )
-        snapshot_merge(
-            batch_df.sparkSession,
-            table_dir,
-            cleaned,
-            key_cols=["user_id"],
-            order_cols=["ts", "event_id"],
-        )
-
-    with scoped_conf(
-        spark, spark__sql__shuffle__partitions=STREAM_SHUFFLE_PARTITIONS
-    ):
-        query = (
-            read_event_stream(spark, stage, max_files=2)
-            .writeStream.foreachBatch(commit_batch)
-            .option("checkpointLocation", f"{run_dir}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    from petfinder_database_distributor_spark.sources.snapshot import (
-        latest_version as snap_latest,
+    cleaned = read_event_stream(spark, stage, max_files=2).filter(
+        F.col("user_id").isNotNull() & F.col("ts").isNotNull()
     )
-
-    if snap_latest(table_dir) is None:
-        # zero micro-batches (empty staging): the merged state of nothing
-        # is the empty table (degenerate-input contract; the oracle's
-        # latest-per-user over zero events is empty too)
-        return spark.createDataFrame(
-            [],
-            "user_id long, last_event_id long, last_event_type string, "
-            "last_value double, last_ts_us long",
-        )
-    return snapshot_read(spark, table_dir).select(
+    final = run_upsert_stream(
+        spark,
+        cleaned,
+        run_dir=f"{SCRATCH_ROOT}/run_snapmerge_{tag}",
+        key_cols=["user_id"],
+        order_cols=["ts", "event_id"],
+    )
+    return final.select(
         "user_id",
         F.col("event_id").alias("last_event_id"),
         F.col("event_type").alias("last_event_type"),

@@ -289,13 +289,11 @@ def _encode_version(table_dir: str, manifest: dict) -> bytes:
     import pyarrow.parquet as pq
 
     from petfinder_database_distributor_spark.sources.snapshot import (
+        _dead_keys,
         _manifest_files,
-        load_tombstone_keys,
     )
 
-    tombs = manifest.get("tombstones", [])
-    key_cols = manifest["key_cols"] if tombs else []
-    dead = set(load_tombstone_keys(table_dir, tombs, key_cols))
+    key_cols, dead = _dead_keys(table_dir, manifest)
     count, fragments = 0, []
     for rel in _manifest_files(manifest):
         # ParquetFile reads the one file without read_table's dataset
@@ -325,9 +323,9 @@ def load_snapshot_rows(table_dir: str, version: int | None = None) -> list[dict]
     import pyarrow.parquet as pq
 
     from petfinder_database_distributor_spark.sources.snapshot import (
+        _dead_keys,
         _manifest_files,
         live_key_mask,
-        load_tombstone_keys,
         read_manifest,
         resolve_version,
     )
@@ -339,12 +337,10 @@ def load_snapshot_rows(table_dir: str, version: int | None = None) -> list[dict]
     rows: list[dict] = []
     for rel in _manifest_files(manifest):
         rows.extend(pq.read_table(os.path.join(table_dir, rel)).to_pylist())
-    tombs = manifest.get("tombstones", [])
-    if tombs:
+    key_cols, dead = _dead_keys(table_dir, manifest)
+    if dead:
         # merge-on-read deletes (snapshot_delete): drop tombstoned keys
         # exactly like the Spark reader's anti-join
-        key_cols = manifest["key_cols"]
-        dead = set(load_tombstone_keys(table_dir, tombs, key_cols))
         live = live_key_mask((tuple(r[k] for k in key_cols) for r in rows), dead)
         rows = [r for r, keep in zip(rows, live) if keep]
     return rows

@@ -63,6 +63,9 @@ import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from petfinder_database_distributor_spark.operators.dedup import key_dedup
 
 
 class SnapshotConflictError(RuntimeError):
@@ -417,6 +420,119 @@ def bloom_prune_files(table_dir: str, manifest: dict, col: str, values) -> list[
     return kept
 
 
+def _stage(
+    table_dir: str, df: DataFrame, kind: str, version: int, part: str | None = None
+) -> list[str]:
+    """Write ``df`` as parquet under a writer-unique
+    ``{kind}/v{version}/{token}/`` directory (``kind`` is ``data`` or
+    ``tombstones``; a partition value ``part`` adds a subdirectory) and
+    return its part files relative to the table, sorted: the one data
+    write of every library writer. Nothing references the directory
+    until a manifest names its files, and no concurrent writer that
+    derived the same version number can ever clobber it (distinct
+    tokens)."""
+    rel_dir = f"{kind}/v{version}/{uuid.uuid4().hex[:12]}"
+    if part is not None:
+        rel_dir = f"{rel_dir}/{part}"
+    path = os.path.join(table_dir, rel_dir)
+    df.write.mode("overwrite").parquet(path)
+    return sorted(
+        f"{rel_dir}/{name}" for name in os.listdir(path) if name.endswith(".parquet")
+    )
+
+
+def _append_columns(prev: dict, schema: dict, evolve_schema: bool) -> list[str]:
+    """The table's column order once a batch of ``schema`` (a
+    :func:`_schema_dict`) is appended to the version ``prev``, or
+    ValueError. Appends target flat tables. Without evolution the batch
+    has exactly the table's columns; with it (additive evolution, the
+    public table formats' add-column rule) the batch carries every
+    existing column -- old files NULL-backfill the columns they predate,
+    but existing rows can never grow a value for a dropped one -- and new
+    columns go at the end. Same-name columns never change type."""
+    if "partitions" in prev:
+        raise ValueError(
+            "snapshot append targets flat tables; partitioned tables"
+            " append through snapshot_merge_partitioned (per-partition"
+            " manifest entries must stay partition-keyed)"
+        )
+    old_cols = list(prev["columns"])
+    cols = [f["name"] for f in schema["fields"]]
+    if evolve_schema:
+        missing = [c for c in old_cols if c not in cols]
+        if missing:
+            raise ValueError(
+                f"schema evolution is additive: append is missing"
+                f" existing columns {missing}"
+            )
+    elif cols != old_cols:
+        raise ValueError(
+            f"append schema mismatch: table has {old_cols}, append supplied"
+            f" {cols} (evolve the schema to add columns: evolve_schema=True,"
+            ' or option("evolveSchema", "true") on the format writer)'
+        )
+    if "schema" in prev:
+        old_types = {f["name"]: f["type"] for f in prev["schema"]["fields"]}
+        clashes = [
+            f["name"]
+            for f in schema["fields"]
+            if f["name"] in old_types and f["type"] != old_types[f["name"]]
+        ]
+        if clashes:
+            raise ValueError(
+                f"append cannot change column types: {clashes} differ"
+                " from the committed schema"
+            )
+    return old_cols + [c for c in cols if c not in old_cols]
+
+
+def _file_manifest(
+    table_dir: str,
+    prev: dict | None,
+    version: int,
+    schema: dict,
+    new_files: list[str],
+    evolve_schema: bool = False,
+    stats_cols: list[str] | None = None,
+    bloom_cols: list[str] | None = None,
+) -> dict:
+    """The manifest of ``version`` committing ``new_files``, written with
+    the batch schema ``schema`` (a :func:`_schema_dict`): the whole table
+    when ``prev`` is None, else an append to ``prev`` under
+    :func:`_append_columns`'s rules that carries its files, tombstones,
+    zone maps and bloom index forward. Zone maps (``stats_cols``) and
+    bloom sidecars are collected for the new files only; an append
+    indexes ``prev``'s ``bloom_cols``, since bloom indexing is a table
+    property once declared. The one manifest builder of
+    :func:`snapshot_write`, :func:`snapshot_append` and the ``snapshot``
+    format writer."""
+    if prev is None:
+        manifest = {"version": version, "files": list(new_files)}
+        columns = [f["name"] for f in schema["fields"]]
+    else:
+        columns = _append_columns(prev, schema, evolve_schema)
+        manifest = _carry_forward(prev)
+        manifest["version"] = version
+        manifest["files"] = list(prev["files"]) + new_files
+        bloom_cols = prev.get("bloom_cols")
+    fields = {f["name"]: f for f in schema["fields"]}
+    manifest["n_files"] = len(manifest["files"])
+    manifest["columns"] = columns
+    manifest["schema"] = {**schema, "fields": [fields[c] for c in columns]}
+    if stats_cols:
+        manifest["file_stats"] = {
+            **manifest.get("file_stats", {}),
+            **_collect_file_stats(table_dir, new_files, stats_cols),
+        }
+    if bloom_cols:
+        manifest["file_blooms"] = {
+            **manifest.get("file_blooms", {}),
+            **_collect_file_blooms(table_dir, new_files, bloom_cols),
+        }
+        manifest["bloom_cols"] = list(bloom_cols)
+    return manifest
+
+
 def snapshot_write(
     spark: SparkSession,
     table_dir: str,
@@ -442,31 +558,11 @@ def snapshot_write(
     # lock after the data write.
     current = _check_base(table_dir, base_version)
     version = (current if current is not None else -1) + 1
-    token = uuid.uuid4().hex[:12]
-    data_dir = os.path.join(table_dir, "data", f"v{version}", token)
-    # Immutable writer-unique directory: nothing references it until the
-    # manifest and pointer land, and no concurrent writer that derived
-    # the same version number can ever clobber it (distinct tokens).
-    df.write.mode("overwrite").parquet(data_dir)
-    files = sorted(
-        f"data/v{version}/{token}/{name}"
-        for name in os.listdir(data_dir)
-        if name.endswith(".parquet")
+    files = _stage(table_dir, df, "data", version)
+    manifest = _file_manifest(
+        table_dir, None, version, _schema_dict(df.schema), files,
+        stats_cols=stats_cols, bloom_cols=bloom_cols,
     )
-    manifest = {
-        "version": version,
-        "files": files,
-        "n_files": len(files),
-        "columns": df.columns,
-        "schema": _schema_dict(df),
-    }
-    if stats_cols:
-        manifest["file_stats"] = _collect_file_stats(table_dir, files, stats_cols)
-    if bloom_cols:
-        manifest["file_blooms"] = _collect_file_blooms(
-            table_dir, files, bloom_cols
-        )
-        manifest["bloom_cols"] = list(bloom_cols)
     if extra_manifest:
         manifest.update(extra_manifest)
     manifest.setdefault("operation", "write")
@@ -474,39 +570,59 @@ def snapshot_write(
     return version
 
 
-def _schema_dict(df: DataFrame) -> dict:
-    """The DataFrame's schema as a JSON-able dict for the manifest, with
-    every field forced nullable: files committed BEFORE a column existed
+def _schema_dict(schema) -> dict:
+    """A StructType as a JSON-able dict for the manifest, with every
+    field forced nullable: files committed BEFORE a column existed
     legitimately surface NULL for it, so the table-level contract must be
     nullable regardless of what one writer's frame claimed."""
-    d = json.loads(df.schema.json())
+    d = json.loads(schema.json())
     for field in d.get("fields", []):
         field["nullable"] = True
     return d
 
 
-def _manifest_reader(spark: SparkSession, manifest: dict):
-    """A parquet reader pinned to the manifest's recorded schema when one
-    exists (older manifests predate schema recording and fall back to
-    footer inference). The manifest is the single schema authority: no
-    per-file footer merging at read time — O(1) metadata regardless of
-    file count — and files written before a schema-evolving append
-    surface NULL for the columns they predate, by name-based parquet
-    column resolution."""
-    if "schema" in manifest:
-        from pyspark.sql.types import StructType
-
-        return spark.read.schema(StructType.fromJson(manifest["schema"]))
-    return spark.read
+def _resolved(table_dir: str, version: int | None) -> tuple[int, dict]:
+    """The committed version a reader serves (:func:`resolve_version`)
+    and its manifest; FileNotFoundError for an empty or absent table."""
+    v = resolve_version(table_dir, version)
+    if v is None:
+        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
+    return v, read_manifest(table_dir, v)
 
 
-def _apply_tombstones(
-    spark: SparkSession, table_dir: str, manifest: dict, df: DataFrame
+def _scan(
+    spark: SparkSession, table_dir: str, manifest: dict, rels: list[str]
 ) -> DataFrame:
-    """Merge-on-read deletes: anti-join the manifest's accumulated
-    tombstone keys (committed by :func:`snapshot_delete`) out of the
-    scan. No-op for manifests without tombstones, so pre-delete readers
-    pay nothing."""
+    """The files ``rels`` of a committed version as one frame: the one
+    scan of every Spark reader. The manifest is the single schema
+    authority (older manifests predate schema recording and fall back to
+    footer inference): no per-file footer merging at read time, and files
+    written before a schema-evolving append surface NULL for the columns
+    they predate, by name-based parquet column resolution. Merge-on-read
+    deletes: the version's accumulated tombstone keys (committed by
+    :func:`snapshot_delete`) are anti-joined out. No files -- an empty
+    commit lists none, or a reader pruned them all -- gives a 0-row frame
+    of the table's schema."""
+    from pyspark.sql.types import StructType
+
+    schema = manifest.get("schema")
+    if not rels:
+        if schema is not None:
+            return spark.createDataFrame([], StructType.fromJson(schema))
+        every = _manifest_files(manifest)
+        if not every:
+            raise FileNotFoundError(
+                f"snapshot v{manifest.get('version')} of {table_dir} has no"
+                " data files (empty table) and predates schema recording"
+                " — no schema to serve an empty frame from"
+            )
+        return spark.read.parquet(
+            *[os.path.join(table_dir, rel) for rel in every]
+        ).limit(0)
+    reader = spark.read if schema is None else spark.read.schema(
+        StructType.fromJson(schema)
+    )
+    df = reader.parquet(*[os.path.join(table_dir, rel) for rel in rels])
     tombs = manifest.get("tombstones", [])
     if not tombs:
         return df
@@ -545,6 +661,19 @@ def load_tombstone_keys(
     return keys
 
 
+def _dead_keys(table_dir: str, manifest: dict) -> tuple[list[str], set]:
+    """A version's delete set for the Spark-free readers (serving's
+    encoder and decoder, the snapshot data source's batch scan): its key
+    columns and the set of its tombstoned key tuples, to test with
+    :func:`live_key_mask`. ``([], set())`` for a version without
+    deletes."""
+    tombs = manifest.get("tombstones", [])
+    if not tombs:
+        return [], set()
+    key_cols = manifest["key_cols"]
+    return key_cols, set(load_tombstone_keys(table_dir, tombs, key_cols))
+
+
 def live_key_mask(keys, dead: set) -> list[bool]:
     """For each key tuple of ``keys``, whether no tombstone key tuple of
     ``dead`` equals it, as in :func:`snapshot_read`'s anti-join: the one
@@ -577,31 +706,8 @@ def snapshot_read(
     time travel). Resolves pointer → manifest → explicit file list, so
     uncommitted job output can never leak into the scan. Tombstoned rows
     (merge-on-read deletes) are anti-joined out."""
-    v = resolve_version(table_dir, version)
-    if v is None:
-        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
-    manifest = read_manifest(table_dir, v)
-    paths = [os.path.join(table_dir, rel) for rel in _manifest_files(manifest)]
-    if not paths:
-        # An empty DataFrame commit lists zero part files (only *.parquet
-        # names are manifested), but the manifest records the committed
-        # schema — serve a 0-row frame with exactly that schema, the same
-        # contract snapshot_read_since already honors. Only pre-schema-
-        # recording manifests have nothing to serve an empty frame from.
-        if "schema" in manifest:
-            from pyspark.sql.types import StructType
-
-            return spark.createDataFrame(
-                [], StructType.fromJson(manifest["schema"])
-            )
-        raise FileNotFoundError(
-            f"snapshot v{v} of {table_dir} has no data files (empty"
-            " table) and predates schema recording — no schema to serve"
-            " an empty frame from"
-        )
-    return _apply_tombstones(
-        spark, table_dir, manifest, _manifest_reader(spark, manifest).parquet(*paths)
-    )
+    _v, manifest = _resolved(table_dir, version)
+    return _scan(spark, table_dir, manifest, _manifest_files(manifest))
 
 
 def snapshot_delete(
@@ -639,15 +745,11 @@ def snapshot_delete(
             f" delete supplied {key_cols}"
         )
     version = current + 1
-    token = uuid.uuid4().hex[:12]
-    tdir = os.path.join(table_dir, "tombstones", f"v{version}", token)
-    keys_df.select(*key_cols).dropDuplicates(key_cols).write.mode(
-        "overwrite"
-    ).parquet(tdir)
-    tfiles = sorted(
-        f"tombstones/v{version}/{token}/{n}"
-        for n in os.listdir(tdir)
-        if n.endswith(".parquet")
+    tfiles = _stage(
+        table_dir,
+        keys_df.select(*key_cols).dropDuplicates(key_cols),
+        "tombstones",
+        version,
     )
     manifest = _carry_forward(prev)  # files/partitions forward UNCHANGED
     manifest["version"] = version
@@ -688,80 +790,17 @@ def snapshot_append(
     if current is None:
         return snapshot_write(spark, table_dir, df)
     prev = read_manifest(table_dir, current)
-    if "partitions" in prev:
-        raise ValueError(
-            "snapshot_append targets flat tables; partitioned tables"
-            " append through snapshot_merge_partitioned (per-partition"
-            " manifest entries must stay partition-keyed)"
-        )
-    old_cols = list(prev["columns"])
-    if evolve_schema:
-        # Additive evolution only: the batch must carry every existing
-        # column (old files can be NULL-backfilled for columns they
-        # predate; existing rows can never grow a value for a column the
-        # batch dropped), same-name columns must keep their type, and
-        # the table's column order stays stable with new columns at the
-        # end — the add-column semantics of the public table formats.
-        missing = [c for c in old_cols if c not in df.columns]
-        if missing:
-            raise ValueError(
-                f"schema evolution is additive: append is missing"
-                f" existing columns {missing}"
-            )
-        df = df.select(
-            *old_cols, *[c for c in df.columns if c not in old_cols]
-        )
-    elif list(df.columns) != old_cols:
-        raise ValueError(
-            f"append schema mismatch: table has {prev['columns']},"
-            f" append supplied {list(df.columns)}"
-            " (pass evolve_schema=True to add columns)"
-        )
-    if "schema" in prev:
-        # Same-name columns keep their committed type in BOTH paths — a
-        # plain append with a drifted type must not silently rewrite the
-        # table's schema authority.
-        old_types = {f["name"]: f["type"] for f in prev["schema"]["fields"]}
-        clashes = [
-            f["name"]
-            for f in _schema_dict(df)["fields"]
-            if f["name"] in old_types and f["type"] != old_types[f["name"]]
-        ]
-        if clashes:
-            raise ValueError(
-                f"append cannot change column types: {clashes} differ"
-                " from the committed schema"
-            )
+    schema = _schema_dict(df.schema)
+    # the append rules are checked before any data is written
+    columns = _append_columns(prev, schema, evolve_schema)
+    if columns != df.columns:
+        df = df.select(*columns)
     version = current + 1
-    token = uuid.uuid4().hex[:12]
-    data_dir = os.path.join(table_dir, "data", f"v{version}", token)
-    df.write.mode("overwrite").parquet(data_dir)
-    new_files = sorted(
-        f"data/v{version}/{token}/{name}"
-        for name in os.listdir(data_dir)
-        if name.endswith(".parquet")
+    new_files = _stage(table_dir, df, "data", version)
+    manifest = _file_manifest(
+        table_dir, prev, version, schema, new_files, evolve_schema, stats_cols
     )
-    manifest = _carry_forward(prev)
-    manifest["version"] = version
-    manifest["files"] = list(prev["files"]) + new_files
-    manifest["n_files"] = len(manifest["files"])
-    manifest["columns"] = list(df.columns)
-    manifest["schema"] = _schema_dict(df)
     manifest["operation"] = "append"
-    if stats_cols:
-        merged_stats = dict(prev.get("file_stats", {}))
-        merged_stats.update(
-            _collect_file_stats(table_dir, new_files, stats_cols)
-        )
-        manifest["file_stats"] = merged_stats
-    if prev.get("bloom_cols"):
-        # bloom indexing is a TABLE property once declared: every append
-        # keeps the lookup contract or the skipping silently weakens
-        merged_blooms = dict(prev.get("file_blooms", {}))
-        merged_blooms.update(
-            _collect_file_blooms(table_dir, new_files, prev["bloom_cols"])
-        )
-        manifest["file_blooms"] = merged_blooms
     _commit_metadata(table_dir, version, current, manifest)
     return version
 
@@ -837,7 +876,7 @@ def snapshot_merge(
     return snapshot_write(
         spark,
         table_dir,
-        _winner(merged, key_cols, order_cols),
+        key_dedup(merged, key_cols, [F.col(c).desc() for c in order_cols]),
         base_version=base,
         extra_manifest={"operation": "merge"},
         # bloom indexing is a table property: a rewrite re-derives the
@@ -1240,12 +1279,9 @@ def snapshot_read_since(
     version still apply (a delivered-then-deleted row is NOT re-delivered
     nor resurrected here — delete visibility also belongs to
     :func:`snapshot_diff`)."""
-    v = resolve_version(table_dir, version)
-    if v is None:
-        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
+    v, manifest = _resolved(table_dir, version)
     since_version = resolve_version(table_dir, since_version)
     old_files = set(_manifest_files(read_manifest(table_dir, since_version)))
-    manifest = read_manifest(table_dir, v)
     new_files = _manifest_files(manifest)
     dropped = old_files.difference(new_files)
     if dropped:
@@ -1256,13 +1292,9 @@ def snapshot_read_since(
             " increments are undefined; use snapshot_diff for keyed"
             " row-level changes"
         )
-    delta = [f for f in new_files if f not in old_files]
-    if not delta:
-        return snapshot_read(spark, table_dir, version=v).limit(0)
-    df = _manifest_reader(spark, manifest).parquet(
-        *[os.path.join(table_dir, rel) for rel in delta]
+    return _scan(
+        spark, table_dir, manifest, [f for f in new_files if f not in old_files]
     )
-    return _apply_tombstones(spark, table_dir, manifest, df)
 
 
 def prune_files(manifest: dict, col: str, lo, hi) -> list[str]:
@@ -1300,26 +1332,9 @@ def snapshot_read_pruned(
     are absent. The exact predicate is re-applied on the survivors, so
     results are correct whatever the stats say; rows with NULL ``col``
     are excluded (the predicate is a range)."""
-    v = resolve_version(table_dir, version)
-    if v is None:
-        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
-    manifest = read_manifest(table_dir, v)
-    kept = prune_files(manifest, col, lo, hi)
-    from pyspark.sql import functions as F
-
-    if not kept:
-        if "schema" in manifest:
-            from pyspark.sql.types import StructType
-
-            return spark.createDataFrame(
-                [], StructType.fromJson(manifest["schema"])
-            )
-        return snapshot_read(spark, table_dir, version=v).limit(0)
-    df = _manifest_reader(spark, manifest).parquet(
-        *[os.path.join(table_dir, rel) for rel in kept]
-    )
-    df = df.filter(F.col(col).between(F.lit(lo), F.lit(hi)))
-    return _apply_tombstones(spark, table_dir, manifest, df)
+    _v, manifest = _resolved(table_dir, version)
+    df = _scan(spark, table_dir, manifest, prune_files(manifest, col, lo, hi))
+    return df.filter(F.col(col).between(F.lit(lo), F.lit(hi)))
 
 
 def snapshot_diff(
@@ -1347,8 +1362,6 @@ def snapshot_diff(
     (:func:`snapshot_read_since`) instead. Tombstones apply through
     ``snapshot_read``, so a merge-on-read delete surfaces as a 'delete'
     change without any special-casing."""
-    from pyspark.sql import functions as F
-
     old = snapshot_read(spark, table_dir, version=v_from)
     new = snapshot_read(spark, table_dir, version=v_to)
     val_cols = [c for c in new.columns if c not in key_cols]
@@ -1431,17 +1444,12 @@ def snapshot_write_partitioned(
             f" {partition_col!r}; partition values key the manifest and"
             " must be non-null — filter or fill them before committing"
         )
-    token = uuid.uuid4().hex[:12]
     for val in values:
         # bounded by the BATCH's distinct partition values (the same
         # driver-side bound merge_into_partitioned documents); each
         # partition writes to its own writer-unique immutable directory
-        sub = os.path.join(table_dir, "data", f"v{version}", token, str(val))
-        df.filter(df[partition_col] == val).write.mode("overwrite").parquet(sub)
-        partitions[str(val)] = sorted(
-            f"data/v{version}/{token}/{val}/{n}"
-            for n in os.listdir(sub)
-            if n.endswith(".parquet")
+        partitions[str(val)] = _stage(
+            table_dir, df.filter(df[partition_col] == val), "data", version, str(val)
         )
     manifest = {
         "version": version,
@@ -1449,7 +1457,7 @@ def snapshot_write_partitioned(
         "partitions": partitions,
         "n_files": sum(len(v) for v in partitions.values()),
         "columns": df.columns,
-        "schema": _schema_dict(df),
+        "schema": _schema_dict(df.schema),
         "operation": "write-partitioned" if reuse is None else "merge-partitioned",
     }
     _commit_metadata(table_dir, version, base_version, manifest)
@@ -1466,39 +1474,11 @@ def snapshot_read_partitioned(
     at MANIFEST level — the file list never includes other partitions, so
     pruning costs zero I/O (Iceberg-style metadata pruning: at 100 TB the
     scan starts from exactly the needed files, no directory listing)."""
-    v = resolve_version(table_dir, version)
-    if v is None:
-        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
-    manifest = read_manifest(table_dir, v)
+    _v, manifest = _resolved(table_dir, version)
     parts = manifest["partitions"]
     keys = [str(x) for x in values] if values is not None else list(parts)
-    paths = [
-        os.path.join(table_dir, rel)
-        for k in keys
-        if k in parts
-        for rel in parts[k]
-    ]
-    if not paths:  # empty selection — preserve schema via an empty frame
-        if "schema" in manifest:
-            from pyspark.sql.types import StructType
-
-            return spark.createDataFrame(
-                [], StructType.fromJson(manifest["schema"])
-            )
-        all_paths = [
-            os.path.join(table_dir, rel)
-            for fs in parts.values()
-            for rel in fs
-        ]
-        if not all_paths:
-            raise FileNotFoundError(
-                f"snapshot v{v} of {table_dir} has no data files (empty"
-                " table) and predates schema recording — no schema to"
-                " serve an empty frame from"
-            )
-        return spark.read.parquet(*all_paths).limit(0)
-    return _apply_tombstones(
-        spark, table_dir, manifest, _manifest_reader(spark, manifest).parquet(*paths)
+    return _scan(
+        spark, table_dir, manifest, [rel for k in keys if k in parts for rel in parts[k]]
     )
 
 
@@ -1522,7 +1502,9 @@ def snapshot_merge_partitioned(
     base = latest_version(table_dir)
     if base is None:
         return snapshot_write_partitioned(
-            spark, table_dir, _winner(updates, key_cols, order_cols),
+            spark,
+            table_dir,
+            key_dedup(updates, key_cols, [F.col(c).desc() for c in order_cols]),
             partition_col, base_version=None,
         )
     affected = [
@@ -1531,7 +1513,9 @@ def snapshot_merge_partitioned(
     existing = snapshot_read_partitioned(
         spark, table_dir, version=base, values=affected
     )
-    merged = _winner(existing.unionByName(updates), key_cols, order_cols)
+    merged = key_dedup(
+        existing.unionByName(updates), key_cols, [F.col(c).desc() for c in order_cols]
+    )
     old_parts = read_manifest(table_dir, base)["partitions"]
     reuse = {
         k: files
@@ -1541,18 +1525,6 @@ def snapshot_merge_partitioned(
     return snapshot_write_partitioned(
         spark, table_dir, merged, partition_col,
         base_version=base, reuse=reuse,
-    )
-
-
-def _winner(df: DataFrame, key_cols: list[str], order_cols: list[str]) -> DataFrame:
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    w = Window.partitionBy(*key_cols).orderBy(*[F.col(c).desc() for c in order_cols])
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
     )
 
 

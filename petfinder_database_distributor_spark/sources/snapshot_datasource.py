@@ -199,14 +199,13 @@ def make_snapshot_datasource():
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import from_arrow_schema
 
+        from petfinder_database_distributor_spark.sources.snapshot import (
+            _manifest_files,
+        )
+
         first = _manifest_files(manifest)[0]
         arrow = pq.read_schema(os.path.join(table_dir, first))
         return from_arrow_schema(arrow).json()
-
-    def _manifest_files(manifest):
-        if "partitions" in manifest:
-            return [f for fs in manifest["partitions"].values() for f in fs]
-        return list(manifest["files"])
 
     # ---------------------------------------------------------------- reader
 
@@ -285,6 +284,7 @@ def make_snapshot_datasource():
 
         def _kept_files(self):
             from petfinder_database_distributor_spark.sources.snapshot import (
+                _manifest_files,
                 prune_files,
             )
 
@@ -331,12 +331,10 @@ def make_snapshot_datasource():
 
         def partitions(self):
             from petfinder_database_distributor_spark.sources.snapshot import (
-                load_tombstone_keys,
+                _dead_keys,
             )
 
-            tombs = self.manifest.get("tombstones", [])
-            key_cols = self.manifest["key_cols"] if tombs else []
-            tomb_keys = load_tombstone_keys(self.table_dir, tombs, key_cols)
+            key_cols, tomb_keys = _dead_keys(self.table_dir, self.manifest)
             return [
                 FileScan(self.table_dir, rel, self.schema_json, tomb_keys, key_cols)
                 for rel in self._kept_files()
@@ -367,7 +365,6 @@ def make_snapshot_datasource():
 
             self.table_dir = table_dir
             self.schema_json = schema.json()
-            self.columns = [f.name for f in schema.fields]
             self.overwrite = overwrite
             self.token = uuid.uuid4().hex[:12]
             self.evolve = str(options.get("evolveschema", "false")).lower() == "true"
@@ -429,32 +426,35 @@ def make_snapshot_datasource():
 
         def _commit_staged(self, staged, extra=None, batch_id=None,
                            txn_app_id=None):
-            """Publish the staged file set as the next version. ``extra``
-            lands in the manifest verbatim; ``batch_id`` + ``txn_app_id``
-            (streaming) make the commit IDEMPOTENT per WRITER IDENTITY:
-            the manifest carries a ``stream_txn`` map of app id -> last
-            committed batch id, and a replayed epoch (same app id, batch
-            id not newer) is dropped with its staged files deleted — the
-            public txnAppId+txnVersion pattern. A DIFFERENT query
-            writing into the same table (fresh checkpoint => fresh app
-            id) always commits; keying on the batch id alone would
-            silently drop its early epochs (data loss, not replay
-            suppression)."""
+            """Publish the staged file set as the next version, with the
+            manifest :func:`..sources.snapshot._file_manifest` builds for
+            ``snapshot_write`` (overwrite) and ``snapshot_append``
+            (append): the same schema rules, carry-forward, zone maps and
+            bloom sidecars. ``extra`` lands in the manifest verbatim;
+            ``batch_id`` + ``txn_app_id`` (streaming) make the commit
+            IDEMPOTENT per WRITER IDENTITY: the manifest carries a
+            ``stream_txn`` map of app id -> last committed batch id, and a
+            replayed epoch (same app id, batch id not newer) is dropped
+            with its staged files deleted — the public txnAppId+txnVersion
+            pattern. A DIFFERENT query writing into the same table (fresh
+            checkpoint => fresh app id) always commits; keying on the
+            batch id alone would silently drop its early epochs (data
+            loss, not replay suppression)."""
+            import contextlib
             import json
             import os
 
             from petfinder_database_distributor_spark.sources.snapshot import (
                 SnapshotConflictError,
-                _collect_file_stats,
                 _commit_metadata,
+                _file_manifest,
+                _schema_dict,
                 latest_version,
                 read_manifest,
             )
 
             os.makedirs(os.path.join(self.table_dir, "_manifests"), exist_ok=True)
-            schema_dict = json.loads(self.schema_json)
-            for f in schema_dict.get("fields", []):
-                f["nullable"] = True  # table-level contract, as snapshot_write
+            schema = _schema_dict(StructType.fromJson(json.loads(self.schema_json)))
             for _attempt in range(5):
                 base = latest_version(self.table_dir)
                 prev = (
@@ -476,43 +476,8 @@ def make_snapshot_datasource():
                         return
                     stream_txn[txn_app_id] = batch_id
                 version = (base if base is not None else -1) + 1
-                home = os.path.join(
-                    self.table_dir, "data", f"v{version}", self.token
-                )
-                rel_new = [f"data/v{version}/{self.token}/{n}" for n in staged]
-                manifest = {
-                    "version": version,
-                    "files": rel_new,
-                    "columns": list(self.columns),
-                    "schema": schema_dict,
-                    "operation": "overwrite" if self.overwrite else "append",
-                }
-                if not self.overwrite and prev is not None:
-                    if "partitions" in prev:
-                        raise ValueError(
-                            "snapshot format append targets flat tables;"
-                            " partitioned tables go through"
-                            " snapshot_merge_partitioned"
-                        )
-                    self._check_schema(prev)
-                    manifest["files"] = list(prev["files"]) + rel_new
-                    if not self.evolve and "schema" in prev:
-                        # without evolution the committed schema stays
-                        # authoritative (append can't reorder/extend it)
-                        manifest["schema"] = prev["schema"]
-                        manifest["columns"] = prev["columns"]
-                    for carried in ("tombstones", "key_cols"):
-                        if carried in prev:
-                            manifest[carried] = prev[carried]
-                    if "file_stats" in prev:
-                        manifest["file_stats"] = dict(prev["file_stats"])
-                if stream_txn and not self.overwrite:
-                    # carried even on non-streaming appends, so a batch
-                    # append interleaved with a streaming sink doesn't
-                    # reset the sink's idempotence record
-                    manifest["stream_txn"] = stream_txn
-                if extra:
-                    manifest.update(extra)
+                rel_home = f"data/v{version}/{self.token}"
+                home = os.path.join(self.table_dir, rel_home)
                 if staged:  # an empty epoch commits metadata only
                     os.makedirs(home, exist_ok=True)
                     for n in staged:
@@ -522,31 +487,42 @@ def make_snapshot_datasource():
                         )
                 # From here until the metadata commit lands, the staged
                 # files sit under data/v{N}/ where only this manifest
-                # would reference them: ANY failure (stats collection,
-                # manifest I/O, conflict) must move them back to
-                # _staging, or abort() can never find them and they are
-                # permanently orphaned under a version directory.
+                # would reference them: ANY failure (schema rules, stats
+                # or bloom collection, manifest I/O, conflict) must move
+                # them back to _staging, or abort() can never find them
+                # and they are permanently orphaned under a version
+                # directory.
                 try:
-                    if self.stats_cols and staged:
-                        stats = manifest.get("file_stats", {})
-                        stats.update(
-                            _collect_file_stats(
-                                self.table_dir, rel_new, self.stats_cols
-                            )
-                        )
-                        manifest["file_stats"] = stats
-                    manifest["n_files"] = len(manifest["files"])
+                    manifest = _file_manifest(
+                        self.table_dir,
+                        None if self.overwrite else prev,
+                        version,
+                        schema,
+                        [f"{rel_home}/{n}" for n in staged],
+                        self.evolve,
+                        self.stats_cols,
+                    )
+                    manifest["operation"] = (
+                        "overwrite" if self.overwrite else "append"
+                    )
+                    if stream_txn and not self.overwrite:
+                        # carried even on non-streaming appends, so a batch
+                        # append interleaved with a streaming sink doesn't
+                        # reset the sink's idempotence record
+                        manifest["stream_txn"] = stream_txn
+                    if extra:
+                        manifest.update(extra)
                     _commit_metadata(self.table_dir, version, base, manifest)
                     return
                 except BaseException as exc:
                     for n in staged:
-                        try:
+                        with contextlib.suppress(FileNotFoundError):
                             os.replace(
                                 os.path.join(home, n),
                                 os.path.join(self._staging_dir(), n),
                             )
-                        except FileNotFoundError:
-                            pass
+                        with contextlib.suppress(FileNotFoundError):
+                            os.remove(os.path.join(home, n + ".bloom"))
                     if not isinstance(exc, SnapshotConflictError):
                         raise
                     # another blind writer landed first: re-derive from
@@ -554,39 +530,6 @@ def make_snapshot_datasource():
             raise SnapshotConflictError(
                 f"gave up committing to {self.table_dir} after 5 attempts"
             )
-
-        def _check_schema(self, prev):
-            import json
-
-            old_cols = list(prev["columns"])
-            if self.evolve:
-                missing = [c for c in old_cols if c not in self.columns]
-                if missing:
-                    raise ValueError(
-                        "schema evolution is additive: append is missing"
-                        f" existing columns {missing}"
-                    )
-            elif list(self.columns) != old_cols:
-                raise ValueError(
-                    f"append schema mismatch: table has {old_cols}, append"
-                    f" supplied {list(self.columns)}"
-                    ' (option("evolveSchema", "true") to add columns)'
-                )
-            if "schema" in prev:
-                old_types = {
-                    f["name"]: f["type"] for f in prev["schema"]["fields"]
-                }
-                clashes = [
-                    f["name"]
-                    for f in json.loads(self.schema_json)["fields"]
-                    if f["name"] in old_types
-                    and f["type"] != old_types[f["name"]]
-                ]
-                if clashes:
-                    raise ValueError(
-                        f"append cannot change column types: {clashes}"
-                        " differ from the committed schema"
-                    )
 
         def abort(self, messages):
             import os
@@ -687,6 +630,7 @@ def make_snapshot_datasource():
 
         def partitions(self, start, end):
             from petfinder_database_distributor_spark.sources.snapshot import (
+                _manifest_files,
                 load_tombstone_keys,
                 read_manifest,
             )

@@ -14,9 +14,11 @@ Reference behavior → Spark mapping implemented here:
   decided by CONTENT ordering columns (not arrival time), so replaying a
   batch cannot change the result — exactly-once-effective.
 - O5 atomic commit via tmp+fsync+rename (``pet_scraper.py:468-488``) →
-  versioned state directories: each batch writes a complete new ``v{N}``
-  snapshot and readers always see the latest complete version. At 100 TB
-  the same ``foreachBatch`` body targets a Delta/Iceberg MERGE (partition
+  the snapshot table's commit (``sources/snapshot.py``): each batch is one
+  ``snapshot_merge``, whose pointer swap publishes a complete new version,
+  so readers always see the latest committed one and a batch that dies
+  mid-write leaves the previous version serving. At 100 TB the same
+  ``foreachBatch`` body targets a Delta/Iceberg MERGE (partition
   overwrite), keeping this exact plan shape.
 - T5 rate pacing → ``maxFilesPerTrigger`` (volume-based pacing); T6
   graceful stop → ``query.stop()`` / bounded ``availableNow`` triggers.
@@ -36,9 +38,14 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from petfinder_database_distributor_spark.schema import load_table
+from petfinder_database_distributor_spark.sources.snapshot import (
+    latest_version,
+    snapshot_merge,
+    snapshot_read,
+    snapshot_vacuum,
+)
 
 # State-store tasks pay per-partition file overhead every micro-batch, so a
 # bounded stream wants far fewer shuffle partitions than a batch scan-heavy
@@ -252,78 +259,62 @@ def read_event_stream(spark: SparkSession, stage_dir: str, max_files: int = 1) -
     )
 
 
-def latest_version(table_dir: str) -> str | None:
-    versions = glob.glob(f"{table_dir}/v*")
-    if not versions:
-        return None
-    return max(versions, key=lambda p: int(os.path.basename(p)[1:]))
-
-
 def foreach_batch_upsert(table_dir: str, key_cols: list[str], order_cols: list[str]):
-    """T3/D2 idempotent merge sink: union the incoming batch with the
-    current table snapshot, keep one row per key — the winner chosen by the
-    CONTENT ordering columns (descending), never by arrival order, so
-    replaying any batch is a no-op. Each batch commits a complete ``v{N}``
-    snapshot (O5's atomic-rename, at table granularity); older versions are
-    GC'd, keeping one fallback."""
+    """T3/D2 idempotent merge sink: each micro-batch is one
+    :func:`snapshot_merge` into the snapshot table at ``table_dir`` — the
+    batch unioned with the latest version, one row per key, the winner
+    chosen by the CONTENT ordering columns (descending), never by arrival
+    order, so replaying any batch, under its own id or another, changes
+    nothing. The commit is the snapshot pointer swap (O5): a batch that
+    dies before it leaves the previous version serving, and its replay
+    starts from that version. Versions older than the last two are
+    vacuumed, keeping one fallback."""
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        cur = latest_version(table_dir)
-        merged = batch_df
-        if cur is not None:
-            merged = spark.read.parquet(cur).unionByName(batch_df)
-        w = Window.partitionBy(*key_cols).orderBy(
-            *[F.col(c).desc() for c in order_cols]
-        )
-        winner = (
-            merged.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-        winner.write.mode("overwrite").parquet(f"{table_dir}/v{batch_id}")
-        for old in sorted(
-            glob.glob(f"{table_dir}/v*"), key=lambda p: int(os.path.basename(p)[1:])
-        )[:-2]:
-            shutil.rmtree(old, ignore_errors=True)
+        snapshot_merge(batch_df.sparkSession, table_dir, batch_df, key_cols, order_cols)
+        snapshot_vacuum(table_dir, keep_last=2)
 
     return merge
 
 
 def run_upsert_stream(
     spark: SparkSession,
-    stage_dir: str,
+    stream: str | DataFrame,
     run_dir: str,
     key_cols: list[str],
     order_cols: list[str],
     fresh: bool = True,
     max_files: int = 1,
 ) -> DataFrame:
-    """Run the staged chunks through the foreachBatch upsert to completion
-    (availableNow) and return the final table snapshot. ``fresh=False``
-    reuses the existing checkpoint + state — the T2 resume path: only files
-    not yet recorded in the offset log are processed. ``max_files`` is the
-    per-trigger pacing knob (T5) — each batch commits one full snapshot, so
-    fewer, larger batches trade commit granularity for throughput."""
+    """Run ``stream`` through the foreachBatch upsert to completion
+    (availableNow) and return the final table snapshot. ``stream`` is a
+    staged event-chunk directory, read ``max_files`` chunks per trigger
+    (the T5 pacing knob: each batch commits one full snapshot, so fewer,
+    larger batches trade commit granularity for throughput), or a
+    streaming DataFrame the caller built. ``fresh=False`` reuses the
+    existing checkpoint + table — the T2 resume path: only files not yet
+    recorded in the offset log are processed."""
     if fresh:
         _fresh_dir(run_dir)
     table_dir = f"{run_dir}/table"
+    if isinstance(stream, str):
+        stream = read_event_stream(spark, stream, max_files=max_files)
     with scoped_conf(spark, spark__sql__shuffle__partitions=STREAM_SHUFFLE_PARTITIONS):
         query = (
-            read_event_stream(spark, stage_dir, max_files=max_files)
-            .writeStream.foreachBatch(foreach_batch_upsert(table_dir, key_cols, order_cols))
+            stream.writeStream.foreachBatch(
+                foreach_batch_upsert(table_dir, key_cols, order_cols)
+            )
             .option("checkpointLocation", f"{run_dir}/ckpt")
             .trigger(availableNow=True)
             .start()
         )
         query.awaitTermination()
-    latest = latest_version(table_dir)
-    if latest is None:
+    if latest_version(table_dir) is None:
         # zero micro-batches (empty staging): the upsert table was never
         # committed — the merged state of nothing is the empty table,
         # with the stream's schema (degenerate-input contract)
-        return spark.createDataFrame([], read_event_stream(spark, stage_dir).schema)
-    return spark.read.parquet(latest)
+        return spark.createDataFrame([], stream.schema)
+    return snapshot_read(spark, table_dir)
 
 
 def windowed_event_counts(stream: DataFrame) -> DataFrame:

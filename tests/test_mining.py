@@ -88,6 +88,22 @@ def test_kmeans_assignment_is_projection_no_join(spark):
         assert op not in plan, f"assignment plan unexpectedly contains {op}:\n{plan}"
 
 
+def test_kmeans_frees_its_cache(spark):
+    """The quantized working set is cached only while k-means trains: the
+    returned plan reads no cached relation, building and running it
+    leaves the cache manager empty, and the result still matches the
+    oracle."""
+    from tests.oracle_compare import assert_parity, run_oracle
+
+    spark.catalog.clearCache()  # only this call's entries are under test
+    df = cluster_kmeans_int8(spark, SF_SMALL)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "InMemoryRelation" not in plan
+    oracle = run_oracle(SPECS["cluster_kmeans_int8"].oracle, SF_SMALL)
+    assert_parity(df, oracle, "cluster_kmeans_int8")
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def _python_pagerank(sf_dir: str, iters: int = 3, scale: int = 10**12, top: int = 20):
     pdf = duckdb.sql(
         f"SELECT DISTINCT l_partkey * 2 AS src, l_suppkey * 2 + 1 AS dst "

@@ -740,3 +740,24 @@ def test_pushdown_bloom_prunes_point_lookup(spark, table_dir):
     probes = [(i * 2654435761) % 1000003 for i in (3, 11)]
     got = scan.filter(F.col("k").isin(probes)).collect()
     assert sorted(r["payload"] for r in got) == [3, 11]
+    # a format-API append keeps the index: the appended version still
+    # declares bloom_cols, its new files get sidecars, and a point lookup
+    # prunes old and new files alike
+    (
+        spark.range(4000, 8000)
+        .selectExpr("id * 2654435761 % 1000003 AS k", "id AS payload")
+        .repartition(8)
+        .write.format("snapshot")
+        .mode("append")
+        .save(table_dir)
+    )
+    m = read_manifest(table_dir, latest_version(table_dir))
+    assert m["bloom_cols"] == ["k"]
+    assert set(m["file_blooms"]) == set(m["files"]) and len(m["files"]) == 16
+    scan = spark.read.format("snapshot").load(table_dir)
+    for i in (7, 4007):
+        probe = (i * 2654435761) % 1000003
+        hit = scan.filter(F.col("k") == probe)
+        assert hit.rdd.getNumPartitions() <= 2
+        expect = [j for j in range(8000) if j * 2654435761 % 1000003 == probe]
+        assert sorted(r["payload"] for r in hit.collect()) == expect

@@ -7,13 +7,17 @@ from __future__ import annotations
 import os
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from petfinder_database_distributor_spark.schema import load_table
+from petfinder_database_distributor_spark.sources.snapshot import (
+    latest_version,
+    snapshot_read,
+)
 from petfinder_database_distributor_spark.streaming.incremental import (
     SCRATCH_ROOT,
-    latest_version,
     run_upsert_stream,
     stage_event_chunks,
 )
@@ -67,7 +71,58 @@ def test_checkpoint_resume(spark):
 
     # The offset log resumed (batch ids continued past phase 1) rather than
     # reprocessing from scratch: 4 single-file micro-batches → final v3.
-    assert os.path.basename(latest_version(f"{run_dir}/table")) == "v3"
+    assert latest_version(f"{run_dir}/table") == 3
+
+
+def test_batch_dying_mid_write_is_redone_on_restart(spark, monkeypatch):
+    """A micro-batch whose table write dies after the write began and
+    before its commit leaves the previous version serving, and the query
+    restarted from the same checkpoint redoes that batch: the final table
+    equals the batch upsert. The reference's crashed batch is simply redone
+    too (tmp + fsync + rename, pet_scraper.py:410-488)."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    stage = stage_event_chunks(spark, SF_SMALL, n_chunks=4)
+    run_dir = f"{SCRATCH_ROOT}/test_crash_mid_write"
+    table_dir = f"{run_dir}/table"
+    events = load_table(spark, SF_SMALL, "events")
+    real_parquet = DataFrameWriter.parquet
+    table_writes = []
+
+    def dying_parquet(self, path, *args, **kwargs):
+        if path.startswith(table_dir):
+            table_writes.append(path)
+            if len(table_writes) == 2:  # batch 1's table write
+                # the job starts and its tasks write their output under
+                # _temporary, where a killed job leaves it
+                real_parquet(
+                    self, os.path.join(path, "_temporary", "0", "_temporary"),
+                    *args, **kwargs,
+                )
+                raise RuntimeError("executor lost mid-write")
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", dying_parquet)
+    with pytest.raises(Exception, match="executor lost mid-write"):
+        run_upsert_stream(
+            spark, stage, run_dir, ["user_id"], ["ts", "event_id"], fresh=True
+        )
+    monkeypatch.undo()
+
+    # the gap: readers see batch 0's version, untouched by the dead write
+    assert latest_version(table_dir) == 0
+    assert _pairs(snapshot_read(spark, table_dir).select("user_id", "event_id")) == (
+        _pairs(_expected_upsert(events.filter(F.col("event_id") % 4 == 0)))
+    )
+
+    final = run_upsert_stream(
+        spark, stage, run_dir, ["user_id"], ["ts", "event_id"], fresh=False
+    )
+    assert _pairs(final.select("user_id", "event_id")) == _pairs(_expected_upsert(events))
+    # batch 1 committed once, on its replay; the sink keeps the last two
+    # versions, and the dead write's output went with version 1's directory
+    assert latest_version(table_dir) == 3
+    assert sorted(os.listdir(f"{table_dir}/data")) == ["v2", "v3"]
 
 
 def test_watermark_append_mode_closes_windows(spark):
@@ -121,10 +176,11 @@ def test_watermark_append_mode_closes_windows(spark):
 def test_foreach_batch_merge_is_replay_idempotent(spark):
     """T3: re-delivering a micro-batch to the merge sink (at-least-once
     delivery) must not change the table — the winner is chosen by content
-    ordering, not arrival order."""
+    ordering, not arrival order — whether the replay carries the batch's
+    own id (the sink committed, the offset commit did not) or a later
+    one."""
     from petfinder_database_distributor_spark.streaming.incremental import (
         foreach_batch_upsert,
-        latest_version,
     )
 
     run_dir = f"{SCRATCH_ROOT}/test_replay"
@@ -136,16 +192,11 @@ def test_foreach_batch_merge_is_replay_idempotent(spark):
     merge = foreach_batch_upsert(table_dir, ["user_id"], ["ts", "event_id"])
     merge(b0, 0)
     merge(b1, 1)
-    once = sorted(
-        (r["user_id"], r["event_id"])
-        for r in spark.read.parquet(latest_version(table_dir)).collect()
-    )
-    merge(b1, 2)  # replay of batch 1 after a "crash before offset commit"
-    replayed = sorted(
-        (r["user_id"], r["event_id"])
-        for r in spark.read.parquet(latest_version(table_dir)).collect()
-    )
-    assert replayed == once
+    once = _pairs(snapshot_read(spark, table_dir))
+    merge(b1, 1)  # replay of batch 1 under its own id
+    assert _pairs(snapshot_read(spark, table_dir)) == once
+    merge(b1, 2)  # replay of batch 1 under a later id
+    assert _pairs(snapshot_read(spark, table_dir)) == once
 
 
 def test_graceful_stop_between_batches(spark):
