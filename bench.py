@@ -1,12 +1,16 @@
-"""Benchmark harness: times every registered query.
+"""Benchmark harness: times every registered query and counts its jobs.
+
+Usage: python bench.py [query1,query2,...]
 
 Runs the queries at ``$SPARK_GRAFT_SF_DIR`` (default: the sf0.1
 testdata directory) on ``local[$SPARK_GRAFT_CPUS]`` and prints two JSON
-lines: the full per-query record, then a compact summary that fits a
-2,000-character tail capture of stdout. The full record also lands in
-``bench_records/BENCH_SELF_c{cpus}.json``. Results are forced with a
-count-style action (``noop`` write) so we measure distributed compute,
-not driver-side row transfer.
+lines: the full per-query record (seconds and Spark jobs), then a
+compact summary that fits a 2,000-character tail capture of stdout.
+A full run also writes the full record to
+``bench_records/BENCH_SELF_c{cpus}.json``; a run over a named subset
+prints the same two lines and leaves that file alone. Results are
+forced with a count-style action (``noop`` write) so we measure
+distributed compute, not driver-side row transfer.
 """
 
 from __future__ import annotations
@@ -15,6 +19,8 @@ import json
 import os
 import sys
 import time
+import uuid
+from functools import partial
 
 REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
 if REPO_ROOT not in sys.path:
@@ -42,24 +48,55 @@ HEADLINE = [
 ]
 
 
+def count_jobs(spark, fn):
+    """Run ``fn()`` under a Spark job group of its own and return its
+    result with the number of Spark jobs it launched. Jobs that set their
+    own group (a streaming query's triggers) are not counted."""
+    sc = spark.sparkContext
+    group = f"bench_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+        # read the group's job ids BEFORE clearing it
+        return result, len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc._jsc.clearJobGroup()  # noqa: SLF001 — not exposed on the Python SparkContext
+
+
+def _timed_run(spark, spec, sf_dir: str) -> float:
+    """Seconds to build ``spec``'s frame and force it with a noop write."""
+    t0 = time.perf_counter()
+    df = spec.fn(spark, sf_dir)
+    df.write.mode("overwrite").format("noop").save()
+    return time.perf_counter() - t0
+
+
 def run_queries(
     spark, specs, names: list[str], sf_dir: str, passes: int = 2
-) -> tuple[dict[str, float | None], dict[str, str]]:
+) -> tuple[dict[str, float | None], dict[str, str], dict[str, int]]:
     """Best-of-N timing loop with per-query fault isolation: without it,
     one AnalysisException aborts the whole run and no record is written.
     A failing query records null + a one-line error; the loop always
     completes, and failures cost the run nothing but their own slot.
-    Unit-tested in tests/test_bench_harness.py."""
+
+    Returns ``(timings, errors, jobs)``. ``jobs`` maps each query that
+    succeeded to the Spark jobs its last successful pass launched, both
+    while the frame is built (eager ``collect``s, checkpoints) and by the
+    ``noop`` write; a failing query records no count. A ``stream_*``
+    query's trigger jobs are left out: Spark's ``StreamExecution`` runs
+    them under the stream's own job group. Unit-tested in
+    tests/test_bench_harness.py."""
     timings: dict[str, float | None] = {}
     errors: dict[str, str] = {}
+    jobs: dict[str, int] = {}
     for _pass in range(passes):
         for name in names:
             if name in errors:  # failed in an earlier pass — skip the retry
                 continue
-            t0 = time.perf_counter()
             try:
-                df = specs[name].fn(spark, sf_dir)
-                df.write.mode("overwrite").format("noop").save()
+                elapsed, jobs[name] = count_jobs(
+                    spark, partial(_timed_run, spark, specs[name], sf_dir)
+                )
             except Exception as exc:  # noqa: BLE001 — isolate, record, continue
                 if timings.get(name) is None:  # keep an earlier success if any
                     timings[name] = None
@@ -67,10 +104,10 @@ def run_queries(
                 continue
             # 2 decimals keeps the JSON lines compact: the tail line must
             # fit a 2,000-character capture whole.
-            elapsed = round(time.perf_counter() - t0, 2)
+            elapsed = round(elapsed, 2)
             prev = timings.get(name)
             timings[name] = elapsed if prev is None else min(prev, elapsed)
-    return timings, errors
+    return timings, errors, jobs
 
 
 def compact_summary(
@@ -117,6 +154,23 @@ def compact_summary(
         out.pop(shed)
         line = json.dumps(out)
     return line
+
+
+def warm_up(spark) -> None:
+    """Warm the JVM/codegen once with a trivial job so the first query
+    doesn't pay startup, and spawn the Python UDF workers (~4s, once per
+    session) so the first pandas-UDF query measures its work, not worker
+    startup."""
+    spark.range(1000).selectExpr("sum(id)").collect()
+    from pyspark.sql.functions import pandas_udf
+
+    # no annotations: `from __future__ import annotations` stringifies them
+    # and pandas_udf's signature inference rejects unresolvable strings
+    def _identity(s):
+        return s
+
+    _warm = pandas_udf(_identity, "long")
+    spark.range(32).select(_warm("id")).collect()
 
 
 def calibration(spark) -> dict:
@@ -179,22 +233,10 @@ def main() -> None:
 
     specs = load_all()
     spark = get_spark(app_name="pdd_spark_bench")
+    warm_up(spark)
 
-    # Warm the JVM/codegen once with a trivial job so q1 doesn't pay startup,
-    # and spawn the Python UDF workers (~4s, once per session) so the first
-    # pandas-UDF query measures its work, not worker startup.
-    spark.range(1000).selectExpr("sum(id)").collect()
-    from pyspark.sql.functions import pandas_udf
-
-    # no annotations: `from __future__ import annotations` stringifies them
-    # and pandas_udf's signature inference rejects unresolvable strings
-    def _identity(s):
-        return s
-
-    _warm = pandas_udf(_identity, "long")
-    spark.range(32).select(_warm("id")).collect()
-
-    names = [n for n in HEADLINE if n in specs] + [
+    subset = [n for n in sys.argv[1].split(",") if n] if len(sys.argv) > 1 else []
+    names = subset or [n for n in HEADLINE if n in specs] + [
         n for n in sorted(specs) if n not in HEADLINE
     ]
     # Best-of-2: two full passes over the list, report the per-query MIN.
@@ -204,13 +246,14 @@ def main() -> None:
     # steady-state number: plan compilation (Catalyst analysis + codegen)
     # is measured cold in pass 1 and cached after.
     cal = calibration(spark)
-    timings, errors = run_queries(spark, specs, names, sf_dir)
+    timings, errors, jobs = run_queries(spark, specs, names, sf_dir)
     total = round(sum(t for t in timings.values() if t is not None), 4)
     out = {
         "metric": "headline_queries_wall",
         "value": total,
         "unit": "sec",
         "queries": timings,
+        "jobs": jobs,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "calibration": cal,
     }
@@ -220,7 +263,8 @@ def main() -> None:
     # Trailing compact record — a 2000-char tail capture always contains
     # this line whole (the full line above is several KB and truncates).
     print(compact_summary(timings, errors, total, out["sf"], calibration=cal))
-    write_self_record(out, spark.sparkContext.defaultParallelism)
+    if not subset:  # a subset's record would replace the full run's
+        write_self_record(out, spark.sparkContext.defaultParallelism)
 
 
 if __name__ == "__main__":

@@ -788,7 +788,7 @@ def snapshot_append(
     Same-name columns can never change type, evolving or not."""
     current = latest_version(table_dir)
     if current is None:
-        return snapshot_write(spark, table_dir, df)
+        return snapshot_write(spark, table_dir, df, stats_cols=stats_cols)
     prev = read_manifest(table_dir, current)
     schema = _schema_dict(df.schema)
     # the append rules are checked before any data is written

@@ -30,9 +30,11 @@ import io
 import json
 import os
 import re
-import uuid
 from collections import Counter
 from contextlib import redirect_stdout
+from functools import partial
+
+from bench import count_jobs
 
 DIGEST_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)), "plan_digest.json")
 
@@ -121,16 +123,9 @@ def digest(plan_text: str) -> dict:
 
 
 def query_digest(spark, spec, sf_dir: str) -> dict:
-    """Build ``spec``'s frame, counting the jobs the build fires under a
-    job group of its own, and digest its plan without running it."""
-    sc = spark.sparkContext
-    group = f"plan_digest_{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        df = spec.fn(spark, sf_dir)
-        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc._jsc.clearJobGroup()  # noqa: SLF001 — not exposed on the Python SparkContext
+    """Build ``spec``'s frame, counting the jobs the build fires with
+    bench's job counter, and digest its plan without running it."""
+    df, jobs = count_jobs(spark, partial(spec.fn, spark, sf_dir))
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")

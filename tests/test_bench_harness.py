@@ -1,12 +1,18 @@
 """bench.py fault isolation: an exception in one query must not abort the
 whole bench and lose its record. The timing loop must survive failing
 queries — at plan time AND at action time — record null + a one-line
-error for them, and still produce timings for everything else."""
+error for them, and still produce timings for everything else. The
+record also counts each query's Spark jobs, and every bench name its
+callers use must exist."""
 
 from __future__ import annotations
 
+import ast
+import glob
 import json
+import os
 
+import bench
 from bench import run_queries
 from tests.conftest import SF_SMALL
 
@@ -42,7 +48,7 @@ def test_bench_isolates_failures_and_times_the_rest(spark):
         "good_two": FakeSpec(ok_query),
     }
     names = list(specs)
-    timings, errors = run_queries(spark, specs, names, SF_SMALL, passes=2)
+    timings, errors, _jobs = run_queries(spark, specs, names, SF_SMALL, passes=2)
 
     assert timings["good_one"] is not None and timings["good_two"] is not None
     assert timings["bad_plan"] is None and timings["bad_action"] is None
@@ -56,6 +62,24 @@ def test_bench_isolates_failures_and_times_the_rest(spark):
     line = json.dumps({"value": total, "queries": timings, "errors": errors})
     parsed = json.loads(line)
     assert parsed["queries"]["bad_plan"] is None
+
+
+def test_bench_records_jobs_of_build_and_write(spark):
+    """The record counts the Spark jobs of each query's last pass: one
+    ``collect`` fired while the frame is built plus the ``noop`` write.
+    A failing query records no count, and the compact tail line carries
+    no jobs map, so it stays under its budget."""
+    from bench import compact_summary
+
+    def eager_build(spark_, sf_dir):
+        spark_.range(10).collect()
+        return spark_.range(10)
+
+    specs = {"eager": FakeSpec(eager_build), "bad_plan": FakeSpec(plan_time_boom)}
+    timings, errors, jobs = run_queries(spark, specs, list(specs), SF_SMALL)
+    assert jobs == {"eager": 2}
+    line = compact_summary(timings, errors, total=1.0, sf=0.001)
+    assert len(line) <= 1800 and "jobs" not in json.loads(line)
 
 
 def test_compact_summary_fits_tail_capture_and_parses(spark):
@@ -141,3 +165,29 @@ def test_write_self_record_default_target_is_per_core_count(monkeypatch, tmp_pat
     assert p4 == str(tmp_path / "records" / "BENCH_SELF_c4.json")
     assert p8 == str(tmp_path / "records" / "BENCH_SELF_c8.json")
     assert json.loads(open(p4).read()) == {"value": 1.0, "cpus": 4}
+
+
+def test_bench_names_used_by_callers_exist():
+    """Every ``from bench import X`` and ``bench.X`` in the tools, the
+    tests and the benchmark names something the bench module has. The
+    benchmark calls ``bench.calibration``, so without this check a rename
+    breaks the benchmark run instead of a test. Spark-free: the files are
+    parsed, not imported."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    used = set()
+    for d in ("tools", "tests", "perfbench"):
+        for path in glob.glob(os.path.join(root, d, "*.py")):
+            with open(path) as fh:
+                tree = ast.parse(fh.read(), path)
+            rel = os.path.relpath(path, root)
+            for node in ast.walk(tree):
+                if isinstance(node, ast.ImportFrom) and node.module == "bench":
+                    used.update((rel, alias.name) for alias in node.names)
+                elif (
+                    isinstance(node, ast.Attribute)
+                    and isinstance(node.value, ast.Name)
+                    and node.value.id == "bench"
+                ):
+                    used.add((rel, node.attr))
+    assert ("perfbench/common.py", "calibration") in used
+    assert [(rel, name) for rel, name in sorted(used) if not hasattr(bench, name)] == []

@@ -918,6 +918,28 @@ def test_append_merges_file_stats(spark, table_dir):
     assert len(prune_files(m, "k", 1050, 2000)) == 1
 
 
+def test_first_append_records_file_stats(spark, table_dir):
+    """An append that opens a fresh table records zone maps for its files
+    too, so a range outside v0's keys prunes v0's file."""
+    from petfinder_database_distributor_spark.sources.snapshot import (
+        prune_files,
+        snapshot_append,
+        snapshot_read_pruned,
+    )
+
+    lo = spark.range(0, 100).select(F.col("id").alias("k"), F.lit("a").alias("v"))
+    hi = spark.range(1000, 1100).select(F.col("id").alias("k"), F.lit("b").alias("v"))
+    snapshot_append(spark, table_dir, lo.coalesce(1), stats_cols=["k"])
+    v1 = snapshot_append(spark, table_dir, hi.coalesce(1), stats_cols=["k"])
+    m = read_manifest(table_dir, v1)
+    assert set(m["file_stats"]) == set(m["files"])
+    (v0_file,) = read_manifest(table_dir, 0)["files"]
+    assert v0_file not in prune_files(m, "k", 1050, 2000)
+    pruned = snapshot_read_pruned(spark, table_dir, "k", 1050, 2000)
+    assert not any(f.endswith(v0_file) for f in pruned.inputFiles())
+    assert {r["k"] for r in pruned.collect()} == set(range(1050, 1100))
+
+
 def test_history_records_operations_and_commit_times(spark, table_dir):
     from petfinder_database_distributor_spark.sources.snapshot import (
         snapshot_append,

@@ -5,18 +5,6 @@ tie-dependent picks / order-dependent float accumulation — the class of
 latent parity flake a tie-broken asof join can carry. Streaming queries are
 excluded (they scope their own confs; covered by tests/test_streaming.py).
 
-Round-2 result: all 84 non-streaming queries OK at sf0.01 (32 vs 7
-shuffle partitions). Round-4 re-run: all 88 OK (incl. the 60-bit simhash
-family, star-contraction components, and the malformed-HTML extractor).
-Round-5 final re-run: ALL non-streaming queries OK including the
-mining/layout family (k-means, PageRank, mix weights, Z-order,
-commonness, profiler, canonical selection, funnel) — the iterative
-integer-exact algorithms are partition-count-invariant.
-Round-6 re-run: ALL non-streaming queries OK (139, incl. the Jaccard
-posture chooser, star-default components, native-expression minhash,
-the composite scalar suite, the AQE skew demo, and the snapshot-table
-upsert).
-
 Usage: python tools/determinism_audit.py
 """
 import os

@@ -3,14 +3,9 @@ against a fixture where all ten tables have zero rows (same schemas), and
 report Spark-side and oracle-side crashes. An empty slice of a 100 TB
 corpus is a normal input (an empty date partition, a filtered-out shard,
 a first run before data lands) — an operator that crashes on it is a
-production incident, not a degenerate edge.
-
-Round-12 result: 8 crashes found and fixed (sentinel staging's max() on
-zero chunks, upsert/snapshot-merge/incremental-dedup streams reading
-never-committed state, the partitioned merge's dir-only existence probe
-reading a zero-file table, k-means' unguarded empty seed collect, DPP's
-zero-partition staging raise); tests/test_empty_robustness.py pins the
-fixed set + a per-family sample permanently.
+production incident, not a degenerate edge. The default suite runs a
+per-family sample of the same check (tests/test_empty_robustness.py);
+this probe covers every query.
 
 Usage: python tools/empty_probe.py
 Exit 0 iff no query crashes on either engine.

@@ -16,16 +16,17 @@ that, not whether the output stays flat.)
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import sys
-import time
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO_ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import calibration, run_queries, warm_up  # noqa: E402
 from petfinder_database_distributor_spark.registry import load_all  # noqa: E402
 from petfinder_database_distributor_spark.schema import load_table  # noqa: E402
 from petfinder_database_distributor_spark.session import get_spark  # noqa: E402
@@ -91,12 +92,6 @@ def build_scaled(spark, factor: int, out_dir: str) -> None:
         fh.write("staged")
 
 
-def _time_once(fn) -> float:
-    t0 = time.perf_counter()
-    fn()
-    return time.perf_counter() - t0
-
-
 def main() -> None:
     factor = int(sys.argv[1]) if len(sys.argv) > 1 else 8
     queries = sys.argv[2].split(",") if len(sys.argv) > 2 else PROBE_QUERIES
@@ -107,39 +102,20 @@ def main() -> None:
     build_scaled(spark, factor, out_dir)
 
     qs = load_all()
-    spark.range(1000).selectExpr("sum(id)").collect()
-    # Same calibration block as bench.py: the per-job JVM floor this
-    # machine sustains RIGHT NOW + the OS run queue, so the growth ratios
-    # are load-annotated (a probe run under load is provably under load,
-    # not silently inflated).
-    floor = min(
-        _time_once(lambda: spark.range(10**7).count()) for _ in range(3)
-    )
-    print(
-        '{"calibration": {"floor_sec": %.3f, "loadavg": [%s]}}'
-        % (floor, ", ".join(f"{x:.2f}" for x in os.getloadavg())),
-        flush=True,
-    )
+    warm_up(spark)
+    # the growth ratios are load-annotated: a probe run under load is
+    # provably under load, not silently inflated
+    print(json.dumps({"calibration": calibration(spark)}), flush=True)
     print(f"{'query':28s} {'1x':>7s} {'%dx' % factor:>7s} {'growth':>7s}")
     for name in queries:
         times = []
-        err = None
         for sf_dir in (BASE_SF, out_dir):
-            best = float("inf")
-            for _ in range(2):  # warm best-of-2: measure work, not codegen
-                t0 = time.time()
-                try:
-                    df = qs[name].fn(spark, sf_dir)
-                    df.write.format("noop").mode("overwrite").save()
-                except Exception as exc:  # noqa: BLE001 — isolate, keep probing
-                    err = f"{type(exc).__name__}: {exc}".split("\n")[0][:120]
-                    break
-                best = min(best, time.time() - t0)
-            if err is not None:
+            timings, errors, _jobs = run_queries(spark, qs, [name], sf_dir)
+            if errors:
                 break  # don't burn minutes timing the scaled dir of a dead query
-            times.append(best)
-        if err is not None:
-            print(f"{name:28s} ERR {err}", flush=True)
+            times.append(timings[name])
+        if errors:
+            print(f"{name:28s} ERR {errors[name]}", flush=True)
             continue
         print(
             f"{name:28s} {times[0]:6.2f}s {times[1]:6.2f}s {times[1]/times[0]:6.1f}x",
