@@ -745,12 +745,10 @@ def snapshot_delete(
             f" delete supplied {key_cols}"
         )
     version = current + 1
-    tfiles = _stage(
-        table_dir,
-        keys_df.select(*key_cols).dropDuplicates(key_cols),
-        "tombstones",
-        version,
-    )
+    # One file and one job, no shuffle: every reader takes the tombstone
+    # keys as a set or as the right side of an anti-join, so a key
+    # repeated in keys_df deletes the same rows as one.
+    tfiles = _stage(table_dir, keys_df.select(*key_cols).coalesce(1), "tombstones", version)
     manifest = _carry_forward(prev)  # files/partitions forward UNCHANGED
     manifest["version"] = version
     manifest["tombstones"] = list(prev.get("tombstones", [])) + tfiles

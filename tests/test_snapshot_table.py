@@ -475,6 +475,34 @@ def test_tombstone_delete_reuses_files_and_hides_rows(spark, table_dir):
     assert set(_as_dict(snapshot_read(spark, table_dir, version=0))) == set(range(6))
 
 
+def test_delete_of_repeated_keys_is_one_job_and_one_file(spark, table_dir):
+    """A ``keys_df`` that names every key twice deletes the same rows as
+    naming each once, through the Spark reader and the Spark-free one,
+    and the delete commits one tombstone file in one Spark job: the keys
+    are not deduplicated with a shuffle."""
+    from bench import count_jobs
+    from petfinder_database_distributor_spark.serving.http_server import (
+        load_snapshot_rows,
+    )
+    from petfinder_database_distributor_spark.sources.snapshot import (
+        snapshot_delete,
+    )
+
+    snapshot_write(
+        spark, table_dir,
+        spark.range(2000).select(F.col("id").alias("k"), F.col("id").cast("string").alias("v")),
+    )
+    keys = spark.range(0, 2000, 10).select(F.col("id").alias("k"))
+    v, jobs = count_jobs(
+        spark, lambda: snapshot_delete(spark, table_dir, keys.unionAll(keys), ["k"])
+    )
+    assert jobs == 1
+    assert len(read_manifest(table_dir, v)["tombstones"]) == 1
+    live = set(range(2000)) - set(range(0, 2000, 10))
+    assert set(_as_dict(snapshot_read(spark, table_dir))) == live
+    assert {r["k"] for r in load_snapshot_rows(table_dir)} == live
+
+
 def test_tombstone_read_builds_without_a_job(spark, table_dir):
     """Building the read of a version with tombstones is lazy: the
     tombstone scan gets its schema from one footer read on the driver,
