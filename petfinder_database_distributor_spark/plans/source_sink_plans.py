@@ -582,10 +582,11 @@ def url_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="merge_partitioned_upsert's semantics through the MANIFEST-COMMITTED "
     "partitioned snapshot (sources/snapshot.py): base load, then a second "
-    "batch touching only 2 of 8 hash-bucket partitions. Each commit writes "
-    "new files ONLY for the affected partitions and copies every other "
-    "partition's manifest entry forward pointing at its existing files — "
-    "O(changed partitions) I/O per commit, atomic pointer-swap publish, "
+    "batch touching only 2 of 8 hash-bucket partitions. Each file holds one "
+    "bucket, recorded as its zone map in the flat manifest file list, so "
+    "each commit rewrites ONLY the files whose zone map may hold a batch "
+    "bucket and carries every other file forward with its stats — "
+    "file-level copy-on-write, O(changed partitions) I/O per commit, atomic pointer-swap publish, "
     "old version fully readable during and after (file reuse is asserted "
     "in tests/test_snapshot_table.py, retention-safe vacuum included). "
     "This closes the gap the plain snapshot_merge left: full-table "
@@ -1509,12 +1510,13 @@ def snapshot_concurrent_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY user_id % 8
     """,
     doc="Partition pruning through the format API: a PARTITIONED snapshot "
-    "(manifest maps partition value -> immutable file list, sources/"
-    "snapshot.py snapshot_write_partitioned) read via spark.read.format("
-    "'snapshot') with bucket IN (2,5). Spark 4.1's Python filter pushdown "
-    "hands the In predicate to pushFilters, which intersects it with the "
-    "manifest's partition keys at PLANNING time — files of the other six "
-    "partitions never become input partitions (count pinned in tests/"
+    "(one bucket per immutable file, that value the file's zone map in the "
+    "flat manifest, sources/snapshot.py snapshot_write_partitioned) read "
+    "via spark.read.format('snapshot') with bucket IN (2,5). Spark 4.1's "
+    "Python filter pushdown hands the In predicate to pushFilters, which "
+    "tests its values against the files' zone maps at PLANNING time — "
+    "files of the other six partitions never become input partitions "
+    "(count pinned in tests/"
     "test_snapshot_datasource.py), no file listing, no footer I/O. The "
     "filter is also returned to Spark for exact re-apply, so manifest "
     "pruning only skips, never decides correctness. This is the "

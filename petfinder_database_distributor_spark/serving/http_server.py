@@ -307,14 +307,11 @@ def _encode_version(table_dir: str, manifest: dict) -> bytes:
     encoded."""
     import pyarrow.parquet as pq
 
-    from petfinder_database_distributor_spark.sources.snapshot import (
-        _dead_keys,
-        _manifest_files,
-    )
+    from petfinder_database_distributor_spark.sources.snapshot import _dead_keys
 
     key_cols, dead = _dead_keys(table_dir, manifest)
     count, fragments = 0, []
-    for rel in _manifest_files(manifest):
+    for rel in manifest["files"]:
         # ParquetFile reads the one file without read_table's dataset
         # discovery, about an eighth of a miss
         with pq.ParquetFile(os.path.join(table_dir, rel)) as data_file:
@@ -343,7 +340,6 @@ def load_snapshot_rows(table_dir: str, version: int | None = None) -> list[dict]
 
     from petfinder_database_distributor_spark.sources.snapshot import (
         _dead_keys,
-        _manifest_files,
         live_key_mask,
         read_manifest,
         resolve_version,
@@ -354,7 +350,7 @@ def load_snapshot_rows(table_dir: str, version: int | None = None) -> list[dict]
         return []
     manifest = read_manifest(table_dir, v)
     rows: list[dict] = []
-    for rel in _manifest_files(manifest):
+    for rel in manifest["files"]:
         rows.extend(pq.read_table(os.path.join(table_dir, rel)).to_pylist())
     key_cols, dead = _dead_keys(table_dir, manifest)
     if dead:
@@ -411,8 +407,11 @@ class PetServingHandler(socketserver.BaseRequestHandler):
             head = self._read_head()
             if head is not None:
                 self._route(*head)
-        except TimeoutError:  # a read, or one slice of a write, stalled
-            pass  # dropped unanswered; the worker closes the connection
+        except (TimeoutError, ConnectionError):
+            # a read or one slice of a write stalled, or the client reset
+            # or closed mid-answer: dropped quietly, no traceback per
+            # client; the worker closes the connection
+            pass
 
     # -- reading the request ----------------------------------------------
     def _read_head(self):

@@ -27,6 +27,17 @@ protocol at every intermediate step and proves readers never see a torn
 or mixed version. Old versions stay readable (``version=``), giving
 time travel and concurrent-reader safety during compaction for free.
 
+Every manifest has one layout: a flat ``files`` list. Beside it, per
+file, sit the zone maps (``file_stats``: [min, max] per column of the
+recorded ``stats_cols``) and the bloom sidecars (``file_blooms``, for
+``bloom_cols``) -- Iceberg's manifest shape, where a data file's
+partition value and bounds are recorded next to the file. Both column
+lists are table properties: once a writer declares them, every later
+writer collects them for its new files. A partitioned table is a flat
+table whose files each hold one value of ``partition_col``, so that
+value is the file's zone map (min = max); partition pruning and the
+partition-scoped merge are zone-map pruning (:func:`prune_values`).
+
 Concurrent WRITERS are handled optimistically: the committer records the
 version it based its write on and refuses the pointer swap if another
 writer got there first (``SnapshotConflictError``) — the loser retries on
@@ -202,7 +213,9 @@ def _collect_file_stats(
     I/O; on an object store the same stats would be folded from the
     writer's in-flight accounting instead. NULLs don't contribute to
     min/max (parquet semantics), so pruning decisions are only valid for
-    null-excluding predicates — the reader's contract."""
+    null-excluding predicates — the reader's contract. Bounds are stored
+    as :func:`_zone_value` gives them; a column whose bounds have no JSON
+    form (decimal, binary) gets none, so every pruner keeps the file."""
     import pyarrow.parquet as pq
 
     out: dict[str, dict[str, list]] = {}
@@ -214,18 +227,43 @@ def _collect_file_stats(
             if col not in names:
                 continue
             lo = hi = None
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(names[col]).statistics
-                if st is None or not st.has_min_max:
-                    lo = hi = None
-                    break
-                lo = st.min if lo is None else min(lo, st.min)
-                hi = st.max if hi is None else max(hi, st.max)
-            if lo is not None:
+            try:
+                for rg in range(md.num_row_groups):
+                    st = md.row_group(rg).column(names[col]).statistics
+                    if st is None or not st.has_min_max:
+                        lo = hi = None
+                        break
+                    lo = st.min if lo is None else min(lo, st.min)
+                    hi = st.max if hi is None else max(hi, st.max)
+            except NotImplementedError:  # pyarrow gives no value (decimal)
+                lo = hi = None
+            lo, hi = _zone_value(lo), _zone_value(hi)
+            if lo is not None and hi is not None:
                 per_col[col] = [lo, hi]
         if per_col:
             out[rel] = per_col
     return out
+
+
+def _zone_value(value):
+    """A zone-map bound, or a probe tested against one, in the JSON form
+    the manifest stores: numbers, strings and booleans as they are,
+    dates and datetimes as ISO text, which sorts as they do (datetimes in
+    UTC; a naive one is local time, as PySpark reads a TIMESTAMP),
+    anything else None -- no bound, and a probe that prunes nothing."""
+    import datetime
+
+    if isinstance(value, datetime.datetime):
+        try:
+            value = value.astimezone(datetime.timezone.utc)
+        except (OverflowError, ValueError):  # shifted past year 1 or 9999
+            return None
+        return value.isoformat(timespec="microseconds")
+    if isinstance(value, datetime.date):
+        return value.isoformat()
+    if isinstance(value, (bool, int, float, str)):
+        return value
+    return None
 
 
 _BLOOM_K = 4  # probes per value; sizing targets ~16 bits/row -> fpp ~0.24%
@@ -395,9 +433,9 @@ def bloom_prune_files(table_dir: str, manifest: dict, col: str, values) -> list[
         # still raises, which is where an unsupported type is a bug.
         hashes = [_bloom_hash(v) for v in values if v is not None]
     except TypeError:
-        return list(_manifest_files(manifest))
+        return list(manifest["files"])
     kept = []
-    for rel in _manifest_files(manifest):
+    for rel in manifest["files"]:
         bloom_rel = blooms.get(rel)
         if bloom_rel is None:
             kept.append(rel)
@@ -444,18 +482,12 @@ def _stage(
 def _append_columns(prev: dict, schema: dict, evolve_schema: bool) -> list[str]:
     """The table's column order once a batch of ``schema`` (a
     :func:`_schema_dict`) is appended to the version ``prev``, or
-    ValueError. Appends target flat tables. Without evolution the batch
-    has exactly the table's columns; with it (additive evolution, the
-    public table formats' add-column rule) the batch carries every
-    existing column -- old files NULL-backfill the columns they predate,
-    but existing rows can never grow a value for a dropped one -- and new
-    columns go at the end. Same-name columns never change type."""
-    if "partitions" in prev:
-        raise ValueError(
-            "snapshot append targets flat tables; partitioned tables"
-            " append through snapshot_merge_partitioned (per-partition"
-            " manifest entries must stay partition-keyed)"
-        )
+    ValueError. Without evolution the batch has exactly the table's
+    columns; with it (additive evolution, the public table formats'
+    add-column rule) the batch carries every existing column -- old files
+    NULL-backfill the columns they predate, but existing rows can never
+    grow a value for a dropped one -- and new columns go at the end.
+    Same-name columns never change type."""
     old_cols = list(prev["columns"])
     cols = [f["name"] for f in schema["fields"]]
     if evolve_schema:
@@ -486,6 +518,14 @@ def _append_columns(prev: dict, schema: dict, evolve_schema: bool) -> list[str]:
     return old_cols + [c for c in cols if c not in old_cols]
 
 
+def _declared(prev: dict | None, key: str, cols: list[str] | None) -> list[str]:
+    """The columns ``prev`` records under ``key`` (``stats_cols`` or
+    ``bloom_cols``), then ``cols``: zone maps and bloom sidecars are
+    table properties, so once declared every writer collects them for
+    its new files."""
+    return list(dict.fromkeys([*(prev or {}).get(key, []), *(cols or [])]))
+
+
 def _file_manifest(
     table_dir: str,
     prev: dict | None,
@@ -495,18 +535,20 @@ def _file_manifest(
     evolve_schema: bool = False,
     stats_cols: list[str] | None = None,
     bloom_cols: list[str] | None = None,
+    append: bool = True,
 ) -> dict:
     """The manifest of ``version`` committing ``new_files``, written with
-    the batch schema ``schema`` (a :func:`_schema_dict`): the whole table
-    when ``prev`` is None, else an append to ``prev`` under
-    :func:`_append_columns`'s rules that carries its files, tombstones,
-    zone maps and bloom index forward. Zone maps (``stats_cols``) and
-    bloom sidecars are collected for the new files only; an append
-    indexes ``prev``'s ``bloom_cols``, since bloom indexing is a table
-    property once declared. The one manifest builder of
-    :func:`snapshot_write`, :func:`snapshot_append` and the ``snapshot``
-    format writer."""
-    if prev is None:
+    the batch schema ``schema`` (a :func:`_schema_dict`): an append to
+    ``prev`` under :func:`_append_columns`'s rules that carries its files,
+    tombstones, zone maps and bloom sidecars forward, or the whole table
+    when ``prev`` is None or ``append`` is false. Zone maps and bloom
+    sidecars are collected for the new files only, on ``stats_cols`` and
+    ``bloom_cols`` plus the ones ``prev`` declares (:func:`_declared`); a
+    table that declares none reads no footer. The one manifest builder of
+    every library writer and the ``snapshot`` format writer."""
+    stats_cols = _declared(prev, "stats_cols", stats_cols)
+    bloom_cols = _declared(prev, "bloom_cols", bloom_cols)
+    if prev is None or not append:
         manifest = {"version": version, "files": list(new_files)}
         columns = [f["name"] for f in schema["fields"]]
     else:
@@ -514,7 +556,6 @@ def _file_manifest(
         manifest = _carry_forward(prev)
         manifest["version"] = version
         manifest["files"] = list(prev["files"]) + new_files
-        bloom_cols = prev.get("bloom_cols")
     fields = {f["name"]: f for f in schema["fields"]}
     manifest["n_files"] = len(manifest["files"])
     manifest["columns"] = columns
@@ -524,12 +565,13 @@ def _file_manifest(
             **manifest.get("file_stats", {}),
             **_collect_file_stats(table_dir, new_files, stats_cols),
         }
+        manifest["stats_cols"] = stats_cols
     if bloom_cols:
         manifest["file_blooms"] = {
             **manifest.get("file_blooms", {}),
             **_collect_file_blooms(table_dir, new_files, bloom_cols),
         }
-        manifest["bloom_cols"] = list(bloom_cols)
+        manifest["bloom_cols"] = bloom_cols
     return manifest
 
 
@@ -548,7 +590,8 @@ def snapshot_write(
     the commit is refused if someone else advanced the table since.
     ``stats_cols`` records per-file min/max zone maps in the manifest for
     those columns, enabling manifest-level file pruning in
-    :func:`snapshot_read_pruned`."""
+    :func:`snapshot_read_pruned`; like ``bloom_cols``, they add to the
+    ones the base version declares."""
     os.makedirs(os.path.join(table_dir, "_manifests"), exist_ok=True)
     # base_version=None means "I read an EMPTY table" (the docstring's
     # contract: pass exactly what latest_version returned) — so a first
@@ -560,8 +603,10 @@ def snapshot_write(
     version = (current if current is not None else -1) + 1
     files = _stage(table_dir, df, "data", version)
     manifest = _file_manifest(
-        table_dir, None, version, _schema_dict(df.schema), files,
-        stats_cols=stats_cols, bloom_cols=bloom_cols,
+        table_dir,
+        None if current is None else read_manifest(table_dir, current),
+        version, _schema_dict(df.schema), files,
+        stats_cols=stats_cols, bloom_cols=bloom_cols, append=False,
     )
     if extra_manifest:
         manifest.update(extra_manifest)
@@ -609,7 +654,7 @@ def _scan(
     if not rels:
         if schema is not None:
             return spark.createDataFrame([], StructType.fromJson(schema))
-        every = _manifest_files(manifest)
+        every = manifest["files"]
         if not every:
             raise FileNotFoundError(
                 f"snapshot v{manifest.get('version')} of {table_dir} has no"
@@ -707,7 +752,7 @@ def snapshot_read(
     uncommitted job output can never leak into the scan. Tombstoned rows
     (merge-on-read deletes) are anti-joined out."""
     _v, manifest = _resolved(table_dir, version)
-    return _scan(spark, table_dir, manifest, _manifest_files(manifest))
+    return _scan(spark, table_dir, manifest, manifest["files"])
 
 
 def snapshot_delete(
@@ -749,7 +794,7 @@ def snapshot_delete(
     # keys as a set or as the right side of an anti-join, so a key
     # repeated in keys_df deletes the same rows as one.
     tfiles = _stage(table_dir, keys_df.select(*key_cols).coalesce(1), "tombstones", version)
-    manifest = _carry_forward(prev)  # files/partitions forward UNCHANGED
+    manifest = _carry_forward(prev)  # files forward UNCHANGED
     manifest["version"] = version
     manifest["tombstones"] = list(prev.get("tombstones", [])) + tfiles
     manifest["key_cols"] = key_cols
@@ -804,10 +849,11 @@ def snapshot_append(
 
 
 def _commit_with_retry(attempt_commit, max_retries: int) -> int:
-    """THE optimistic commit-retry policy, in one place (append and merge
-    share it): re-invoke ``attempt_commit`` on SnapshotConflictError —
-    each retry observes a strictly newer base, so with N racing writers
-    at most N-1 retries each — and give up loudly after ``max_retries``
+    """THE optimistic commit-retry policy, in one place (append, merge,
+    group commits and the format writer share it): re-invoke
+    ``attempt_commit`` on SnapshotConflictError — each retry observes a
+    strictly newer base, so with N racing writers at most N-1 retries
+    each — and re-raise the last conflict after ``max_retries``
     consecutive losses (a pathological-livelock signal, not a normal
     outcome)."""
     for attempt in range(max_retries + 1):
@@ -877,14 +923,6 @@ def snapshot_merge(
         key_dedup(merged, key_cols, [F.col(c).desc() for c in order_cols]),
         base_version=base,
         extra_manifest={"operation": "merge"},
-        # bloom indexing is a table property: a rewrite re-derives the
-        # sidecars for its new files or point-lookup skipping silently
-        # dies at the first merge
-        bloom_cols=(
-            read_manifest(table_dir, base).get("bloom_cols")
-            if base is not None
-            else None
-        ),
     )
 
 
@@ -1031,21 +1069,18 @@ def snapshot_commit_group_optimistic(
     the STALE member map and silently drop the winner's table bumps —
     the same lost-update hazard the table-level merge retry exists for,
     one level up."""
-    for _ in range(max_retries + 1):
+
+    def attempt() -> int:
         base = latest_group(root)
         base_members = (
             read_group_manifest(root, base)["members"] if base is not None else {}
         )
-        members = compute_members(base, base_members)
-        try:
-            return snapshot_commit_group(
-                root, members, base_group=base, operation=operation
-            )
-        except SnapshotConflictError:
-            continue
-    raise SnapshotConflictError(
-        f"group commit under {root} lost {max_retries + 1} races; giving up"
-    )
+        return snapshot_commit_group(
+            root, compute_members(base, base_members), base_group=base,
+            operation=operation,
+        )
+
+    return _commit_with_retry(attempt, max_retries)
 
 
 def snapshot_read_group(
@@ -1099,7 +1134,6 @@ def snapshot_zorder(
         base_version=base,
         stats_cols=stats_cols,
         extra_manifest={"data_change": False, "operation": "zorder"},
-        bloom_cols=read_manifest(table_dir, base).get("bloom_cols"),
     )
 
 
@@ -1132,7 +1166,6 @@ def snapshot_compact(
         current.coalesce(target_files),
         base_version=base,
         extra_manifest={"data_change": False, "operation": "compact"},
-        bloom_cols=read_manifest(table_dir, base).get("bloom_cols"),
     )
 
 
@@ -1150,15 +1183,20 @@ def snapshot_vacuum(
     as the steady state. The current pointer is never eligible
     (``keep_last`` is clamped to >= 1), so serving is unaffected.
 
-    REFERENCE-AWARE for partitioned snapshots: a retained manifest may
-    point at files in an EXPIRED version's directory (partition reuse —
-    that sharing is the whole point of O(changed-partitions) commits), so
-    vacuum first collects every file referenced by a retained manifest
-    and deletes only unreferenced files from expired version dirs. This
-    is the retention side of time travel: at 100 TB, keeping every
-    version forever doubles storage per full rewrite; vacuum bounds it to
-    ``keep_last`` snapshots, same as any production table format."""
-    import shutil
+    REFERENCE-AWARE: a retained manifest may point at files in an EXPIRED
+    version's directory (appends, deletes and partition-scoped merges
+    carry files forward -- that sharing is what keeps those commits
+    O(batch)), so vacuum first collects every file referenced by a
+    retained manifest and deletes only unreferenced files from expired
+    version dirs. This is the retention side of time travel: at 100 TB,
+    keeping every version forever doubles storage per full rewrite;
+    vacuum bounds it to ``keep_last`` snapshots, same as any production
+    table format.
+
+    ``orphan_ttl_sec`` also sweeps unreferenced files older than it from
+    the retained version dirs and the one past the current pointer: the
+    staging of optimistic-commit losers and crashed writers."""
+    import time
 
     current = latest_version(table_dir)
     if current is None:
@@ -1170,7 +1208,7 @@ def snapshot_vacuum(
         if not os.path.exists(_manifest_path(table_dir, v)):
             continue
         m = read_manifest(table_dir, v)
-        retained_refs.update(_manifest_files(m))
+        retained_refs.update(m["files"])
         # tombstone files carry forward across delete commits, so a
         # retained manifest may reference tombstones first committed by
         # an expired version — same sharing rule as data files
@@ -1178,82 +1216,45 @@ def snapshot_vacuum(
         # bloom sidecars live next to their data file and share its
         # lifetime: referenced by a retained manifest -> retained
         retained_refs.update(m.get("file_blooms", {}).values())
+    # Optimistic-commit losers stage data under RETAINED version
+    # directories (a loser that derived v{N} wrote data/v{N}/<its token>/
+    # before the winner's pointer landed), and a writer that DERIVED
+    # v{current+1} and crashed before its commit leaves staging one past
+    # the current pointer; hence the walk up to current + 2. Their files
+    # go only once older than the TTL (Delta's VACUUM retention-window
+    # rule): a young unreferenced file may be an IN-FLIGHT writer's
+    # staging whose manifest hasn't landed yet, so age, not
+    # referencedness alone, is the safety predicate. Production default
+    # belongs in hours; tests pass 0 to sweep a known-lost attempt
+    # immediately.
+    horizon = None if orphan_ttl_sec is None else time.time() - orphan_ttl_sec
+    stop = cutoff if horizon is None else current + 2
     vacuumed = []
-    for v in range(cutoff):
-        # Walk the DATA directory whenever it exists, independent of the
+    for v in range(max(0, stop)):
+        expired = v < cutoff
+        # Walk the directories whenever they exist, independent of the
         # manifest: a file can outlive its own version's manifest because
-        # a then-retained manifest referenced it (partition sharing);
-        # once those referencing manifests expire too, this pass must
-        # still reclaim it (keying the walk off manifest existence leaks
-        # such files forever).
+        # a then-retained manifest referenced it; once those referencing
+        # manifests expire too, this walk must still reclaim it (keying
+        # it off manifest existence leaks such files forever).
         for vdir in (
             os.path.join(table_dir, "data", f"v{v}"),
             os.path.join(table_dir, "tombstones", f"v{v}"),
         ):
-            if not os.path.isdir(vdir):
-                continue
             for root, _dirs, files in os.walk(vdir, topdown=False):
                 for name in files:
                     full = os.path.join(root, name)
-                    rel = os.path.relpath(full, table_dir)
-                    if rel not in retained_refs:
+                    if os.path.relpath(full, table_dir) not in retained_refs and (
+                        expired or os.stat(full).st_mtime <= horizon
+                    ):
                         os.remove(full)
-                if not os.listdir(root):
+                if (expired or root != vdir) and not os.listdir(root):
                     os.rmdir(root)
-            if os.path.isdir(vdir) and not any(
-                f for _r, _d, fs in os.walk(vdir) for f in fs
-            ):
-                shutil.rmtree(vdir, ignore_errors=True)
         manifest = _manifest_path(table_dir, v)
-        if os.path.exists(manifest):
+        if expired and os.path.exists(manifest):
             os.remove(manifest)
             vacuumed.append(v)  # manifest existence = "newly vacuumed"
-    if orphan_ttl_sec is not None:
-        # Optimistic-commit losers stage data under RETAINED version
-        # directories (a loser that derived v{N} wrote data/v{N}/<its
-        # token>/ before the winner's pointer landed), so the expired-
-        # version walk above never reclaims them. Sweep unreferenced
-        # files from retained dirs too — but only ones older than the
-        # TTL (Delta's VACUUM retention-window rule): a young
-        # unreferenced file may be an IN-FLIGHT writer's staging whose
-        # manifest hasn't landed yet; deleting it would corrupt a
-        # commit in progress, so age, not referencedness alone, is the
-        # safety predicate. Production default belongs in hours; tests
-        # pass 0 to sweep a known-lost attempt immediately.
-        import time
-
-        horizon = time.time() - orphan_ttl_sec
-        # current + 2: a writer that DERIVED v{current+1} and crashed
-        # before its commit (no rival ever took that version) leaves
-        # staging in a directory one past the current pointer — the walk
-        # must include it or that garbage leaks until an unrelated
-        # commit advances the table
-        for v in range(max(0, cutoff), current + 2):
-            for vdir in (
-                os.path.join(table_dir, "data", f"v{v}"),
-                os.path.join(table_dir, "tombstones", f"v{v}"),
-            ):
-                if not os.path.isdir(vdir):
-                    continue
-                for root, _dirs, files in os.walk(vdir, topdown=False):
-                    for name in files:
-                        full = os.path.join(root, name)
-                        rel = os.path.relpath(full, table_dir)
-                        if rel not in retained_refs and (
-                            os.stat(full).st_mtime <= horizon
-                        ):
-                            os.remove(full)
-                    if root != vdir and not os.listdir(root):
-                        os.rmdir(root)
     return vacuumed
-
-
-def _manifest_files(manifest: dict) -> list[str]:
-    """Relative file paths of a manifest, either layout (flat ``files``
-    or partitioned ``partitions``)."""
-    if "partitions" in manifest:
-        return [f for fs in manifest["partitions"].values() for f in fs]
-    return list(manifest["files"])
 
 
 def snapshot_read_since(
@@ -1279,8 +1280,8 @@ def snapshot_read_since(
     :func:`snapshot_diff`)."""
     v, manifest = _resolved(table_dir, version)
     since_version = resolve_version(table_dir, since_version)
-    old_files = set(_manifest_files(read_manifest(table_dir, since_version)))
-    new_files = _manifest_files(manifest)
+    old_files = set(read_manifest(table_dir, since_version)["files"])
+    new_files = manifest["files"]
     dropped = old_files.difference(new_files)
     if dropped:
         raise ValueError(
@@ -1295,19 +1296,47 @@ def snapshot_read_since(
     )
 
 
+def _may_hold(bounds: list | None, lo, hi) -> bool:
+    """Whether a file whose zone map is ``bounds`` ([min, max], None for
+    no stats) may hold a value in [lo, hi], each side given as
+    :func:`_zone_value` gives it; None leaves that side open. A probe
+    that cannot be compared with the bounds keeps the file."""
+    if bounds is None:
+        return True
+    try:
+        return (lo is None or not bounds[1] < lo) and (hi is None or not bounds[0] > hi)
+    except TypeError:
+        return True
+
+
 def prune_files(manifest: dict, col: str, lo, hi) -> list[str]:
     """Manifest-level zone-map pruning: the files of ``manifest`` whose
-    recorded [min, max] for ``col`` overlaps [lo, hi]. Files without
-    stats for the column are kept (pruning is an optimization, never a
-    correctness filter). Pure metadata — safe to call on the driver for
-    any table size."""
+    recorded [min, max] for ``col`` overlaps [lo, hi] (None: that side is
+    open). Files without stats for the column are kept (pruning is an
+    optimization, never a correctness filter). Pure metadata — safe to
+    call on the driver for any table size."""
     stats = manifest.get("file_stats", {})
-    kept = []
-    for rel in _manifest_files(manifest):
-        s = stats.get(rel, {}).get(col)
-        if s is None or not (s[1] < lo or s[0] > hi):
-            kept.append(rel)
-    return kept
+    lo, hi = _zone_value(lo), _zone_value(hi)
+    return [
+        rel for rel in manifest["files"]
+        if _may_hold(stats.get(rel, {}).get(col), lo, hi)
+    ]
+
+
+def prune_values(manifest: dict, col: str, values) -> list[str]:
+    """The value-set counterpart of :func:`prune_files`: the files of
+    ``manifest`` whose recorded [min, max] for ``col`` may hold one of
+    ``values``. Files without stats for the column are kept; a NULL
+    probe matches nothing, as in SQL equality. On a partitioned table,
+    whose files each hold one value of ``partition_col``, this is
+    partition pruning."""
+    stats = manifest.get("file_stats", {})
+    probes = [_zone_value(v) for v in values if v is not None]
+
+    def kept(bounds: list | None) -> bool:
+        return bounds is None or any(_may_hold(bounds, p, p) for p in probes)
+
+    return [rel for rel in manifest["files"] if kept(stats.get(rel, {}).get(col))]
 
 
 def snapshot_read_pruned(
@@ -1389,7 +1418,8 @@ def snapshot_diff(
 
 
 # ---------------------------------------------------------------------------
-# Partitioned snapshots: commit only changed partitions, reuse the rest
+# Partitioned snapshots: one partition value per file, rewrite only the
+# files a batch's values may touch
 # ---------------------------------------------------------------------------
 
 def snapshot_write_partitioned(
@@ -1398,35 +1428,41 @@ def snapshot_write_partitioned(
     df: DataFrame,
     partition_col: str,
     base_version: int | None = None,
-    reuse: dict[str, list[str]] | None = None,
 ) -> int:
-    """Commit ``df`` partitioned by ``partition_col`` plus ``reuse`` —
-    manifest entries pointing at PRIOR versions' immutable files for the
-    partitions this commit does not touch. This is what makes the
-    snapshot layer O(changed partitions) instead of O(table) per commit
-    (plain snapshot_merge rewrites everything — the reference's per-row
-    CSV rewrite flaw reappearing at table granularity; manifest-level
-    file reuse is how the production formats avoid it).
+    """Commit ``df`` as the next snapshot of ``table_dir``, its files split
+    by ``partition_col``: each file holds one value, so the manifest's
+    zone map on ``partition_col`` (min = max) is that file's partition
+    value, and ``partition_col`` is recorded in the manifest. The manifest
+    is an ordinary flat file list: every reader, the ``snapshot`` data
+    source and :func:`snapshot_merge_partitioned` prune it on the zone
+    maps, so a partition-scoped merge rewrites only the files of the
+    values it touches. Data files carry the partition COLUMN in their
+    rows (the directory layout under ``data/v{N}/{token}/<value>/`` is
+    bookkeeping, not Hive-style partition encoding). Commit protocol and
+    the optimistic conflict rule are :func:`snapshot_write`'s.
 
-    The partitioned manifest maps partition value → relative file list
-    (``{"partitions": {value: [files...]}}``). Data files carry the
-    partition COLUMN in their rows (the directory layout under
-    ``data/v{N}/{token}/<value>/`` is bookkeeping, not Hive-style
-    partition encoding), so a reader just reads the manifest's files — including
-    ones from older version directories — with no basePath gymnastics.
-    Commit protocol (writer-unique data directory, then manifest +
-    pointer swap under the commit lock with the base re-verified) and
-    the optimistic conflict rule are inherited unchanged.
+    ``partition_col`` must be NON-NULL for every row: a NULL has no
+    partition directory and no zone map, and ``col == None`` is SQL NULL
+    semantics and matches nothing, so null-partition rows would vanish
+    from the committed snapshot -- the guard raises instead."""
+    return _write_partitions(spark, table_dir, df, partition_col, base_version, None)
 
-    ``partition_col`` must be NON-NULL for every row: partition values
-    key the manifest as strings, and a NULL cannot round-trip that
-    mapping — the guard below raises instead of silently dropping the
-    rows (``col == None`` is SQL NULL semantics and matches nothing, so
-    null-partition rows would vanish from the committed snapshot)."""
+
+def _write_partitions(
+    spark: SparkSession,
+    table_dir: str,
+    df: DataFrame,
+    partition_col: str,
+    base_version: int | None,
+    carried: dict | None,
+) -> int:
+    """Stage ``df`` one directory per value of ``partition_col`` and
+    commit it appended to ``carried`` -- the base manifest cut to the
+    files a partition-scoped merge keeps -- or, when that is None, as
+    the whole table."""
     os.makedirs(os.path.join(table_dir, "_manifests"), exist_ok=True)
     current = _check_base(table_dir, base_version)
     version = (current if current is not None else -1) + 1
-    partitions: dict[str, list[str]] = dict(reuse or {})
     # Materialize ONCE before the per-partition writes: without this the
     # (possibly expensive merged) plan re-executes for every affected
     # partition's filter — O(partitions x plan) at scale. Checkpoint
@@ -1439,25 +1475,31 @@ def snapshot_write_partitioned(
         n_null = df.filter(df[partition_col].isNull()).count()
         raise ValueError(
             f"snapshot_write_partitioned: {n_null} rows have NULL"
-            f" {partition_col!r}; partition values key the manifest and"
-            " must be non-null — filter or fill them before committing"
+            f" {partition_col!r}; partition values are the files' zone maps"
+            " and must be non-null — filter or fill them before committing"
         )
-    for val in values:
-        # bounded by the BATCH's distinct partition values (the same
-        # driver-side bound merge_into_partitioned documents); each
-        # partition writes to its own writer-unique immutable directory
-        partitions[str(val)] = _stage(
+    # bounded by the BATCH's distinct partition values (the same
+    # driver-side bound merge_into_partitioned documents); each partition
+    # writes to its own writer-unique immutable directory
+    files = [
+        rel
+        for val in values
+        for rel in _stage(
             table_dir, df.filter(df[partition_col] == val), "data", version, str(val)
         )
-    manifest = {
-        "version": version,
-        "partition_col": partition_col,
-        "partitions": partitions,
-        "n_files": sum(len(v) for v in partitions.values()),
-        "columns": df.columns,
-        "schema": _schema_dict(df.schema),
-        "operation": "write-partitioned" if reuse is None else "merge-partitioned",
-    }
+    ]
+    if carried is None and current is not None:
+        prev = read_manifest(table_dir, current)  # for its declared indexes
+    else:
+        prev = carried
+    manifest = _file_manifest(
+        table_dir, prev, version, _schema_dict(df.schema), files,
+        stats_cols=[partition_col], append=carried is not None,
+    )
+    manifest["partition_col"] = partition_col
+    manifest["operation"] = (
+        "write-partitioned" if carried is None else "merge-partitioned"
+    )
     _commit_metadata(table_dir, version, base_version, manifest)
     return version
 
@@ -1468,16 +1510,17 @@ def snapshot_read_partitioned(
     version: int | None = None,
     values: list | None = None,
 ) -> DataFrame:
-    """Read a partitioned snapshot; ``values`` prunes to those partitions
-    at MANIFEST level — the file list never includes other partitions, so
-    pruning costs zero I/O (Iceberg-style metadata pruning: at 100 TB the
-    scan starts from exactly the needed files, no directory listing)."""
+    """Read a partitioned snapshot; ``values`` keeps the rows whose
+    ``partition_col`` is one of them, scanning only the files whose zone
+    map may hold one (:func:`prune_values`; files without stats are
+    always read) -- pruning on kilobytes of manifest, no directory
+    listing (Iceberg-style metadata pruning at 100 TB)."""
     _v, manifest = _resolved(table_dir, version)
-    parts = manifest["partitions"]
-    keys = [str(x) for x in values] if values is not None else list(parts)
-    return _scan(
-        spark, table_dir, manifest, [rel for k in keys if k in parts for rel in parts[k]]
-    )
+    if values is None:
+        return _scan(spark, table_dir, manifest, manifest["files"])
+    col = manifest["partition_col"]
+    df = _scan(spark, table_dir, manifest, prune_values(manifest, col, values))
+    return df.filter(F.col(col).isin(list(values)))
 
 
 def snapshot_merge_partitioned(
@@ -1488,42 +1531,43 @@ def snapshot_merge_partitioned(
     order_cols: list[str],
     partition_col: str,
 ) -> int:
-    """Partition-scoped upsert through the snapshot protocol: only
-    partitions containing updated keys are read, merged (content-ordered
-    winner per key) and rewritten; every other partition's manifest entry
-    is copied forward pointing at its EXISTING files. One commit =
-    O(affected partitions) I/O + a pointer swap, with the same
-    crash/conflict/time-travel guarantees as the full-table form. The
-    partition column must be a stable function of the key (the
-    merge_into_partitioned contract: a key's rows never straddle
-    partitions)."""
+    """Partition-scoped upsert through the snapshot protocol, file-level
+    copy-on-write on zone maps: only the files whose zone map on
+    ``partition_col`` may hold a value of the batch are read, merged
+    (content-ordered winner per key) and rewritten, one file per value;
+    every other file is carried forward with its zone map and bloom
+    sidecar. One commit = O(affected partitions) I/O + a pointer swap,
+    with the same crash/conflict/time-travel guarantees as the
+    full-table form. A base with tombstones is rewritten whole, which
+    folds them, as :func:`snapshot_merge` does: carried files would
+    otherwise lose their deletes. The partition column must be a stable
+    function of the key (the merge_into_partitioned contract: a key's
+    rows never straddle partitions)."""
+    order = [F.col(c).desc() for c in order_cols]
     base = latest_version(table_dir)
     if base is None:
         return snapshot_write_partitioned(
-            spark,
-            table_dir,
-            key_dedup(updates, key_cols, [F.col(c).desc() for c in order_cols]),
-            partition_col, base_version=None,
+            spark, table_dir, key_dedup(updates, key_cols, order), partition_col
         )
-    affected = [
-        r[0] for r in updates.select(partition_col).distinct().collect()
-    ]
-    existing = snapshot_read_partitioned(
-        spark, table_dir, version=base, values=affected
-    )
+    prev = read_manifest(table_dir, base)
+    rewritten = prev["files"]
+    if not prev.get("tombstones"):
+        affected = [r[0] for r in updates.select(partition_col).distinct().collect()]
+        rewritten = prune_values(prev, partition_col, affected)
+    # select: the tombstone anti-join of _scan puts the key columns first,
+    # and an append keeps the table's column order
     merged = key_dedup(
-        existing.unionByName(updates), key_cols, [F.col(c).desc() for c in order_cols]
-    )
-    old_parts = read_manifest(table_dir, base)["partitions"]
-    reuse = {
-        k: files
-        for k, files in old_parts.items()
-        if k not in {str(v) for v in affected}
-    }
-    return snapshot_write_partitioned(
-        spark, table_dir, merged, partition_col,
-        base_version=base, reuse=reuse,
-    )
+        _scan(spark, table_dir, prev, rewritten).unionByName(updates), key_cols, order
+    ).select(*prev["columns"])
+    rewritten_set = set(rewritten)
+    kept = [f for f in prev["files"] if f not in rewritten_set]
+    carried = {**prev, "files": kept}
+    carried.pop("tombstones", None)
+    carried.pop("key_cols", None)
+    for per_file in ("file_stats", "file_blooms"):
+        if per_file in prev:
+            carried[per_file] = {f: prev[per_file][f] for f in kept if f in prev[per_file]}
+    return _write_partitions(spark, table_dir, merged, partition_col, base, carried)
 
 
 def snapshot_history(spark: SparkSession, table_dir: str) -> DataFrame:
@@ -1552,7 +1596,7 @@ def snapshot_history(spark: SparkSession, table_dir: str) -> DataFrame:
                 (
                     v,
                     m.get("operation"),
-                    int(m.get("n_files", len(_manifest_files(m)))),
+                    int(m.get("n_files", len(m["files"]))),
                     bool(m.get("data_change", True)),
                     len(m.get("tombstones", [])),
                     float(m["committed_at"]) if "committed_at" in m else None,
@@ -1673,12 +1717,7 @@ def snapshot_clone(
 
     clone = _carry_forward(m)
     clone.pop("stream_txn", None)  # sink idempotence records are per-table
-    if "partitions" in m:
-        clone["partitions"] = {
-            val: [_abs(f) for f in fs] for val, fs in m["partitions"].items()
-        }
-    else:
-        clone["files"] = [_abs(f) for f in m["files"]]
+    clone["files"] = [_abs(f) for f in m["files"]]
     if "tombstones" in m:
         clone["tombstones"] = [_abs(t) for t in m["tombstones"]]
     if "file_stats" in m:

@@ -14,8 +14,9 @@ hooks live. Routing the table format through a real DataSource buys
 
 * **planning-time file pruning** — ``pushFilters`` (Spark 4.1 Python
   filter pushdown) intersects the query's predicates with the manifest's
-  per-file zone maps and the partitioned manifest's value keys, so files
-  that cannot match never become input partitions. The pruning happens on
+  per-file zone maps (a partitioned table's partition values among them)
+  and bloom sidecars, so files that cannot match never become input
+  partitions. The pruning happens on
   kilobytes of driver-side metadata BEFORE any file listing or footer
   I/O; every pushed filter is also returned to Spark for exact re-apply,
   so stats are an optimization and never a correctness filter (same
@@ -199,11 +200,7 @@ def make_snapshot_datasource():
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import from_arrow_schema
 
-        from petfinder_database_distributor_spark.sources.snapshot import (
-            _manifest_files,
-        )
-
-        first = _manifest_files(manifest)[0]
+        first = manifest["files"][0]
         arrow = pq.read_schema(os.path.join(table_dir, first))
         return from_arrow_schema(arrow).json()
 
@@ -214,21 +211,13 @@ def make_snapshot_datasource():
             self.table_dir, self.version, self.manifest, self.schema_json = (
                 _resolve(options)
             )
-            # col -> [lo, hi] bounds accumulated from pushed filters
-            # (None = unbounded on that side); partition values pinned by
-            # EqualTo/In on the partition column; col -> candidate value
-            # set for bloom-indexed point lookups.
+            # col -> [lo, hi] bounds from pushed range filters (None =
+            # unbounded on that side); col -> candidate value set from
+            # pushed EqualTo/In point filters.
             self._bounds: dict = {}
-            self._part_values = None
-            self._bloom_values: dict = {}
+            self._points: dict = {}
 
         def pushFilters(self, filters):
-            part_col = self.manifest.get("partition_col")
-            bloom_cols = set(self.manifest.get("bloom_cols", []))
-            stats_cols = set()
-            for per_file in self.manifest.get("file_stats", {}).values():
-                stats_cols.update(per_file)
-
             def tighten(col, lo=None, hi=None):
                 b = self._bounds.setdefault(col, [None, None])
                 if lo is not None and (b[0] is None or lo > b[0]):
@@ -241,93 +230,42 @@ def make_snapshot_datasource():
                 if attr is None or len(attr) != 1:
                     continue
                 (col,) = attr
-                if col == part_col:
-                    if isinstance(f, EqualTo):
-                        vals = {str(f.value)}
-                        self._part_values = (
-                            vals
-                            if self._part_values is None
-                            else self._part_values & vals
-                        )
-                    elif isinstance(f, In):
-                        vals = {str(v) for v in f.value}
-                        self._part_values = (
-                            vals
-                            if self._part_values is None
-                            else self._part_values & vals
-                        )
-                if col in stats_cols:
-                    if isinstance(f, EqualTo):
-                        tighten(col, lo=f.value, hi=f.value)
-                    elif isinstance(f, (GreaterThan, GreaterThanOrEqual)):
-                        tighten(col, lo=f.value)
-                    elif isinstance(f, (LessThan, LessThanOrEqual)):
-                        tighten(col, hi=f.value)
-                    elif isinstance(f, In):
-                        tighten(col, lo=min(f.value), hi=max(f.value))
-                if col in bloom_cols and isinstance(f, (EqualTo, In)):
-                    # point-lookup candidates for bloom file skipping;
-                    # conjunctive filters INTERSECT candidate sets
-                    vals = (
-                        {f.value} if isinstance(f, EqualTo) else set(f.value)
-                    )
-                    prev = self._bloom_values.get(col)
-                    self._bloom_values[col] = (
-                        vals if prev is None else prev & vals
-                    )
+                if isinstance(f, (EqualTo, In)):
+                    # conjunctive point filters INTERSECT candidate sets
+                    try:
+                        vals = {f.value} if isinstance(f, EqualTo) else set(f.value)
+                    except TypeError:  # an unhashable literal (array, map)
+                        continue
+                    prev = self._points.get(col)
+                    self._points[col] = vals if prev is None else prev & vals
+                elif isinstance(f, (GreaterThan, GreaterThanOrEqual)):
+                    tighten(col, lo=f.value)
+                elif isinstance(f, (LessThan, LessThanOrEqual)):
+                    tighten(col, hi=f.value)
             # Every filter goes back to Spark for exact evaluation: zone
-            # maps and partition keys only SKIP files that cannot match —
-            # an optimization, never the correctness filter. (Open-sided
+            # maps and blooms only SKIP files that cannot match — an
+            # optimization, never the correctness filter. (Open-sided
             # GreaterThan/LessThan bounds are treated as closed for
             # pruning, which only errs toward keeping files.)
             return filters
 
         def _kept_files(self):
             from petfinder_database_distributor_spark.sources.snapshot import (
-                _manifest_files,
+                bloom_prune_files,
                 prune_files,
+                prune_values,
             )
 
-            if "partitions" in self.manifest and self._part_values is not None:
-                files = [
-                    f
-                    for val, fs in self.manifest["partitions"].items()
-                    if val in self._part_values
-                    for f in fs
-                ]
-            else:
-                files = _manifest_files(self.manifest)
+            kept = set(self.manifest["files"])
             for col, (lo, hi) in self._bounds.items():
-                if lo is None and hi is None:
-                    continue
-                try:
-                    survivors = set(
-                        prune_files(
-                            self.manifest,
-                            col,
-                            lo if lo is not None else float("-inf"),
-                            hi if hi is not None else float("inf"),
-                        )
+                kept.intersection_update(prune_files(self.manifest, col, lo, hi))
+            for col, vals in self._points.items():
+                kept.intersection_update(prune_values(self.manifest, col, vals))
+                if col in self.manifest.get("bloom_cols", []):
+                    kept.intersection_update(
+                        bloom_prune_files(self.table_dir, self.manifest, col, list(vals))
                     )
-                except TypeError:
-                    # non-numeric stats (dates, strings) can't compare
-                    # against the inf sentinels of a one-sided bound:
-                    # pruning is an optimization — degrade to keeping
-                    # the files, never fail the plan
-                    continue
-                files = [f for f in files if f in survivors]
-            for col, vals in self._bloom_values.items():
-                from petfinder_database_distributor_spark.sources.snapshot import (
-                    bloom_prune_files,
-                )
-
-                survivors = set(
-                    bloom_prune_files(
-                        self.table_dir, self.manifest, col, sorted(vals)
-                    )
-                )
-                files = [f for f in files if f in survivors]
-            return files
+            return [f for f in self.manifest["files"] if f in kept]
 
         def partitions(self):
             from petfinder_database_distributor_spark.sources.snapshot import (
@@ -445,8 +383,8 @@ def make_snapshot_datasource():
             import os
 
             from petfinder_database_distributor_spark.sources.snapshot import (
-                SnapshotConflictError,
                 _commit_metadata,
+                _commit_with_retry,
                 _file_manifest,
                 _schema_dict,
                 latest_version,
@@ -455,7 +393,8 @@ def make_snapshot_datasource():
 
             os.makedirs(os.path.join(self.table_dir, "_manifests"), exist_ok=True)
             schema = _schema_dict(StructType.fromJson(json.loads(self.schema_json)))
-            for _attempt in range(5):
+
+            def attempt():
                 base = latest_version(self.table_dir)
                 prev = (
                     read_manifest(self.table_dir, base)
@@ -469,11 +408,9 @@ def make_snapshot_datasource():
                         # replayed epoch of THIS query: already durable,
                         # drop the stage
                         for n in staged:
-                            try:
+                            with contextlib.suppress(FileNotFoundError):
                                 os.remove(os.path.join(self._staging_dir(), n))
-                            except FileNotFoundError:
-                                pass
-                        return
+                        return None
                     stream_txn[txn_app_id] = batch_id
                 version = (base if base is not None else -1) + 1
                 rel_home = f"data/v{version}/{self.token}"
@@ -489,18 +426,19 @@ def make_snapshot_datasource():
                 # files sit under data/v{N}/ where only this manifest
                 # would reference them: ANY failure (schema rules, stats
                 # or bloom collection, manifest I/O, conflict) must move
-                # them back to _staging, or abort() can never find them
-                # and they are permanently orphaned under a version
-                # directory.
+                # them back to _staging, or abort() -- and the next
+                # attempt after a conflict -- can never find them and
+                # they are permanently orphaned under a version directory.
                 try:
                     manifest = _file_manifest(
                         self.table_dir,
-                        None if self.overwrite else prev,
+                        prev,
                         version,
                         schema,
                         [f"{rel_home}/{n}" for n in staged],
                         self.evolve,
                         self.stats_cols,
+                        append=not self.overwrite,
                     )
                     manifest["operation"] = (
                         "overwrite" if self.overwrite else "append"
@@ -513,8 +451,8 @@ def make_snapshot_datasource():
                     if extra:
                         manifest.update(extra)
                     _commit_metadata(self.table_dir, version, base, manifest)
-                    return
-                except BaseException as exc:
+                    return version
+                except BaseException:
                     for n in staged:
                         with contextlib.suppress(FileNotFoundError):
                             os.replace(
@@ -523,13 +461,11 @@ def make_snapshot_datasource():
                             )
                         with contextlib.suppress(FileNotFoundError):
                             os.remove(os.path.join(home, n + ".bloom"))
-                    if not isinstance(exc, SnapshotConflictError):
-                        raise
-                    # another blind writer landed first: re-derive from
-                    # the fresh base and retry the put-if-absent commit
-            raise SnapshotConflictError(
-                f"gave up committing to {self.table_dir} after 5 attempts"
-            )
+                    raise
+
+            # another blind writer landed first: re-derive from the fresh
+            # base and retry the put-if-absent commit, 5 attempts in all
+            _commit_with_retry(attempt, max_retries=4)
 
         def abort(self, messages):
             import os
@@ -630,7 +566,6 @@ def make_snapshot_datasource():
 
         def partitions(self, start, end):
             from petfinder_database_distributor_spark.sources.snapshot import (
-                _manifest_files,
                 load_tombstone_keys,
                 read_manifest,
             )
@@ -657,9 +592,7 @@ def make_snapshot_datasource():
             # rewrite cleared it are genuinely new rows for the key).
             end_manifest = read_manifest(self.table_dir, end["version"])
             if start["version"] >= 0:
-                prev = set(
-                    _manifest_files(read_manifest(self.table_dir, start["version"]))
-                )
+                prev = set(read_manifest(self.table_dir, start["version"])["files"])
             else:
                 prev = set()
             delta = []  # (rel, version that introduced it into the feed)
@@ -671,7 +604,7 @@ def make_snapshot_datasource():
                     key_cols = m["key_cols"]
                     for t in m["tombstones"]:
                         tomb_last_seen[t] = v
-                files_v = _manifest_files(m)
+                files_v = m["files"]
                 if m.get("data_change", True) is False:
                     prev = set(files_v)  # layout-only commit: skip
                     continue

@@ -4,7 +4,8 @@ connection; the request limits (414, 431), malformed request lines
 (400), unsupported methods (501) and HTTP versions (505); the key in
 ``?key=`` or an ``X-API-Key`` header in any letter case; a request head
 that arrives one byte at a time; a POST body drained by its
-``Content-Length``, and a ``Content-Length`` that is not a count.
+``Content-Length``, and a ``Content-Length`` that is not a count; a
+client that resets mid-answer, dropped without a traceback.
 Spark-free: the snapshot table and the CSV artifact are written by
 hand."""
 
@@ -13,6 +14,7 @@ from __future__ import annotations
 import json
 import re
 import socket
+import struct
 import time
 
 import pytest
@@ -169,3 +171,33 @@ def test_content_length_not_a_count_is_400(served, route, length):
     raw = _exchange(port, f"POST {route} HTTP/1.0\r\nContent-Length: {length}\r\n\r\n".encode())
     assert _status(raw) == 400
     assert json.loads(raw.partition(b"\r\n\r\n")[2]) == {"error": "invalid Content-Length"}
+
+
+def test_client_reset_mid_answer_is_quiet(tmp_path, capfd):
+    """A client that resets its connection after a few bytes of a large
+    ``/pets.csv`` costs no traceback on stderr, and the next request is
+    answered."""
+    table = str(tmp_path / "table")
+    _commit_versions(table)
+    artifact = tmp_path / "export"
+    artifact.mkdir()
+    row = b"https://pets.example/%d," + b"n" * 400 + b",True\n"
+    body = b"link,name,flag\n" + b"".join(row % i for i in range(20_000))
+    (artifact / "part-00000.csv").write_bytes(body)  # ~8 MB
+    httpd = serve_export(str(artifact), KEY, snapshot_dir=table)
+    try:
+        port = httpd.server_address[1]
+        with socket.create_connection(("127.0.0.1", port), timeout=10) as sock:
+            # linger 0: close() resets the connection instead of a FIN
+            sock.setsockopt(socket.SOL_SOCKET, socket.SO_LINGER, struct.pack("ii", 1, 0))
+            sock.sendall(_get("/pets.csv", f"X-API-Key: {KEY}"))
+            assert sock.recv(16).startswith(b"HTTP/1.0 200")
+        deadline = time.monotonic() + 10
+        while any(httpd._serving) and time.monotonic() < deadline:
+            time.sleep(0.01)  # the worker is done with the reset connection
+        assert not any(httpd._serving)
+        assert _status(_exchange(port, _get("/health"))) == 200
+    finally:
+        httpd.shutdown()
+        httpd.server_close()
+    assert capfd.readouterr().err == ""

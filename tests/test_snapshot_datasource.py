@@ -496,8 +496,10 @@ def test_stream_sink_fresh_query_new_data_not_lost(spark, table_dir, tmp_path):
 
 
 def test_pushdown_prunes_partitioned_manifest(spark, table_dir):
-    """EqualTo/In on the partition column of a partitioned manifest prune
-    whole partitions at planning time (manifest-key pruning, zero I/O)."""
+    """EqualTo/In on the partition column of a partitioned table prune
+    whole partitions at planning time: each file's partition value is
+    its zone map, so the scan plans exactly the files of the pinned
+    values (zone-map pruning, zero I/O)."""
     from petfinder_database_distributor_spark.sources.snapshot import (
         snapshot_write_partitioned,
     )
@@ -507,15 +509,43 @@ def test_pushdown_prunes_partitioned_manifest(spark, table_dir):
         "k long, color string",
     )
     snapshot_write_partitioned(spark, table_dir, df, "color")
+    m = read_manifest(table_dir, 0)
+
+    def files_of(*colors):
+        return [f for f in m["files"] if m["file_stats"][f]["color"][0] in colors]
+
     base = spark.read.format("snapshot").load(table_dir)
-    total = base.rdd.getNumPartitions()
+    assert base.rdd.getNumPartitions() == len(m["files"])
     one = base.filter(F.col("color") == "red")
-    assert one.rdd.getNumPartitions() < total
+    assert one.rdd.getNumPartitions() == len(files_of("red"))
     assert one.count() == 30
     two = base.filter(F.col("color").isin("red", "blue"))
-    assert two.rdd.getNumPartitions() < total
+    assert two.rdd.getNumPartitions() == len(files_of("red", "blue")) < len(m["files"])
     assert two.count() == 60
     assert sorted(r["k"] for r in one.collect()) == list(range(0, 90, 3))
+
+
+def test_pushdown_prunes_after_compaction_and_in_is_exact(spark, table_dir):
+    """Zone maps survive a compaction (``stats_cols`` is a table
+    property), so a pushed ``k BETWEEN`` still plans 1 file; an In list
+    plans exactly the files holding one of its values, not every file
+    of the range between them."""
+    from petfinder_database_distributor_spark.sources.snapshot import (
+        snapshot_compact,
+    )
+
+    df = spark.range(400).selectExpr("id AS k", "CAST(id AS STRING) AS v")
+    snapshot_write(spark, table_dir, df.repartitionByRange(4, "k"), stats_cols=["k"])
+    v = snapshot_compact(spark, table_dir, target_files=4)
+    m = read_manifest(table_dir, v)
+    assert len(m["files"]) == 4 and set(m["file_stats"]) == set(m["files"])
+    scan = spark.read.format("snapshot").load(table_dir)
+    between = scan.filter(F.col("k").between(110, 130))
+    assert between.rdd.getNumPartitions() == 1
+    assert sorted(r["k"] for r in between.collect()) == list(range(110, 131))
+    ends = scan.filter(F.col("k").isin(5, 395))
+    assert ends.rdd.getNumPartitions() == 2
+    assert sorted(r["k"] for r in ends.collect()) == [5, 395]
 
 
 def test_stream_skips_compaction_commits(spark, table_dir, tmp_path):

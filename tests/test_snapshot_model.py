@@ -42,6 +42,7 @@ from petfinder_database_distributor_spark.sources.snapshot import (
     snapshot_write,
 )
 from petfinder_database_distributor_spark.streaming.incremental import SCRATCH_ROOT
+from tests.test_snapshot_table import _partition_files
 
 # heavy tail — model-based randomized walks (~55 s);
 # excluded from the default fast set, run with -m slow.
@@ -158,13 +159,17 @@ def test_snapshot_random_walk_matches_model(spark, seed):
 
 @pytest.mark.parametrize("seed", [23])
 def test_partitioned_merge_walk_matches_model_and_reuses_files(spark, seed):
-    """Random-walk over the PARTITIONED commit path (its manifest shape —
-    partition value → file list — and merge are a separate code path from
-    the flat table): after every merge, (a) the full read equals a
-    dict-model upsert, (b) a manifest-pruned single-partition read equals
-    the model filtered, and (c) every partition the batch did NOT touch
-    carries its previous version's file list forward VERBATIM — the
-    O(changed partitions) claim checked compositionally, not once."""
+    """Random walk over partition-scoped merges and key deletes on a
+    partitioned table (a flat file list whose files each hold one value
+    of ``p``, that value their zone map): after every step, (a) the full
+    read equals a dict-model upsert, (b) a zone-map-pruned
+    single-partition read equals the model filtered, (c) after a merge
+    on a base without tombstones, every partition the batch did NOT
+    touch carries its previous file list forward VERBATIM and every new
+    file holds a touched value -- the O(changed partitions) claim
+    checked compositionally, not once -- and (d) after a merge on a base
+    with tombstones, they are folded: none is carried, so a deleted key
+    that later merges leave untouched stays deleted."""
     import random as _random
 
     from petfinder_database_distributor_spark.sources.snapshot import (
@@ -179,28 +184,38 @@ def test_partitioned_merge_walk_matches_model_and_reuses_files(spark, seed):
     t = 0
     state: dict[int, tuple] = {}  # k -> (k, v, o, p): the upsert model
     hist: dict[int, list] = {}  # version -> sorted expected rows
+    n_deletes = 0
 
     def pcol(k: int) -> int:
         return k % 3  # stable function of the key — the documented contract
 
     v = None
-    for step in range(12):
-        b = []
-        for _ in range(rng.randint(1, 4)):
-            t += 1
-            k = rng.choice(KEYS)
-            b.append((k, rng.randrange(1000), t, pcol(k)))
-        df = spark.createDataFrame(b, "k long, v long, o long, p long")
-        prev_manifest = (
-            read_manifest(table_dir, v)["partitions"] if v is not None else {}
-        )
-        v = snapshot_merge_partitioned(
-            spark, table_dir, df, key_cols=["k"], order_cols=["o"],
-            partition_col="p",
-        )
-        for r in b:  # batch o values are increasing within the batch too
-            if r[0] not in state or r[2] > state[r[0]][2]:
-                state[r[0]] = r
+    for step in range(16):
+        prev = read_manifest(table_dir, v) if v is not None else None
+        if prev is not None and state and rng.random() < 0.3:
+            ks = sorted(rng.sample(sorted(state), min(len(state), rng.randint(1, 2))))
+            v = snapshot_delete(
+                spark, table_dir, spark.createDataFrame([(k,) for k in ks], "k long"), ["k"]
+            )
+            n_deletes += 1
+            for k in ks:
+                del state[k]
+            touched = None
+        else:
+            b = []
+            for _ in range(rng.randint(1, 4)):
+                t += 1
+                k = rng.choice(KEYS)
+                b.append((k, rng.randrange(1000), t, pcol(k)))
+            df = spark.createDataFrame(b, "k long, v long, o long, p long")
+            v = snapshot_merge_partitioned(
+                spark, table_dir, df, key_cols=["k"], order_cols=["o"],
+                partition_col="p",
+            )
+            for r in b:  # batch o values are increasing within the batch too
+                if r[0] not in state or r[2] > state[r[0]][2]:
+                    state[r[0]] = r
+            touched = {pcol(r[0]) for r in b}
         hist[v] = sorted(state.values())
         got = sorted(
             tuple(r)
@@ -208,20 +223,30 @@ def test_partitioned_merge_walk_matches_model_and_reuses_files(spark, seed):
         )
         assert got == hist[v], f"seed {seed} step {step}: full read != model"
         probe = rng.choice([0, 1, 2])
-        pruned = sorted(
-            tuple(r)
-            for r in snapshot_read_partitioned(
-                spark, table_dir, values=[probe]
-            ).collect()
-        )
-        assert pruned == [r for r in hist[v] if r[3] == probe]
-        touched = {str(pcol(r[0])) for r in b}
-        now = read_manifest(table_dir, v)["partitions"]
-        for part, files in prev_manifest.items():
+        pruned = snapshot_read_partitioned(spark, table_dir, values=[probe])
+        assert sorted(tuple(r) for r in pruned.collect()) == [
+            r for r in hist[v] if r[3] == probe
+        ]
+        now = read_manifest(table_dir, v)
+        scanned = _partition_files(now, "p", probe) + now.get("tombstones", [])
+        assert all(any(u.endswith(f) for f in scanned) for u in pruned.inputFiles())
+        if touched is None or prev is None:
+            continue
+        assert not now.get("tombstones"), f"step {step}: tombstones not folded"
+        if prev.get("tombstones"):
+            assert not set(now["files"]) & set(prev["files"]), (
+                f"step {step}: a file with pending deletes was carried"
+            )
+            continue
+        for part in (0, 1, 2):
             if part not in touched:
-                assert now[part] == files, (
-                    f"step {step}: untouched partition {part} was rewritten"
-                )
+                assert _partition_files(now, "p", part) == _partition_files(
+                    prev, "p", part
+                ), f"step {step}: untouched partition {part} was rewritten"
+        for f in set(now["files"]) - set(prev["files"]):
+            (lo, hi) = now["file_stats"][f]["p"]
+            assert lo == hi and lo in touched, f"step {step}: {f} rewritten"
+    assert n_deletes >= 2, "the walk must exercise deletes"
 
     # time travel across the whole chain, then vacuum and re-check the tail
     for w, expect in hist.items():

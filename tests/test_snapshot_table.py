@@ -239,11 +239,20 @@ def _prows(spark, triples):
     return spark.createDataFrame(triples, "k long, v string, pt long")
 
 
+def _partition_files(manifest, col, value):
+    """The files of ``manifest`` whose zone map on ``col`` is ``value``
+    alone: one partition's files, in manifest order."""
+    stats = manifest.get("file_stats", {})
+    return [f for f in manifest["files"] if stats.get(f, {}).get(col) == [value, value]]
+
+
 def test_partitioned_merge_reuses_unaffected_files(spark, table_dir):
-    """The O(changed-partitions) claim, checked at manifest level: a merge
-    touching only partition 1 must (a) copy partition 0's and 2's manifest
-    entries forward POINTING AT THE OLD FILES, (b) write new files only
-    for partition 1, and (c) read back as the correct full merge."""
+    """The O(changed-partitions) claim, checked at manifest level: the
+    manifest is one flat file list whose files each hold one partition
+    value, recorded as their zone map. A merge touching only partition 1
+    must (a) carry partition 0's and 2's files forward VERBATIM, zone
+    maps included, (b) write new files only for partition 1, and (c)
+    read back as the correct full merge."""
     from petfinder_database_distributor_spark.sources.snapshot import (
         read_manifest,
         snapshot_merge_partitioned,
@@ -265,10 +274,16 @@ def test_partitioned_merge_reuses_unaffected_files(spark, table_dir):
         partition_col="pt",
     )
     m1 = read_manifest(table_dir, v)
-    assert m1["partitions"]["0"] == m0["partitions"]["0"], "p0 files reused"
-    assert m1["partitions"]["2"] == m0["partitions"]["2"], "p2 files reused"
-    assert m1["partitions"]["1"] != m0["partitions"]["1"], "p1 rewritten"
-    assert all(f.startswith("data/v1/") for f in m1["partitions"]["1"])
+    assert "partitions" not in m0 and m0["partition_col"] == "pt"
+    assert sorted(m0["files"]) == sorted(
+        f for val in (0, 1, 2) for f in _partition_files(m0, "pt", val)
+    ), "every file holds one partition value"
+    assert _partition_files(m1, "pt", 0) == _partition_files(m0, "pt", 0), "p0 files reused"
+    assert _partition_files(m1, "pt", 2) == _partition_files(m0, "pt", 2), "p2 files reused"
+    p1 = _partition_files(m1, "pt", 1)
+    assert p1 != _partition_files(m0, "pt", 1), "p1 rewritten"
+    assert all(f.startswith("data/v1/") for f in p1)
+    assert set(m1["files"]) - set(m0["files"]) == set(p1), "only p1 is new"
     got = {
         r["k"]: (r["v"], r["pt"])
         for r in snapshot_read_partitioned(spark, table_dir).collect()
@@ -297,6 +312,115 @@ def test_partitioned_read_prunes_at_manifest_level(spark, table_dir):
     # empty selection keeps the schema
     empty = snapshot_read_partitioned(spark, table_dir, values=[99])
     assert empty.columns == ["k", "v", "pt"] and empty.count() == 0
+
+
+def test_partitioned_merge_keeps_deleted_keys_deleted(spark, table_dir):
+    """A partition-scoped merge on a base with tombstones folds them: a
+    key deleted and then left untouched by later merges stays deleted,
+    and the files that held it are not carried forward with their
+    deletes dropped."""
+    from petfinder_database_distributor_spark.sources.snapshot import (
+        snapshot_delete,
+        snapshot_merge_partitioned,
+        snapshot_read_partitioned,
+    )
+
+    def merge(rows):
+        return snapshot_merge_partitioned(
+            spark, table_dir, _prows(spark, rows),
+            key_cols=["k"], order_cols=["v"], partition_col="pt",
+        )
+
+    merge([(1, "a", 0), (2, "b", 0), (3, "c", 1)])
+    snapshot_delete(spark, table_dir, spark.createDataFrame([(1,)], "k long"), ["k"])
+    v = merge([(3, "z", 1)])
+    m = read_manifest(table_dir, v)
+    assert not m.get("tombstones")
+    got = {r["k"]: r["v"] for r in snapshot_read_partitioned(spark, table_dir).collect()}
+    assert got == {2: "b", 3: "z"}, "deleted key 1 came back"
+    v = merge([(3, "zz", 1)])  # no tombstones now: partition 0 is carried
+    assert _partition_files(read_manifest(table_dir, v), "pt", 0) == _partition_files(
+        m, "pt", 0
+    )
+    assert _as_dict(snapshot_read(spark, table_dir)) == {2: "b", 3: "zz"}
+
+
+def test_date_zone_maps_commit_and_prune(spark, table_dir):
+    """Zone maps of date columns are stored as ISO text, and probes go
+    through the same conversion: a date-partitioned table commits,
+    prunes by date and reads back every row. A column whose bounds have
+    no JSON form (decimal) gets no zone map, so pruning keeps its
+    files."""
+    import datetime
+    from decimal import Decimal
+
+    from petfinder_database_distributor_spark.sources.snapshot import (
+        prune_files,
+        prune_values,
+        snapshot_merge_partitioned,
+        snapshot_read_partitioned,
+    )
+
+    days = [datetime.date(2024, 1, d) for d in (1, 2, 3)]
+    rows = [(k, f"v{k}", days[k % 3], Decimal(k)) for k in range(12)]
+    df = spark.createDataFrame(rows, "k long, v string, d date, amount decimal(10,0)")
+    snapshot_merge_partitioned(
+        spark, table_dir, df, key_cols=["k"], order_cols=["v"], partition_col="d"
+    )
+    m = read_manifest(table_dir, 0)
+    assert sorted({tuple(m["file_stats"][f]["d"]) for f in m["files"]}) == [
+        (d.isoformat(), d.isoformat()) for d in days
+    ]
+    one = snapshot_read_partitioned(spark, table_dir, values=[days[1]])
+    assert sorted(r["k"] for r in one.collect()) == [1, 4, 7, 10]
+    assert all(any(u.endswith(f) for f in _partition_files(m, "d", "2024-01-02"))
+               for u in one.inputFiles())
+    got = snapshot_read_partitioned(spark, table_dir).collect()
+    assert sorted(tuple(r) for r in got) == sorted(rows)
+    assert len(prune_files(m, "d", days[2], None)) == len(
+        _partition_files(m, "d", "2024-01-03")
+    )
+    # a flat write with date, timestamp and decimal zone maps commits too
+    flat_df = df.withColumn("ts", F.col("d").cast("timestamp")).coalesce(1)
+    snapshot_write(spark, f"{table_dir}_flat", flat_df, stats_cols=["d", "amount", "ts"])
+    flat = read_manifest(f"{table_dir}_flat", 0)
+    (f,) = flat["files"]
+    assert flat["file_stats"][f]["d"] == ["2024-01-01", "2024-01-03"]
+    assert "amount" not in flat["file_stats"][f]
+    late = prune_files(flat, "ts", datetime.datetime(2025, 1, 1), None)
+    assert late == ([] if "ts" in flat["file_stats"][f] else [f])
+    assert prune_values(flat, "amount", [Decimal(5)]) == [f]
+    assert prune_values(flat, "d", [datetime.date(2024, 2, 1)]) == []
+    assert snapshot_read(spark, f"{table_dir}_flat").count() == 12
+    shutil.rmtree(f"{table_dir}_flat", ignore_errors=True)
+
+
+def test_zone_maps_are_a_table_property(spark, table_dir):
+    """``stats_cols`` given to a write is recorded in the manifest, and
+    every later rewrite collects zone maps for its new files from it: a
+    merge and a compaction keep pruning alive. A table that declares
+    none records none."""
+    from petfinder_database_distributor_spark.sources.snapshot import (
+        prune_files,
+        snapshot_compact,
+        snapshot_merge,
+    )
+
+    df = spark.range(400).selectExpr("id AS k", "CAST(id AS STRING) AS v")
+    snapshot_write(spark, table_dir, df.repartitionByRange(4, "k"), stats_cols=["k"])
+    v = snapshot_merge(spark, table_dir, _rows(spark, [(5, "x")]), ["k"], ["v"])
+    m = read_manifest(table_dir, v)
+    assert m["stats_cols"] == ["k"] and set(m["file_stats"]) == set(m["files"])
+    v = snapshot_compact(spark, table_dir, target_files=1)
+    m = read_manifest(table_dir, v)
+    assert m["stats_cols"] == ["k"] and set(m["file_stats"]) == set(m["files"])
+    assert prune_files(m, "k", 1000, 2000) == []
+    plain = f"{table_dir}_plain"
+    snapshot_write(spark, plain, df)
+    v = snapshot_merge(spark, plain, _rows(spark, [(5, "x")]), ["k"], ["v"])
+    assert "stats_cols" not in read_manifest(plain, v)
+    assert "file_stats" not in read_manifest(plain, v)
+    shutil.rmtree(plain, ignore_errors=True)
 
 
 def test_vacuum_preserves_files_reused_by_retained_manifests(spark, table_dir):
