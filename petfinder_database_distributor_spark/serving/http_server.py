@@ -45,8 +45,8 @@ busy wait in the kernel's accept queue (``request_queue_size``).
 A worker reads its request straight off the socket it accepted
 (:class:`PetServingHandler`): ``recv`` until the head's blank line, one
 split into the method, the target (parsed once) and a dict of
-lower-cased header names, then the status line, the headers and the
-first body slice in one ``sendall``. ``http.server``'s per-request
+lower-cased header names, then the answer (see below).
+``http.server``'s per-request
 machinery (file objects over the socket, header parsing through the
 ``email`` package, logging) was about a third of a cached ``/pets``
 hit: in a closed loop of 4,000 hits on a six-version table (4-vCPU VM,
@@ -67,6 +67,26 @@ server's CPU time per request from a median of 12.8 ms to 4.4 ms over 10
 runs each. The budget holds every retained version of that table, where
 a bound of 4 entries left most ``?version=`` requests missing: it cut
 the CPU time per request from 0.96 to 0.61 ms (median of 10 pairs).
+The cache holds at most 256 bodies as well: each is an open file.
+
+A cached body is not bytes but an anonymous in-memory file
+(:class:`_BodyFile`: ``memfd_create``, or an unlinked temporary file
+where the OS has none). A response writes its status line and headers
+with ``MSG_MORE`` and sends the body with ``os.sendfile``
+(:meth:`PetServingHandler._sendfile`), so the kernel moves the file's
+pages into the socket with no copy from this process; a body read in
+process (:func:`snapshot_body`) is read back with ``os.pread``. Pushing
+a ``bytes`` body through ``sendall`` was about half of a request's
+serving CPU, most of it the kernel's copy: with one fresh connection per
+756,579-byte response (4-vCPU VM, 20,000 responses, three runs) the
+server spent 0.217-0.251 ms of CPU per response (0.155-0.167 ms of it in
+the kernel) sending 64 KiB slices of bytes, and 0.140-0.169 ms
+(0.101-0.119 ms) with ``sendfile`` from a memfd. On
+``serve_under_ingest`` the CPU time per request fell from a median of
+0.276 to 0.210 ms (12 alternating pairs, lower in all 12). An evicted or
+replaced body's file closes when the last response sending it is done,
+never under a send. Small answers (errors, ``/health``, ``/status``, POST
+answers) go out with the head in one ``sendall``.
 
 A cache miss (a new version, or a version the budget could not keep)
 builds the body with Arrow kernels (:func:`_encode_version`):
@@ -92,9 +112,11 @@ import io
 import json
 import os
 import re
+import select
 import socket
 import socketserver
 import sys
+import tempfile
 import threading
 import time
 from collections import OrderedDict
@@ -107,17 +129,17 @@ AUTH_ERROR = {"error": "Invalid or missing endpoint key"}
 
 
 # (table_dir, version) -> (the bytes of the version's manifest, the
-# encoded ``/pets`` body of that version). A committed version's file list
-# and file contents are immutable, so a body is exact for as long as its
-# manifest is the one on disk: a hit reads the pointer and the manifest
-# file and writes the stored bytes, and a merge that advances the pointer
-# is picked up on the next request as a miss. Comparing the manifest's
-# bytes makes a table deleted and re-created at the same path a miss (its
-# writers stage files under new unique directories, so its manifests
-# differ), and a vacuumed version a 404; the read and the compare took a
-# hit from 21 to 35 us in-process. A miss reads and encodes the
-# version's files, about 9x the CPU time of a hit at the benchmark's
-# 1,000-1,353 rows (7.0-8.4 ms against 0.7-1.0 ms).
+# encoded ``/pets`` body of that version, a :class:`_BodyFile`). A committed
+# version's file list and file contents are immutable, so a body is exact
+# for as long as its manifest is the one on disk: a hit reads the pointer
+# and the manifest file and sends the stored file, and a merge that
+# advances the pointer is picked up on the next request as a miss.
+# Comparing the manifest's bytes makes a table deleted and re-created at
+# the same path a miss (its writers stage files under new unique
+# directories, so its manifests differ), and a vacuumed version a 404;
+# the read and the compare took a hit from 21 to 35 us in-process. A miss
+# reads and encodes the version's files, about 9x the CPU time of a hit at
+# the benchmark's 1,000-1,353 rows (7.0-8.4 ms against 0.7-1.0 ms).
 #
 # Bounded by the bytes of the bodies it holds, least recently used out
 # first, so the hot latest version stays when a run of ``?version=``
@@ -129,11 +151,62 @@ AUTH_ERROR = {"error": "Invalid or missing endpoint key"}
 # ``?version=`` requests took over 3 ms, a miss, under the old bound of
 # 4 entries (8.1 % of all requests); under the budget 15 of 1,096 did
 # (0.14 %). The entry just inserted always stays, even alone over the
-# budget: it is in memory anyway while it is sent.
-_BODY_CACHE: OrderedDict[tuple[str, int], tuple[bytes, bytes]] = OrderedDict()
+# budget: its file is open anyway while it is sent.
+#
+# Bounded by count as well (_BODY_CACHE_FILES), because every cached body
+# holds one open descriptor: 64 MiB of an empty table's versions (24-byte
+# bodies) would be millions of them, where a process commonly may open
+# 1,024 files (the usual soft RLIMIT_NOFILE). 256 is over 20 times the
+# benchmark's retained versions and leaves the rest of that limit to
+# sockets and data files. Open body files are then at most 256 cached, the
+# artifact's 2, and one per worker that is still sending a body the cache
+# or ``reload()`` let go of.
+_BODY_CACHE: OrderedDict[tuple[str, int], tuple[bytes, _BodyFile]] = OrderedDict()
 _BODY_CACHE_BYTES = 64 << 20
+_BODY_CACHE_FILES = 256
 _BODY_CACHE_LOCK = threading.Lock()
 _body_cache_total = 0  # bytes of the cached bodies, under _BODY_CACHE_LOCK
+
+
+class _BodyFile:
+    """One encoded response body, written once into an anonymous
+    in-memory file (``memfd_create``; an unlinked temporary file where
+    the OS has none) and then only read: by ``os.sendfile`` for a
+    response (:meth:`PetServingHandler._sendfile`) and by ``os.pread``
+    for ``bytes()``. It holds no copy of the bytes.
+
+    The file closes when the last reference goes. The cache evicting an
+    entry, or ``reload()`` replacing an artifact body, drops only its own
+    reference; a response still sending the body holds another, so a
+    descriptor is never closed, and its number never reused for another
+    file, under a send in flight."""
+
+    __slots__ = ("fd", "size")
+
+    def __init__(self, parts) -> None:
+        if hasattr(os, "memfd_create"):
+            self.fd = os.memfd_create("pets-body", os.MFD_CLOEXEC)
+        else:
+            with tempfile.TemporaryFile() as fh:
+                self.fd = os.dup(fh.fileno())
+        self.size = 0
+        for part in parts:
+            view = memoryview(part).cast("B")
+            while view:
+                n = os.write(self.fd, view)
+                view = view[n:]
+                self.size += n
+
+    def __len__(self) -> int:
+        return self.size
+
+    def __bytes__(self) -> bytes:
+        return os.pread(self.fd, self.size, 0)
+
+    def __del__(self, _close=os.close) -> None:
+        fd = getattr(self, "fd", None)  # unset when the file could not be made
+        if fd is not None:
+            _close(fd)
 
 
 def _pets_body(rows: list[dict]) -> bytes:
@@ -148,6 +221,13 @@ def snapshot_body(table_dir: str, version: int | None = None) -> bytes:
     FileNotFoundError when the version is above the latest pointer
     (never committed) or has no manifest (vacuumed), even when its body
     is still cached."""
+    return bytes(_version_body(table_dir, version))
+
+
+def _version_body(table_dir: str, version: int | None = None) -> _BodyFile | bytes:
+    """What :func:`snapshot_body` returns the bytes of: the cached
+    :class:`_BodyFile` of the version, which a response sends as it is,
+    or the bytes of an empty ``/pets`` while the table has no commit."""
     from petfinder_database_distributor_spark.sources.snapshot import (
         _manifest_path,
         resolve_version,
@@ -173,7 +253,9 @@ def snapshot_body(table_dir: str, version: int | None = None) -> bytes:
             _body_cache_total -= len(replaced[1])
         _BODY_CACHE[key] = (manifest, body)
         _body_cache_total += len(body)
-        while _body_cache_total > _BODY_CACHE_BYTES and len(_BODY_CACHE) > 1:
+        while len(_BODY_CACHE) > 1 and (
+            _body_cache_total > _BODY_CACHE_BYTES or len(_BODY_CACHE) > _BODY_CACHE_FILES
+        ):
             _body_cache_total -= len(_BODY_CACHE.popitem(last=False)[1][1])
     return body
 
@@ -296,9 +378,10 @@ def _live_rows(table, key_cols: list[str], dead: set):
     return pa.array(live_key_mask(keys, dead), pa.bool_())
 
 
-def _encode_version(table_dir: str, manifest: dict) -> bytes:
+def _encode_version(table_dir: str, manifest: dict) -> _BodyFile:
     """The ``GET /pets`` body of the committed version ``manifest``
-    names, written straight from Arrow columns. Byte-identical to
+    names, written straight from Arrow columns into its file, fragment
+    by fragment with no joined copy. Byte-identical to
     ``_pets_body`` over :func:`load_snapshot_rows`, the reference decoder.
     Each data file's rows are built from its OWN column names
     (:func:`_file_rows`), so a file written before a schema-evolving
@@ -323,7 +406,7 @@ def _encode_version(table_dir: str, manifest: dict) -> bytes:
             fragments.append(_file_rows(table))
     if fragments:  # no ", " after the last row
         fragments[-1] = fragments[-1][:-2]
-    return b"".join([b'{"count": %d, "pets": [' % count, *fragments, b"]}"])
+    return _BodyFile([b'{"count": %d, "pets": [' % count, *fragments, b"]}"])
 
 
 def load_snapshot_rows(table_dir: str, version: int | None = None) -> list[dict]:
@@ -373,9 +456,8 @@ def load_csv_artifact(path: str) -> tuple[str, list[dict]]:
     return text, [dict(r) for r in csv.DictReader(io.StringIO(text))]
 
 
-# Bytes per write of a response body (see ``PetServingHandler._send``),
-# and per read of a request.
-_SEND_SLICE = 1 << 16
+# Bytes per read of a request.
+_RECV_SIZE = 1 << 16
 # The stdlib's request limits (``http.client``): a request line or a
 # header line of more than _MAX_LINE bytes, its line end included,
 # answers 414 or 431; so does a header section of more than _MAX_HEADERS
@@ -393,9 +475,9 @@ class PetServingHandler(socketserver.BaseRequestHandler):
     route, and answer; the server closes the connection after it."""
 
     # Seconds a connection may stall before the worker drops it: a read
-    # that gets no byte, or one ``_SEND_SLICE`` of the body that the
-    # client does not take. A stalled client would otherwise hold one of
-    # the server's WORKERS for good; gunicorn's default --timeout.
+    # that gets no byte, or a send that finds no room in the socket's
+    # buffer. A stalled client would otherwise hold one of the server's
+    # WORKERS for good; gunicorn's default --timeout.
     timeout = 30
 
     GET_ROUTES = ("/", "/health", "/status", "/pets", "/pets.csv")
@@ -408,8 +490,8 @@ class PetServingHandler(socketserver.BaseRequestHandler):
             if head is not None:
                 self._route(*head)
         except (TimeoutError, ConnectionError):
-            # a read or one slice of a write stalled, or the client reset
-            # or closed mid-answer: dropped quietly, no traceback per
+            # a read or a send stalled, or the client reset or closed
+            # mid-answer: dropped quietly, no traceback per
             # client; the worker closes the connection
             pass
 
@@ -425,7 +507,7 @@ class PetServingHandler(socketserver.BaseRequestHandler):
             if nl < 0:
                 if len(buf) - pos > _MAX_LINE:
                     return self._refuse(431 if lines else 414)
-                chunk = self.request.recv(_SEND_SLICE)
+                chunk = self.request.recv(_RECV_SIZE)
                 if not chunk:
                     return None
                 buf += chunk
@@ -491,20 +573,44 @@ class PetServingHandler(socketserver.BaseRequestHandler):
             provided.encode(), self.server.api_key.encode()
         )
 
-    def _send(self, code: int, body: bytes, ctype: str, extra: dict | None = None):
+    def _send(self, code: int, body, ctype: str, extra: dict | None = None):
+        """Answer with ``body``: small bytes (errors, ``/status``, POST
+        answers) ride with the head in one ``sendall``; a
+        :class:`_BodyFile` goes from its file to the socket with
+        :meth:`_sendfile`, the head held back with ``MSG_MORE`` to leave
+        in the body's first segment."""
         head = (
             "HTTP/1.0 %d %s\r\nServer: %s\r\nDate: %s\r\n"
             "Content-Type: %s\r\nContent-Length: %d\r\n"
         ) % (code, _REASONS[code], _SERVER_HEADER, self.server.http_date(), ctype, len(body))
         for k, v in (extra or {}).items():
             head += f"{k}: {v}\r\n"
-        # A socket timeout caps one sendall in total, so the body goes out
-        # in slices: the timeout then bounds a stalled reader, not a slow
-        # but steady one. The head rides with the first slice.
-        view = memoryview(body)
-        self.request.sendall(b"".join([(head + "\r\n").encode("latin-1"), view[:_SEND_SLICE]]))
-        for i in range(_SEND_SLICE, len(view), _SEND_SLICE):
-            self.request.sendall(view[i : i + _SEND_SLICE])
+        head = (head + "\r\n").encode("latin-1")
+        if isinstance(body, bytes):
+            self.request.sendall(head + body)
+            return
+        self.request.sendall(head, socket.MSG_MORE if len(body) else 0)
+        self._sendfile(body)
+
+    def _sendfile(self, body: _BodyFile) -> None:
+        """Send ``body`` with ``os.sendfile``: the kernel moves the file's
+        pages into the socket, with no copy through this process. The
+        socket has a timeout, so it is non-blocking underneath: with its
+        buffer full, ``sendfile`` raises BlockingIOError and the loop
+        waits for room for up to ``timeout`` seconds at a time. A reader
+        that stops reading is then dropped (TimeoutError), and a slow but
+        steady one gets the whole body. ``socket.sendfile`` is not used:
+        it polls before every ``sendfile`` and seeks a file object."""
+        out, offset, poller = self.request.fileno(), 0, None
+        while offset < body.size:
+            try:
+                offset += os.sendfile(out, body.fd, offset, body.size - offset)
+            except BlockingIOError:
+                if poller is None:
+                    poller = select.poll()
+                    poller.register(out, select.POLLOUT)
+                if not poller.poll(self.timeout * 1000):
+                    raise TimeoutError("the client took no byte of the body") from None
 
     def _json(self, code: int, obj) -> None:
         self._send(code, json.dumps(obj).encode(), "application/json")
@@ -524,7 +630,7 @@ class PetServingHandler(socketserver.BaseRequestHandler):
             return False
         length -= len(rest)
         while length > 0:
-            chunk = self.request.recv(min(length, _SEND_SLICE))
+            chunk = self.request.recv(min(length, _RECV_SIZE))
             if not chunk:
                 break
             length -= len(chunk)
@@ -600,7 +706,7 @@ class PetServingHandler(socketserver.BaseRequestHandler):
                     version = (
                         int(self.query["version"][0]) if "version" in self.query else None
                     )
-                    body = snapshot_body(self.server.snapshot_dir, version)
+                    body = _version_body(self.server.snapshot_dir, version)
                 except (ValueError, FileNotFoundError):
                     self._json(404, {"error": "unknown snapshot version"})
                     return
@@ -686,11 +792,13 @@ class PetServer(socketserver.TCPServer):
 
     def reload(self) -> None:
         """(Re)load the CSV artifact and encode its ``/pets`` and
-        ``/pets.csv`` bodies once; requests send the stored bytes."""
+        ``/pets.csv`` bodies once, each into a :class:`_BodyFile` that
+        requests send; a response still sending a replaced body keeps
+        it."""
         text, rows = load_csv_artifact(self.artifact_path)
         self.row_count = len(rows)
-        self.pets_body = _pets_body(rows)
-        self.csv_body = text.encode()
+        self.pets_body = _BodyFile([_pets_body(rows)])
+        self.csv_body = _BodyFile([text.encode()])
 
     def http_date(self) -> str:
         """The ``Date`` header of a response sent now, formatted once per
@@ -777,8 +885,8 @@ class PetServer(socketserver.TCPServer):
         """Stop the workers and return once they have exited; the server
         does not serve again. Reading a request stops at end-of-file at
         once, so a stalled client does not hold shutdown up; a response
-        already being written is finished first, each slice bounded by
-        the handler's ``timeout``."""
+        already being written is finished first, each wait for room in
+        the socket's buffer bounded by the handler's ``timeout``."""
         self._stop_accepting()
         for conn in list(self._serving):
             if conn is not None:

@@ -459,17 +459,18 @@ def bloom_prune_files(table_dir: str, manifest: dict, col: str, values) -> list[
 
 
 def _stage(
-    table_dir: str, df: DataFrame, kind: str, version: int, part: str | None = None
+    table_dir: str, df: DataFrame, version: int, part: str | None = None
 ) -> list[str]:
     """Write ``df`` as parquet under a writer-unique
-    ``{kind}/v{version}/{token}/`` directory (``kind`` is ``data`` or
-    ``tombstones``; a partition value ``part`` adds a subdirectory) and
-    return its part files relative to the table, sorted: the one data
-    write of every library writer. Nothing references the directory
+    ``data/v{version}/{token}/`` directory (a partition value ``part``
+    adds a subdirectory) and return its part files relative to the
+    table, sorted: the one data write of every library writer
+    (:func:`snapshot_delete` writes its tombstone keys under
+    ``tombstones/`` the same way). Nothing references the directory
     until a manifest names its files, and no concurrent writer that
     derived the same version number can ever clobber it (distinct
     tokens)."""
-    rel_dir = f"{kind}/v{version}/{uuid.uuid4().hex[:12]}"
+    rel_dir = f"data/v{version}/{uuid.uuid4().hex[:12]}"
     if part is not None:
         rel_dir = f"{rel_dir}/{part}"
     path = os.path.join(table_dir, rel_dir)
@@ -544,7 +545,8 @@ def _file_manifest(
     when ``prev`` is None or ``append`` is false. Zone maps and bloom
     sidecars are collected for the new files only, on ``stats_cols`` and
     ``bloom_cols`` plus the ones ``prev`` declares (:func:`_declared`); a
-    table that declares none reads no footer. The one manifest builder of
+    table that declares none reads no footer. ``prev``'s ``partition_col``
+    is kept while the table has the column. The one manifest builder of
     every library writer and the ``snapshot`` format writer."""
     stats_cols = _declared(prev, "stats_cols", stats_cols)
     bloom_cols = _declared(prev, "bloom_cols", bloom_cols)
@@ -572,6 +574,10 @@ def _file_manifest(
             **_collect_file_blooms(table_dir, new_files, bloom_cols),
         }
         manifest["bloom_cols"] = bloom_cols
+    # a table property too: a rewrite of a partitioned table (compact,
+    # merge, zorder) stays readable by partition value
+    if (prev or {}).get("partition_col") in columns:
+        manifest["partition_col"] = prev["partition_col"]
     return manifest
 
 
@@ -601,7 +607,7 @@ def snapshot_write(
     # lock after the data write.
     current = _check_base(table_dir, base_version)
     version = (current if current is not None else -1) + 1
-    files = _stage(table_dir, df, "data", version)
+    files = _stage(table_dir, df, version)
     manifest = _file_manifest(
         table_dir,
         None if current is None else read_manifest(table_dir, current),
@@ -645,7 +651,8 @@ def _scan(
     written before a schema-evolving append surface NULL for the columns
     they predate, by name-based parquet column resolution. Merge-on-read
     deletes: the version's accumulated tombstone keys (committed by
-    :func:`snapshot_delete`) are anti-joined out. No files -- an empty
+    :func:`snapshot_delete`) are anti-joined out, and the scan's column
+    order is kept (the join puts its key columns first). No files -- an empty
     commit lists none, or a reader pruned them all -- gives a 0-row frame
     of the table's schema."""
     from pyspark.sql.types import StructType
@@ -681,7 +688,7 @@ def _scan(
     keys = spark.read.schema(from_arrow_schema(pq.read_schema(paths[0]))).parquet(
         *paths
     )
-    return df.join(keys, on=manifest["key_cols"], how="left_anti")
+    return df.join(keys, on=manifest["key_cols"], how="left_anti").select(*df.columns)
 
 
 def load_tombstone_keys(
@@ -790,13 +797,20 @@ def snapshot_delete(
             f" delete supplied {key_cols}"
         )
     version = current + 1
-    # One file and one job, no shuffle: every reader takes the tombstone
-    # keys as a set or as the right side of an anti-join, so a key
-    # repeated in keys_df deletes the same rows as one.
-    tfiles = _stage(table_dir, keys_df.select(*key_cols).coalesce(1), "tombstones", version)
+    # One file, written on the driver from the collected keys (bounded:
+    # O(delete keys) by the format's contract). Every reader takes them as
+    # a set or as the right side of an anti-join, so a key repeated in
+    # keys_df deletes the same rows as one. Staging them with coalesce(1)
+    # ran every partition of a driver-built frame (createDataFrame) one
+    # after another in one task.
+    import pyarrow.parquet as pq
+
+    rel = f"tombstones/v{version}/{uuid.uuid4().hex[:12]}/part-00000.parquet"
+    os.makedirs(os.path.dirname(os.path.join(table_dir, rel)))
+    pq.write_table(keys_df.select(*key_cols).toArrow(), os.path.join(table_dir, rel))
     manifest = _carry_forward(prev)  # files forward UNCHANGED
     manifest["version"] = version
-    manifest["tombstones"] = list(prev.get("tombstones", [])) + tfiles
+    manifest["tombstones"] = [*prev.get("tombstones", []), rel]
     manifest["key_cols"] = key_cols
     manifest["operation"] = "delete"
     _commit_metadata(table_dir, version, current, manifest)
@@ -839,7 +853,7 @@ def snapshot_append(
     if columns != df.columns:
         df = df.select(*columns)
     version = current + 1
-    new_files = _stage(table_dir, df, "data", version)
+    new_files = _stage(table_dir, df, version)
     manifest = _file_manifest(
         table_dir, prev, version, schema, new_files, evolve_schema, stats_cols
     )
@@ -1484,9 +1498,7 @@ def _write_partitions(
     files = [
         rel
         for val in values
-        for rel in _stage(
-            table_dir, df.filter(df[partition_col] == val), "data", version, str(val)
-        )
+        for rel in _stage(table_dir, df.filter(df[partition_col] == val), version, str(val))
     ]
     if carried is None and current is not None:
         prev = read_manifest(table_dir, current)  # for its declared indexes
@@ -1554,11 +1566,9 @@ def snapshot_merge_partitioned(
     if not prev.get("tombstones"):
         affected = [r[0] for r in updates.select(partition_col).distinct().collect()]
         rewritten = prune_values(prev, partition_col, affected)
-    # select: the tombstone anti-join of _scan puts the key columns first,
-    # and an append keeps the table's column order
     merged = key_dedup(
         _scan(spark, table_dir, prev, rewritten).unionByName(updates), key_cols, order
-    ).select(*prev["columns"])
+    )
     rewritten_set = set(rewritten)
     kept = [f for f in prev["files"] if f not in rewritten_set]
     carried = {**prev, "files": kept}

@@ -315,7 +315,8 @@ class _NoRowDecode:
 def test_miss_never_decodes_a_data_file_row_by_row(monkeypatch):
     """Pins the fast path without timing it. On a miss, with or without
     tombstones, each data file is read through ``ParquetFile.read``,
-    never ``read_table`` with its dataset discovery, and never row by row
+    never ``read_table`` with its dataset discovery (a miss without
+    tombstones calls it not at all), and never row by row
     (``Table.to_pylist``; the reference decoder trips the same trap, so
     the trap is live). Plain strings, booleans and integers never reach
     the per-value ``_json_texts``; a column of strings that need escaping
@@ -351,12 +352,15 @@ def test_miss_never_decodes_a_data_file_row_by_row(monkeypatch):
         monkeypatch.setattr(http_server, "_json_texts", no_per_value)
         assert snapshot_body(plain_dir, 0) == expected[plain_dir]
 
+        assert not [p for p in table_reads if "tombstones" not in p], "read_table on a data file"
+
         per_value = []
         monkeypatch.setattr(
             http_server, "_json_texts", lambda col: per_value.append(col) or json_texts(col)
         )
+        table_reads.clear()
         assert snapshot_body(escaped_dir, 0) == expected[escaped_dir]
         assert [col.to_pylist() for col in per_value] == [["é", "b", None]]
-        assert not [p for p in table_reads if "tombstones" not in p], "read_table on a data file"
+        assert table_reads == [], "read_table on a miss without tombstones"
         with pytest.raises(AssertionError, match="row by row"):
             load_snapshot_rows(plain_dir, 0)

@@ -10,7 +10,6 @@ from __future__ import annotations
 import json
 import urllib.error
 import urllib.request
-from collections import OrderedDict
 
 import pytest
 
@@ -19,13 +18,21 @@ from petfinder_database_distributor_spark.serving import (
     load_csv_artifact,
     serve_export,
 )
-from petfinder_database_distributor_spark.serving.http_server import snapshot_body
+from petfinder_database_distributor_spark.serving.http_server import (
+    _version_body,
+    snapshot_body,
+)
 from petfinder_database_distributor_spark.sources.export import (
     encode_for_export,
     write_csv_table,
 )
 from tests.conftest import SF_SMALL
-from tests.test_serving_workers import VERSIONS, _commit_versions, _reference
+from tests.test_serving_workers import (  # noqa: F401 — body_cache is a fixture
+    VERSIONS,
+    _commit_versions,
+    _reference,
+    body_cache,
+)
 
 KEY = "test-endpoint-key"
 
@@ -239,12 +246,9 @@ def test_snapshot_backed_serving_time_travel(spark, tmp_path_factory):
 def test_snapshot_body_cached_per_version(spark, tmp_path_factory):
     """/pets must not re-decode or re-encode the table per request. The
     encoded body is cached by RESOLVED version (immutable files make that
-    exact): repeat requests on one version get the cached bytes object, a
+    exact): repeat requests on one version get the cached body file, a
     new commit is a new version → miss → fresh body, and time travel
     resolves the exact old version."""
-    from petfinder_database_distributor_spark.serving.http_server import (
-        snapshot_body,
-    )
     from petfinder_database_distributor_spark.sources.snapshot import (
         snapshot_merge,
         snapshot_write,
@@ -256,24 +260,17 @@ def test_snapshot_body_cached_per_version(spark, tmp_path_factory):
     table = str(tmp_path_factory.mktemp("servecache") / "table")
     df = spark.createDataFrame([(1, "a")], "k long, v string")
     snapshot_write(spark, table, df)
-    first = snapshot_body(table)
-    assert snapshot_body(table) is first, "same version → cached object"
+    first = _version_body(table)
+    assert _version_body(table) is first, "same version → cached object"
     snapshot_merge(
         spark, table, spark.createDataFrame([(1, "b")], "k long, v string"),
         key_cols=["k"], order_cols=["v"],
     )
-    fresh = snapshot_body(table)
-    assert fresh is not first and vs(fresh) == {"b"}
+    fresh = _version_body(table)
+    assert fresh is not first and vs(bytes(fresh)) == {"b"}
     # time travel still resolves (and caches) the old version exactly
     assert vs(snapshot_body(table, version=0)) == {"a"}
-    assert snapshot_body(table, version=0) is snapshot_body(table, version=0)
-
-
-@pytest.fixture()
-def body_cache(monkeypatch):
-    """An empty body cache for one test; the shared one comes back after."""
-    monkeypatch.setattr(http_server, "_BODY_CACHE", OrderedDict())
-    monkeypatch.setattr(http_server, "_body_cache_total", 0)
+    assert _version_body(table, version=0) is _version_body(table, version=0)
 
 
 def test_snapshot_body_cache_evicts_least_recently_used(tmp_path, monkeypatch, body_cache):
@@ -285,10 +282,10 @@ def test_snapshot_body_cache_evicts_least_recently_used(tmp_path, monkeypatch, b
     sizes = [len(_reference(table, v)) for v in range(VERSIONS)]
     # room for the latest body and any one other, never for three
     monkeypatch.setattr(http_server, "_BODY_CACHE_BYTES", sizes[-1] + sizes[-2])
-    latest = snapshot_body(table)
+    latest = _version_body(table)
     for v in range(VERSIONS - 1):  # every version but the latest
         assert snapshot_body(table, v) == _reference(table, v)
-        assert snapshot_body(table) is latest, f"latest evicted after v{v}"
+        assert _version_body(table) is latest, f"latest evicted after v{v}"
 
 
 def test_snapshot_body_cache_keeps_every_retained_version(tmp_path, body_cache):
@@ -296,9 +293,9 @@ def test_snapshot_body_cache_keeps_every_retained_version(tmp_path, body_cache):
     than four: a repeat request of any version gets the cached object."""
     table = str(tmp_path / "table")
     _commit_versions(table)
-    first = [snapshot_body(table, v) for v in range(VERSIONS)]
+    first = [_version_body(table, v) for v in range(VERSIONS)]
     for v, body in enumerate(first):
-        assert snapshot_body(table, v) is body, f"v{v} re-encoded"
+        assert _version_body(table, v) is body, f"v{v} re-encoded"
     assert len(http_server._BODY_CACHE) == VERSIONS
 
 

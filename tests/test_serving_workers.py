@@ -21,6 +21,7 @@ import time
 import urllib.error
 import urllib.request
 import uuid
+from collections import OrderedDict
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -39,7 +40,6 @@ from petfinder_database_distributor_spark.sources.snapshot import (
     _commit_metadata,
     snapshot_commit_group,
 )
-from tests.test_serving_encoder import _NoRowDecode
 
 KEY = "workers-key"
 VERSIONS = 6  # more than the 4 entries the body cache once held
@@ -68,6 +68,18 @@ def _commit_versions(table_dir: str, first_key: int = 0) -> None:
         _commit_metadata(table_dir, v, v - 1 if v else None, manifest)
 
 
+def _write_big_artifact(path: str, fill: bytes = b"x") -> bytes:
+    """A one-file CSV artifact of 8 MB, more than the kernel buffers the
+    server's writes; returns its bytes."""
+    os.makedirs(path, exist_ok=True)
+    body = b"link,about\n" + b"".join(
+        b"https://pets.example/%d,%s\n" % (i, fill * 80_000) for i in range(100)
+    )
+    with open(os.path.join(path, "part-00000.csv"), "wb") as fh:
+        fh.write(body)
+    return body
+
+
 def _write_artifact(path: str) -> bytes:
     """The one-file CSV serving artifact; returns its bytes."""
     os.makedirs(path)
@@ -80,6 +92,13 @@ def _write_artifact(path: str) -> bytes:
     with open(os.path.join(path, "part-00000.csv"), "wb") as fh:
         fh.write(body)
     return body
+
+
+@pytest.fixture()
+def body_cache(monkeypatch):
+    """An empty body cache for one test; the shared one comes back after."""
+    monkeypatch.setattr(http_server, "_BODY_CACHE", OrderedDict())
+    monkeypatch.setattr(http_server, "_body_cache_total", 0)
 
 
 @pytest.fixture()
@@ -254,12 +273,7 @@ def test_slow_steady_reader_gets_the_whole_body(tmp_path, monkeypatch):
     takes many timeouts to reach a slow reader still arrives whole."""
     monkeypatch.setattr(PetServingHandler, "timeout", 0.5)
     artifact = str(tmp_path / "export")
-    os.makedirs(artifact)
-    csv_bytes = b"link,about\n" + b"".join(
-        b"https://pets.example/%d,%s\n" % (i, b"x" * 80_000) for i in range(100)
-    )  # 8 MB, more than the kernel buffers the server's writes
-    with open(os.path.join(artifact, "part-00000.csv"), "wb") as fh:
-        fh.write(csv_bytes)
+    csv_bytes = _write_big_artifact(artifact)
     httpd = serve_export(artifact, KEY)
     client = socket.socket()
     try:
@@ -310,24 +324,6 @@ def test_shutdown_while_serve_forever_starts_its_workers(tmp_path):
             assert not loop.is_alive()
         finally:
             httpd.server_close()
-
-
-def test_miss_reads_each_data_file_without_dataset_discovery(tmp_path, monkeypatch):
-    """A miss reads each data file through ``ParquetFile`` (no
-    ``read_table`` dataset discovery) and never row by row."""
-    table = str(tmp_path / "table")
-    _commit_versions(table)
-    expected = _reference(table, VERSIONS - 1)
-
-    def no_read_table(*args, **kwargs):
-        raise AssertionError("read_table on a miss")
-
-    read = pq.ParquetFile.read
-    monkeypatch.setattr(pq, "read_table", no_read_table)
-    monkeypatch.setattr(
-        pq.ParquetFile, "read", lambda self, *a, **k: _NoRowDecode(read(self, *a, **k))
-    )
-    assert snapshot_body(table, VERSIONS - 1) == expected
 
 
 def test_recreated_table_serves_its_own_rows(tmp_path):
@@ -388,3 +384,163 @@ def test_uncommitted_version_is_refused(served):
     with pytest.raises(ValueError, match="no committed"):
         snapshot_commit_group(root, {name: latest + 1}, base_group=None)
     assert snapshot_commit_group(root, {name: latest}, base_group=None) == 0
+
+
+def _slow_client(port: int, route: str) -> socket.socket:
+    """A connection with a small receive buffer that has sent a GET of
+    ``route`` and read the first bytes of the answer, so the server is
+    sending its body."""
+    client = socket.socket()
+    client.setsockopt(socket.SOL_SOCKET, socket.SO_RCVBUF, 1 << 15)
+    client.settimeout(10)
+    client.connect(("127.0.0.1", port))
+    client.sendall(f"GET {route} HTTP/1.0\r\nX-API-Key: {KEY}\r\n\r\n".encode())
+    assert client.recv(16) == b"HTTP/1.0 200 OK\r"
+    return client
+
+
+def _rest_of_body(client: socket.socket) -> bytes:
+    chunks = []
+    while chunk := client.recv(1 << 16):
+        chunks.append(chunk)
+    return b"".join(chunks).partition(b"\r\n\r\n")[2]
+
+
+def _commit_big_version(table_dir: str) -> None:
+    """One more version of ``_commit_versions``' table: its last file
+    plus 100 rows of 80 kB, an 8 MB ``/pets`` body."""
+    latest = VERSIONS - 1
+    with open(os.path.join(table_dir, "_manifests", f"v{latest}.json")) as fh:
+        manifest = json.load(fh)
+    rel = f"data/v{latest + 1}/{uuid.uuid4().hex}/part-00000.parquet"
+    os.makedirs(os.path.join(table_dir, os.path.dirname(rel)))
+    big = pa.table({"k": pa.array(range(-100, 0), pa.int64()), "name": ["y" * 80_000] * 100})
+    pq.write_table(big, os.path.join(table_dir, rel))
+    manifest.update(version=latest + 1, files=[*manifest["files"], rel])
+    _commit_metadata(table_dir, latest + 1, latest, manifest)
+
+
+def test_evicted_body_mid_download_arrives_whole(tmp_path, monkeypatch, body_cache):
+    """The body cache lets go of a body while a slow client is still
+    downloading it, and new bodies are made meanwhile: the client still
+    gets the evicted body byte for byte. Closing a body's file on
+    eviction would break the send, or hand its descriptor number to a
+    new body whose bytes the send would then carry."""
+    table = str(tmp_path / "table")
+    _commit_versions(table)
+    _commit_big_version(table)
+    artifact = str(tmp_path / "export")
+    _write_artifact(artifact)
+    big = VERSIONS
+    expected = _reference(table, big)
+    monkeypatch.setattr(http_server, "_BODY_CACHE_BYTES", 1)  # the newest body only
+    httpd = serve_export(artifact, KEY, snapshot_dir=table)
+    client = _slow_client(httpd.server_address[1], f"/pets?version={big}")
+    try:
+        for v in range(VERSIONS):  # each miss evicts the body before it
+            assert snapshot_body(table, v) == _reference(table, v)
+        assert (table, big) not in http_server._BODY_CACHE
+        assert _rest_of_body(client) == expected
+    finally:
+        client.close()
+        httpd.shutdown()
+        httpd.server_close()
+
+
+def test_body_replaced_by_reload_mid_download_arrives_whole(tmp_path):
+    """``reload()`` replaces the artifact's bodies while a slow client
+    downloads ``/pets.csv``: that client gets the old bytes, whole, and
+    the next request the new ones."""
+    artifact = str(tmp_path / "export")
+    old = _write_big_artifact(artifact)
+    httpd = serve_export(artifact, KEY)
+    port = httpd.server_address[1]
+    client = _slow_client(port, "/pets.csv")
+    try:
+        new = _write_big_artifact(artifact, fill=b"z")
+        httpd.reload()
+        httpd.reload()  # more new files, which may take the old ones' numbers
+        assert _rest_of_body(client) == old
+        assert _get(port, "/pets.csv") == (200, new)
+    finally:
+        client.close()
+        httpd.shutdown()
+        httpd.server_close()
+
+
+def test_reader_that_stops_mid_body_is_dropped_and_workers_answer_again(
+    tmp_path, monkeypatch
+):
+    """One client per worker reads the first bytes of a large body and
+    then nothing: each worker waits at most the handler's timeout for
+    room in the socket's buffer, drops its client, and answers again."""
+    monkeypatch.setattr(PetServingHandler, "timeout", 0.5)
+    artifact = str(tmp_path / "export")
+    _write_big_artifact(artifact)
+    httpd = serve_export(artifact, KEY)
+    port = httpd.server_address[1]
+    t0 = time.perf_counter()
+    stalled = [_slow_client(port, "/pets.csv") for _ in range(WORKERS)]
+    try:
+        deadline = time.monotonic() + 10
+        while any(httpd._serving) and time.monotonic() < deadline:
+            time.sleep(0.01)
+        assert not any(httpd._serving)
+        assert time.perf_counter() - t0 < 5
+        assert _get(port, "/health", timeout=5)[0] == 200
+    finally:
+        for sock in stalled:
+            sock.close()
+        httpd.shutdown()
+        httpd.server_close()
+
+
+def test_tiny_versions_keep_open_descriptors_under_the_count_bound(tmp_path, body_cache):
+    """Every cached body holds an open file, and a tiny version's body is
+    far below the byte budget: the cache's count bound, not its bytes,
+    keeps this process's open descriptors in check."""
+    table = str(tmp_path / "table")
+    os.makedirs(os.path.join(table, "_manifests"))
+    rel = "data/v0/t/part-00000.parquet"
+    os.makedirs(os.path.join(table, os.path.dirname(rel)))
+    pq.write_table(pa.table({"k": pa.array([1], pa.int64())}), os.path.join(table, rel))
+    bound = http_server._BODY_CACHE_FILES
+    for v in range(bound + 40):
+        manifest = {"version": v, "files": [rel], "columns": ["k"], "operation": "write"}
+        _commit_metadata(table, v, v - 1 if v else None, manifest)
+    before = len(os.listdir("/proc/self/fd"))
+    for v in range(bound + 40):
+        assert snapshot_body(table, v) == b'{"count": 1, "pets": [{"k": 1}]}'
+    assert len(http_server._BODY_CACHE) == bound
+    assert len(os.listdir("/proc/self/fd")) - before <= bound
+
+
+def test_bodies_without_memfd_create_are_the_same_bytes(tmp_path, monkeypatch, body_cache):
+    """Where ``os.memfd_create`` is missing, bodies live in unlinked
+    temporary files and every route serves the same bytes."""
+    monkeypatch.delattr(os, "memfd_create")
+    table = str(tmp_path / "table")
+    _commit_versions(table)
+    artifact = str(tmp_path / "export")
+    csv_bytes = _write_artifact(artifact)
+    rows = [dict(r) for r in csv.DictReader(io.StringIO(csv_bytes.decode()))]
+    expected = {
+        "/pets": _reference(table, None),
+        "/pets?version=0": _reference(table, 0),
+        "/pets.csv": csv_bytes,
+    }
+    snapshot_server = serve_export(artifact, KEY, snapshot_dir=table)
+    artifact_server = serve_export(artifact, KEY)
+    try:
+        for route, body in expected.items():
+            assert _get(snapshot_server.server_address[1], route) == (200, body), route
+        assert _get(artifact_server.server_address[1], "/pets") == (
+            200,
+            json.dumps({"count": len(rows), "pets": rows}).encode(),
+        )
+        for _, body_file in http_server._BODY_CACHE.values():
+            assert "memfd:" not in os.readlink(f"/proc/self/fd/{body_file.fd}")
+    finally:
+        for httpd in (snapshot_server, artifact_server):
+            httpd.shutdown()
+            httpd.server_close()

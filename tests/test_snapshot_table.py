@@ -345,6 +345,52 @@ def test_partitioned_merge_keeps_deleted_keys_deleted(spark, table_dir):
     assert _as_dict(snapshot_read(spark, table_dir)) == {2: "b", 3: "zz"}
 
 
+def test_read_keeps_manifest_column_order_after_a_delete(spark, table_dir):
+    """A version with tombstones reads in the manifest's column order,
+    as the version before the delete does: the anti-join on the key
+    columns must not move them to the front."""
+    from petfinder_database_distributor_spark.sources.snapshot import (
+        snapshot_delete,
+    )
+
+    v = snapshot_write(spark, table_dir, spark.createDataFrame([("a", 1), ("b", 2)], "v string, k long"))
+    assert snapshot_read(spark, table_dir).columns == read_manifest(table_dir, v)["columns"]
+    assert read_manifest(table_dir, v)["columns"] == ["v", "k"]
+    v = snapshot_delete(spark, table_dir, spark.createDataFrame([(1,)], "k long"), ["k"])
+    after = snapshot_read(spark, table_dir)
+    assert after.columns == read_manifest(table_dir, v)["columns"] == ["v", "k"]
+    assert [tuple(r) for r in after.collect()] == [("b", 2)]
+
+
+@pytest.mark.parametrize("rewrite", ["compact", "merge"])
+def test_rewrite_of_a_partitioned_table_reads_by_partition_value(spark, table_dir, rewrite):
+    """``partition_col`` is a table property: after a compaction or a
+    full-table merge of a partitioned table, a read by partition value
+    returns exactly the rows of those values."""
+    from petfinder_database_distributor_spark.sources.snapshot import (
+        snapshot_compact,
+        snapshot_read_partitioned,
+        snapshot_write_partitioned,
+    )
+
+    rows = [(1, "a", "x"), (2, "b", "y"), (3, "c", "x"), (4, "d", "z")]
+    snapshot_write_partitioned(
+        spark, table_dir, spark.createDataFrame(rows, "k long, v string, pt string"), "pt"
+    )
+    if rewrite == "compact":
+        v = snapshot_compact(spark, table_dir)
+    else:
+        v = snapshot_merge(
+            spark, table_dir, spark.createDataFrame([(5, "e", "x")], "k long, v string, pt string"),
+            key_cols=["k"], order_cols=["v"],
+        )
+        rows.append((5, "e", "x"))
+    assert read_manifest(table_dir, v)["partition_col"] == "pt"
+    for values in (["x"], ["y", "z"], ["w"]):
+        got = snapshot_read_partitioned(spark, table_dir, values=values).collect()
+        assert sorted(tuple(r) for r in got) == [r for r in rows if r[2] in values], values
+
+
 def test_date_zone_maps_commit_and_prune(spark, table_dir):
     """Zone maps of date columns are stored as ISO text, and probes go
     through the same conversion: a date-partitioned table commits,
