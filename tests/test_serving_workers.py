@@ -40,6 +40,7 @@ from petfinder_database_distributor_spark.sources.snapshot import (
     _commit_metadata,
     snapshot_commit_group,
 )
+from tests.test_serving_encoder import _NoRowDecode
 
 KEY = "workers-key"
 VERSIONS = 6  # more than the 4 entries the body cache once held
@@ -324,6 +325,24 @@ def test_shutdown_while_serve_forever_starts_its_workers(tmp_path):
             assert not loop.is_alive()
         finally:
             httpd.server_close()
+
+
+def test_miss_reads_each_data_file_without_dataset_discovery(tmp_path, monkeypatch):
+    """A miss reads each data file through ``ParquetFile`` (no
+    ``read_table`` dataset discovery) and never row by row."""
+    table = str(tmp_path / "table")
+    _commit_versions(table)
+    expected = _reference(table, VERSIONS - 1)
+
+    def no_read_table(*args, **kwargs):
+        raise AssertionError("read_table on a miss")
+
+    read = pq.ParquetFile.read
+    monkeypatch.setattr(pq, "read_table", no_read_table)
+    monkeypatch.setattr(
+        pq.ParquetFile, "read", lambda self, *a, **k: _NoRowDecode(read(self, *a, **k))
+    )
+    assert snapshot_body(table, VERSIONS - 1) == expected
 
 
 def test_recreated_table_serves_its_own_rows(tmp_path):
