@@ -26,15 +26,35 @@ file tier), and this process serves the snapshot it loaded; a refresh is
 a new artifact + ``reload()``.
 
 Requests are answered by ``WORKERS`` (4) standing threads, the
-reference's deployment (gunicorn, 1 worker x 4 threads). Each worker
-blocks in ``accept()`` on the shared listening socket and answers the
-connection it gets on its own thread: nothing is handed off, and no
-thread is started per request. Starting one OS thread per connection,
-as the stdlib's ``ThreadingHTTPServer`` does, was about half the
-server's CPU time for a small response: on a 4-vCPU VM (2,000 requests
-per route, two runs), ``/health`` cost 0.63-0.73 ms per request with a
-thread per connection and 0.34-0.35 ms on the workers, and a cached
-``/pets`` hit 0.98-1.08 ms against 0.58-0.67 ms. With a fixed number of
+reference's deployment (gunicorn, 1 worker x 4 threads), in the
+Leader/Followers pattern (Schmidt et al., PLoP 2000). The lead is one
+lock (:class:`PetServer`): the worker holding it, the leader, waits in
+``accept()``, answers the connection it gets on its own thread and keeps
+the lead, so on an idle server every request runs start to finish on one
+thread. It hands the lead to an idle worker (:meth:`PetServer.promote`)
+only just before a step that can wait: a read or a send the client is
+not ready for, a cache miss's encode, a POST hook. No thread is started
+per request. Starting one OS thread per connection, as the stdlib's
+``ThreadingHTTPServer`` does, was about half the server's CPU time for a
+small response: on a 4-vCPU VM (2,000 requests per route, two runs),
+``/health`` cost 0.63-0.73 ms per request with a thread per connection
+and 0.34-0.35 ms on the workers, and a cached ``/pets`` hit 0.98-1.08 ms
+against 0.58-0.67 ms. Four workers that each blocked in ``accept()``
+took turns instead: the kernel woke a different one for each connection,
+and under load the four contended for the interpreter lock. On
+``serve_under_ingest`` (one client) the CPU time per request fell from a
+median of 0.313 to 0.207 ms with leader/followers (12 alternating pairs,
+lower in all 12); in one such run the four workers switched thread on
+13,997 of 14,007 requests, the leader/followers server 11 times in
+17,271, once per miss. With K closed-loop client processes and the
+benchmark's 80/10/10 mix over 11 cached versions (4-vCPU VM, 8 s a run),
+requests per second rose from 3,440 to 8,320 at K = 4 and from 2,590 to
+8,910 at K = 16, p99 latency fell from 2.7 to 1.0 ms and from 9.7 to
+3.5 ms, and the CPU time per request from 0.35 to 0.12 ms and from 0.43
+to 0.10 ms. A prototype that also handed the lead on whenever the
+listening socket had a connection waiting did worse under load: 4,081
+against 5,148 requests per second at 4 clients, and 0.20-0.27 against
+0.14-0.15 ms of CPU per request. With a fixed number of
 workers, an idle connection must not hold one for good: a connection
 that sends nothing reaches a worker only after 30 s (Linux's
 ``TCP_DEFER_ACCEPT``), one that stalls in its request or stops reading
@@ -43,8 +63,9 @@ gunicorn's default), and connects that arrive while every worker is
 busy wait in the kernel's accept queue (``request_queue_size``).
 
 A worker reads its request straight off the socket it accepted
-(:class:`PetServingHandler`): ``recv`` until the head's blank line, one
-split into the method, the target (parsed once) and a dict of
+(:class:`PetServingHandler`): ``os.read`` of the socket's non-blocking
+descriptor until the head's blank line, with no ``poll`` before each
+read, one split into the method, the target (parsed once) and a dict of
 lower-cased header names, then the answer (see below).
 ``http.server``'s per-request
 machinery (file objects over the socket, header parsing through the
@@ -125,6 +146,15 @@ from http import HTTPStatus
 from json.encoder import encode_basestring_ascii
 from urllib.parse import parse_qs, urlparse
 
+from petfinder_database_distributor_spark.sources.snapshot import (
+    _dead_keys,
+    _manifest_path,
+    latest_version,
+    live_key_mask,
+    read_manifest,
+    resolve_version,
+)
+
 AUTH_ERROR = {"error": "Invalid or missing endpoint key"}
 
 
@@ -137,7 +167,10 @@ AUTH_ERROR = {"error": "Invalid or missing endpoint key"}
 # Comparing the manifest's bytes makes a table deleted and re-created at
 # the same path a miss (its writers stage files under new unique
 # directories, so its manifests differ), and a vacuumed version a 404;
-# the read and the compare took a hit from 21 to 35 us in-process. A miss
+# the read and the compare took a hit from 21 to 35 us in-process. A stat
+# of the manifest cannot stand in for the read: a fresh file's mtime comes
+# from the kernel's coarse clock and an inode number is reused, so both
+# can repeat for a re-created table. A miss
 # reads and encodes the version's files, about 9x the CPU time of a hit at
 # the benchmark's 1,000-1,353 rows (7.0-8.4 ms against 0.7-1.0 ms).
 #
@@ -224,27 +257,41 @@ def snapshot_body(table_dir: str, version: int | None = None) -> bytes:
     return bytes(_version_body(table_dir, version))
 
 
-def _version_body(table_dir: str, version: int | None = None) -> _BodyFile | bytes:
+def _read_bytes(path: str) -> bytes:
+    """The bytes of a file, read through a raw descriptor: no buffered
+    file object for a file read whole on every ``/pets`` hit."""
+    fd = os.open(path, os.O_RDONLY | os.O_CLOEXEC)
+    try:
+        chunks = []
+        while chunk := os.read(fd, 1 << 16):
+            chunks.append(chunk)
+    finally:
+        os.close(fd)
+    return b"".join(chunks)
+
+
+def _version_body(
+    table_dir: str, version: int | None = None, on_miss=None
+) -> _BodyFile | bytes:
     """What :func:`snapshot_body` returns the bytes of: the cached
     :class:`_BodyFile` of the version, which a response sends as it is,
-    or the bytes of an empty ``/pets`` while the table has no commit."""
-    from petfinder_database_distributor_spark.sources.snapshot import (
-        _manifest_path,
-        resolve_version,
-    )
-
+    or the bytes of an empty ``/pets`` while the table has no commit.
+    ``on_miss`` is called before a miss encodes the version, the one
+    step of a ``/pets`` answer that takes milliseconds: a serving worker
+    hands the lead on there (:meth:`PetServer.promote`)."""
     global _body_cache_total
     v = resolve_version(table_dir, version)
     if v is None:
         return _pets_body([])
-    with open(_manifest_path(table_dir, v), "rb") as fh:
-        manifest = fh.read()
+    manifest = _read_bytes(_manifest_path(table_dir, v))
     key = (table_dir, v)
     with _BODY_CACHE_LOCK:
         cached = _BODY_CACHE.get(key)
         if cached is not None and cached[0] == manifest:
             _BODY_CACHE.move_to_end(key)
             return cached[1]
+    if on_miss is not None:
+        on_miss()
     body = _encode_version(table_dir, json.loads(manifest))
     with _BODY_CACHE_LOCK:
         # the key may hold a stale body, or a concurrent miss's copy
@@ -353,8 +400,6 @@ def _live_rows(table, key_cols: list[str], dead: set):
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    from petfinder_database_distributor_spark.sources.snapshot import live_key_mask
-
     if len(key_cols) == 1:
         col = table.column(key_cols[0])
         t = col.type
@@ -390,8 +435,6 @@ def _encode_version(table_dir: str, manifest: dict) -> _BodyFile:
     encoded."""
     import pyarrow.parquet as pq
 
-    from petfinder_database_distributor_spark.sources.snapshot import _dead_keys
-
     key_cols, dead = _dead_keys(table_dir, manifest)
     count, fragments = 0, []
     for rel in manifest["files"]:
@@ -420,13 +463,6 @@ def load_snapshot_rows(table_dir: str, version: int | None = None) -> list[dict]
     reference decoder of the served body: the server encodes straight
     from Arrow columns instead (:func:`snapshot_body`)."""
     import pyarrow.parquet as pq
-
-    from petfinder_database_distributor_spark.sources.snapshot import (
-        _dead_keys,
-        live_key_mask,
-        read_manifest,
-        resolve_version,
-    )
 
     v = resolve_version(table_dir, version)
     if v is None:
@@ -484,7 +520,10 @@ class PetServingHandler(socketserver.BaseRequestHandler):
     POST_ROUTES = ("/start", "/stop")
 
     def handle(self) -> None:
+        # The timeout makes the descriptor non-blocking: _recv and
+        # _sendfile try it at once and wait only when it is not ready.
         self.request.settimeout(self.timeout)
+        self.fd = self.request.fileno()
         try:
             head = self._read_head()
             if head is not None:
@@ -507,7 +546,7 @@ class PetServingHandler(socketserver.BaseRequestHandler):
             if nl < 0:
                 if len(buf) - pos > _MAX_LINE:
                     return self._refuse(431 if lines else 414)
-                chunk = self.request.recv(_RECV_SIZE)
+                chunk = self._recv(_RECV_SIZE)
                 if not chunk:
                     return None
                 buf += chunk
@@ -558,6 +597,29 @@ class PetServingHandler(socketserver.BaseRequestHandler):
     def _refuse(self, code: int) -> None:
         self._json(code, {"error": _REASONS[code]})
 
+    # -- the socket -------------------------------------------------------
+    def _wait(self, event: int, stalled: str) -> None:
+        """Wait for ``event`` on the connection, up to ``timeout``
+        seconds (TimeoutError with ``stalled`` after), having first handed
+        the lead to an idle worker (:meth:`PetServer.promote`): a client
+        that stalls holds this worker, never the accept."""
+        self.server.promote()
+        poller = select.poll()
+        poller.register(self.fd, event)
+        if not poller.poll(self.timeout * 1000):
+            raise TimeoutError(stalled) from None
+
+    def _recv(self, size: int) -> bytes:
+        """Up to ``size`` bytes off the connection, b"" at its end. An
+        ``os.read`` of the descriptor, with no ``poll`` before it as
+        ``socket.recv`` makes under a timeout; only a read that finds no
+        byte waits (:meth:`_wait`)."""
+        while True:
+            try:
+                return os.read(self.fd, size)
+            except BlockingIOError:
+                self._wait(select.POLLIN, "the client sent no byte")
+
     # -- helpers ----------------------------------------------------------
     def _authorized(self) -> bool:
         """F6: ``?key=`` query param OR ``X-API-Key`` header, exact match
@@ -578,7 +640,9 @@ class PetServingHandler(socketserver.BaseRequestHandler):
         answers) ride with the head in one ``sendall``; a
         :class:`_BodyFile` goes from its file to the socket with
         :meth:`_sendfile`, the head held back with ``MSG_MORE`` to leave
-        in the body's first segment."""
+        in the body's first segment. A head or a small answer fits the
+        empty send buffer of a fresh connection, so its ``sendall`` does
+        not wait and keeps the lead."""
         head = (
             "HTTP/1.0 %d %s\r\nServer: %s\r\nDate: %s\r\n"
             "Content-Type: %s\r\nContent-Length: %d\r\n"
@@ -596,21 +660,18 @@ class PetServingHandler(socketserver.BaseRequestHandler):
         """Send ``body`` with ``os.sendfile``: the kernel moves the file's
         pages into the socket, with no copy through this process. The
         socket has a timeout, so it is non-blocking underneath: with its
-        buffer full, ``sendfile`` raises BlockingIOError and the loop
-        waits for room for up to ``timeout`` seconds at a time. A reader
-        that stops reading is then dropped (TimeoutError), and a slow but
-        steady one gets the whole body. ``socket.sendfile`` is not used:
-        it polls before every ``sendfile`` and seeks a file object."""
-        out, offset, poller = self.request.fileno(), 0, None
+        buffer full, ``sendfile`` raises
+        BlockingIOError and the loop waits for room for up to ``timeout``
+        seconds at a time (:meth:`_wait`). A reader that stops reading is
+        then dropped (TimeoutError), and a slow but steady one gets the
+        whole body. ``socket.sendfile`` is not used: it polls before every
+        ``sendfile`` and seeks a file object."""
+        offset = 0
         while offset < body.size:
             try:
-                offset += os.sendfile(out, body.fd, offset, body.size - offset)
+                offset += os.sendfile(self.fd, body.fd, offset, body.size - offset)
             except BlockingIOError:
-                if poller is None:
-                    poller = select.poll()
-                    poller.register(out, select.POLLOUT)
-                if not poller.poll(self.timeout * 1000):
-                    raise TimeoutError("the client took no byte of the body") from None
+                self._wait(select.POLLOUT, "the client took no byte of the body")
 
     def _json(self, code: int, obj) -> None:
         self._send(code, json.dumps(obj).encode(), "application/json")
@@ -630,7 +691,7 @@ class PetServingHandler(socketserver.BaseRequestHandler):
             return False
         length -= len(rest)
         while length > 0:
-            chunk = self.request.recv(min(length, _RECV_SIZE))
+            chunk = self._recv(min(length, _RECV_SIZE))
             if not chunk:
                 break
             length -= len(chunk)
@@ -644,7 +705,9 @@ class PetServingHandler(socketserver.BaseRequestHandler):
         query's start / graceful stop — T6). The test-and-set is
         lock-protected (two concurrent /start must not both fire the
         hook), and a raising hook rolls the state back and answers 500
-        instead of wedging the server in a running-but-not-started limbo."""
+        instead of wedging the server in a running-but-not-started limbo.
+        A hook may take any time, so the worker hands the lead on before
+        it calls one."""
         if not self._drain_body(rest):
             return
         route = self.route
@@ -656,6 +719,7 @@ class PetServingHandler(socketserver.BaseRequestHandler):
                 self.server.running = True
             try:
                 if self.server.start_hook:
+                    self.server.promote()
                     self.server.start_hook()
             except Exception as exc:  # noqa: BLE001 — report, don't wedge
                 self.server.running = False
@@ -667,6 +731,7 @@ class PetServingHandler(socketserver.BaseRequestHandler):
                 self.server.running = False
             try:
                 if self.server.stop_hook:
+                    self.server.promote()
                     self.server.stop_hook()
             except Exception as exc:  # noqa: BLE001
                 self._json(500, {"error": f"stop failed: {exc}"})
@@ -706,7 +771,9 @@ class PetServingHandler(socketserver.BaseRequestHandler):
                     version = (
                         int(self.query["version"][0]) if "version" in self.query else None
                     )
-                    body = _version_body(self.server.snapshot_dir, version)
+                    body = _version_body(
+                        self.server.snapshot_dir, version, self.server.promote
+                    )
                 except (ValueError, FileNotFoundError):
                     self._json(404, {"error": "unknown snapshot version"})
                     return
@@ -742,8 +809,9 @@ WORKERS = 4
 
 class PetServer(socketserver.TCPServer):
     """Serving snapshot + key, answered by ``WORKERS`` standing threads
-    that each block in ``accept()`` on the listening socket and answer
-    the connection they get inline (see the module docstring)."""
+    in the Leader/Followers pattern: the one holding the lead accepts and
+    answers the connection it gets inline, and hands the lead on only
+    before a wait (see the module docstring)."""
 
     allow_reuse_address = True
 
@@ -775,6 +843,10 @@ class PetServer(socketserver.TCPServer):
         self.stop_hook = stop_hook
         self.lifecycle_lock = threading.Lock()
         self._stopping = threading.Event()
+        # The lead: held by the one worker that accepts, whose ident is
+        # _leader; the others wait to acquire it.
+        self._lead = threading.Lock()
+        self._leader: int | None = None
         self._workers: list[threading.Thread] = []
         self._serving: list[socket.socket | None] = []
         self._date = (0, "")  # (second, its Date header)
@@ -816,11 +888,6 @@ class PetServer(socketserver.TCPServer):
         time (null while the table has no commit)."""
         out = {"running": self.running, "rows": self.row_count}
         if self.snapshot_dir is not None:
-            from petfinder_database_distributor_spark.sources.snapshot import (
-                latest_version,
-                read_manifest,
-            )
-
             v = latest_version(self.snapshot_dir)
             m = read_manifest(self.snapshot_dir, v) if v is not None else {}
             out.update(
@@ -840,18 +907,36 @@ class PetServer(socketserver.TCPServer):
             w.start()
             self._workers.append(w)
 
+    def promote(self) -> None:
+        """Hand the lead to an idle worker if this thread holds it; a
+        no-op otherwise, so a request may call it before each of its
+        waits. The handler calls it just before a step that can wait:
+        a read or a send the client is not ready for, a cache miss's
+        encode and a POST hook."""
+        if self._leader == threading.get_ident():
+            self._leader = None
+            self._lead.release()
+
     def _work(self, slot: int) -> None:
-        """One worker: accept a connection and answer it on this thread
-        (``BaseServer.process_request`` without the handoff) until the
-        server stops accepting. The handler speaks HTTP/1.0, so a
-        connection carries one request and a worker is free again after
-        it. ``self._serving[slot]`` is the connection being answered, for
-        :meth:`shutdown`."""
+        """One worker: take the lead, accept a connection and answer it
+        on this thread (``BaseServer.process_request`` without the
+        handoff), until the server stops accepting. A worker that still
+        holds the lead after its answer accepts the next connection at
+        once; one that handed it on (:meth:`promote`) waits for it again.
+        The handler speaks HTTP/1.0, so a connection carries one request.
+        ``self._serving[slot]`` is the connection being answered, for
+        :meth:`shutdown`. An exiting worker hands the lead on, so the
+        workers waiting for it wake in turn and exit too."""
+        me = threading.get_ident()
         while True:
+            if self._leader != me:
+                self._lead.acquire()
+                self._leader = me
             try:
                 request, client_address = self.get_request()
             except OSError:
                 if self._stopping.is_set():
+                    self.promote()
                     return
                 continue
             self._serving[slot] = request
@@ -866,15 +951,15 @@ class PetServer(socketserver.TCPServer):
     def serve_forever(self, poll_interval: float = 0.5) -> None:
         """Answer requests on ``WORKERS`` standing threads until
         :meth:`shutdown` or :meth:`server_close`. ``poll_interval`` is
-        unused: the workers block in ``accept()`` instead of polling."""
+        unused: the leader blocks in ``accept()`` instead of polling."""
         self._start_workers()
         for w in self._workers:
             w.join()
 
     def _stop_accepting(self) -> None:
-        """Refuse new connections and wake every worker blocked in
-        ``accept()``: on Linux, shutting a listening socket down fails
-        each blocked ``accept()`` at once."""
+        """Refuse new connections and wake the worker blocked in
+        ``accept()``: on Linux, shutting a listening socket down fails a
+        blocked ``accept()`` at once, and every later one."""
         self._stopping.set()
         try:
             self.socket.shutdown(socket.SHUT_RDWR)

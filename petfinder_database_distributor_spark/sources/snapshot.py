@@ -150,12 +150,17 @@ def _fsync_replace(tmp_path: str, final_path: str, payload: str) -> None:
 
 
 def latest_version(table_dir: str) -> int | None:
-    """Current committed version, or None for an empty/absent table."""
-    ptr = os.path.join(table_dir, "_latest")
-    if not os.path.exists(ptr):
+    """Current committed version, or None for an empty/absent table.
+    Read through a raw descriptor, with no existence check first and no
+    text file object: it is on the path of every served ``/pets`` hit."""
+    try:
+        fd = os.open(os.path.join(table_dir, "_latest"), os.O_RDONLY | os.O_CLOEXEC)
+    except (FileNotFoundError, NotADirectoryError):
         return None
-    with open(ptr) as fh:
-        return int(fh.read().strip())
+    try:
+        return int(os.read(fd, 64))  # int() strips the whitespace
+    finally:
+        os.close(fd)
 
 
 def resolve_version(table_dir: str, version: int | None = None) -> int | None:

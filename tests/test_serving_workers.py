@@ -3,7 +3,10 @@ standing workers, never a thread per connection; bodies stay exact under
 concurrent clients and for a table re-created at the same path; a silent
 connection holds no worker, a stalled one holds it for at most the
 handler's timeout, and a slow reader for as long as it keeps reading;
-shutdown is prompt, and server_close alone stops the workers.
+shutdown is prompt, and server_close alone stops the workers. The
+workers are leader and followers: an idle server answers on one thread,
+and a request that waits (a miss, a stalled read or send, a POST hook)
+has handed the accept to another worker first.
 Spark-free: the snapshot table and the CSV artifact are written by
 hand."""
 
@@ -563,3 +566,129 @@ def test_bodies_without_memfd_create_are_the_same_bytes(tmp_path, monkeypatch, b
         for httpd in (snapshot_server, artifact_server):
             httpd.shutdown()
             httpd.server_close()
+
+
+# -- leader/followers: one worker accepts, and hands the lead on only
+# before a wait. Each test below hangs or fails if the hand-off it names
+# is missing; those about promptness keep the handler's 30 s timeout.
+
+
+def _answered_while(httpd: PetServer, wait_for_busy) -> float:
+    """Seconds ``/health`` takes on a fresh connection once
+    ``wait_for_busy()`` is true; one worker is then held by a request
+    that waits."""
+    deadline = time.monotonic() + 10
+    while not wait_for_busy() and time.monotonic() < deadline:
+        time.sleep(0.01)
+    assert wait_for_busy()
+    t0 = time.perf_counter()
+    assert _get(httpd.server_address[1], "/health", timeout=5)[0] == 200
+    return time.perf_counter() - t0
+
+
+def test_sequential_hits_on_an_idle_server_run_on_one_thread(served, monkeypatch):
+    """The leader answers what it accepts on its own thread and keeps the
+    lead: twenty cached hits in a row are all answered by one thread,
+    where workers that each block in ``accept()`` take turns."""
+    httpd, table, _ = served
+    port = httpd.server_address[1]
+    expected = _reference(table, 0)
+    assert _get(port, "/pets?version=0") == (200, expected)  # cached from here on
+    threads = []
+    handle = PetServingHandler.handle
+
+    def traced(self):
+        threads.append(threading.get_ident())
+        handle(self)
+        threads.append(threading.get_ident())
+
+    monkeypatch.setattr(PetServingHandler, "handle", traced)
+    for _ in range(20):
+        assert _get(port, "/pets?version=0") == (200, expected)
+    assert len(threads) == 40
+    assert len(set(threads)) == 1
+
+
+def test_blocked_miss_does_not_hold_up_health(served, monkeypatch, body_cache):
+    """A miss hands the lead on before it encodes: while one is stuck
+    encoding, ``/health`` on another connection is answered at once."""
+    httpd, table, _ = served
+    port = httpd.server_address[1]
+    encoding, release = threading.Event(), threading.Event()
+    encode = http_server._encode_version
+
+    def blocked(*args):
+        encoding.set()
+        release.wait(60)
+        return encode(*args)
+
+    monkeypatch.setattr(http_server, "_encode_version", blocked)
+    answers = []
+    miss = threading.Thread(target=lambda: answers.append(_get(port, "/pets?version=1", 60)))
+    miss.start()
+    try:
+        assert _answered_while(httpd, encoding.is_set) < 1
+    finally:
+        release.set()
+        miss.join(timeout=30)
+    assert answers == [(200, _reference(table, 1))]
+
+
+def test_half_sent_head_does_not_hold_up_health(served):
+    """A client that sends half a request head and stalls holds the
+    worker reading it, not the accept."""
+    httpd, _, _ = served
+    stalled = _stalled(httpd.server_address[1])
+    try:
+        assert _answered_while(httpd, lambda: any(httpd._serving)) < 1
+    finally:
+        stalled.close()
+
+
+def test_blocked_start_hook_does_not_hold_up_health(tmp_path):
+    """A POST hook may take any time: the worker calling it has handed
+    the lead on."""
+    artifact = str(tmp_path / "export")
+    _write_artifact(artifact)
+    started, release = threading.Event(), threading.Event()
+
+    def hook():
+        started.set()
+        release.wait(60)
+
+    httpd = serve_export(artifact, KEY, start_hook=hook)
+    httpd.running = False
+    answers = []
+
+    def post_start():
+        req = urllib.request.Request(f"http://127.0.0.1:{httpd.server_address[1]}/start", b"")
+        with urllib.request.urlopen(req, timeout=60) as resp:
+            answers.append((resp.status, json.loads(resp.read())))
+
+    poster = threading.Thread(target=post_start)
+    poster.start()
+    try:
+        assert _answered_while(httpd, started.is_set) < 1
+    finally:
+        release.set()
+        poster.join(timeout=30)
+        httpd.shutdown()
+        httpd.server_close()
+    assert answers == [(200, {"message": "Scraping started"})]
+
+
+def test_reader_that_stops_mid_body_does_not_hold_up_health(tmp_path):
+    """A client that stops reading a large body holds the worker sending
+    it, not the accept: ``/health`` is answered long before the handler's
+    timeout drops that client."""
+    artifact = str(tmp_path / "export")
+    _write_big_artifact(artifact)
+    httpd = serve_export(artifact, KEY)
+    client = _slow_client(httpd.server_address[1], "/pets.csv")
+    try:
+        assert _answered_while(httpd, lambda: any(httpd._serving)) < 1
+        assert PetServingHandler.timeout == 30
+    finally:
+        client.close()
+        httpd.shutdown()
+        httpd.server_close()
